@@ -12,12 +12,11 @@ import org.apache.spark.sql.types._
 /** Native Catalyst expression for the portable md5 min-hash minima —
   * the minhash family's heavy kernel (optimization round 22).
   *
-  * The SQL formulation (kept as
-  * [[graft.ops.Dedup.portableBandSignaturesExploded]] and pinned equal
-  * by DedupSpec) explodes every doc's shingle array, projects
-  * `ceil(numHashes/4)` md5 HEX STRINGS per shingle instance, shuffles
-  * the exploded relation, and runs `numHashes` string-min aggregates
-  * over 7-char substrings. Profiled at sf0.1 that pass was 13.3 s of
+  * The SQL formulation (DedupSpec's `portableBandSignaturesExploded`,
+  * the test oracle this kernel is pinned bit-equal to) explodes every
+  * doc's shingle array, projects `ceil(numHashes/4)` md5 HEX STRINGS
+  * per shingle instance, shuffles the exploded relation, and runs
+  * `numHashes` string-min aggregates over 7-char substrings. Profiled at sf0.1 that pass was 13.3 s of
   * task CPU (stream_minhash_ingest job anatomy) for ~0.4 s of raw md5
   * arithmetic — >95% of the cost was expression machinery: concat +
   * UTF8String/hex/substring allocations per (shingle, digest) and the

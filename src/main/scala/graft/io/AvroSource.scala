@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{LogicalType, LogicalTypes, Schema => ASchema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -311,7 +311,7 @@ private[io] class AvroPartitionReader(p: AvroSplitPartition, required: StructTyp
 
 /** Spark-type <-> Avro-type conversions shared by the writer, the
   * schema inference, and the partition reader. */
-private[io] object AvroConversions {
+private[graft] object AvroConversions {
 
   /** Avro writer/file schema -> Spark schema (see the type surface in
     * the [[AvroSource]] scaladoc). */
@@ -891,62 +891,10 @@ object Avro {
     fs.mkdirs(new Path(path))
     val codecName = codec
     val serConf = new SerializableHadoopConf(driverSideConf)
-    // -Dgraft.avro.writer=generic restores the GenericRecord encode
-    // path for A/B bisection (values identical; IoSpec pins it)
-    val partFn: (Int, Iterator[InternalRow]) => Iterator[Int] =
-      if (sys.props.get("graft.avro.writer").contains("generic"))
-        writeGeneric(path, avroJson, schema, codecName, serConf)
-      else
-        writeDirect(path, avroJson, schema, codecName, serConf)
-    df.queryExecution.toRdd.mapPartitionsWithIndex(partFn).count()
+    df.queryExecution.toRdd.mapPartitionsWithIndex(
+      writePartition(path, avroJson, schema, codecName, serConf)).count()
     fs.create(new Path(path, "_SUCCESS"), true).close()
     ()
-  }
-
-  /** The GenericRecord encode path — kept for A/B bisection and as the
-    * value-semantics reference the direct path is pinned against. */
-  private def writeGeneric(path: String, avroJson: String, schema: StructType,
-                           codecName: String,
-                           serConf: SerializableHadoopConf)(
-                           idx: Int, it: Iterator[InternalRow]): Iterator[Int] = {
-    if (idx == 0 || it.hasNext) {
-      val avroSchema = new ASchema.Parser().parse(avroJson)
-      // converters built HERE, per partition, against the parsed
-      // schema instance — nested records need their exact Avro
-      // schema node to construct GenericData.Record, and building
-      // executor-side avoids shipping Schema objects in the closure
-      val writeConv: Array[(SpecializedGetters, Int) => AnyRef] =
-        schema.fields.zip(avroSchema.getFields.asScala).map {
-          case (f, af) => writeConverter(f.dataType, af.schema())
-        }.toArray
-      val outPath = new Path(path, f"part-$idx%05d.avro")
-      // task-attempt-private temp + rename-to-commit: a retried or
-      // speculative attempt must never interleave bytes with another
-      // attempt writing the SAME final path (the per-task analog of
-      // the parquet committer's staging). The temp name fails the
-      // `.avro` listing filter, so a crashed attempt's leftover is
-      // invisible to readers; on rename loss the other attempt's
-      // committed (identical-content) file satisfies the partition.
-      val attempt = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val tmpPath = new Path(path, f".part-$idx%05d-$attempt.avro.tmp")
-      val pfs = outPath.getFileSystem(serConf.value)
-      val out = pfs.create(tmpPath, true)
-      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](avroSchema))
-      w.setCodec(avroCodec(codecName))
-      w.create(avroSchema, out)
-      try it.foreach { row =>
-        val rec = new GenericData.Record(avroSchema)
-        var i = 0
-        while (i < writeConv.length) {
-          rec.put(i, if (row.isNullAt(i)) null else writeConv(i)(row, i))
-          i += 1
-        }
-        w.append(rec)
-      } finally w.close()
-      commit(pfs, tmpPath, outPath)
-    }
-    Iterator.single(0)
   }
 
   /** Codec factory off the already-validated name (the loud-option
@@ -961,19 +909,17 @@ object Avro {
       s"graft_avro: internal error — codec '$other' escaped driver validation")
   }
 
-  /** The default encode path (optimization round 22): stream each row
-    * straight into the Avro binary [[org.apache.avro.io.Encoder]] via
-    * a converter tree compiled from the (Spark, Avro) schema pair — no
-    * GenericRecord / ArrayList / HashMap intermediates, no
-    * UTF8String→String→Utf8 re-encode per string. Profiled at sf0.1
-    * the GenericRecord path was ~25 µs/row (1.5 s of the src_avro
-    * key's ~1.9 s); byte-level output is the same container format
-    * with identical values (the oracle round-trips it), pinned
-    * value-identical to the generic path in IoSpec. */
-  private def writeDirect(path: String, avroJson: String, schema: StructType,
-                          codecName: String,
-                          serConf: SerializableHadoopConf)(
-                          idx: Int, it: Iterator[InternalRow]): Iterator[Int] = {
+  /** Encode one partition: each row streams straight into the Avro
+    * binary [[org.apache.avro.io.Encoder]] via a converter tree
+    * compiled from the (Spark, Avro) schema pair — no GenericRecord /
+    * ArrayList / HashMap intermediates, no UTF8String→String→Utf8
+    * re-encode per string (a GenericRecord encoder measured ~25 µs/row
+    * at sf0.1, ~35% slower). AvroSpec pins the output value-identical
+    * to a GenericRecord reference encoder. */
+  private def writePartition(path: String, avroJson: String, schema: StructType,
+                             codecName: String,
+                             serConf: SerializableHadoopConf)(
+                             idx: Int, it: Iterator[InternalRow]): Iterator[Int] = {
     if (idx == 0 || it.hasNext) {
       val avroSchema = new ASchema.Parser().parse(avroJson)
       val fieldEnc: Array[(SpecializedGetters, Int, org.apache.avro.io.Encoder) => Unit] =
@@ -1003,8 +949,13 @@ object Avro {
     Iterator.single(0)
   }
 
-  /** Rename-to-commit shared by both write paths (see the staging
-    * comment at the generic path's temp-file creation). */
+  /** Rename-to-commit of a task attempt's private temp file: a
+    * retried or speculative attempt must never interleave bytes with
+    * another attempt writing the SAME final path (the per-task analog
+    * of the parquet committer's staging). The temp name fails the
+    * `.avro` listing filter, so a crashed attempt's leftover is
+    * invisible to readers; on rename loss the other attempt's
+    * committed (identical-content) file satisfies the partition. */
   private def commit(pfs: FileSystem, tmpPath: Path, outPath: Path): Unit = {
     pfs.delete(outPath, false)
     if (!pfs.rename(tmpPath, outPath)) {
@@ -1015,85 +966,12 @@ object Avro {
     ()
   }
 
-  /** Catalyst value at position i -> Avro runtime value, for one
-    * NON-NULL slot (nulls handled by the caller). Unified on
-    * [[SpecializedGetters]], which InternalRow, ArrayData, and a
-    * MapData's key/value arrays all implement — one recursive
-    * converter tree serves rows, array elements, and map values.
-    * `avro` is this slot's schema node (possibly a [null, T] union),
-    * needed so nested records construct against their exact schema. */
-  private def writeConverter(dt: DataType,
-                             avro: ASchema): (SpecializedGetters, Int) => AnyRef = {
-    val a = if (avro.getType == ASchema.Type.UNION)
-      avro.getTypes.asScala.find(_.getType != ASchema.Type.NULL).get
-    else avro
-    dt match {
-      case BooleanType => (r, i) => java.lang.Boolean.valueOf(r.getBoolean(i))
-      case IntegerType | DateType => (r, i) => java.lang.Integer.valueOf(r.getInt(i))
-      case LongType | TimestampType | TimestampNTZType =>
-        (r, i) => java.lang.Long.valueOf(r.getLong(i))
-      case FloatType => (r, i) => java.lang.Float.valueOf(r.getFloat(i))
-      case DoubleType => (r, i) => java.lang.Double.valueOf(r.getDouble(i))
-      case StringType => (r, i) => r.getUTF8String(i).toString
-      case BinaryType => (r, i) => java.nio.ByteBuffer.wrap(r.getBinary(i))
-      case d: DecimalType => (r, i) => java.nio.ByteBuffer.wrap(
-        r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
-          .unscaledValue().toByteArray)
-      case ArrayType(et, _) =>
-        val elemConv = writeConverter(et, a.getElementType)
-        (r, i) => {
-          val ad = r.getArray(i)
-          val out = new util.ArrayList[AnyRef](ad.numElements())
-          var j = 0
-          while (j < ad.numElements()) {
-            out.add(if (ad.isNullAt(j)) null else elemConv(ad, j))
-            j += 1
-          }
-          out
-        }
-      case st: StructType =>
-        val convs = st.fields.zip(a.getFields.asScala).map {
-          case (f, af) => writeConverter(f.dataType, af.schema())
-        }.toArray
-        (r, i) => {
-          val row = r.getStruct(i, convs.length)
-          val rec = new GenericData.Record(a)
-          var j = 0
-          while (j < convs.length) {
-            rec.put(j, if (row.isNullAt(j)) null else convs(j)(row, j))
-            j += 1
-          }
-          rec
-        }
-      case MapType(StringType, vt, _) =>
-        val valConv = writeConverter(vt, a.getValueType)
-        (r, i) => {
-          val m = r.getMap(i)
-          val ks = m.keyArray()
-          val vs = m.valueArray()
-          val out = new util.HashMap[String, AnyRef](m.numElements() * 2)
-          var j = 0
-          while (j < m.numElements()) {
-            out.put(ks.getUTF8String(j).toString,
-              if (vs.isNullAt(j)) null else valConv(vs, j))
-            j += 1
-          }
-          out
-        }
-      case other => throw new IllegalArgumentException(
-        s"graft_avro: unsupported Spark type $other")
-    }
-  }
-
-  /** Catalyst slot -> Avro BINARY ENCODER writes, for the direct
-    * encode path ([[writeDirect]]): the per-slot function streams the
-    * value straight into the encoder. Union slots ([null, T] — the
-    * only union shape [[AvroConversions.toAvroSchema]] emits) write
-    * their branch index then the value; the value tree mirrors
-    * [[writeConverter]] case for case, minus every intermediate object
-    * (GenericData.Record per struct, ArrayList/HashMap per collection,
-    * and the UTF8String→String→Utf8 round trip per string — Utf8 wraps
-    * the UTF-8 bytes Spark already holds). */
+  /** Catalyst slot -> Avro BINARY ENCODER writes, for
+    * [[writePartition]]: the per-slot function streams the value
+    * straight into the encoder. Union slots ([null, T] — the only
+    * union shape [[AvroConversions.toAvroSchema]] emits) write their
+    * branch index then the value. Strings go out as a Utf8 wrapping
+    * the UTF-8 bytes Spark already holds. */
   private def encodeField(dt: DataType, avro: ASchema)
       : (SpecializedGetters, Int, org.apache.avro.io.Encoder) => Unit =
     if (avro.getType == ASchema.Type.UNION) {

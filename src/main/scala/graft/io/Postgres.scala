@@ -169,7 +169,7 @@ object PgWire {
     case t: java.sql.Timestamp =>
       // render from the UTC instant, NOT Timestamp.toString — that
       // formats in the JVM default timezone while the stored text is
-      // UTC (the session pins TimeZone=UTC and copyCell writes UTC
+      // UTC (the session pins TimeZone=UTC and the sink writes UTC
       // micros). A zone-shifted pushed literal would exclude matching
       // rows server-side, which the residual filter cannot restore —
       // the one failure mode that breaks "pushdown never changes the
@@ -468,58 +468,6 @@ object PgWire {
     o.writeShort(if (neg) 0x4000 else 0)
     o.writeShort(s)
     trimmed.foreach(o.writeShort)
-  }
-
-  /** COPY text-format cell for one Catalyst value (escaping per the
-    * COPY TEXT rules: backslash, tab, newline, CR; NULL = \N). */
-  def copyCell(dt: DataType, row: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-               i: Int): String =
-    if (row.isNullAt(i)) "\\N"
-    else dt match {
-      case StringType => escapeCopy(row.getUTF8String(i).toString)
-      case ByteType => row.getByte(i).toString
-      case ShortType => row.getShort(i).toString
-      case IntegerType => row.getInt(i).toString
-      case LongType => row.getLong(i).toString
-      case FloatType => row.getFloat(i).toString
-      case DoubleType => row.getDouble(i).toString
-      case BooleanType => if (row.getBoolean(i)) "t" else "f"
-      case DateType =>
-        val t = LocalDate.ofEpochDay(row.getInt(i).toLong).toString
-        if (t.charAt(0) == '+') t.substring(1) else t // see formatTimestampMicros
-      case TimestampType | TimestampNTZType => formatTimestampMicros(row.getLong(i))
-      case d: DecimalType =>
-        row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString
-      case BinaryType =>
-        // bytea hex input; the leading backslash is COPY-escaped
-        val b = row.getBinary(i)
-        val sb = new java.lang.StringBuilder(3 + 2 * b.length)
-        sb.append("\\\\x")
-        var j = 0
-        while (j < b.length) {
-          sb.append(Character.forDigit((b(j) >> 4) & 0xF, 16))
-          sb.append(Character.forDigit(b(j) & 0xF, 16))
-          j += 1
-        }
-        sb.toString
-      case other => throw new IllegalArgumentException(
-        s"graft_pg: unsupported write type $other")
-    }
-
-  def escapeCopy(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' => sb.append("\\\\")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
   }
 }
 
@@ -926,45 +874,6 @@ final class PgWireClient(host: String, port: Int, user: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** COPY ... FROM STDIN (text format): streams `lines` (tab-separated
-    * COPY-escaped cells, NO trailing newline per element) in ~64 KB
-    * CopyData messages. */
-  def copyIn(sql: String, lines: Iterator[String]): Unit = {
-    sendQuery(sql)
-    var inCopy = false
-    while (!inCopy) readMessage() match {
-      case ('G', _) => inCopy = true
-      case ('E', b) => val e = pgError(b); drainToReady(); throw e
-      case ('N', _) | ('S', _) => ()
-      case (t, _) => throw new IllegalStateException(
-        s"graft_pg: unexpected message '$t' awaiting CopyInResponse")
-    }
-    val buf = new ByteArrayOutputStream(1 << 16)
-    def flushBuf(): Unit = if (buf.size() > 0) {
-      out.writeByte('d')
-      out.writeInt(4 + buf.size())
-      buf.writeTo(out)
-      buf.reset()
-    }
-    lines.foreach { line =>
-      buf.write(line.getBytes(UTF_8))
-      buf.write('\n')
-      if (buf.size() >= (1 << 16)) flushBuf()
-    }
-    flushBuf()
-    out.writeByte('c') // CopyDone
-    out.writeInt(4)
-    out.flush()
-    var err: RuntimeException = null
-    var done = false
-    while (!done) readMessage() match {
-      case ('Z', _) => done = true
-      case ('E', b) => err = pgError(b)
-      case _ => ()
-    }
-    if (err != null) throw err
-  }
-
   /** COPY ... FROM STDIN (FORMAT binary): the caller writes rows into
     * the provided stream (int16 field count, then per field int32
     * length or -1 for NULL + the [[PgWire.binaryCellWriter]] payload);
@@ -972,7 +881,7 @@ final class PgWireClient(host: String, port: Int, user: String,
     * the stream into ~64 KB CopyData messages, and appends the int16
     * -1 trailer. A body exception propagates (the server sees the
     * connection drop or an aborted COPY and rolls the transaction
-    * back — same contract as the text path). */
+    * back). */
   def copyInBinary(sql: String, body: DataOutputStream => Unit): Unit = {
     val st = beginCopyBinary(sql)
     body(st.row)
@@ -1401,10 +1310,7 @@ object Postgres {
     * rename-based commits. Connection footprint is one per
     * CONCURRENT non-empty task — size executor task slots (or
     * coalesce the frame) against the server's max_connections. */
-  def overwriteTable(df: DataFrame, conn: PgConn, table: String,
-                     copyFormat: String = "binary"): Unit = {
-    require(copyFormat == "binary" || copyFormat == "text",
-      s"graft_pg: copyFormat must be binary|text, got '$copyFormat'")
+  def overwriteTable(df: DataFrame, conn: PgConn, table: String): Unit = {
     val schema = df.schema
     val colsDdl = schema.fields
       .map(f => s"${quoteIdent(f.name)} ${sparkToPgType(f.dataType)}")
@@ -1481,25 +1387,12 @@ object Postgres {
             // attempt's atomic success marker; the lock/drop/create
             // discipline is the shared [[openStageTxn]]
             openStageTxn(pc, stName, colsDdl)
-            // binary COPY by default (round 15): skips the per-cell
-            // text render on this side AND the server's input parse;
-            // the text form stays reachable for A/B and as the
-            // lowest-common-denominator escape hatch
-            if (copyFormat == "binary") {
-              val writers = types.map(PgWire.binaryCellWriter)
-              pc.copyInBinary(s"COPY $st ($colList) FROM STDIN (FORMAT binary)",
-                o => it.foreach(row =>
-                  PgWire.writeBinaryRow(o, row, types.length, writers)))
-            } else pc.copyIn(s"COPY $st ($colList) FROM STDIN", it.map { row =>
-              val sb = new java.lang.StringBuilder(64)
-              var i = 0
-              while (i < types.length) {
-                if (i > 0) sb.append('\t')
-                sb.append(PgWire.copyCell(types(i), row, i))
-                i += 1
-              }
-              sb.toString
-            })
+            // binary COPY: no per-cell text render on this side and
+            // no per-cell input parse on the server
+            val writers = types.map(PgWire.binaryCellWriter)
+            pc.copyInBinary(s"COPY $st ($colList) FROM STDIN (FORMAT binary)",
+              o => it.foreach(row =>
+                PgWire.writeBinaryRow(o, row, types.length, writers)))
             pc.exec("COMMIT")
             stagedCount.add(1L)
           } finally pc.close()

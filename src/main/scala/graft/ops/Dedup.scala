@@ -197,35 +197,21 @@ object Dedup {
                                             bands: Int = 4): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
-    // Fused native kernel (optimization round 22): the minima come
-    // from ONE codegen'd pass per doc
-    // ([[graft.functions.MinHashExprs.minhashMinima]]) instead of the
-    // exploded md5-hex + string-min-aggregate pipeline — profiled 13.3 s
-    // of task CPU at sf0.1 for ~0.4 s of raw md5 arithmetic; the rest
-    // was per-(shingle, digest) hex/substring/UTF8String allocation and
-    // the exploded-row exchange. Values are pinned bit-identical to the
-    // kept exploded formulation ([[portableBandSignaturesExploded]]) in
-    // DedupSpec; a null result marks an empty shingle array, whose
-    // exploded form produced no aggregate row — the filter keeps row
-    // parity exact.
+    // The minima come from ONE codegen'd kernel pass per doc
+    // ([[graft.functions.MinHashExprs.minhashMinima]]) rather than an
+    // exploded md5-hex + string-min-aggregate pipeline — that form
+    // spent 13.3 s of task CPU at sf0.1 on ~0.4 s of raw md5
+    // arithmetic (per-(shingle, digest) hex/substring/UTF8String
+    // allocation and the exploded-row exchange). DedupSpec pins the
+    // values bit-identical to the exploded formulation, kept there as
+    // the test oracle. A null result marks an empty shingle array,
+    // whose exploded form produced no aggregate row — the filter keeps
+    // row parity exact.
     //
-    // The r21 Par.fanOut that parallelized the EXPLODED kernel is GONE
-    // from this path (kept under the kill switch below, which restores
-    // the full r21 shape): with the kernel ~10x cheaper the fan-out's
-    // 32-way exchange + 32-file store writes cost more than the
-    // remaining 1-task compute — interleaved A/B at local[32]:
-    // stream_minhash_ingest 2.81-2.90 s fan=off vs 3.02-3.61 s fan=on,
-    // dedup_minhash a wash (0.82-0.97 vs 0.90-0.96). This is the Par
-    // scaladoc's own boundary ("fan-out pays only where a single heavy
-    // kernel dominates") re-measured after the kernel stopped
-    // dominating.
-    //
-    // A/B kill switch (-Dgraft.minhash.kernel=exploded) runs the kept
-    // r21 SQL formulation (fan-out included) for interleaved bisection
-    // — values bit-identical (DedupSpec pin), only execution differs.
-    if (sys.props.get("graft.minhash.kernel").contains("exploded"))
-      return portableBandSignaturesExploded(
-        Par.fanOut(sh, col(id)), id, shCol, numHashes, bands)
+    // No compute fan-out: with the kernel this cheap, a 32-way
+    // exchange + 32-file store writes cost more than the 1-task
+    // compute (interleaved A/B at local[32]: stream_minhash_ingest
+    // 2.81-2.90 s unfanned vs 3.02-3.61 s fanned).
     val sig = sh
       .select(col(id),
         graft.functions.MinHashExprs.minhashMinima(col(shCol), numHashes)
@@ -235,40 +221,6 @@ object Dedup {
       struct(lit(b).as("band"),
         concat_ws(",", (0 until rows).map(r =>
           col("__mins").getItem(b * rows + r).cast("string")): _*).as("key"))
-    }
-    sig.select(col(id), explode(array(bandCols: _*)).as("__b"))
-      .select(col(id), col("__b.band").as("__band"), col("__b.key").as("__key"))
-  }
-
-  /** The prior exploded-SQL formulation of [[portableBandSignatures]],
-    * kept ONLY to pin the native kernel's bit-exact equivalence in
-    * DedupSpec (the [[shinglesUdf]] precedent): explode the shingle
-    * array, project `ceil(numHashes/4)` md5 hex digests per instance
-    * (named columns — Catalyst does not reliably CSE a common md5
-    * across sibling aggregates; r8 plan audit), then `numHashes`
-    * string-min aggregates over fixed-width 7-char hex substrings
-    * (which order identically to their numeric values). */
-  private[graft] def portableBandSignaturesExploded(sh: DataFrame, id: String,
-                                                    shCol: String,
-                                                    numHashes: Int = 12,
-                                                    bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    val numDigests = (numHashes + 3) / 4
-    val ex = sh.select(col(id), explode(col(shCol)).as("__g"))
-      .select(col(id) +: (0 until numDigests).map(j =>
-        md5(concat(lit(s"$j:"), col("__g"))).as(s"__d$j")): _*)
-    val minAggs = (0 until numHashes).map { i =>
-      val j = i / 4 // digest index
-      val c = i % 4 // 7-hex-digit chunk within the digest
-      min(substring(col(s"__d$j"), 1 + 7 * c, 7)).as(s"__m$i")
-    }
-    val sig = ex.groupBy(col(id)).agg(minAggs.head, minAggs.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",", (0 until rows).map(r =>
-          conv(col(s"__m${b * rows + r}"), 16, 10).cast("long")
-            .cast("string")): _*).as("key"))
     }
     sig.select(col(id), explode(array(bandCols: _*)).as("__b"))
       .select(col(id), col("__b.band").as("__band"), col("__b.key").as("__key"))
@@ -624,29 +576,16 @@ object Dedup {
   /** Shared clamp of every volume-derived partition count in this
     * family: ceil(est/target) floored at 1 and capped at 4096.
     *
-    * NO session floor (optimization round 22, VERDICT r21 #1): the old
-    * `max(sessionParallelism, …)` floor fanned every few-hundred-pair
-    * stage of this family to the full session width, and the r21
-    * driver measured the two jaccard keys 3x FASTER at 8 cores than 32
-    * (scaling ratios 0.34/0.36) — each tiny stage paid 32-way task
-    * scheduling + exchange overhead, which additionally amplified any
-    * host contention super-linearly (interleaved A/B at local[32]:
-    * parts=32 medians 17.4/13.7 s vs parts=8 medians 4.1/2.3 s under
-    * ambient load; quiet-window runs were a wash). The volume estimate
-    * alone now sizes the stage: tiny work gets few tasks, and the same
-    * formula still derives thousands of partitions at 100 TB collision
-    * volumes, so scale feasibility is untouched. */
-  private def clampPartitions(est: Double, target: Long): Int = {
-    // A/B kill switch (-Dgraft.dedup.clamp=floor) restores the r21
-    // session floor for interleaved bisection — placement-only, never
-    // results (the graft.par.fanout precedent)
-    val base =
-      if (sys.props.get("graft.dedup.clamp").contains("floor"))
-        org.apache.spark.sql.SparkSession.active
-          .sessionState.conf.numShufflePartitions
-      else 1
-    math.max(base.toDouble, math.min(4096.0, math.ceil(est / target))).toInt
-  }
+    * No session-width floor: flooring at the session's parallelism
+    * fanned every few-hundred-pair stage of this family to the full
+    * width, and the jaccard keys ran 3x FASTER at 8 cores than at 32 —
+    * each tiny stage paid 32-way task scheduling + exchange overhead,
+    * which also amplified host contention super-linearly. The volume
+    * estimate alone sizes the stage: tiny work gets few tasks, and the
+    * same formula still derives thousands of partitions at 100 TB
+    * collision volumes. */
+  private def clampPartitions(est: Double, target: Long): Int =
+    math.max(1.0, math.min(4096.0, math.ceil(est / target))).toInt
 
   /** The collision-volume target both jaccard tiers size against:
     * ~125k collision rows of join+distinct work per task (tens of ms).

@@ -169,12 +169,7 @@ object Text {
     * (lowercase, \s+ split, n-gram), so the check is engine-portable. */
   def contaminatedIds(corpus: DataFrame, bench: DataFrame, id: Column,
                       text: Column, benchText: Column, n: Int = 3): DataFrame = {
-    // fanned out before the shingle explode (round 21): same shape as
-    // the minhash featurize — shingle kernel + explode on a narrow
-    // scan; measured 0.41-0.44 -> 0.32-0.33 s at sf0.1 in an
-    // interleaved A/B (the lighter tokenize-only text ops measured
-    // SLOWER fanned and stay narrow; graft.ops.Par scaladoc)
-    val corpusGrams = Par.fanOut(corpus, id).select(id.as("doc_id"),
+    val corpusGrams = corpus.select(id.as("doc_id"),
       explode(Dedup.shingles(text, n)).as("__g"))
     val benchGrams = bench.select(explode(Dedup.shingles(benchText, n)).as("__g"))
       .distinct()

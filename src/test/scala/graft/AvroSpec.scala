@@ -1,8 +1,15 @@
 package graft
 
 import java.sql.{Date, Timestamp}
+import java.util
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.avro.{Schema => ASchema}
+import org.apache.avro.file.{CodecFactory, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -111,10 +118,10 @@ class AvroSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("direct-encoder write path is value-identical to the GenericRecord path") {
-    // round 22: the default write streams rows straight into the Avro
-    // binary encoder (no GenericRecord); -Dgraft.avro.writer=generic
-    // keeps the reference path — this pin reads BOTH back and compares
-    // every value, nulls at every level, nested + map + array included
+    // Avro.write streams rows straight into the Avro binary encoder (no
+    // GenericRecord); AvroSpec.writeGeneric is the GenericRecord
+    // reference — this pin reads BOTH back and compares every value,
+    // nulls at every level, nested + map + array included
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("s", StringType),
@@ -138,9 +145,7 @@ class AvroSpec extends AnyFunSuite with SparkTestBase {
     val dOut = "/tmp/graft_test/avro_direct"
     val gOut = "/tmp/graft_test/avro_generic"
     Avro.write(df, dOut, codec = "snappy")
-    sys.props("graft.avro.writer") = "generic"
-    try Avro.write(df, gOut, codec = "snappy")
-    finally sys.props.remove("graft.avro.writer")
+    AvroSpec.writeGeneric(df, gOut, codec = "snappy")
     val d = spark.read.format("graft_avro").load(dOut)
     val g = spark.read.format("graft_avro").load(gOut)
     assert(d.schema === g.schema)
@@ -207,5 +212,117 @@ class AvroSpec extends AnyFunSuite with SparkTestBase {
     val back = spark.read.format("graft_avro").load(out)
     assert(back.schema.fieldNames.toSeq === df.schema.fieldNames.toSeq)
     assert(back.count() === 0)
+  }
+}
+
+object AvroSpec {
+
+  /** The GenericRecord reference encoder [[graft.io.Avro.write]]'s
+    * direct binary encoder is pinned value-identical against: one
+    * container file per input partition (partition 0 always, so an
+    * empty frame still carries its schema), each row built as a
+    * GenericData.Record and written through GenericDatumWriter. Local
+    * filesystem only. */
+  def writeGeneric(df: DataFrame, path: String, codec: String): Unit = {
+    val schema = df.schema
+    val avroJson = graft.io.AvroConversions.toAvroSchema(schema).toString
+    val dir = new java.io.File(path)
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    dir.mkdirs()
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (idx, it) =>
+      if (idx == 0 || it.hasNext) {
+        val avroSchema = new ASchema.Parser().parse(avroJson)
+        // converters built per partition against the parsed schema
+        // instance — nested records need their exact Avro schema node
+        // to construct GenericData.Record
+        val writeConv = schema.fields.zip(avroSchema.getFields.asScala).map {
+          case (f, af) => writeConverter(f.dataType, af.schema())
+        }
+        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](avroSchema))
+        w.setCodec(CodecFactory.fromString(codec))
+        w.create(avroSchema, new java.io.File(dir, f"part-$idx%05d.avro"))
+        try it.foreach { row =>
+          val rec = new GenericData.Record(avroSchema)
+          var i = 0
+          while (i < writeConv.length) {
+            rec.put(i, if (row.isNullAt(i)) null else writeConv(i)(row, i))
+            i += 1
+          }
+          w.append(rec)
+        } finally w.close()
+      }
+      Iterator.single(0)
+    }.count()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    ()
+  }
+
+  /** Catalyst value at position i -> Avro runtime value, for one
+    * NON-NULL slot (nulls handled by the caller). Unified on
+    * [[SpecializedGetters]], which InternalRow, ArrayData, and a
+    * MapData's key/value arrays all implement — one recursive
+    * converter tree serves rows, array elements, and map values.
+    * `avro` is this slot's schema node (possibly a [null, T] union). */
+  private def writeConverter(dt: DataType,
+                             avro: ASchema): (SpecializedGetters, Int) => AnyRef = {
+    val a = if (avro.getType == ASchema.Type.UNION)
+      avro.getTypes.asScala.find(_.getType != ASchema.Type.NULL).get
+    else avro
+    dt match {
+      case BooleanType => (r, i) => java.lang.Boolean.valueOf(r.getBoolean(i))
+      case IntegerType | DateType => (r, i) => java.lang.Integer.valueOf(r.getInt(i))
+      case LongType | TimestampType | TimestampNTZType =>
+        (r, i) => java.lang.Long.valueOf(r.getLong(i))
+      case FloatType => (r, i) => java.lang.Float.valueOf(r.getFloat(i))
+      case DoubleType => (r, i) => java.lang.Double.valueOf(r.getDouble(i))
+      case StringType => (r, i) => r.getUTF8String(i).toString
+      case BinaryType => (r, i) => java.nio.ByteBuffer.wrap(r.getBinary(i))
+      case d: DecimalType => (r, i) => java.nio.ByteBuffer.wrap(
+        r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
+          .unscaledValue().toByteArray)
+      case ArrayType(et, _) =>
+        val elemConv = writeConverter(et, a.getElementType)
+        (r, i) => {
+          val ad = r.getArray(i)
+          val out = new util.ArrayList[AnyRef](ad.numElements())
+          var j = 0
+          while (j < ad.numElements()) {
+            out.add(if (ad.isNullAt(j)) null else elemConv(ad, j))
+            j += 1
+          }
+          out
+        }
+      case st: StructType =>
+        val convs = st.fields.zip(a.getFields.asScala).map {
+          case (f, af) => writeConverter(f.dataType, af.schema())
+        }
+        (r, i) => {
+          val row = r.getStruct(i, convs.length)
+          val rec = new GenericData.Record(a)
+          var j = 0
+          while (j < convs.length) {
+            rec.put(j, if (row.isNullAt(j)) null else convs(j)(row, j))
+            j += 1
+          }
+          rec
+        }
+      case MapType(StringType, vt, _) =>
+        val valConv = writeConverter(vt, a.getValueType)
+        (r, i) => {
+          val m = r.getMap(i)
+          val ks = m.keyArray()
+          val vs = m.valueArray()
+          val out = new util.HashMap[String, AnyRef](m.numElements() * 2)
+          var j = 0
+          while (j < m.numElements()) {
+            out.put(ks.getUTF8String(j).toString,
+              if (vs.isNullAt(j)) null else valConv(vs, j))
+            j += 1
+          }
+          out
+        }
+      case other => throw new IllegalArgumentException(
+        s"unsupported Spark type $other")
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fires the bench regression guard on planted timings — the in-repo
@@ -805,5 +807,26 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     // unavailable sample or empty window -> -1, never a bogus ratio
     assert(Bench.stealFrac(-1L, 10.0, 32) == -1.0)
     assert(Bench.stealFrac(100L, 0.0, 32) == -1.0)
+  }
+
+  test("src/main reads no graft.-prefixed JVM system property (no hidden A/B switches)") {
+    // a decided A/B keeps one code path; a -Dgraft.* toggle in library
+    // code is an undocumented second path no test or benchmark runs
+    var dir = new java.io.File(sys.props("user.dir")).getAbsoluteFile
+    while (dir != null && !new java.io.File(dir, "src/main/scala/graft").isDirectory)
+      dir = dir.getParentFile
+    assert(dir != null, s"no src/main/scala/graft above ${sys.props("user.dir")}")
+    val read = ("""(sys\.props|System\.getProperty|Boolean\.getBoolean|Integer\.getInteger|""" +
+      """Long\.getLong)[\w.]*\s*\(\s*"graft\.""").r
+    val root = new java.io.File(dir, "src/main/scala").toPath
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala
+        lines.zipWithIndex.collect {
+          case (l, i) if read.findFirstIn(l).isDefined => s"${root.relativize(f)}:${i + 1}: ${l.trim}"
+        }
+      }.toList
+    assert(hits.isEmpty, hits.mkString("graft.* system property reads:\n", "\n", ""))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.not
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -88,6 +89,38 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** The exploded-SQL formulation of [[Dedup.portableBandSignatures]]
+    * — the test oracle its native min-hash kernel is pinned against:
+    * explode the shingle array, project `ceil(numHashes/4)` md5 hex
+    * digests per instance (named columns — Catalyst does not reliably
+    * CSE a common md5 across sibling aggregates), then `numHashes`
+    * string-min aggregates over fixed-width 7-char hex substrings
+    * (which order identically to their numeric values). */
+  private def portableBandSignaturesExploded(sh: DataFrame, id: String,
+                                             shCol: String, numHashes: Int,
+                                             bands: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val rows = numHashes / bands
+    val numDigests = (numHashes + 3) / 4
+    val ex = sh.select(col(id), explode(col(shCol)).as("__g"))
+      .select(col(id) +: (0 until numDigests).map(j =>
+        md5(concat(lit(s"$j:"), col("__g"))).as(s"__d$j")): _*)
+    val minAggs = (0 until numHashes).map { i =>
+      val j = i / 4 // digest index
+      val c = i % 4 // 7-hex-digit chunk within the digest
+      min(substring(col(s"__d$j"), 1 + 7 * c, 7)).as(s"__m$i")
+    }
+    val sig = ex.groupBy(col(id)).agg(minAggs.head, minAggs.tail: _*)
+    val bandCols = (0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws(",", (0 until rows).map(r =>
+          conv(col(s"__m${b * rows + r}"), 16, 10).cast("long")
+            .cast("string")): _*).as("key"))
+    }
+    sig.select(col(id), explode(array(bandCols: _*)).as("__b"))
+      .select(col(id), col("__b.band").as("__band"), col("__b.key").as("__key"))
+  }
+
   test("native min-hash kernel matches the exploded md5 formulation bit for bit") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -102,7 +135,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     for ((nh, b) <- Seq((12, 4), (8, 2))) {
       val native = Dedup.portableBandSignatures(docs, "doc_id", "__sh", nh, b)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-      val exploded = Dedup.portableBandSignaturesExploded(docs, "doc_id", "__sh", nh, b)
+      val exploded = portableBandSignaturesExploded(docs, "doc_id", "__sh", nh, b)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
       assert(native == exploded,
         s"(numHashes=$nh, bands=$b): native kernel must reproduce the " +
@@ -498,9 +531,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (4L, "alpha gamma beta reordered so no trigram match"))
       .toDF("doc_id", "text")
     val bench = Seq((100L, "alpha beta gamma iota kappa")).toDF("bid", "btext")
-    val got = Text.contaminatedIds(corpus, bench, $"doc_id", $"text", $"btext")
+    def flagged(c: DataFrame) = Text.contaminatedIds(c, bench, $"doc_id", $"text", $"btext")
       .collect().map(_.getLong(0)).toSet
-    assert(got == Set(1L, 3L))
+    // partitioning changes only where rows are computed, never the ids
+    for (parts <- Seq(1, 4))
+      assert(flagged(corpus.repartition(parts)) == Set(1L, 3L), s"$parts partitions")
   }
 
   test("packTokenBudget fills each group best-first and stops at the budget") {

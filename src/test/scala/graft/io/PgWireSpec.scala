@@ -13,7 +13,7 @@ import graft.SparkTestBase
   * `postgres` server (the container ships the binaries; the engine
   * manages initdb/start under /tmp) — not a protocol mock — so these
   * pins cover the actual byte-level contract: startup + trust auth,
-  * COPY FROM STDIN escaping, text-format decode per OID, range
+  * binary COPY FROM STDIN, text-format decode per OID, range
   * partitioning losslessness, pushdown, and server-error surfacing. */
 class PgWireSpec extends AnyFunSuite with SparkTestBase {
 
@@ -44,15 +44,17 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
     val want = df.collect().map(r => r.toSeq.toList).toSet
-    // BOTH write formats: binary COPY (the default) and the text path
-    // with its metachar escaping must land identical values
-    for (wfmt <- Seq("binary", "text")) {
-      Postgres.overwriteTable(df, conn, "graft_types", copyFormat = wfmt)
-      val back = Postgres.readTable(spark, conn, "graft_types")
+    // binary COPY in; BOTH result formats out — the text decode must
+    // parse the metacharacters back exactly as the binary one does
+    Postgres.overwriteTable(df, conn, "graft_types")
+    for (rfmt <- Seq("binary", "text")) {
+      val back = spark.read.format("graft_pg")
+        .option("port", conn.port.toString).option("dbtable", "graft_types")
+        .option("readformat", rfmt).load()
       assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
         schema.fields.map(f => (f.name, f.dataType)).toSeq)
       val got = back.collect().map(r => r.toSeq.toList).toSet
-      assert(got === want, s"write=$wfmt got $got")
+      assert(got === want, s"read=$rfmt got $got")
     }
   }
 
@@ -653,7 +655,7 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
 
   test("pushed timestamp literals render the UTC instant even under a non-UTC driver JVM") {
     // the round-14 advisory's silent-exclusion scenario: the stored
-    // text is UTC (session pins TimeZone=UTC, copyCell writes UTC
+    // text is UTC (session pins TimeZone=UTC, the sink writes UTC
     // micros) but java.sql.Timestamp.toString formats in the JVM
     // default zone — a zone-shifted pushed literal excludes matching
     // rows server-side, unrecoverable by the residual filter. litOf
