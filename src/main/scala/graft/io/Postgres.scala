@@ -422,9 +422,8 @@ object PgWire {
   }
 
   /** One COPY-binary ROW: int16 field count, then per field the int32
-    * length (or -1 for NULL) + payload — shared by the API sink's
-    * partition loop and the DSv2 DataWriter so the tuple framing has
-    * one definition. */
+    * length (or -1 for NULL) + payload — the tuple framing of the DSv2
+    * DataWriter's stage COPY (batch and streaming). */
   def writeBinaryRow(o: DataOutputStream,
                      row: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
                      nFields: Int,
@@ -874,27 +873,16 @@ final class PgWireClient(host: String, port: Int, user: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** COPY ... FROM STDIN (FORMAT binary): the caller writes rows into
-    * the provided stream (int16 field count, then per field int32
-    * length or -1 for NULL + the [[PgWire.binaryCellWriter]] payload);
-    * this method frames the 11-byte signature + flags header, chunks
-    * the stream into ~64 KB CopyData messages, and appends the int16
-    * -1 trailer. A body exception propagates (the server sees the
-    * connection drop or an aborted COPY and rolls the transaction
-    * back). */
-  def copyInBinary(sql: String, body: DataOutputStream => Unit): Unit = {
-    val st = beginCopyBinary(sql)
-    body(st.row)
-    st.finish()
-  }
-
-  /** Push-style handle over one in-flight `COPY ... (FORMAT binary)`:
-    * the DSv2 DataWriter receives rows one at a time, so it needs an
-    * OPEN copy it can feed incrementally rather than the callback form
-    * above. `row` is the chunked stream (header already written);
-    * `finish()` writes the trailer + CopyDone and drains the cycle.
-    * Abandoning the handle without finish() and closing the client
-    * aborts the COPY server-side (the transaction rolls back). */
+  /** Push-style handle over one in-flight `COPY ... FROM STDIN (FORMAT
+    * binary)`: the DSv2 DataWriter receives rows one at a time, so it
+    * feeds an OPEN copy incrementally. `row` is the stream the caller
+    * writes rows into (int16 field count, then per field int32 length
+    * or -1 for NULL + the [[PgWire.binaryCellWriter]] payload); the
+    * 11-byte signature + flags header is already written, and the
+    * stream is chunked into ~64 KB CopyData messages. `finish()` writes
+    * the int16 -1 trailer + CopyDone and drains the cycle. Abandoning
+    * the handle without finish() and closing the client aborts the
+    * COPY server-side (the transaction rolls back). */
   final class CopyBinaryStream private[PgWireClient] () {
     private val chunk = new ByteArrayOutputStream(1 << 16)
     private def flushChunk(): Unit = if (chunk.size() > 0) {
@@ -1074,7 +1062,14 @@ object Postgres {
 
   final case class PgConn(host: String, port: Int, database: String, user: String,
                           password: String = "", sslMode: String = "disable",
-                          sslRootCert: String = "")
+                          sslRootCert: String = "") {
+    /** This server as `graft_pg` source options — the one rendering
+      * [[readTable]] and [[overwriteTable]] both pass. */
+    def options: Map[String, String] =
+      Map("host" -> host, "port" -> port.toString, "database" -> database,
+        "user" -> user, "sslmode" -> sslMode, "sslrootcert" -> sslRootCert) ++
+        pw(this).map("password" -> _)
+  }
 
   private def pw(conn: PgConn): Option[String] =
     Option(conn.password).filter(_.nonEmpty)
@@ -1087,8 +1082,8 @@ object Postgres {
       .take(8).map(b => f"$b%02x").mkString
 
   /** Bounded, collision-proof stage prefix for one target table (see
-    * the naming rationale in [[overwriteTable]]'s scaladoc). Shared by
-    * the API sink and the DSv2 writer so both runs' sweeps see each
+    * the naming rationale in [[PgBatchWrite]]'s scaladoc). Shared by
+    * the batch and streaming writers so each one's sweep sees the
     * other's orphans. */
   private[io] def stagePrefixFor(table: String): String =
     "graft_stage_" + tableDigest(table) + "_"
@@ -1127,14 +1122,15 @@ object Postgres {
     row != null && row(0) != null && new String(row(0), UTF_8) == "t"
   }
 
-  /** THE stage-publish transaction body, shared by the API sink, the
-    * DSv2 batch commit, and the streaming epoch commit (one
-    * definition — the rename-first fast path and the empty-input shape
-    * must never drift between them). Caller brackets with
-    * BEGIN/COMMIT. `truncate`: drop-and-replace (the first stage
-    * RENAMES into the target — O(1) catalog work — and only the rest
-    * pay the server-side row copy); else transactional append with
-    * create-on-first-write. */
+  /** THE stage-publish transaction body, shared by the DSv2 batch
+    * commit and the streaming epoch commit (one definition — the
+    * rename-first fast path and the empty-input shape must never drift
+    * between them). Caller brackets with BEGIN/COMMIT. `truncate`:
+    * drop-and-replace (the first stage RENAMES into the target — O(1)
+    * catalog work, measured: the INSERT pass was ~20% of a 600k-row
+    * overwrite — so a single-partition write publishes with zero
+    * server-side row copies, and only the rest pay one); else
+    * transactional append with create-on-first-write. */
   private[io] def publishStages(c: PgWireClient, table: String,
                                 stages: Seq[String], colsDdl: String,
                                 colList: String, truncate: Boolean): Unit = {
@@ -1160,8 +1156,8 @@ object Postgres {
 
   /** Open one partition-stage TRANSACTION — the exactly-once-critical
     * steps every stager shares (round-15 review: one definition, so
-    * the lock discipline cannot drift between the API sink and the
-    * DSv2/streaming writers): BEGIN, the per-stage advisory xact lock
+    * the lock discipline cannot drift between the batch and streaming
+    * writers): BEGIN, the per-stage advisory xact lock
     * (rival speculative attempts serialize; the loser's
     * drop-and-recreate supersedes), DROP IF EXISTS, CREATE. The
     * caller streams its COPY and COMMITs (or lets close() roll
@@ -1174,6 +1170,30 @@ object Postgres {
     pc.exec(s"DROP TABLE IF EXISTS $st")
     pc.exec(s"CREATE TABLE $st ($colsDdl)")
   }
+
+  /** The per-TABLE session advisory lock a batch write holds from its
+    * pre-staging sweep through its publish commit, and a streaming
+    * epoch commit holds for its publish (round 15 advisory): without
+    * it, two concurrent overwrites of one table race — run B's sweep
+    * matches the table-wide stage prefix and drops run A's committed
+    * stages, and A then publishes a PARTIAL target. Serialized, they
+    * are last-writer-wins over COMPLETE copies (the reference's to_sql
+    * replace semantics); closing the session releases the lock on any
+    * exit path, crash included. The TWO-INT form deliberately: it lives
+    * in a disjoint advisory space (objsubid 2) from the single-bigint
+    * per-stage xact locks (objsubid 1), so a hashtext collision between
+    * the table name and a stage name can never deadlock a partition
+    * task against the driver's session lock. */
+  private[io] def lockTable(c: PgWireClient, table: String): Unit =
+    c.exec("SELECT pg_advisory_lock(hashtext('graft_overwrite'), hashtext('" +
+      table.replace("'", "''") + "'))")
+
+  /** `(column DDL, column list)` of a write schema: the CREATE TABLE
+    * body of stages and targets, and the COPY/INSERT column list. */
+  private[io] def columnsSql(schema: StructType): (String, String) = (
+    schema.fields.map(f => s"${quoteIdent(f.name)} ${sparkToPgType(f.dataType)}")
+      .mkString(", "),
+    schema.fields.map(f => quoteIdent(f.name)).mkString(", "))
 
   /** Orphan-stage sweep for one table, STREAM-AWARE (round-15 review:
     * a blind table-wide sweep under the batch lock would drop a
@@ -1265,180 +1285,28 @@ object Postgres {
     out.toSeq
   }
 
-  private def client(conn: PgConn, socketTimeoutMs: Int = 600000): PgWireClient =
+  private def client(conn: PgConn): PgWireClient =
     new PgWireClient(conn.host, conn.port, conn.user, conn.database, pw(conn),
-      socketTimeoutMs = socketTimeoutMs,
       sslMode = conn.sslMode,
       sslRootCert = Option(conn.sslRootCert).filter(_.nonEmpty))
 
-  /** Drop-and-recreate + parallel COPY — the exact semantics of the
-    * reference's `to_sql(name, engine, if_exists='replace',
+  /** Drop-and-recreate + parallel binary COPY — the exact semantics of
+    * the reference's `to_sql(name, engine, if_exists='replace',
     * index=False)` (scraper.py:23-24): the old table (if any) is
     * dropped, a fresh one is created from the DataFrame's schema with
-    * NO surrogate index column, and rows bulk-load via one COPY FROM
-    * STDIN per input partition, each on its own executor-side
-    * connection. DDL runs on the driver; only the COPY streams scale
-    * with data.
-    *
-    * EXACTLY-ONCE under retries/speculation (the property the parquet
-    * sink gets from its commit protocol — a direct-to-target COPY
-    * would duplicate a partition whose task succeeded but failed to
-    * REPORT success, the standard cluster failure a 1000-executor job
-    * hits routinely): each non-empty partition COPYs into its own
-    * STAGING table inside one transaction that first takes a
-    * per-stage ADVISORY lock and then drop-and-recreates the stage —
-    * a retried attempt REPLACES its predecessor's rows instead of
-    * appending, and concurrent speculative attempts serialize on the
-    * advisory lock (a bare DROP IF EXISTS cannot see a rival's
-    * UNCOMMITTED create, so without the lock the loser's CREATE
-    * would error 'already exists' instead of superseding), the last
-    * committer leaving exactly one complete copy. The target is then
-    * replaced by a SINGLE driver-side transaction — drop old target,
-    * create, insert every catalog-discovered stage, drop the stages
-    * — so readers see the OLD table until the commit instant and the
-    * complete new one after it, and a failed job leaves the old data
-    * untouched (Postgres DDL is transactional). Stage names live
-    * under the reserved prefix `graft_stage_<digest16(table)>_` —
-    * bounded well inside Postgres' 63-byte identifier limit for any
-    * table name (a raw `<table>__stage_<i>` would silently TRUNCATE
-    * at 63 bytes and collapse distinct stages into one), and
-    * collision-proof against user tables short of a deliberate
-    * name under that prefix. Orphan stages from a crashed prior run
-    * (any partition count) are swept from the catalog before
-    * staging. Cost: one extra server-side pass over the rows
-    * (stage -> target), the same price file committers pay for
-    * rename-based commits. Connection footprint is one per
-    * CONCURRENT non-empty task — size executor task slots (or
-    * coalesce the frame) against the server's max_connections. */
-  def overwriteTable(df: DataFrame, conn: PgConn, table: String): Unit = {
-    val schema = df.schema
-    val colsDdl = schema.fields
-      .map(f => s"${quoteIdent(f.name)} ${sparkToPgType(f.dataType)}")
-      .mkString(", ")
-    val colList = schema.fields.map(f => quoteIdent(f.name)).mkString(", ")
-    val rdd = df.queryExecution.toRdd
-    val tableStagePrefix = stagePrefixFor(table)
-    // a per-INVOCATION nonce scopes this run's stages (the file
-    // committers' job-unique-attempt-ID discipline): a ZOMBIE task
-    // from a PREVIOUS overwrite of the same table — hung in a socket
-    // read through that run's publish — that later wakes and commits
-    // its stale stage does so under ITS OWN nonce, which this run's
-    // publish pattern never matches; the stale orphan is swept by the
-    // NEXT run's table-wide sweep instead of being ingested as data.
-    val runStagePrefix = tableStagePrefix +
-      java.lang.Long.toHexString(
-        new java.security.SecureRandom().nextLong() & 0xffffffffL) + "_"
-    // ONE driver connection holds a per-TABLE session advisory lock
-    // from the pre-staging sweep through the publish commit (round 15
-    // advisory): without it, two concurrent overwrites of the same
-    // table race — run B's sweep matches the table-wide stage prefix
-    // and drops run A's already-committed stages, and A's publish then
-    // lists only the survivors and silently commits a PARTIAL target.
-    // Serializing whole runs on the table lock makes concurrent
-    // overwrites last-writer-wins over COMPLETE copies (the semantics
-    // of the reference's to_sql replace), and closing the session
-    // releases the lock on any exit path, crash included. The TWO-INT
-    // lock form deliberately: it lives in a disjoint advisory space
-    // (objsubid 2) from the single-bigint per-stage xact locks
-    // (objsubid 1), so a hashtext collision between the table name and
-    // a stage name can never deadlock a partition task against the
-    // driver's session lock.
-    //
-    // INFINITE socket read timeout on this one driver connection
-    // (round 15 review): waiting on a rival run's table lock is the
-    // designed behavior, and a rival staging a lake-scale table can
-    // legitimately hold it longer than the 600 s default — a bounded
-    // timeout would turn "serialize behind the other writer" into a
-    // spurious SocketTimeoutException mid-wait. A dead server still
-    // surfaces through TCP (connection reset / EOF), not a hang.
-    val c = client(conn, socketTimeoutMs = 0)
-    try {
-      c.exec("SELECT pg_advisory_lock(hashtext('graft_overwrite'), hashtext('" +
-        table.replace("'", "''") + "'))")
-      // sweep orphaned stages of this TABLE from any previous crashed
-      // or zombie-outlived run, whatever its partition count or nonce
-      // (stream-aware: a live streaming epoch's stages are spared)
-      sweepStages(c, table)
-      val types = schema.fields.map(_.dataType)
-      val (h, p, db, u, pwd) = (conn.host, conn.port, conn.database, conn.user, pw(conn))
-      val (sslM, sslC) = (conn.sslMode, Option(conn.sslRootCert).filter(_.nonEmpty))
-      // loud-completeness check for the publish: every partition that
-      // COMMITTED a stage also bumps this accumulator (Spark counts an
-      // action's accumulator updates once per partition, from the
-      // winning attempt), so a stage missing at publish time — however
-      // it vanished — fails the job instead of publishing a subset
-      val stagedCount = df.sparkSession.sparkContext
-        .longAccumulator("graft_pg_staged_partitions")
-      // phase split for the write path (the read path's
-      // pg_read_<format>_ms discipline): staging = the Spark job
-      // (scan + render + COPY streams), publish = the driver txn
-      // (DDL + stage consumption) — a slow overwrite self-triages to
-      // a phase off the bench artifact
-      val stage0 = System.nanoTime()
-      rdd.foreachPartition { it =>
-        if (it.hasNext) { // empty partitions stage nothing
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val stName = s"$runStagePrefix$pid"
-          val st = quoteIdent(stName)
-          val pc = new PgWireClient(h, p, u, db, pwd, sslMode = sslM, sslRootCert = sslC)
-          try {
-            // one transaction: abort anywhere (incl. mid-COPY stream
-            // failure) rolls the whole stage back; commit is the
-            // attempt's atomic success marker; the lock/drop/create
-            // discipline is the shared [[openStageTxn]]
-            openStageTxn(pc, stName, colsDdl)
-            // binary COPY: no per-cell text render on this side and
-            // no per-cell input parse on the server
-            val writers = types.map(PgWire.binaryCellWriter)
-            pc.copyInBinary(s"COPY $st ($colList) FROM STDIN (FORMAT binary)",
-              o => it.foreach(row =>
-                PgWire.writeBinaryRow(o, row, types.length, writers)))
-            pc.exec("COMMIT")
-            stagedCount.add(1L)
-          } finally pc.close()
-        }
-      }
-      // atomic publish: ONE transaction replaces the target and
-      // consumes every committed stage — readers see old-then-new,
-      // never a subset, and failure before COMMIT leaves the old
-      // target intact. Runs on the lock-holding connection, so the
-      // sweep-to-publish window is covered end to end.
-      //
-      graft.Metrics.add("pg_write_stage_ms", (System.nanoTime() - stage0) / 1000000L)
-      val pub0 = System.nanoTime()
-      // THIS run's stages only (the nonce excludes zombie commits
-      // from prior runs)
-      val stages = listStagesOf(c, runStagePrefix).sorted
-      require(stages.size.toLong == stagedCount.value,
-        s"graft_pg: publish expected ${stagedCount.value} committed stage " +
-          s"tables for '$table' but the catalog lists ${stages.size} — " +
-          "refusing to publish a partial target")
-      c.exec("BEGIN")
-      // RENAME-FIRST publish (round 15, measured: the INSERT pass was
-      // ~20% of a 600k-row overwrite; the shared [[publishStages]]
-      // renames the first stage — O(1) catalog work — so a
-      // single-partition write, the recommended coalesce(1) shape for
-      // modest tables, publishes with ZERO server-side row copies).
-      // All inside one transaction; failure rolls back to the old
-      // table.
-      publishStages(c, table, stages, colsDdl, colList, truncate = true)
-      c.exec("COMMIT")
-      graft.Metrics.add("pg_write_publish_ms", (System.nanoTime() - pub0) / 1000000L)
-    } finally c.close()
-  }
+    * NO surrogate index column, and rows bulk-load exactly once under
+    * task retries and speculation. It is the `graft_pg` DSv2 overwrite;
+    * [[PgBatchWrite]] documents the staged-commit protocol. */
+  def overwriteTable(df: DataFrame, conn: PgConn, table: String): Unit =
+    df.write.format("graft_pg").options(conn.options).option("dbtable", table)
+      .mode("overwrite").save()
 
   /** Whole-table / partitioned read through the `graft_pg` source
     * (visualization.py:14-21's `pd.read_sql`, re-expressed as a
     * partition-parallel scan). */
   def readTable(s: SparkSession, conn: PgConn, table: String,
                 partitionColumn: Option[(String, Long, Long, Int)] = None): DataFrame = {
-    val base0 = s.read.format("graft_pg")
-      .option("host", conn.host).option("port", conn.port.toString)
-      .option("database", conn.database).option("user", conn.user)
-      .option("dbtable", table)
-    val base1 = pw(conn).fold(base0)(p => base0.option("password", p))
-    val base = base1.option("sslmode", conn.sslMode)
-      .option("sslrootcert", conn.sslRootCert)
+    val base = s.read.format("graft_pg").options(conn.options).option("dbtable", table)
     partitionColumn.fold(base) { case (col, lo, hi, n) =>
       base.option("partitionColumn", col).option("lowerBound", lo.toString)
         .option("upperBound", hi.toString).option("numPartitions", n.toString)
@@ -1550,9 +1418,10 @@ private[io] case class PgSourceOptions(host: String, port: Int, database: String
                                        table: String,
                                        partition: Option[(String, Long, Long, Int)],
                                        readFormat: String = "binary") {
-  def newClient(): PgWireClient =
+  def newClient(socketTimeoutMs: Int = 600000): PgWireClient =
     new PgWireClient(host, port, user, database, password,
-      sslMode = sslMode, sslRootCert = sslRootCert)
+      socketTimeoutMs = socketTimeoutMs, sslMode = sslMode,
+      sslRootCert = sslRootCert)
 }
 
 private[io] object PgSourceOptions {
@@ -1599,20 +1468,10 @@ private[io] case class PgTable(tableSchema: StructType, opts: PgSourceOptions)
     new PgWriteBuilder(info.schema(), opts, info.queryId())
 }
 
-/** DSv2 WRITE path (round 15): `df.write.format("graft_pg")` with
-  * `mode("append")` / `mode("overwrite")` — the idiomatic Spark write
-  * surface over the same wire machinery as [[Postgres.overwriteTable]].
-  * The staged-commit protocol maps 1:1 onto Spark's own BatchWrite
-  * contract, which makes it STRICTLY tighter than the catalog-listing
-  * form: each DataWriter COPYs its partition into a per-partition
-  * stage table (advisory-xact-lock + drop-and-recreate, so retries
-  * replace and speculative twins serialize — the [[Postgres
-  * .overwriteTable]] discipline) and returns the stage name as its
-  * commit MESSAGE; the driver publishes exactly the message-listed
-  * stages — a stage missing at publish time fails the INSERT/RENAME
-  * loudly, never a silent subset. The per-table advisory session lock
-  * spans factory creation through commit/abort (Spark guarantees one
-  * of the two), so concurrent writes to one table serialize whole. */
+/** DSv2 WRITE surface: `df.write.format("graft_pg")` (batch,
+  * [[PgBatchWrite]]) and `df.writeStream.format("graft_pg")`
+  * (streaming, [[PgStreamingWrite]]); `mode("overwrite")` /
+  * complete output mode arrive as [[truncate]]. */
 private[io] class PgWriteBuilder(schema: StructType, opts: PgSourceOptions,
                                  queryId: String)
     extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -1634,51 +1493,92 @@ private[io] class PgWriteBuilder(schema: StructType, opts: PgSourceOptions,
 private[io] final case class PgStageCommit(stage: String)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
+/** The BATCH write (round 15) — `mode("append")` / `mode("overwrite")`,
+  * and through the latter [[Postgres.overwriteTable]]. EXACTLY-ONCE
+  * under retries and speculation (the property the parquet sink gets
+  * from its commit protocol — a direct-to-target COPY would duplicate a
+  * partition whose task succeeded but failed to REPORT success): each
+  * DataWriter COPYs its partition into its own STAGE table inside one
+  * transaction that first takes a per-stage advisory xact lock and then
+  * drop-and-recreates the stage ([[Postgres.openStageTxn]]) — a retried
+  * attempt REPLACES its predecessor's rows instead of appending, and
+  * concurrent speculative attempts serialize on the lock (a bare DROP
+  * IF EXISTS cannot see a rival's UNCOMMITTED create, so without the
+  * lock the loser's CREATE would fail 'already exists' instead of
+  * superseding). The writer returns its stage name as its commit
+  * MESSAGE, and the driver publishes exactly the message-listed stages
+  * in ONE transaction ([[Postgres.publishStages]]): readers see the old
+  * table until the commit instant and the complete new one after it, a
+  * stage missing at publish time fails the RENAME/INSERT loudly (never
+  * a silent subset), and a failed job's [[abort]] drops this run's
+  * committed stages while the old table stays untouched (Postgres DDL
+  * is transactional).
+  *
+  * Stage names are `<Postgres.stagePrefixFor(table)><nonce>_<partition>`.
+  * The digest prefix is bounded well inside Postgres' 63-byte
+  * identifier limit for any table name (a raw `<table>__stage_<i>`
+  * would silently TRUNCATE at 63 bytes and collapse distinct stages
+  * into one) and collision-proof against user tables short of a
+  * deliberate name under it. The per-RUN nonce is the file committers'
+  * job-unique attempt ID: a ZOMBIE task of a previous run — hung in a
+  * socket read through that run's publish — that later wakes and
+  * commits its stale stage does so under ITS OWN nonce, which this
+  * run's publish never lists; the next run's table-wide sweep drops it.
+  *
+  * The per-table session lock ([[Postgres.lockTable]]) spans factory
+  * creation (the orphan sweep included) through commit/abort, so
+  * concurrent writes to one table serialize whole. Its connection has
+  * an INFINITE socket read timeout: waiting on a rival's lock is the
+  * designed behavior, and a rival staging a large table can hold it
+  * longer than the 600 s default — a bounded timeout would turn
+  * "serialize behind the other writer" into a spurious
+  * SocketTimeoutException; a dead server still surfaces through TCP
+  * (reset / EOF), not a hang. Cost: one server-side row copy per stage
+  * after the first (which is renamed), and one connection per
+  * CONCURRENT non-empty task — size task slots (or coalesce the frame)
+  * against the server's max_connections. Phase counters:
+  * `pg_write_stage_ms` (factory creation to commit entry — the Spark
+  * job) and `pg_write_publish_ms` (the publish transaction). */
 private[io] class PgBatchWrite(schema: StructType, opts: PgSourceOptions,
                                truncate: Boolean)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import PgWire._
 
-  private val tableStagePrefix = Postgres.stagePrefixFor(opts.table)
-  private val runStagePrefix = tableStagePrefix +
+  private val runStagePrefix = Postgres.stagePrefixFor(opts.table) +
     java.lang.Long.toHexString(
       new java.security.SecureRandom().nextLong() & 0xffffffffL) + "_"
-  private val colsDdl = schema.fields
-    .map(f => s"${quoteIdent(f.name)} ${sparkToPgType(f.dataType)}")
-    .mkString(", ")
-  private val colList = schema.fields.map(f => quoteIdent(f.name)).mkString(", ")
+  private val (colsDdl, colList) = Postgres.columnsSql(schema)
   // the lock-holding driver connection — opened at factory creation,
-  // closed (releasing the lock) in commit/abort; infinite read timeout
-  // for the same reason as overwriteTable's lock connection
+  // closed (releasing the lock) in commit/abort
   @volatile private var lockClient: PgWireClient = _
+  @volatile private var stage0 = 0L
 
   override def createBatchWriterFactory(
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
-    lockClient = new PgWireClient(opts.host, opts.port, opts.user, opts.database,
-      opts.password, socketTimeoutMs = 0, sslMode = opts.sslMode,
-      sslRootCert = opts.sslRootCert)
-    lockClient.exec(
-      "SELECT pg_advisory_lock(hashtext('graft_overwrite'), hashtext('" +
-        opts.table.replace("'", "''") + "'))")
-    // sweep orphans of any crashed prior run, under the lock
-    // (stream-aware: a live streaming epoch's stages are spared)
-    Postgres.sweepStages(lockClient, opts.table)
+    lockClient = opts.newClient(socketTimeoutMs = 0)
+    // Spark calls abort only once the job has started, so a failure
+    // here must release the lock itself
+    try {
+      Postgres.lockTable(lockClient, opts.table)
+      // sweep orphans of any crashed prior run, under the lock
+      // (stream-aware: a live streaming epoch's stages are spared)
+      Postgres.sweepStages(lockClient, opts.table)
+    } catch { case e: Throwable => releaseLock(); throw e }
+    stage0 = System.nanoTime()
     PgDataWriterFactory(schema, opts, runStagePrefix, colsDdl, colList)
   }
 
   override def commit(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
     val pub0 = System.nanoTime()
+    graft.Metrics.add("pg_write_stage_ms", (pub0 - stage0) / 1000000L)
     try {
       val stages = messages.collect {
         case PgStageCommit(s) if s != null => s
       }.sorted.toSeq
       val c = lockClient
       c.exec("BEGIN")
-      // truncate = drop-and-replace with the rename-first fast path;
-      // append = transactional create-on-first-write + INSERT — one
-      // shared definition ([[Postgres.publishStages]])
       Postgres.publishStages(c, opts.table, stages, colsDdl, colList, truncate)
       c.exec("COMMIT")
       graft.Metrics.add("pg_write_publish_ms", (System.nanoTime() - pub0) / 1000000L)
@@ -1688,14 +1588,10 @@ private[io] class PgBatchWrite(schema: StructType, opts: PgSourceOptions,
   override def abort(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
     // abort may arrive with no live lock connection (a commit that
-    // failed mid-publish released it in its finally; a factory whose
-    // connect threw never set it) — the sweep must still run, and the
-    // run-nonce-scoped stages are this run's own, safe to drop
-    // lock-free
-    val c =
-      if (lockClient != null) lockClient
-      else new PgWireClient(opts.host, opts.port, opts.user, opts.database,
-        opts.password, sslMode = opts.sslMode, sslRootCert = opts.sslRootCert)
+    // failed mid-publish released it in its finally) — the cleanup
+    // must still run, and the run-nonce-scoped stages are this run's
+    // own, safe to drop lock-free
+    val c = if (lockClient != null) lockClient else opts.newClient()
     lockClient = null
     try Postgres.listStagesOf(c, runStagePrefix)
       .foreach(s => c.exec(s"DROP TABLE ${quoteIdent(s)}"))
@@ -1737,10 +1633,7 @@ private[io] class PgStreamingWrite(schema: StructType, opts: PgSourceOptions,
   // in-flight stages
   private val queryPrefix = tableStagePrefix + "q" +
     Postgres.queryScope(queryId) + "e"
-  private val colsDdl = schema.fields
-    .map(f => s"${quoteIdent(f.name)} ${sparkToPgType(f.dataType)}")
-    .mkString(", ")
-  private val colList = schema.fields.map(f => quoteIdent(f.name)).mkString(", ")
+  private val (colsDdl, colList) = Postgres.columnsSql(schema)
   private def epochPrefix(epochId: Long): String =
     queryPrefix + java.lang.Long.toHexString(epochId) + "_"
 
@@ -1773,9 +1666,7 @@ private[io] class PgStreamingWrite(schema: StructType, opts: PgSourceOptions,
 
   private def ensureLiveness(): Unit = synchronized {
     if (liveness == null && livenessMisses < 3) {
-      val c = new PgWireClient(opts.host, opts.port, opts.user, opts.database,
-        opts.password, socketTimeoutMs = 0, sslMode = opts.sslMode,
-        sslRootCert = opts.sslRootCert)
+      val c = opts.newClient(socketTimeoutMs = 0)
       val args = Postgres.livenessLockArgs(opts.table,
         Postgres.queryScope(queryId))
       val deadline = System.nanoTime() + 5000000000L
@@ -1853,12 +1744,9 @@ private[io] class PgStreamingWrite(schema: StructType, opts: PgSourceOptions,
     val stages = messages.collect {
       case PgStageCommit(s) if s != null => s
     }.sorted.toSeq
-    val c = new PgWireClient(opts.host, opts.port, opts.user, opts.database,
-      opts.password, socketTimeoutMs = 0, sslMode = opts.sslMode,
-      sslRootCert = opts.sslRootCert)
+    val c = opts.newClient(socketTimeoutMs = 0)
     try {
-      c.exec("SELECT pg_advisory_lock(hashtext('graft_overwrite'), hashtext('" +
-        opts.table.replace("'", "''") + "'))")
+      Postgres.lockTable(c, opts.table)
       c.exec("BEGIN")
       // the mark is scoped by the STABLE streaming query id (persisted
       // in the checkpoint metadata, unchanged across restarts): a
@@ -1903,8 +1791,7 @@ private[io] class PgStreamingWrite(schema: StructType, opts: PgSourceOptions,
 
   override def abort(epochId: Long,
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val c = new PgWireClient(opts.host, opts.port, opts.user, opts.database,
-      opts.password, sslMode = opts.sslMode, sslRootCert = opts.sslRootCert)
+    val c = opts.newClient()
     try Postgres.listStagesOf(c, epochPrefix(epochId))
       .foreach(s => c.exec(s"DROP TABLE ${quoteIdent(s)}"))
     finally c.close()

@@ -106,17 +106,25 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val v1 = Seq((1L, "keep"), (2L, "me")).toDF("k", "v")
     Postgres.overwriteTable(v1, conn, "graft_atomic")
+    // the bomb partition fails only after the other partition has
+    // committed its stage, so the failed run leaves a stage to clean up
     val bomb = udf((k: Long) => {
-      if (k == 3L) throw new RuntimeException("boom mid-job")
+      if (k == 3L) { Thread.sleep(1000); throw new RuntimeException("boom mid-job") }
       "x"
     })
-    val v2 = Seq(3L, 4L).toDF("k").withColumn("v", bomb($"k"))
+    val v2 = spark.sparkContext.parallelize(Seq(3L, 4L), 2).toDF("k")
+      .withColumn("v", bomb($"k"))
     intercept[Exception] { Postgres.overwriteTable(v2, conn, "graft_atomic") }
     // the old table is untouched: target DDL runs inside the publish
     // transaction, which a failed staging job never reaches
     assert(Postgres.readTable(spark, conn, "graft_atomic").collect()
       .map(_.toString).sorted.toSeq === Seq("[1,keep]", "[2,me]"))
-    // and a subsequent successful overwrite sweeps any orphaned stages
+    // the failed run's abort already dropped its committed stages
+    val c = new PgWireClient(conn.host, conn.port, conn.user, conn.database)
+    try assert(Postgres.listStagesOf(c, Postgres.stagePrefixFor("graft_atomic")).isEmpty,
+      "a failed overwrite must drop its committed stages")
+    finally c.close()
+    // and the failed run released the table lock: the next overwrite lands
     val v3 = Seq((9L, "new")).toDF("k", "v")
     Postgres.overwriteTable(v3, conn, "graft_atomic")
     assert(Postgres.readTable(spark, conn, "graft_atomic").collect()
@@ -768,8 +776,14 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     def writer(df: org.apache.spark.sql.DataFrame) = df.write.format("graft_pg")
       .option("port", conn.port.toString).option("dbtable", "graft_dsv2")
-    // overwrite drops and replaces wholesale (the to_sql semantics)
-    writer(Seq((1L, "stale")).toDF("k", "v")).mode("overwrite").save()
+    // overwrite drops and replaces wholesale (the to_sql semantics),
+    // recording both write phases
+    graft.Metrics.withScope("dsv2_spec") {
+      writer(Seq((1L, "stale")).toDF("k", "v")).mode("overwrite").save()
+    }
+    val counters = graft.Metrics.snapshot.map(_._1).toSet
+    assert(Set("dsv2_spec.pg_write_stage_ms", "dsv2_spec.pg_write_publish_ms")
+      .subsetOf(counters), s"write phase counters missing: $counters")
     writer((1L to 100L).map(k => (k, s"v$k")).toDF("k", "v").repartition(8))
       .mode("overwrite").save()
     val back = Postgres.readTable(spark, conn, "graft_dsv2")
