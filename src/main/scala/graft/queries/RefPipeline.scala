@@ -30,7 +30,15 @@ object RefPipeline {
     * bounds, repair dirty '0023' years, cast to DateType, project the
     * essential columns, inner-join zones⋈arretes on id_zone, derive the
     * inclusive Duration in days. `zones` is dimension-sized → Catalyst
-    * broadcasts it under the 100 TB fact-side join. */
+    * broadcasts it under the 100 TB fact-side join.
+    *
+    * The join comes back persisted (MEMORY_AND_DISK) and materialized
+    * by one eager count — the reference's `st.session_state.df`
+    * (visualization.py:89-90, :223-224) — so Q1–Q4 scan the cache
+    * instead of re-reading, re-cleaning and re-joining their sources.
+    * The caller owns `unpersist()`. Calling this again on the same
+    * inputs drops the old cache entry first and rebuilds, so a call
+    * after the sources change (a re-scrape) sees the current rows. */
   def prepData(zones: DataFrame, arretes: DataFrame): DataFrame = {
     val cleaned = Seq[DataFrame => DataFrame](
       Relational.fillNullSentinel(_, "debut_validite_arrete", DebutSentinel),
@@ -45,9 +53,17 @@ object RefPipeline {
     val ap = Relational.project(cleaned, Seq(
       "id_zone", "debut_validite_arrete", "fin_validite_arrete",
       "numero_niveau", "nom_niveau", "statut_arrete"))
-    Relational.inclusiveDurationDays(
+    val joined = Relational.inclusiveDurationDays(
       zp.join(ap, Seq("id_zone"), "inner"),
       "Duration", "debut_validite_arrete", "fin_validite_arrete")
+    joined.unpersist()
+    joined.persist()
+    val sc = joined.sparkSession.sparkContext
+    val description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("RefPipeline.prepData:cache")
+    try joined.count()
+    finally sc.setJobDescription(description)
+    joined
   }
 
   /** Decrees valid at date d (visualization.py:97-98). */

@@ -59,7 +59,7 @@ class GoldenSpec extends AnyFunSuite with SparkTestBase {
     ).toDF("code", "nom", "geometry")
   }
 
-  private lazy val prepped = RefPipeline.prepData(zones, arretes).cache()
+  private lazy val prepped = RefPipeline.prepData(zones, arretes)
 
   test("prepData: cleaning semantics (sentinels, 0023 repair, Duration)") {
     val rows = prepped.collect()

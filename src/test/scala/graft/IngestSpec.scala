@@ -574,4 +574,32 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     // dept 07 -> max(3, 2) = 3; dept 2A -> 4
     assert(q1 == Seq((4, 1L), (3, 1L)))
   }
+
+  test("prepData called again on unchanged parquet inputs rebuilds in place: cached RDDs do not pile up") {
+    import spark.implicits._
+    Sources.overwriteParquet(
+      Seq((1L, "Zone Ardèche Nord", "07", "Ardèche", 100.5, "SUP"))
+        .toDF("id_zone", "nom_zone", "code_departement", "nom_departement",
+          "surface_zone", "type_zone"),
+      s"$stage/cache_zones.parquet")
+    Sources.overwriteParquet(
+      Seq((1L, "2023-08-01", "0023-08-20", 3, "alerte renforcée", "actif"))
+        .toDF("id_zone", "debut_validite_arrete", "fin_validite_arrete",
+          "numero_niveau", "nom_niveau", "statut_arrete"),
+      s"$stage/cache_arretes.parquet")
+    def prep() = RefPipeline.prepData(
+      spark.read.parquet(s"$stage/cache_zones.parquet"),
+      spark.read.parquet(s"$stage/cache_arretes.parquet"))
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val none = persisted
+    val prepped = prep()
+    val one = persisted
+    assert(one == none + 1, "one prepData must hold exactly one cached relation")
+    prep()
+    prep()
+    assert(persisted == one, "each call must drop the previous call's cache entry")
+    assert(prepped.count() == 1)
+    prepped.unpersist()
+    assert(persisted == none)
+  }
 }

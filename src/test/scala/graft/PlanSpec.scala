@@ -1,10 +1,18 @@
 package graft
 
+import java.sql.Date
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.io.Sources
 import graft.ops.{Relational, Temporal}
+import graft.queries.RefPipeline
 
 /** Plan-shape assertions: correctness tests prove the answers, these
   * prove the plans are the ones that survive a 100 TB scale-up —
@@ -164,6 +172,55 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val df = graft.queries.Golden.q2(spark, "/root/testdata/sf0.001")
     val p = plan(df)
     assert(p.contains("BroadcastHashJoin"), p)
+  }
+
+  test("prepData's cache serves Q1–Q4: no file scan, no broadcast of the sources; the build broadcasts zones") {
+    import spark.implicits._
+    val dir = "/tmp/graft_prep_plan_test"
+    Sources.overwriteParquet(Seq(
+      (1L, "Zone Ardèche Nord", "07", "Ardèche", 100.0, "SUP"),
+      (2L, "Zone Ajaccio", "2A", "Corse-du-Sud", 200.0, "SOU"))
+      .toDF("id_zone", "nom_zone", "code_departement", "nom_departement",
+        "surface_zone", "type_zone"), s"$dir/zones")
+    // the fact side outweighs the dimension, as in the reference's data
+    Sources.overwriteParquet((1 to 400).map(i =>
+      (1L + i % 2, s"2023-08-${1 + i % 12}", "0023-08-20", i % 5, s"niveau ${i % 5}", "actif"))
+      .toDF("id_zone", "debut_validite_arrete", "fin_validite_arrete",
+        "numero_niveau", "nom_niveau", "statut_arrete"), s"$dir/arretes")
+    val prepped = RefPipeline.prepData(
+      spark.read.parquet(s"$dir/zones"), spark.read.parquet(s"$dir/arretes"))
+    val departements = Seq(("07", "Ardèche", "{}"), ("2A", "Corse-du-Sud", "{}"))
+      .toDF("code", "nom", "geometry")
+    val d = lit(Date.valueOf("2023-08-12"))
+    // walks AQE stages but not the cached relation's own plan
+    object Stages extends AdaptiveSparkPlanHelper
+    def nodes(p: SparkPlan) = Stages.collect(p) { case n => n }
+    val cacheScans = Seq(
+      "q1" -> RefPipeline.q1NbDepPerAlert(prepped, d),
+      "q2" -> RefPipeline.q2MaxAlertPerDept(prepped, d, departements),
+      "q3" -> RefPipeline.q3ZoneDurations(prepped, "Zone Ardèche Nord"),
+      "q4" -> RefPipeline.q4SurfacePerDay(prepped)).map { case (name, q) =>
+      q.collect()
+      val p = q.queryExecution.executedPlan
+      val ops = nodes(p)
+      assert(!ops.exists(_.isInstanceOf[FileSourceScanExec]), s"$name re-reads its sources:\n$p")
+      val broadcasts = ops.filter(_.isInstanceOf[BroadcastExchangeExec])
+      // Q2's left join onto departements broadcasts its own argmax side,
+      // which it computes from the cache; no query broadcasts anything else
+      if (name == "q2")
+        assert(broadcasts.forall(nodes(_).exists(_.isInstanceOf[InMemoryTableScanExec])), s"$name:\n$p")
+      else assert(broadcasts.isEmpty, s"$name re-broadcasts:\n$p")
+      val scan = ops.collectFirst { case s: InMemoryTableScanExec => s }
+      assert(scan.isDefined, s"$name does not scan the cache:\n$p")
+      scan.get
+    }
+    val build = cacheScans.head.relation.cachedPlan
+    val buildOps = nodes(build)
+    assert(buildOps.count(_.isInstanceOf[FileSourceScanExec]) == 2, build)
+    val zonesBroadcast = buildOps.filter(_.isInstanceOf[BroadcastExchangeExec])
+      .flatMap(nodes).collect { case f: FileSourceScanExec => f.relation.location.rootPaths }
+    assert(zonesBroadcast.flatten.map(_.getName) == Seq("zones"), build)
+    prepped.unpersist()
   }
 
   test("annTopK plans equi-joins only — no cartesian or nested-loop candidate generation") {

@@ -2,12 +2,13 @@ package graft.io
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.queries.RefPipeline
 
 /** The live-Postgres path over the hand-rolled v3 wire client: a REAL
   * `postgres` server (the container ships the binaries; the engine
@@ -67,6 +68,46 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val back = Postgres.readTable(spark, conn, "graft_replace").collect()
     assert(back.map(_.toString).toSeq === Seq("[10,real]"),
       "overwrite must REPLACE (drop-and-recreate), not append")
+  }
+
+  test("prepData over graft_pg reads rebuilds after a re-scrape: the new decree reaches the count and Q1") {
+    import spark.implicits._
+    val zones = Seq((1L, "Zone Ardèche Nord", "07", "Ardèche", 100.0, "SUP"),
+      (2L, "Zone Ajaccio", "2A", "Corse-du-Sud", 200.0, "SUP"))
+      .toDF("id_zone", "nom_zone", "code_departement", "nom_departement",
+        "surface_zone", "type_zone")
+    def arretes(rows: (Long, String, String, Int, String, String)*) =
+      rows.toDF("id_zone", "debut_validite_arrete", "fin_validite_arrete",
+        "numero_niveau", "nom_niveau", "statut_arrete")
+    def prep() = RefPipeline.prepData(
+      Postgres.readTable(spark, conn, "graft_ref_zones"),
+      Postgres.readTable(spark, conn, "graft_ref_arretes"))
+    def q1(prepped: DataFrame) =
+      RefPipeline.q1NbDepPerAlert(prepped, lit(Date.valueOf("2023-08-12")))
+        .collect().map(r => (r.getInt(0), r.getLong(2))).toSeq
+    val first = (1L, "2023-08-01", "2023-08-31", 2, "alerte", "actif")
+    Postgres.overwriteTable(zones, conn, "graft_ref_zones")
+    Postgres.overwriteTable(arretes(first), conn, "graft_ref_arretes")
+    val before = prep()
+    assert(before.count() === 1L)
+    assert(q1(before) === Seq((2, 1L)))
+    // the re-scrape adds one decree valid at the query date, in the other department
+    Postgres.overwriteTable(
+      arretes(first, (2L, "2023-08-10", "2023-08-20", 4, "crise", "actif")),
+      conn, "graft_ref_arretes")
+    val after = prep()
+    assert(after.count() === 2L, "a second prepData must rebuild from the current table")
+    assert(q1(after) === Seq((4, 1L), (2, 1L)))
+    // the reference's scraper writes from its own process, so Spark's
+    // write-side cache refresh never sees it: only prepData's rebuild does
+    val c = new PgWireClient(conn.host, conn.port, conn.user, conn.database)
+    try c.exec("INSERT INTO graft_ref_arretes VALUES " +
+      "(2, '2023-08-11', '2023-08-13', 3, 'alerte renforcée', 'actif')")
+    finally c.close()
+    val external = prep()
+    assert(external.count() === 3L, "prepData must rebuild after an out-of-Spark write")
+    assert(q1(external) === Seq((4, 1L), (2, 1L)))
+    external.unpersist()
   }
 
   test("staged commit publishes atomically: empty partitions stage fine, no stage tables survive") {
