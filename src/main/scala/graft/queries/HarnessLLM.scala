@@ -767,7 +767,7 @@ object HarnessLLM {
         .awaitTermination()
       graft.Metrics.record("bm25_serve_ingest_ms", (System.nanoTime() - ing0) / 1000000L)
       graft.Metrics.record("bm25_serve_store_batches",
-        graft.streaming.TextIngest.batchPartitionDirs(s, s"$store/postings").length.toLong)
+        graft.streaming.BatchStore.batchPartitionDirs(s, s"$store/postings").length.toLong)
       val queries = Seq(
         (1, 1, "hash"), (1, 2, "join"), (1, 3, "scan"),
         (2, 1, "vector"), (2, 2, "stream"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -42,7 +42,7 @@ object DedupIngest {
     * A document lands wholly in its own batch; a doc_id RE-ingested
     * in a later batch is an update with compaction-bounded
     * visibility — the fold keeps only its newest batch's rows
-    * ([[TextIngest.foldNewestBatches]]). `compactEvery` > 0 bounds
+    * ([[BatchStore.newestPerDoc]]). `compactEvery` > 0 bounds
     * the partition count as in the text tiers. */
   def maintainMinhash(stream: DataFrame, id: String, text: String,
                       storeDir: String,
@@ -51,18 +51,14 @@ object DedupIngest {
                       onBatch: Long => Unit = _ => (),
                       compactEvery: Int = 0): StreamingQuery = {
     saveSigParams(stream.sparkSession, storeDir, numHashes, bands)
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val sh = shingled(batch.toDF(), id, text).persist()
-        try {
-          minhashBatch(stream.sparkSession, sh, storeDir, numHashes, bands,
-            batchId, compactEvery)
-          onBatch(batchId)
-        } finally { sh.unpersist(); () }
-      }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .start()
+    BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      val sh = shingled(batch, id, text).persist()
+      try {
+        minhashBatch(stream.sparkSession, sh, storeDir, numHashes, bands,
+          batchId, compactEvery)
+        onBatch(batchId)
+      } finally { sh.unpersist(); () }
+    }
   }
 
   /** One micro-batch of minhash-store maintenance over an
@@ -72,76 +68,45 @@ object DedupIngest {
   private def minhashBatch(spark: SparkSession, sh: DataFrame, storeDir: String,
                            numHashes: Int, bands: Int, batchId: Long,
                            compactEvery: Int): Unit = {
-    Dedup.portableBandSignatures(sh, "doc_id", "__sh", numHashes, bands)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      // "DYNAMIC" pre-uppercased (round 16): Spark parses this option
-      // through a DEFAULT-locale toUpperCase before the enum lookup, so
-      // lowercase "dynamic" fails under tr_TR ("DYNAMİC", dotted İ);
-      // the canonical uppercase form is a fixed point of any locale's
-      // uppercasing and works everywhere
-      .option("partitionOverwriteMode", "DYNAMIC")
-      .partitionBy("__batch")
-      .parquet(s"$storeDir/sigs")
-    sh.withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "DYNAMIC")
-      .partitionBy("__batch")
-      .parquet(s"$storeDir/docs")
-    if (compactEvery > 0 &&
-        TextIngest.batchPartitionDirs(spark, s"$storeDir/sigs").length >= compactEvery)
+    BatchStore.overwritePartitions(
+      Dedup.portableBandSignatures(sh, "doc_id", "__sh", numHashes, bands)
+        .withColumn("__batch", lit(batchId)), s"$storeDir/sigs")
+    BatchStore.overwritePartitions(sh.withColumn("__batch", lit(batchId)), s"$storeDir/docs")
+    if (BatchStore.compactDue(spark, s"$storeDir/sigs", compactEvery))
       compactMinhash(spark, storeDir, upToBatch = batchId)
   }
 
-  /** Persist the signature parameters beside the store (the quantizer-
-    * sidecar discipline of [[VectorIngest]]): band keys are only
-    * comparable between relations built with the SAME (numHashes,
-    * bands), so a reader probing with different parameters would get a
-    * silent recall-0 join, not an error. Validated by every store
-    * reader; first writer wins, a changed re-declaration throws.
-    * Round 15: through [[Sidecars]] (Hadoop-FS), so the pin actually
-    * persists on a production-URI store path. */
+  /** The signature parameters pinned beside the store
+    * ([[BatchStore.pinFields]]): band keys are only comparable between
+    * relations built with the SAME (numHashes, bands), so a reader
+    * probing with different parameters would get a silent recall-0
+    * join, not an error. */
   private def sigParamsFile(storeDir: String): String =
     s"$storeDir/_sig_params/params.txt"
 
   private def saveSigParams(spark: SparkSession, storeDir: String,
                             numHashes: Int, bands: Int): Unit =
-    loadSigParams(spark, storeDir) match {
-      case Some((nh, b)) =>
-        require(nh == numHashes && b == bands,
-          s"store $storeDir was maintained with (numHashes=$nh, bands=$b); " +
-            s"re-declaring ($numHashes, $bands) would corrupt the band keyspace")
-      case None =>
-        Sidecars.write(spark, sigParamsFile(storeDir),
-          s"numHashes=$numHashes\nbands=$bands\n")
-    }
-
-  private def loadSigParams(spark: SparkSession,
-                            storeDir: String): Option[(Int, Int)] = {
-    Sidecars.read(spark, sigParamsFile(storeDir)).map { txt =>
-      val lines = txt.split("\n")
-      (lines(0).stripPrefix("numHashes=").toInt,
-        lines(1).stripPrefix("bands=").toInt)
-    }
-  }
+    BatchStore.pinFields(spark, sigParamsFile(storeDir),
+      "numHashes" -> numHashes, "bands" -> bands)
 
   /** The store's persisted signature parameters, falling back to the
     * given defaults for stores written before the sidecar existed. */
   private def sigParamsOf(spark: SparkSession, storeDir: String,
                           numHashes: Int, bands: Int): (Int, Int) =
-    loadSigParams(spark, storeDir).getOrElse((numHashes, bands))
+    BatchStore.readFields(spark, sigParamsFile(storeDir), "numHashes", "bands")
+      .map(v => (v(0).toInt, v(1).toInt)).getOrElse((numHashes, bands))
 
-  /** Fold committed sigs/docs batch partitions into `__batch=-1` via
-    * [[TextIngest.foldNewestBatches]]: a doc_id re-ingested with
-    * changed text resolves to its newest signatures/shingles at the
-    * fold (compaction-bounded update visibility — between re-ingest
-    * and fold a probe can transiently match the stale version too). */
-  def compactMinhash(spark: SparkSession, storeDir: String,
-                     upToBatch: Long, targetFiles: Int = 1): Unit = {
-    TextIngest.foldNewestBatches(spark, s"$storeDir/sigs", "doc_id",
-      Seq("doc_id", "__band", "__key"), upToBatch, targetFiles)
-    TextIngest.foldNewestBatches(spark, s"$storeDir/docs", "doc_id",
-      Seq("doc_id", "__sh"), upToBatch, targetFiles)
+  /** Fold committed sigs/docs batch partitions into `__batch=-1`,
+    * newest batch per doc ([[BatchStore.newestPerDoc]]): a doc_id
+    * re-ingested with changed text resolves to its newest
+    * signatures/shingles at the fold (compaction-bounded update
+    * visibility — between re-ingest and fold a probe can transiently
+    * match the stale version too). */
+  def compactMinhash(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
+    BatchStore.fold(spark, s"$storeDir/sigs", upToBatch)(
+      BatchStore.newestPerDoc("doc_id", "__band", "__key"))
+    BatchStore.fold(spark, s"$storeDir/docs", upToBatch)(
+      BatchStore.newestPerDoc("doc_id", "__sh"))
   }
 
   /** Probe NEW documents against the stream-maintained signature
@@ -210,19 +175,15 @@ object DedupIngest {
                            trigger: Trigger = Trigger.AvailableNow(),
                            onBatch: Long => Unit = _ => (),
                            compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = stream.sparkSession
-        requireNoPendingSwap(spark, storeDir)
-        val sh = shingled(batch.toDF(), id, text).persist()
-        try {
-          jaccardBatch(spark, sh, storeDir, batchId, compactEvery)
-          onBatch(batchId)
-        } finally { sh.unpersist(); () }
-      }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .start()
+    BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      val spark = stream.sparkSession
+      requireNoPendingSwap(spark, storeDir)
+      val sh = shingled(batch, id, text).persist()
+      try {
+        jaccardBatch(spark, sh, storeDir, batchId, compactEvery)
+        onBatch(batchId)
+      } finally { sh.unpersist(); () }
+    }
 
   /** One micro-batch of jaccard-store maintenance over an
     * already-shingled (and persisted) batch relation — factored so the
@@ -232,7 +193,7 @@ object DedupIngest {
                            batchId: Long, compactEvery: Int): Unit = {
     val ex = Dedup.hashedShingles(sh, "doc_id", "__sh")
     val dfordDir = s"$storeDir/dford"
-    val dfordFs = Sidecars.fs(spark, new org.apache.hadoop.fs.Path(dfordDir))
+    val dfordFs = BatchStore.fs(spark, dfordDir)
     val marker = new org.apache.hadoop.fs.Path(s"$dfordDir/_SUCCESS")
     // bootstrap: freeze the ordering authority from the first
     // NON-EMPTY batch (first writer wins — the _SUCCESS marker is the
@@ -306,17 +267,13 @@ object DedupIngest {
       // the order join is per-batch: against a small vocabulary
       // (sidecar-proven) the authority broadcasts and the batch
       // skips the vocabulary shuffle entirely
-      Dedup.orderedByDf(ex, dfreqFor(spark, storeDir, dford), "doc_id")
-        .join(sh, "doc_id")
-        .select(col("doc_id"), col("__sh"), col("__n"), col("__ha"))
-        .withColumn("__ogen", lit(gen))
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "DYNAMIC")
-        .partitionBy("__batch")
-        .parquet(s"$storeDir/docs")
-      if (compactEvery > 0 &&
-          TextIngest.batchPartitionDirs(spark, s"$storeDir/docs").length >= compactEvery)
+      BatchStore.overwritePartitions(
+        Dedup.orderedByDf(ex, dfreqFor(spark, storeDir, dford), "doc_id")
+          .join(sh, "doc_id")
+          .select(col("doc_id"), col("__sh"), col("__n"), col("__ha"))
+          .withColumn("__ogen", lit(gen))
+          .withColumn("__batch", lit(batchId)), s"$storeDir/docs")
+      if (BatchStore.compactDue(spark, s"$storeDir/docs", compactEvery))
         compactJaccardStore(spark, storeDir, upToBatch = batchId)
     }
   }
@@ -358,40 +315,36 @@ object DedupIngest {
     // reads this query run's work, which is what the bench consumes.
     // foreachBatch is single-threaded per query: a plain var.
     var totalMs = 0L
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = stream.sparkSession
-        val b0 = System.nanoTime()
-        requireNoPendingSwap(spark, jaccardDir)
-        val sh = shingled(batch.toDF(), id, text).persist()
-        try {
-          minhashBatch(spark, sh, minhashDir, numHashes, bands, batchId, compactEvery)
-          jaccardBatch(spark, sh, jaccardDir, batchId, compactEvery)
-          totalMs += (System.nanoTime() - b0) / 1000000L
-          graft.Metrics.record("dedup_joint_ingest_ms", totalMs)
-          onBatch(batchId)
-        } finally { sh.unpersist(); () }
-      }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$minhashDir/_checkpoint")
-      .start()
+    BatchStore.maintain(stream, minhashDir, trigger) { (batch, batchId) =>
+      val spark = stream.sparkSession
+      val b0 = System.nanoTime()
+      requireNoPendingSwap(spark, jaccardDir)
+      val sh = shingled(batch, id, text).persist()
+      try {
+        minhashBatch(spark, sh, minhashDir, numHashes, bands, batchId, compactEvery)
+        jaccardBatch(spark, sh, jaccardDir, batchId, compactEvery)
+        totalMs += (System.nanoTime() - b0) / 1000000L
+        graft.Metrics.record("dedup_joint_ingest_ms", totalMs)
+        onBatch(batchId)
+      } finally { sh.unpersist(); () }
+    }
   }
 
-  /** Fold committed docs batch partitions into `__batch=-1` via
-    * [[TextIngest.foldNewestBatches]] — a re-ingested doc_id resolves
-    * to its newest ordered arrays at the fold (compaction-bounded
-    * update visibility, like every doc-grained tier). dford is
-    * bootstrap-frozen and untouched. */
-  def compactJaccardStore(spark: SparkSession, storeDir: String,
-                          upToBatch: Long, targetFiles: Int = 1): Unit = {
+  /** Fold committed docs batch partitions into `__batch=-1`, newest
+    * batch per doc ([[BatchStore.newestPerDoc]]) — a re-ingested doc_id
+    * resolves to its newest ordered arrays at the fold
+    * (compaction-bounded update visibility, like every doc-grained
+    * tier). dford is bootstrap-frozen and untouched. */
+  def compactJaccardStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
     requireNoPendingSwap(spark, storeDir)
-    TextIngest.foldNewestBatches(spark, s"$storeDir/docs", "doc_id",
-      Seq("doc_id", "__sh", "__n", "__ha", "__ogen"), upToBatch, targetFiles,
+    BatchStore.fold(spark, s"$storeDir/docs", upToBatch) { loaded =>
       // __ogen guard for stores written before the generation stamp
       // existed (treated as generation 0, matching orderGen's fallback)
-      prep = loaded =>
+      val stamped =
         if (loaded.columns.contains("__ogen")) loaded
-        else loaded.withColumn("__ogen", lit(0L)))
+        else loaded.withColumn("__ogen", lit(0L))
+      BatchStore.newestPerDoc("doc_id", "__sh", "__n", "__ha", "__ogen")(stamped)
+    }
   }
 
   /** The order GENERATION a dford relation declares (0 when the
@@ -402,10 +355,6 @@ object DedupIngest {
       val r = dford.agg(max(col("__gen"))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-
-  private def storeFs(spark: SparkSession,
-                      storeDir: String): org.apache.hadoop.fs.FileSystem =
-    Sidecars.fs(spark, new org.apache.hadoop.fs.Path(storeDir))
 
   private def swapMarker(storeDir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$storeDir/_swap_pending")
@@ -434,7 +383,7 @@ object DedupIngest {
     * a maintenance batch quietly recreating a truncated docs dir that
     * would PASS the generation check while missing the corpus. */
   private def requireNoPendingSwap(spark: SparkSession, storeDir: String): Unit = {
-    val fs = storeFs(spark, storeDir)
+    val fs = BatchStore.fs(spark, storeDir)
     require(!fs.exists(swapMarker(storeDir)),
       s"store $storeDir has an interrupted order refresh (_swap_pending); " +
         "rerun refreshOrderAuthority to complete it before using the store")
@@ -462,22 +411,14 @@ object DedupIngest {
   private def orderMetaFile(storeDir: String): String =
     s"$storeDir/_order_meta/meta.txt"
 
-  /** Round 15 (streaming review): through [[Sidecars]]' tmp + rename
-    * swap — the previous truncate-in-place create() left a window
-    * where a crash or a racing reader saw an EMPTY/partial meta.txt,
-    * bricking every later batch and probe with an undiagnostic parse
-    * error instead of the protocol's loud refusals. */
   private[graft] def writeOrderMeta(spark: SparkSession, storeDir: String,
                              gen: Long, vocab: Long): Unit =
-    Sidecars.write(spark, orderMetaFile(storeDir), s"gen=$gen\nvocab=$vocab\n")
+    BatchStore.writeFields(spark, orderMetaFile(storeDir), "gen" -> gen, "vocab" -> vocab)
 
   private[graft] def readOrderMeta(spark: SparkSession,
                                        storeDir: String): Option[OrderMeta] =
-    Sidecars.read(spark, orderMetaFile(storeDir)).map { txt =>
-      val lines = txt.split("\n")
-      OrderMeta(lines(0).stripPrefix("gen=").trim.toLong,
-        lines(1).stripPrefix("vocab=").trim.toLong)
-    }
+    BatchStore.readFields(spark, orderMetaFile(storeDir), "gen", "vocab")
+      .map(v => OrderMeta(v(0).toLong, v(1).toLong))
 
   /** Broadcast bound for the dford (ordering-authority) join — the
     * [[graft.ops.Dedup.maybeBroadcast]] discipline sized for dford's
@@ -517,7 +458,7 @@ object DedupIngest {
     *    store stays on its old, consistent generation.
     */
   private def recoverPendingSwap(spark: SparkSession, storeDir: String): Unit = {
-    val fs = storeFs(spark, storeDir)
+    val fs = BatchStore.fs(spark, storeDir)
     val marker = swapMarker(storeDir)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     if (!fs.exists(marker)) {
@@ -650,10 +591,10 @@ object DedupIngest {
                                            afterRecheck: () => Unit = () => ()): Unit = {
     recoverPendingSwap(spark, storeDir)
     val dir = s"$storeDir/docs"
-    val fs = storeFs(spark, storeDir)
+    val fs = BatchStore.fs(spark, storeDir)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     def batchListing(): Set[String] =
-      TextIngest.batchPartitionDirs(spark, dir).map(_.getName).toSet
+      BatchStore.batchPartitionDirs(spark, dir).map(_.getName).toSet
     // whole-refresh exclusion: from here until the markers drop, every
     // store writer and reader refuses (requireNoPendingSwap)
     fs.create(refreshLockMarker(storeDir), true).close()
@@ -711,7 +652,7 @@ object DedupIngest {
     val docsTarget = p(dir)
     val docsOld = p(s"${dir}__old")
     require(fs.rename(docsTarget, docsOld), s"rename $docsTarget aside failed")
-    val asideListing = TextIngest.batchPartitionDirs(spark, s"${dir}__old")
+    val asideListing = BatchStore.batchPartitionDirs(spark, s"${dir}__old")
       .map(_.getName).toSet
     if (asideListing != preSnapshot) {
       require(fs.rename(docsOld, docsTarget), s"rollback $docsOld failed")

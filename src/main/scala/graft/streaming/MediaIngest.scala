@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -31,7 +31,7 @@ object MediaIngest {
     * `$storeDir/hashes`, `__batch`-partitioned. A doc_id re-ingested
     * with corrected media is an UPDATE with compaction-bounded
     * visibility: the fold keeps only its newest batch's hash
-    * ([[TextIngest.foldNewestBatches]]); until that fold, serves can
+    * ([[BatchStore.newestPerDoc]]); until that fold, serves can
     * transiently match the stale hash too. */
   def maintainImageHashes(stream: DataFrame, id: String, media: String,
                           storeDir: String,
@@ -39,43 +39,26 @@ object MediaIngest {
                           onBatch: Long => Unit = _ => (),
                           compactEvery: Int = 0): StreamingQuery = {
     val hashU = udf((b: Array[Byte]) => Multimodal.aHash64(b))
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        batch.toDF()
-          .select(col(id).as("doc_id"), hashU(col(media)).as("__ah"))
-          .filter(col("__ah").isNotNull)
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite")
-          // "DYNAMIC" pre-uppercased (round 16): Spark parses this option
-          // through a DEFAULT-locale toUpperCase before the enum lookup, so
-          // lowercase "dynamic" fails under tr_TR ("DYNAMİC", dotted İ);
-          // the canonical uppercase form is a fixed point of any locale's
-          // uppercasing and works everywhere
-          .option("partitionOverwriteMode", "DYNAMIC")
-          .partitionBy("__batch")
-          .parquet(s"$storeDir/hashes")
-        if (compactEvery > 0 &&
-            TextIngest.batchPartitionDirs(stream.sparkSession,
-              s"$storeDir/hashes").length >= compactEvery)
-          compactImageHashes(stream.sparkSession, storeDir, upToBatch = batchId)
-        onBatch(batchId)
-        ()
-      }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .start()
+    BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      BatchStore.overwritePartitions(batch
+        .select(col(id).as("doc_id"), hashU(col(media)).as("__ah"))
+        .filter(col("__ah").isNotNull)
+        .withColumn("__batch", lit(batchId)), s"$storeDir/hashes")
+      if (BatchStore.compactDue(stream.sparkSession, s"$storeDir/hashes", compactEvery))
+        compactImageHashes(stream.sparkSession, storeDir, upToBatch = batchId)
+      onBatch(batchId)
+    }
   }
 
-  /** Fold committed hash partitions into `__batch=-1` via
-    * [[TextIngest.foldNewestBatches]]: a doc_id re-ingested with
+  /** Fold committed hash partitions into `__batch=-1`, newest batch
+    * per doc ([[BatchStore.newestPerDoc]]): a doc_id re-ingested with
     * corrected media resolves to its newest hash at the fold
     * (compaction-bounded update visibility — between re-ingest and
     * fold, near-dup serves can transiently match the stale hash
     * too). */
-  def compactImageHashes(spark: SparkSession, storeDir: String,
-                         upToBatch: Long, targetFiles: Int = 1): Unit =
-    TextIngest.foldNewestBatches(spark, s"$storeDir/hashes", "doc_id",
-      Seq("doc_id", "__ah"), upToBatch, targetFiles)
+  def compactImageHashes(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.fold(spark, s"$storeDir/hashes", upToBatch)(
+      BatchStore.newestPerDoc("doc_id", "__ah"))
 
   /** Near-dup pairs served off the stream-maintained store: the shared
     * banded Hamming join over the stored hashes. Compaction-crash-window

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -66,27 +66,14 @@ object TextIngest {
                         trigger: Trigger = Trigger.AvailableNow(),
                         onBatch: Long => Unit = _ => (),
                         compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        termPartial(batch.toDF(), id, text, batchId)
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite")
-          // "DYNAMIC" pre-uppercased (round 16): Spark parses this option
-          // through a DEFAULT-locale toUpperCase before the enum lookup, so
-          // lowercase "dynamic" fails under tr_TR ("DYNAMİC", dotted İ);
-          // the canonical uppercase form is a fixed point of any locale's
-          // uppercasing and works everywhere
-          .option("partitionOverwriteMode", "DYNAMIC")
-          .partitionBy("__batch")
-          .parquet(storeDir)
-        if (compactEvery > 0 &&
-            batchPartitionDirs(stream.sparkSession, storeDir).length >= compactEvery)
-          compactTermStats(stream.sparkSession, storeDir, upToBatch = batchId)
-        onBatch(batchId)
-      }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .start()
+    BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      val spark = stream.sparkSession
+      BatchStore.overwritePartitions(
+        termPartial(batch, id, text, batchId).withColumn("__batch", lit(batchId)), storeDir)
+      if (BatchStore.compactDue(spark, storeDir, compactEvery))
+        compactTermStats(spark, storeDir, upToBatch = batchId)
+      onBatch(batchId)
+    }
 
   /** Merge the store's partials to corpus-wide term stats: tf and df
     * are both plain sums over batches. One term-keyed aggregate —
@@ -101,121 +88,17 @@ object TextIngest {
       .groupBy(col("term"))
       .agg(sum(col("tf")).as("tf"), sum(col("df")).as("df"))
 
-  private[streaming] val CompactedBatchId = -1L
-
-  /** List the store's `__batch=` partition directories through the
-    * Hadoop FileSystem API — the store path is a production URI
-    * (hdfs://, s3a://, file://), not necessarily a local file, and
-    * java.io.File would silently list nothing there, disabling
-    * compaction (the [[graft.io.Layout]] modules already go through
-    * this API for the same reason). */
-  private[graft] def batchPartitionDirs(spark: SparkSession,
-                                 storeDir: String): Array[org.apache.hadoop.fs.Path] = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = Sidecars.fs(spark, root)
-    if (!fs.exists(root)) Array.empty
-    else fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-      .map(_.getPath)
-  }
-
-  private[streaming] def deleteDir(spark: SparkSession, dir: org.apache.hadoop.fs.Path): Unit = {
-    Sidecars.fs(spark, dir).delete(dir, true)
-    ()
-  }
-
   /** Fold committed batch partitions (id < `upToBatch`) into the
-    * reserved `__batch=-1` partition — the maintenance pass that keeps
-    * a long-lived store from accumulating one small partition per
-    * micro-batch. Rows RELOCATE rather than merge (partition count is
-    * the thing being bounded, not row count — the serving merge stays
-    * one aggregate either way), and a full-row distinct over
-    * (term, tf, df, __src) makes the fold idempotent: a crash between
-    * the compacted write and the stale-partition delete leaves
-    * duplicate provenance rows that the next fold collapses instead of
-    * double-counting. The in-flight batch keeps its own partition, so
-    * a replayed batch still overwrites exactly itself. */
-  def compactTermStats(spark: SparkSession, storeDir: String,
-                       upToBatch: Long, targetFiles: Int = 1): Unit = {
-    val fold = batchPartitionDirs(spark, storeDir)
-      .filter(_.getName.stripPrefix("__batch=").toLong < upToBatch)
-    if (fold.length > 1) {
-      val folded = spark.read.option("basePath", storeDir)
-        .parquet(fold.map(_.toString).toIndexedSeq: _*)
-        .select(col("term"), col("tf"), col("df"), col("__src"))
-        .distinct()
-        .withColumn("__batch", lit(CompactedBatchId))
-        .coalesce(math.max(1, targetFiles))
-        // materialize BEFORE the write: the fold may read the very
-        // __batch=-1 partition the write replaces
-        .localCheckpoint(true)
-      folded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "DYNAMIC")
-        .partitionBy("__batch")
-        .parquet(storeDir)
-      fold.filter(_.getName != s"__batch=$CompactedBatchId")
-        .foreach(deleteDir(spark, _))
-      spark.catalog.refreshByPath(storeDir)
-    }
-  }
-
-  /** Shared fold for DOC-GRAINED store directories (round 15,
-    * streaming review — one implementation where four near-verbatim
-    * copies lived): relocate committed batch partitions
-    * (id < `upToBatch`) into the reserved `__batch=-1` partition,
-    * keeping ONLY each document's newest-batch rows.
-    *
-    * The newest-per-doc filter (not a bare full-row distinct) is what
-    * gives every doc-grained tier ONE update semantic: a doc_id
-    * re-ingested in a later batch resolves to its newest version at
-    * the fold — COMPACTION-BOUNDED visibility (until the next fold,
-    * both versions' rows serve; the vector tier alone resolves at
-    * read time via its `newestRows`, which its top-k semantics
-    * require). It is also still the compaction-crash-window guard: a
-    * stale batch partition beside its relocated `-1` copy folds back
-    * to the batch rows (−1 sorts below every real id), identical
-    * content, so the fold stays idempotent. The in-flight batch keeps
-    * its own partition, so a replayed batch still overwrites exactly
-    * itself.
-    *
-    * `prep` runs after the load, before the fold (the jaccard store
-    * uses it to default a missing `__ogen` on pre-stamp rows). */
-  private[streaming] def foldNewestBatches(spark: SparkSession, dir: String,
-      idCol: String, dataCols: Seq[String], upToBatch: Long,
-      targetFiles: Int, prep: DataFrame => DataFrame = identity): Unit = {
-    val fold = batchPartitionDirs(spark, dir)
-      .filter(_.getName.stripPrefix("__batch=").toLong < upToBatch)
-    if (fold.length > 1) {
-      import org.apache.spark.sql.expressions.Window
-      val folded = prep(spark.read.option("basePath", dir)
-          .parquet(fold.map(_.toString).toIndexedSeq: _*))
-        .withColumn("__mb", max(col("__batch"))
-          .over(Window.partitionBy(col(idCol))))
-        .filter(col("__batch") === col("__mb"))
-        .select(dataCols.map(col): _*)
-        .distinct()
-        .withColumn("__batch", lit(CompactedBatchId))
-        .coalesce(math.max(1, targetFiles))
-        // materialize BEFORE the write: the fold may read the very
-        // __batch=-1 partition the write replaces
-        .localCheckpoint(true)
-      folded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "DYNAMIC")
-        .partitionBy("__batch")
-        .parquet(dir)
-      // stale partitions delete in ASCENDING batch order (round-15
-      // review): relabeling to -1 loses provenance, so if a crash
-      // left an OLD batch partition standing while every newer one
-      // was already gone, the next fold's max(__batch) would crown
-      // the stale version — permanently reverting an update. With
-      // ascending deletes a surviving batch b implies every batch > b
-      // also survives, so the true newest always outranks it.
-      fold.filter(_.getName != s"__batch=$CompactedBatchId")
-        .sortBy(_.getName.stripPrefix("__batch=").toLong)
-        .foreach(deleteDir(spark, _))
-      spark.catalog.refreshByPath(dir)
-    }
-  }
+    * reserved `__batch=-1` partition ([[BatchStore.fold]]). Rows
+    * RELOCATE rather than merge (partition count is the thing being
+    * bounded, not row count — the serving merge stays one aggregate
+    * either way), and a full-row distinct over (term, tf, df, __src)
+    * makes the fold idempotent: a crash between the compacted write
+    * and the stale-partition delete leaves duplicate provenance rows
+    * that the next fold collapses instead of double-counting. */
+  def compactTermStats(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.fold(spark, storeDir, upToBatch)(
+      _.select(col("term"), col("tf"), col("df"), col("__src")).distinct())
 
   /** Maintain a full INVERTED INDEX from a document stream — the
     * retrieval architecture rather than just corpus totals: each
@@ -226,7 +109,7 @@ object TextIngest {
     * ever needed per doc): df(term) = posting count per term, N and
     * Σdl = one aggregate of the doc store. A doc_id re-ingested in a
     * later batch is an update with compaction-bounded visibility
-    * ([[foldNewestBatches]] keeps only its newest batch's rows; until
+    * ([[BatchStore.newestPerDoc]] keeps only its newest batch's rows; until
     * that fold, [[bm25FromStore]]'s statistics transiently count both
     * versions). Serving ([[bm25FromStore]]) is term-keyed joins
     * against the postings — the corpus text is never rescanned. */
@@ -235,47 +118,34 @@ object TextIngest {
                             trigger: Trigger = Trigger.AvailableNow(),
                             onBatch: Long => Unit = _ => (),
                             compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val toks = batch.select(col(id).as("doc_id"), tokens(text).as("term"))
-          .persist()
-        try {
-          toks.groupBy(col("doc_id"), col("term"))
-            .agg(count(lit(1)).as("tf"))
-            .withColumn("__batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("__batch")
-            .parquet(s"$storeDir/postings")
-          toks.groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("dl"))
-            .withColumn("__batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("__batch")
-            .parquet(s"$storeDir/docs")
-          if (compactEvery > 0 &&
-              batchPartitionDirs(stream.sparkSession, s"$storeDir/postings").length >= compactEvery)
-            compactInvertedIndex(stream.sparkSession, storeDir, upToBatch = batchId)
-          onBatch(batchId)
-        } finally { toks.unpersist(); () }
-      }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .start()
+    BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      val spark = stream.sparkSession
+      val toks = batch.select(col(id).as("doc_id"), tokens(text).as("term"))
+        .persist()
+      try {
+        BatchStore.overwritePartitions(toks.groupBy(col("doc_id"), col("term"))
+          .agg(count(lit(1)).as("tf"))
+          .withColumn("__batch", lit(batchId)), s"$storeDir/postings")
+        BatchStore.overwritePartitions(toks.groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("dl"))
+          .withColumn("__batch", lit(batchId)), s"$storeDir/docs")
+        if (BatchStore.compactDue(spark, s"$storeDir/postings", compactEvery))
+          compactInvertedIndex(spark, storeDir, upToBatch = batchId)
+        onBatch(batchId)
+      } finally { toks.unpersist(); () }
+    }
 
-  /** Fold committed postings/docs batch partitions into `__batch=-1`
-    * via [[foldNewestBatches]]: a doc_id re-ingested in a later batch
-    * resolves to its newest postings/length at the fold
-    * (compaction-bounded update visibility — between re-ingest and
-    * fold, [[bm25FromStore]]'s df/N/Σdl transiently count both
-    * versions). */
-  def compactInvertedIndex(spark: SparkSession, storeDir: String,
-                           upToBatch: Long, targetFiles: Int = 1): Unit = {
-    foldNewestBatches(spark, s"$storeDir/postings", "doc_id",
-      Seq("doc_id", "term", "tf"), upToBatch, targetFiles)
-    foldNewestBatches(spark, s"$storeDir/docs", "doc_id",
-      Seq("doc_id", "dl"), upToBatch, targetFiles)
+  /** Fold committed postings/docs batch partitions into `__batch=-1`,
+    * newest batch per doc ([[BatchStore.newestPerDoc]]): a doc_id
+    * re-ingested in a later batch resolves to its newest
+    * postings/length at the fold (compaction-bounded update visibility
+    * — between re-ingest and fold, [[bm25FromStore]]'s df/N/Σdl
+    * transiently count both versions). */
+  def compactInvertedIndex(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
+    BatchStore.fold(spark, s"$storeDir/postings", upToBatch)(
+      BatchStore.newestPerDoc("doc_id", "term", "tf"))
+    BatchStore.fold(spark, s"$storeDir/docs", upToBatch)(
+      BatchStore.newestPerDoc("doc_id", "dl"))
   }
 
   /** BM25 served from the stream-maintained inverted index — the same

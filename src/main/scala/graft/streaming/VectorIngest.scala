@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -99,25 +99,18 @@ object VectorIngest {
                                nlist: Int = 16, seed: Long = 42L,
                                iters: Int = 10, maxSamples: Int = 100000)
 
-  /** Reserved `__batch` partition id compaction folds old batches into
-    * — real micro-batch ids are >= 0, so no replay ever claims it. */
-  private[graft] val CompactedBatchId = -1L
-
   private def quantizerFile(storeDir: String): String =
     s"$storeDir/_quantizer/centroids.txt"
 
   /** Persist the CURRENT quantizer (baseline distortion + centroids)
     * to the store's sidecar — underscore-prefixed, so parquet readers
-    * skip it like `_checkpoint`. Tmp-file + rename swap through
-    * [[Sidecars]] (round 15: Hadoop-FS, so a production-URI store
-    * path works — `java.io.File` silently wrote the driver's local
-    * disk there): a restart or concurrent searcher sees the old
-    * quantizer, the new one, or (mid-swap) none — never a torn
-    * file. */
+    * skip it like `_checkpoint`. Through [[BatchStore.writeSidecar]]:
+    * a restart or concurrent searcher sees the old quantizer, the new
+    * one, or (mid-swap) none — never a torn file. */
   private[graft] def saveQuantizer(spark: org.apache.spark.sql.SparkSession,
                                    storeDir: String, baseline: Double,
                                    centroids: Array[Array[Double]]): Unit =
-    Sidecars.write(spark, quantizerFile(storeDir),
+    BatchStore.writeSidecar(spark, quantizerFile(storeDir),
       (s"baseline=$baseline" +: centroids.toSeq.map(_.mkString(",")))
         .mkString("", "\n", "\n"))
 
@@ -126,60 +119,31 @@ object VectorIngest {
     * bootstrap quantizer. */
   private[graft] def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
                                    storeDir: String): Option[(Double, Array[Array[Double]])] =
-    Sidecars.read(spark, quantizerFile(storeDir)).map { txt =>
+    BatchStore.readSidecar(spark, quantizerFile(storeDir)).map { txt =>
       val lines = txt.split("\n")
       (lines.head.stripPrefix("baseline=").toDouble,
         lines.tail.filter(_.nonEmpty).map(_.split(",").map(_.toDouble)))
     }
 
-  /** Persist the SRP signature geometry beside the store (the
-    * [[DedupIngest]] sig-params discipline, itself borrowed from the
-    * quantizer sidecar above): band keys are only comparable between
-    * relations signed with the SAME (dim, bits, bands, seed), so a
-    * probe signed with different geometry would get a silent recall-0
-    * join, not an error. First writer wins; a changed re-declaration
-    * throws. */
+  /** The SRP signature geometry pinned beside the store
+    * ([[BatchStore.pinFields]]): band keys are only comparable between
+    * relations signed with the SAME (dim, bits, bands, seed). */
   private def srpParamsFile(storeDir: String): String =
     s"$storeDir/_srp_params/params.txt"
 
   private def saveSrpParams(spark: org.apache.spark.sql.SparkSession,
                             storeDir: String, b: IndexBootstrap): Unit =
-    loadSrpParams(spark, storeDir) match {
-      case Some((dim, bits, bands, seed)) =>
-        require(dim == b.dim && bits == b.bits && bands == b.bands && seed == b.seed,
-          s"store $storeDir was maintained with SRP (dim=$dim, bits=$bits, " +
-            s"bands=$bands, seed=$seed); re-declaring (${b.dim}, ${b.bits}, " +
-            s"${b.bands}, ${b.seed}) would corrupt the band keyspace")
-      case None =>
-        Sidecars.write(spark, srpParamsFile(storeDir),
-          s"dim=${b.dim}\nbits=${b.bits}\nbands=${b.bands}\nseed=${b.seed}\n")
-    }
+    BatchStore.pinFields(spark, srpParamsFile(storeDir),
+      "dim" -> b.dim, "bits" -> b.bits, "bands" -> b.bands, "seed" -> b.seed)
 
   private def loadSrpParams(spark: org.apache.spark.sql.SparkSession,
                             storeDir: String): Option[(Int, Int, Int, Long)] =
-    Sidecars.read(spark, srpParamsFile(storeDir)).map { txt =>
-      val lines = txt.split("\n")
-      (lines(0).stripPrefix("dim=").toInt,
-        lines(1).stripPrefix("bits=").toInt,
-        lines(2).stripPrefix("bands=").toInt,
-        lines(3).stripPrefix("seed=").toLong)
-    }
-
-  /** The store's `__batch=*` partition directories (data partitions
-    * only — `_checkpoint`/`_quantizer` sidecars excluded), through the
-    * Hadoop FileSystem API: the store path is a production URI
-    * (hdfs://, s3a://, file://), and java.io.File would silently list
-    * nothing there, disabling compaction — the defect fixed in
-    * [[TextIngest]] round 8, now shared from there. (The quantizer
-    * SIDECAR still uses local java.nio for its atomic rename; document
-    * a local store path when refit persistence is in play.) */
-  private def batchPartitionDirs(spark: org.apache.spark.sql.SparkSession,
-                                 storeDir: String): Array[org.apache.hadoop.fs.Path] =
-    TextIngest.batchPartitionDirs(spark, storeDir)
+    BatchStore.readFields(spark, srpParamsFile(storeDir), "dim", "bits", "bands", "seed")
+      .map(v => (v(0).toInt, v(1).toInt, v(2).toInt, v(3).toLong))
 
   private def storeHasData(spark: org.apache.spark.sql.SparkSession,
                            storeDir: String): Boolean =
-    batchPartitionDirs(spark, storeDir).nonEmpty
+    BatchStore.batchPartitionDirs(spark, storeDir).nonEmpty
 
   /** Refit-in-progress marker (round 15, streaming review): the
     * mid-stream refit rewrites every stored row's `__cell` partition
@@ -205,12 +169,9 @@ object VectorIngest {
   private def refitMarker(storeDir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$storeDir/_refit_pending")
 
-  private def storeFs(spark: org.apache.spark.sql.SparkSession, storeDir: String) =
-    Sidecars.fs(spark, new org.apache.hadoop.fs.Path(storeDir))
-
   private def requireNoPendingRefit(spark: org.apache.spark.sql.SparkSession,
                                     storeDir: String): Unit =
-    require(!storeFs(spark, storeDir).exists(refitMarker(storeDir)),
+    require(!BatchStore.fs(spark, storeDir).exists(refitMarker(storeDir)),
       s"store $storeDir has a quantizer refit in progress or interrupted " +
         "(_refit_pending): cell assignments and the _quantizer sidecar may " +
         "disagree, so IVF routing would be silently wrong. Wait for the " +
@@ -235,15 +196,7 @@ object VectorIngest {
       .withColumn("__a", assign(col("__cv")))
       .select(keep: _*)
       .localCheckpoint(true)
-    reassigned.write.mode("overwrite")
-      // "DYNAMIC" pre-uppercased (round 16): Spark parses this option
-      // through a DEFAULT-locale toUpperCase before the enum lookup, so
-      // lowercase "dynamic" fails under tr_TR ("DYNAMİC", dotted İ);
-      // the canonical uppercase form is a fixed point of any locale's
-      // uppercasing and works everywhere
-      .option("partitionOverwriteMode", "DYNAMIC")
-      .partitionBy("__batch")
-      .parquet(storeDir)
+    BatchStore.overwritePartitions(reassigned, storeDir)
   }
 
   private def distortionOf(cols: DataFrame): Option[Double] =
@@ -252,54 +205,23 @@ object VectorIngest {
 
   /** Fold every batch partition strictly below `upToBatch` (including
     * a previous compacted partition) into the single reserved
-    * `__batch=-1` partition, then remove the folded directories — the
-    * maintenance that keeps a long-lived [[maintainIndex]] store from
-    * accumulating one small parquet partition per micro-batch.
-    *
-    * Only COMMITTED batches are folded (the in-flight batch keeps its
-    * own partition), so a replayed batch still overwrites exactly its
-    * own partition. The fold dedups on cid, which makes compaction
-    * idempotent: if a crash lands between the compacted write and the
-    * old-directory delete, the next compaction folds the duplicate
-    * copies back to one row. Plain parquet has no multi-partition
-    * transaction, so that crash window exists — a table format with
-    * atomic commits would close it; at this layer it is documented and
-    * self-healing. */
+    * `__batch=-1` partition ([[BatchStore.fold]]) — the maintenance
+    * that keeps a long-lived [[maintainIndex]] store from accumulating
+    * one small parquet partition per micro-batch. The fold keeps the
+    * NEWEST version of each cid (max `__batch`): a cid re-ingested
+    * with an updated vector survives compaction as its latest copy,
+    * not whichever row a partition scan sees first — which also makes
+    * the fold idempotent over the compaction crash window. */
   def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
-                   upToBatch: Long, targetFiles: Int = 1): Unit = {
+                   upToBatch: Long): Unit = {
     requireNoPendingRefit(spark, storeDir)
-    val fold = batchPartitionDirs(spark, storeDir)
-      .filter(_.getName.stripPrefix("__batch=").toLong < upToBatch)
-    if (fold.length > 1) {
-      val read = spark.read.option("basePath", storeDir)
-        .parquet(fold.map(_.toString).toIndexedSeq: _*)
-      // dedup keeps the NEWEST version of a cid (max __batch) — a cid
-      // re-ingested with an updated vector must survive compaction as
-      // its latest copy, not whichever row a partition scan sees first
+    BatchStore.fold(spark, storeDir, upToBatch) { read =>
       val dataCols = read.columns.filter(_ != "__batch")
-      val folded = read
+      read
         .groupBy(col("cid"))
         .agg(max_by(struct((dataCols.filter(_ != "cid").map(col) :+ col("__batch")): _*),
           col("__batch")).as("__r"))
         .select(col("cid") +: dataCols.filter(_ != "cid").map(c => col(s"__r.$c")): _*)
-        .withColumn("__batch", lit(CompactedBatchId))
-        .coalesce(math.max(1, targetFiles))
-        // materialize BEFORE the write: the fold may read the very
-        // __batch=-1 partition the write replaces
-        .localCheckpoint(true)
-      folded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "DYNAMIC")
-        .partitionBy("__batch")
-        .parquet(storeDir)
-      // ASCENDING batch order (round-15 review, the foldNewestBatches
-      // discipline): a crash that left an old partition standing while
-      // newer ones were gone would let max(__batch) crown a stale
-      // version; ascending deletes make a surviving batch imply every
-      // newer batch also survives
-      fold.filter(_.getName != s"__batch=$CompactedBatchId")
-        .sortBy(_.getName.stripPrefix("__batch=").toLong)
-        .foreach(TextIngest.deleteDir(spark, _))
-      spark.catalog.refreshByPath(storeDir)
     }
   }
 
@@ -354,74 +276,66 @@ object VectorIngest {
     val encode = b.pq.map(cb => Vectors.pqEncoder(spark, cb))
     // the OPQ rotation + codebooks are frozen the same way
     val oEncode = b.opq.map(m => Vectors.opqCodeColumn(spark, m))
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // heal an interrupted refit FIRST (round 15): reassign the
-        // whole store under the sidecar's quantizer — the authority —
-        // restoring cells ≡ sidecar at every crash point, then clear
-        // the marker so readers serve again. A pre-save crash rolls
-        // back (this replayed batch re-triggers the refit, seeded and
-        // deterministic); a post-save crash rolls forward.
-        if (storeFs(spark, storeDir).exists(refitMarker(storeDir))) {
-          val (hb, hc) = loadQuantizer(spark, storeDir) match {
-            case Some((base, cs)) => (Some(base), cs)
-            case None => (refit.map(_.baseline), b.centroids)
-          }
-          baseline = hb.orElse(baseline); centroids = hc
-          assign = Vectors.cellAssigner(spark, centroids)
-          if (storeHasData(spark, storeDir))
-            reassignStore(spark, storeDir, assign)
-          storeFs(spark, storeDir).delete(refitMarker(storeDir), false)
-          ()
+    BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      // heal an interrupted refit FIRST (round 15): reassign the
+      // whole store under the sidecar's quantizer — the authority —
+      // restoring cells ≡ sidecar at every crash point, then clear
+      // the marker so readers serve again. A pre-save crash rolls
+      // back (this replayed batch re-triggers the refit, seeded and
+      // deterministic); a post-save crash rolls forward.
+      if (BatchStore.fs(spark, storeDir).exists(refitMarker(storeDir))) {
+        val (hb, hc) = loadQuantizer(spark, storeDir) match {
+          case Some((base, cs)) => (Some(base), cs)
+          case None => (refit.map(_.baseline), b.centroids)
         }
-        var cols = indexColumns(batch.toDF(), id, vec, b, assign, encode, oEncode).persist()
-        try {
-          var d = distortionOf(cols)
-          for (p <- refit; dd <- d; base <- baseline
-               if Vectors.shouldRefit(dd, base, p.factor)) {
-            // 1. refit on the full observed distribution: everything
-            //    already stored plus the drifting batch (__cv is the
-            //    normalized vector, so the fit is normalization-stable)
-            val batchVecs = cols.select(col("__cv"))
-            val fitInput =
-              if (storeHasData(spark, storeDir))
-                spark.read.parquet(storeDir).select(col("__cv")).unionByName(batchVecs)
-              else batchVecs
-            val newCentroids = Vectors.fitQuantizer(fitInput, "__cv", p.nlist,
-              sampleFraction = 1.0, seed = p.seed, maxSamples = p.maxSamples,
-              iters = p.iters)
-            val newAssign = Vectors.cellAssigner(spark, newCentroids)
-            // 2. reconcile under the refit marker: readers refuse
-            //    while cells and sidecar can disagree, and a crash
-            //    anywhere in here heals at the next batch (above)
-            storeFs(spark, storeDir).create(refitMarker(storeDir), true).close()
-            if (storeHasData(spark, storeDir))
-              reassignStore(spark, storeDir, newAssign)
-            // 3. recompute the triggering batch under the new quantizer
-            //    and reset the baseline to its post-refit distortion
-            cols.unpersist()
-            cols = indexColumns(batch.toDF(), id, vec, b, newAssign, encode, oEncode).persist()
-            d = distortionOf(cols)
-            saveQuantizer(spark, storeDir, d.getOrElse(base), newCentroids)
-            storeFs(spark, storeDir).delete(refitMarker(storeDir), false)
-            centroids = newCentroids
-            assign = newAssign
-            baseline = d.orElse(baseline)
-            onRefit(batchId, newCentroids)
-          }
-          cols.withColumn("__batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("__batch")
-            .parquet(storeDir)
-          if (compactEvery > 0 && batchPartitionDirs(spark, storeDir).length >= compactEvery)
-            compactStore(spark, storeDir, upToBatch = batchId)
-          onBatch(batchId, d)
-        } finally { cols.unpersist(); () }
+        baseline = hb.orElse(baseline); centroids = hc
+        assign = Vectors.cellAssigner(spark, centroids)
+        if (storeHasData(spark, storeDir))
+          reassignStore(spark, storeDir, assign)
+        BatchStore.fs(spark, storeDir).delete(refitMarker(storeDir), false)
+        ()
       }
-      .trigger(trigger)
-      .option("checkpointLocation", s"$storeDir/_checkpoint")
-      .start()
+      var cols = indexColumns(batch, id, vec, b, assign, encode, oEncode).persist()
+      try {
+        var d = distortionOf(cols)
+        for (p <- refit; dd <- d; base <- baseline
+             if Vectors.shouldRefit(dd, base, p.factor)) {
+          // 1. refit on the full observed distribution: everything
+          //    already stored plus the drifting batch (__cv is the
+          //    normalized vector, so the fit is normalization-stable)
+          val batchVecs = cols.select(col("__cv"))
+          val fitInput =
+            if (storeHasData(spark, storeDir))
+              spark.read.parquet(storeDir).select(col("__cv")).unionByName(batchVecs)
+            else batchVecs
+          val newCentroids = Vectors.fitQuantizer(fitInput, "__cv", p.nlist,
+            sampleFraction = 1.0, seed = p.seed, maxSamples = p.maxSamples,
+            iters = p.iters)
+          val newAssign = Vectors.cellAssigner(spark, newCentroids)
+          // 2. reconcile under the refit marker: readers refuse
+          //    while cells and sidecar can disagree, and a crash
+          //    anywhere in here heals at the next batch (above)
+          BatchStore.fs(spark, storeDir).create(refitMarker(storeDir), true).close()
+          if (storeHasData(spark, storeDir))
+            reassignStore(spark, storeDir, newAssign)
+          // 3. recompute the triggering batch under the new quantizer
+          //    and reset the baseline to its post-refit distortion
+          cols.unpersist()
+          cols = indexColumns(batch, id, vec, b, newAssign, encode, oEncode).persist()
+          d = distortionOf(cols)
+          saveQuantizer(spark, storeDir, d.getOrElse(base), newCentroids)
+          BatchStore.fs(spark, storeDir).delete(refitMarker(storeDir), false)
+          centroids = newCentroids
+          assign = newAssign
+          baseline = d.orElse(baseline)
+          onRefit(batchId, newCentroids)
+        }
+        BatchStore.overwritePartitions(cols.withColumn("__batch", lit(batchId)), storeDir)
+        if (BatchStore.compactDue(spark, storeDir, compactEvery))
+          compactStore(spark, storeDir, upToBatch = batchId)
+        onBatch(batchId, d)
+      } finally { cols.unpersist(); () }
+    }
   }
 
   /** One-way embedding probe served OFF THE STORE — the last cell of
@@ -473,7 +387,7 @@ object VectorIngest {
     * [[compactStore]]'s keep-the-newest rule applied at read time. This
     * is simultaneously (a) the compaction-crash-window guard (a stale
     * partition beside its relocated copy folds back to one row —
-    * `CompactedBatchId` = -1 sorts below every real batch, so the
+    * [[BatchStore.CompactedBatchId]] sorts below every real batch, so the
     * relocated copy wins) and (b) what makes a cid re-ingested with an
     * updated vector SERVE as its latest version while both versions
     * still sit in their batch partitions: an arbitrary-row dedup could

@@ -809,24 +809,39 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(Bench.stealFrac(100L, 0.0, 32) == -1.0)
   }
 
-  test("src/main reads no graft.-prefixed JVM system property (no hidden A/B switches)") {
-    // a decided A/B keeps one code path; a -Dgraft.* toggle in library
-    // code is an undocumented second path no test or benchmark runs
+  /** `file:line: text` of every line under `src/main/scala/<sub>` that
+    * matches `pattern`, in `.scala` files `keep` admits. */
+  private def sourceHits(sub: String, pattern: scala.util.matching.Regex,
+                         keep: String => Boolean = _ => true): List[String] = {
     var dir = new java.io.File(sys.props("user.dir")).getAbsoluteFile
     while (dir != null && !new java.io.File(dir, "src/main/scala/graft").isDirectory)
       dir = dir.getParentFile
     assert(dir != null, s"no src/main/scala/graft above ${sys.props("user.dir")}")
-    val read = ("""(sys\.props|System\.getProperty|Boolean\.getBoolean|Integer\.getInteger|""" +
-      """Long\.getLong)[\w.]*\s*\(\s*"graft\.""").r
-    val root = new java.io.File(dir, "src/main/scala").toPath
-    val hits = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
+    val root = new java.io.File(dir, s"src/main/scala/$sub").toPath
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && keep(f.getFileName.toString))
       .flatMap { f =>
         val lines = java.nio.file.Files.readAllLines(f).asScala
         lines.zipWithIndex.collect {
-          case (l, i) if read.findFirstIn(l).isDefined => s"${root.relativize(f)}:${i + 1}: ${l.trim}"
+          case (l, i) if pattern.findFirstIn(l).isDefined => s"${root.relativize(f)}:${i + 1}: ${l.trim}"
         }
       }.toList
+  }
+
+  test("src/main reads no graft.-prefixed JVM system property (no hidden A/B switches)") {
+    // a decided A/B keeps one code path; a -Dgraft.* toggle in library
+    // code is an undocumented second path no test or benchmark runs
+    val read = ("""(sys\.props|System\.getProperty|Boolean\.getBoolean|Integer\.getInteger|""" +
+      """Long\.getLong)[\w.]*\s*\(\s*"graft\.""").r
+    val hits = sourceHits("", read)
     assert(hits.isEmpty, hits.mkString("graft.* system property reads:\n", "\n", ""))
+  }
+
+  test("the streaming stores' __batch layout lives in BatchStore only") {
+    // the partition write and the reserved compacted-partition id are
+    // one decision; a second copy in a tier module drifts from it
+    val hits = sourceHits("graft/streaming", """partitionOverwriteMode|CompactedBatchId =""".r,
+      keep = _ != "BatchStore.scala")
+    assert(hits.isEmpty, hits.mkString("store layout outside BatchStore:\n", "\n", ""))
   }
 }

@@ -590,16 +590,18 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     def prep() = RefPipeline.prepData(
       spark.read.parquet(s"$stage/cache_zones.parquet"),
       spark.read.parquet(s"$stage/cache_arretes.parquet"))
-    def persisted = spark.sparkContext.getPersistentRDDs.size
-    val none = persisted
+    // count only the RDDs persisted since this case began: the context
+    // cleaner may unpersist earlier suites' garbage-collected RDDs at
+    // any moment, which moves the session-wide total
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- before
     val prepped = prep()
-    val one = persisted
-    assert(one == none + 1, "one prepData must hold exactly one cached relation")
+    assert(added.size == 1, "one prepData must hold exactly one cached relation")
     prep()
     prep()
-    assert(persisted == one, "each call must drop the previous call's cache entry")
+    assert(added.size == 1, "each call must drop the previous call's cache entry")
     assert(prepped.count() == 1)
     prepped.unpersist()
-    assert(persisted == none)
+    assert(added.isEmpty)
   }
 }

@@ -706,7 +706,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
     // padding, bytea, negative epochs — fuzz seeded random
     // flat schemas over the full supported type surface through a
     // REAL server and compare canonically
-    val conn = graft.io.Postgres.ensureLocalServer("/tmp/graft_test/pgserver")
+    val conn = graft.io.TestPg.conn
     val leafTypes: IndexedSeq[DataType] = IndexedSeq(IntegerType, LongType,
       DoubleType, FloatType, StringType, BooleanType, BinaryType, DateType,
       TimestampType, ShortType, ByteType, DecimalType(12, 4),

@@ -622,6 +622,22 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!servedPlan.contains("__sig"),
       s"rescore plan must not carry the signature column:\n$servedPlan")
+    // the compaction fold applies the same per-cid newest-version rule:
+    // cid 1 keeps exactly its batch-1 row, and the probes still resolve
+    // against the new vector only
+    VectorIngest.compactStore(spark, store, upToBatch = 2)
+    val foldedCv = spark.read.parquet(store).filter($"cid" === 1L)
+      .select($"__cv").as[Seq[Double]].collect()
+    val vecBNormalized = Seq(Tuple1(vecB)).toDF("v")
+      .select(Vectors.normalized($"v")).as[Seq[Double]].head()
+    assert(foldedCv.toSeq === Seq(vecBNormalized),
+      s"the fold must keep only cid 1's newest vector, got ${foldedCv.toSeq}")
+    val gotFolded = VectorIngest.srpProbeFromStore(spark, store, probes,
+      "vec_id", "embedding", boot, simThreshold = 0.9)
+      .select($"probe_id", $"dup_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(gotFolded.contains((9002L, 1L)) && !gotFolded.contains((9001L, 1L)),
+      s"post-fold probes must match only the new vector: $gotFolded")
   }
 
   test("session windows split on gap > 30 minutes (batch and stream agree)") {
@@ -1440,7 +1456,17 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val preDocs = spark.read.parquet(s"$mStore/docs")
       .filter($"doc_id" === 1L).count()
     assert(preDocs == 2L, s"both versions visible pre-fold, got $preDocs")
+    // keep batch 1 aside to resurrect after the fold (the crash window:
+    // compacted write landed, stale-partition delete did not)
+    val mAside = "/tmp/graft_test/minhash_update_spec_batch1"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(mAside))
+    for (sub <- Seq("sigs", "docs"))
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$mStore/$sub/__batch=1"), new java.io.File(s"$mAside/$sub"))
     DedupIngest.compactMinhash(spark, mStore, upToBatch = 3)
+    def storeRows(sub: String) = spark.read.parquet(s"$mStore/$sub")
+      .collect().map(_.toString).sorted.toSeq
+    val firstFold = Seq("sigs", "docs").map(storeRows)
     // post-fold: exactly the newest version's rows survive
     val postSh = spark.read.parquet(s"$mStore/docs").filter($"doc_id" === 1L)
       .select("__sh").as[Seq[String]].collect()
@@ -1452,6 +1478,19 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val sigCount = spark.read.parquet(s"$mStore/sigs")
       .filter($"doc_id" === 1L).count()
     assert(sigCount == 4L, s"one band-signature set post-fold, got $sigCount")
+    // crash simulation: the stale batch-1 partitions reappear beside
+    // __batch=-1; the next fold must reproduce the first fold's rows
+    for (sub <- Seq("sigs", "docs")) {
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$mAside/$sub"), new java.io.File(s"$mStore/$sub/__batch=1"))
+      spark.catalog.refreshByPath(s"$mStore/$sub")
+    }
+    DedupIngest.compactMinhash(spark, mStore, upToBatch = 3)
+    assert(Seq("sigs", "docs").map(storeRows) === firstFold,
+      "re-folding a resurrected stale partition must be idempotent")
+    val refoldSh = spark.read.parquet(s"$mStore/docs").filter($"doc_id" === 1L)
+      .select("__sh").as[Seq[String]].collect().toSeq
+    assert(refoldSh === Seq(expectSh), "the NEWEST text's shingles must still win")
     // ---- media tier: doc 10's image changes ----
     def img(seed: Int): Array[Byte] = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -1629,6 +1668,16 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     q.stop()
     assert(new java.io.File(s"$local/_sig_params/params.txt").exists(),
       "the sig-params sidecar must live inside the URI store")
+    assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$local/_sig_params/params.txt")), "UTF-8") ==
+      "numHashes=16\nbands=8\n", "the pin keeps its k=v line format")
+    // a maintainer re-declaring different parameters on the same store
+    // throws instead of corrupting the band keyspace
+    intercept[IllegalArgumentException] {
+      DedupIngest.maintainMinhash(
+        MemoryStream[(Long, String)](spark).toDF().toDF("doc_id", "text"),
+        "doc_id", "text", store, numHashes = 12, bands = 4)
+    }
     // and the probe reads the pin back through the same URI (16/8
     // geometry, NOT the 12/4 defaults it was called with)
     val hits = DedupIngest.minhashProbeFromStore(spark, store,

@@ -18,8 +18,10 @@ import graft.queries.RefPipeline
   * partitioning losslessness, pushdown, and server-error surfacing. */
 class PgWireSpec extends AnyFunSuite with SparkTestBase {
 
-  private lazy val conn =
-    Postgres.ensureLocalServer("/tmp/graft_test/pgserver")
+  private lazy val conn = TestPg.conn
+
+  // orphaned stage tables from earlier processes drop before any case runs
+  override protected def beforeAll(): Unit = { super.beforeAll(); conn; () }
 
   test("overwriteTable + read back round-trips every supported type, nulls, and COPY metacharacters") {
     val schema = StructType(Seq(
