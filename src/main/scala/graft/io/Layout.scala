@@ -241,16 +241,4 @@ object Layout {
     spark.catalog.refreshByPath(dir)
     n
   }
-
-  /** File-level (min, max) stats of `statCols` for every file under
-    * `dir` — the spec's window into what scan-time pruning would skip:
-    * a predicate box prunes every file whose stat box misses it. */
-  def fileStats(spark: org.apache.spark.sql.SparkSession, dir: String,
-                statCols: Seq[String]): DataFrame = {
-    val aggs = statCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
 }

@@ -29,11 +29,6 @@ object Sources {
   def csvWithSchema(s: SparkSession, path: String, schema: StructType): DataFrame =
     s.read.option("header", "true").schema(schema).csv(path)
 
-  /** Convenience/compat path: schema inference (two passes — sample +
-    * read). Allowed for small staged files only, never the 100 TB path. */
-  def csvInferred(s: SparkSession, path: String): DataFrame =
-    s.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   /** GeoJSON FeatureCollection -> flat table: one row per feature,
     * properties lifted to columns, geometry kept as an opaque JSON
     * string (the reference never computes on it — SURVEY.md §1.1).

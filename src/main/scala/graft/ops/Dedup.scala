@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,70 +71,6 @@ object Dedup {
           i => when(i + n <= size(toks),
             concat_ws(" ", slice(toks, i + 1, lit(n)))).otherwise(lit(null))),
         x => x.isNotNull))
-  }
-
-  /** The shingle + binary-HashingTF featurization every MinHash-family
-    * op consumes: `__sh` (the distinct shingle array, reused by the
-    * exact-Jaccard rescore) and `__features` (the hashed binary vector
-    * MinHashLSH banding reads). HashingTF has no vocabulary fit — no
-    * driver-side state, streams at any scale. Split out so callers
-    * running SEVERAL minhash-family ops over one corpus featurize once
-    * (persist/checkpoint the result) instead of once per op — this is
-    * the expensive pass.
-    *
-    * 2^18 features (binary vectors are index lists, so width is free):
-    * hash-bucket collisions make feature Jaccard deviate from true
-    * shingle Jaccard by ~shingles/numFeatures — at 2^16 the corpus
-    * measured 0.037 deviation, enough for a tight candidate net to
-    * silently drop rescore-survivable pairs; at 2^18 it is ~4x
-    * smaller. DedupSpec derives the deviation from data and asserts
-    * the harness net covers it. */
-  def minhashFeaturize(df: DataFrame, id: String, text: Column): DataFrame = {
-    val withShingles = df.withColumn("__sh", shingles(text))
-      .filter(size(col("__sh")) > 0)
-    val tf = new HashingTF().setInputCol("__sh").setOutputCol("__features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    tf.transform(withShingles.select(col(id), col("__sh")))
-  }
-
-  /** MinHash + LSH near-duplicate pairs over a pre-featurized corpus
-    * ([[minhashFeaturize]]): MinHashLSH banded join compares ONLY
-    * bucket collisions; the threshold is Jaccard distance
-    * (1 - similarity). Seeded, so deterministic. The fit is cheap
-    * (draws hash-family coefficients; no data pass beyond a first-row
-    * dimension probe), so all the weight is in the join — callers
-    * should hand in a cached/checkpointed `feats` since both sides of
-    * the self-join read it. */
-  def minhashNearDupsOnFeatures(feats: DataFrame, id: String,
-                                jaccardDistThreshold: Double = 0.5,
-                                numHashTables: Int = 5): DataFrame = {
-    val lsh = new MinHashLSH().setInputCol("__features").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(feats)
-    model
-      .approxSimilarityJoin(feats, feats, jaccardDistThreshold, "jaccard_dist")
-      .select(
-        col(s"datasetA.$id").as("id_a"),
-        col(s"datasetB.$id").as("id_b"),
-        col("jaccard_dist"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
-  /** One-shot form: featurize + LSH join. The featurized corpus is
-    * persisted for the duration (both branches of the self-join read
-    * it), the (tiny) pair list eagerly checkpointed, and the cache
-    * dropped deterministically so a long-lived session never
-    * accumulates cached corpora. For several minhash-family ops over
-    * one corpus, featurize once yourself and call
-    * [[minhashNearDupsOnFeatures]]. */
-  def minhashNearDups(df: DataFrame, id: String, text: Column,
-                      jaccardDistThreshold: Double = 0.5,
-                      numHashTables: Int = 5): DataFrame = {
-    val feats = minhashFeaturize(df, id, text).persist()
-    val pairs = minhashNearDupsOnFeatures(feats, id, jaccardDistThreshold, numHashTables)
-      .localCheckpoint(true)
-    feats.unpersist(blocking = true)
-    pairs
   }
 
   /** SimHash: 64-bit locality-sensitive signature. Explode tokens
@@ -232,7 +167,7 @@ object Dedup {
     * `bands` × `numHashes/bands`; candidate pairs collide on (band,
     * concatenated-band-signature); candidates — and ONLY candidates —
     * are rescored with exact shingle-set Jaccard and kept at
-    * `>= jaccardThreshold`. The shape is [[minhashNearDupsOnFeatures]]'s
+    * `>= jaccardThreshold`. The shape is MLlib `MinHashLSH`'s
     * (band-bucket join, never all-pairs) but with seed-free md5 hashes,
     * so an independent engine reproduces signatures, bands, candidate
     * set, and rescore bit for bit — which is what upgrades this from a
@@ -257,11 +192,11 @@ object Dedup {
     // self-join read them — without this Catalyst inlines the whole
     // explode+groupBy signature pipeline into each side), then reduce
     // EAGERLY to the tiny candidate pair list and release the cache:
-    // persist + eager-checkpoint-the-candidates + unpersist (the
-    // [[minhashNearDups]] lifecycle) rather than checkpointing the
-    // relation itself, because a checkpointed LogicalRDD carries no
-    // size stats and demotes every downstream broadcast join to SMJ
-    // (measured 2.4x slower on the prefix-join sibling).
+    // persist + eager-checkpoint-the-candidates + unpersist rather
+    // than checkpointing the relation itself, because a checkpointed
+    // LogicalRDD carries no size stats and demotes every downstream
+    // broadcast join to SMJ (measured 2.4x slower on the prefix-join
+    // sibling).
     val banded = portableBandSignatures(sh, id, shCol, numHashes, bands)
       .persist()
     val obsCand = org.apache.spark.sql.Observation()
@@ -352,10 +287,10 @@ object Dedup {
     // compute-heavy downstream — AQE packed it into one partition and
     // serialized the collision join (the other face of the r8
     // driver-vs-builder spread). The count itself is VOLUME-DERIVED
-    // (round 11, the rangeJoinBucketed discipline): the collision
-    // join's cost is Σ_h count(h)² over the prefix postings — input
-    // bytes are irrelevant — so the pin that rescues this join from
-    // AQE at one scale must grow with the collision estimate at 100x.
+    // (round 11): the collision join's cost is Σ_h count(h)² over the
+    // prefix postings — input bytes are irrelevant — so the pin that
+    // rescues this join from AQE at one scale must grow with the
+    // collision estimate at 100x.
     // The estimate is one aggregate over the postings projection of
     // the ALREADY-PERSISTED docOrd, then floors at the session count
     // (small corpora keep today's behavior exactly) and caps at 4096.
@@ -557,10 +492,9 @@ object Dedup {
 
   /** Partition count for a prefix-collision self-join, derived from
     * the estimated COLLISION VOLUME Σ_h count(h)² of its postings —
-    * the shape-not-bytes sizing of
-    * [[graft.ops.Temporal.rangeJoinBucketed]]: a blind session pin is
-    * right at one scale and a serialization bottleneck at 100x, while
-    * AQE (bytes-driven) is wrong in the other direction. One aggregate
+    * shape-not-bytes sizing: a blind session pin is right at one scale
+    * and a serialization bottleneck at 100x, while AQE (bytes-driven)
+    * is wrong in the other direction. One aggregate
     * over the postings (callers pass a projection of an
     * already-persisted relation), double accumulation (magnitude, not
     * exactness), floor 1, cap 4096. */
@@ -914,14 +848,12 @@ object Dedup {
       candRows)
   }
 
-  /** The LAZY band-collision join of the one-way minhash probe (shared
-    * by [[minhashProbeOnShingles]] and the store-served
-    * [[graft.streaming.DedupIngest.minhashProbeFromStore]]; factored
-    * out so PlanSpec can pin its shape): the probe's band keys
-    * broadcast-prune the corpus/store signatures below their exchange
-    * — cost-only, a signature matching no probe band key can never
-    * collide — so a small probe batch never shuffles the store-sized
-    * band relation. Both inputs are (id, __band, __key) relations
+  /** The LAZY band-collision join of the one-way minhash probe of
+    * [[minhashProbeOnShingles]] (factored out so PlanSpec can pin its
+    * shape): the probe's band keys broadcast-prune the corpus
+    * signatures below their exchange — cost-only, a signature matching
+    * no probe band key can never collide — so a small probe batch
+    * never shuffles the corpus-sized band relation. Both inputs are (id, __band, __key) relations
     * signed with the SAME parameters. */
   private[graft] def bandProbeCandidatesLazy(pb: DataFrame, cb: DataFrame,
                                              id: String): DataFrame = {
@@ -965,29 +897,6 @@ object Dedup {
         col("__i") / (size(col("__sa")) + size(col("__sb")) - col("__i")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-
-  /** Exact n-gram Jaccard for CANDIDATE pairs only (feed it LSH-bucket
-    * collisions, never a cross join): |A∩B| / |A∪B| over distinct
-    * shingle arrays. */
-  def jaccardOnPairs(pairs: DataFrame, aShingles: Column, bShingles: Column): DataFrame =
-    pairs.withColumn("jaccard",
-      size(array_intersect(aShingles, bShingles)).cast("double") /
-        size(array_union(aShingles, bShingles)))
-
-  /** Normalized edit-distance similarity for CANDIDATE pairs (feed it
-    * LSH collisions): 1 - levenshtein/max_len. Codegen'd built-in;
-    * O(len^2) per pair, so only ever on pruned candidates. */
-  def levenshteinOnPairs(pairs: DataFrame, aText: Column, bText: Column): DataFrame =
-    pairs.withColumn("edit_sim",
-      lit(1.0) - levenshtein(aText, bText).cast("double") /
-        greatest(length(aText), length(bText)))
-
-  /** Stratified sample with per-stratum fractions (seeded, so
-    * deterministic given identical partitioning): the
-    * source/lang-balanced subsampling step of a corpus pipeline. */
-  def stratifiedSample(df: DataFrame, stratumCol: String,
-                       fractions: Map[String, Double], seed: Long = 42L): DataFrame =
-    df.stat.sampleBy(stratumCol, fractions, seed)
 
   /** The family's stable 32-bit id bucket: first 8 md5 hex digits of
     * the id's string form, as a long in [0, 2^32). ONE definition

@@ -1352,16 +1352,6 @@ object Multimodal {
     }
   }
 
-  /** The G.711 mu-law expansion closed form (the spec's segment
-    * table as arithmetic) — the oracle-side contract [[ulawWavDecode]]
-    * is pinned against: the JDK codec's output equals this for every
-    * code 0..255 (IngestSpec sweeps all of them). */
-  def ulawToLinear(u: Int): Int = {
-    val v = (~u) & 0xFF
-    val mag = ((((v & 0xF) << 3) + 0x84) << ((v >> 4) & 7)) - 0x84
-    if ((v & 0x80) != 0) -mag else mag
-  }
-
   /** Decoded-for-real mu-law metadata: format facts plus the mean
     * EXPANDED (linear PCM) sample off the codec chain's actual
     * output buffer. */

@@ -77,16 +77,6 @@ object Relational {
   def topK(df: DataFrame, keys: Seq[Column], k: Int): DataFrame =
     df.orderBy(keys: _*).limit(k)
 
-  /** Sorted small dimension collected to a driver map — ref
-    * visualization.py:50-52 (legend colors). Only for provably small
-    * results (legend-sized); never on fact tables. */
-  def collectSortedMap(df: DataFrame, key: String, value: String): Map[String, Any] =
-    df.select(col(key), col(value))
-      .orderBy(col(key))
-      .collect()
-      .map(r => r.get(0).toString -> r.get(1))
-      .toMap
-
   // ---- set operations (ExtOps, SURVEY.md §2.7) ----
 
   /** UNION ALL by column name (safe against column-order drift). */

@@ -31,9 +31,7 @@ object Temporal {
   def explodeDays(df: DataFrame, out: String, start: Column, end: Column): DataFrame =
     // inverted intervals (end < start — one dirty row in a 100 TB
     // relation) yield ZERO days instead of killing the whole job:
-    // sequence() throws on illegal boundaries, and in the bucketed
-    // range joins that crash landed in the eager sizing estimate, so
-    // even plan construction died (round-15 review)
+    // sequence() throws on illegal boundaries
     df.filter(start <= end)
       .withColumn(out, explode(sequence(start, end, expr("interval 1 day"))))
 
@@ -94,7 +92,8 @@ object Temporal {
     * Broadcasting the probe side turns Catalyst's default
     * BroadcastNestedLoopJoin into a distributed O(|intervals| x |probes|)
     * scan with no shuffle of the big side — the right plan whenever one
-    * side is dimension-sized. For big-x-big, use [[rangeJoinBucketed]]. */
+    * side is dimension-sized. For big-x-big match COUNTS, use
+    * [[rangeCountByKey]]. */
   def rangeJoinBroadcastProbes(probes: DataFrame, intervals: DataFrame,
                                probeDate: String, start: String, end: String): DataFrame =
     intervals.join(
@@ -167,151 +166,9 @@ object Temporal {
     }.drop("__t", "__side", "__rv")
   }
 
-  /** Range join for big-x-big: explode each interval into its days
-    * (reusing [[explodeDays]]) and equi-join on the day — a shuffled
-    * hash/sort-merge join Catalyst can plan, instead of a nested-loop.
-    * Fan-out = interval length in days, so bound intervals before
-    * calling. For a corpus with HOT days use
-    * [[rangeJoinBucketedSalted]]: the pinned repartitions here are
-    * REPARTITION_BY_NUM shuffles, which AQE's OptimizeSkewedJoin does
-    * not split, so one hot day lands on one reducer. */
-  /** Partition count for a pair-expansion join, derived from the
-    * ESTIMATED MATCHED-PAIR VOLUME — the sum over days of
-    * |probes(day)| * |intervals(day)| — rather than input bytes (which
-    * AQE would use and be wrong by the expansion factor) or a blind
-    * session constant (right at one scale, a serialization bottleneck
-    * at 100x). Costs two day-keyed counts, a days-sized join, and one
-    * driver scalar — O(scan) against the join's O(pairs). Floors at
-    * the session shuffle partitions (small inputs keep today's
-    * behavior exactly), caps at 4096 (beyond that, per-partition
-    * scheduling overhead dominates at any realistic executor count).
-    * The estimate runs in double — sizing needs magnitude, not
-    * exactness, and a 100 TB day-product can overflow a long sum. */
-  /** Day-explode `intervals` ONCE for both the sizing estimate and the
-    * join (round 15, VERDICT r14 #1 — the docOrd pattern from the
-    * jaccard family): the exploded relation is a LAZY local checkpoint,
-    * materialized by the estimate's first action and then read back by
-    * the join instead of re-running the explode. Lazy checkpoint (not
-    * `persist()`) deliberately: a Dataset cache entry lives in the
-    * CacheManager until an explicit unpersist the caller of a lazy
-    * join result has no hook to issue, while a checkpoint RDD is
-    * reclaimed by the ContextCleaner as soon as the returned frame is
-    * unreferenced — and it adds NO scheduled job of its own, keeping
-    * the tier at two driver actions total (estimate + the caller's),
-    * pinned by DedupSpec's action-count test. Streaming relations
-    * cannot checkpoint or estimate; they keep the raw explode and the
-    * session partition pin.
-    *
-    * Tradeoff, stated plainly: a local checkpoint's blocks live on
-    * the executors that computed them with lineage TRUNCATED, so an
-    * executor lost between the estimate and the caller's action fails
-    * the job instead of recomputing — the same tradeoff every eager
-    * localCheckpoint in the dedup family already takes, acceptable on
-    * static-allocation clusters (and definitionally on local[*]).
-    * Under aggressive dynamic allocation, prefer re-running the job
-    * over disabling the fusion: the exploded relation is
-    * interval-sized x bounded fan-out, so recomputation is cheap
-    * relative to the join it sizes. */
-  private def sizedDayExplode(probes: DataFrame, intervals: DataFrame,
-                              probeDate: String, start: String, end: String,
-                              targetPairsPerPartition: Long): (DataFrame, Int) = {
-    val exploded0 = explodeDays(intervals, "__day", col(start), col(end))
-    if (probes.isStreaming || exploded0.isStreaming)
-      (exploded0, probes.sparkSession.sessionState.conf.numShufflePartitions)
-    else {
-      val exploded = exploded0.localCheckpoint(false)
-      (exploded,
-        pairExpansionPartitions(probes, exploded, probeDate, targetPairsPerPartition))
-    }
-  }
-
-  private def pairExpansionPartitions(probes: DataFrame, exploded: DataFrame,
-                                      probeDate: String,
-                                      targetPairsPerPartition: Long): Int = {
-    val base = probes.sparkSession.sessionState.conf.numShufflePartitions
-    // streaming relations never reach here — [[sizedDayExplode]] is
-    // the single caller and gates them (its estimate is an EAGER
-    // action at plan-construction time, impossible on a stream, and a
-    // stream cannot checkpoint either); the require documents the
-    // contract instead of duplicating the fallback
-    require(!probes.isStreaming && !exploded.isStreaming,
-      "pairExpansionPartitions requires batch relations (sizedDayExplode gates streams)")
-    // phase counters (round 13, the jaccard_docord_build_ms pattern):
-    // this estimate action is the key's hidden first phase — two
-    // day-keyed counts + a days-sized join that also pays the interval
-    // day-explode once — and a committed-median drift on a range-join
-    // key needs to say WHICH phase moved (estimate vs the
-    // pair-expansion join the main count times) before anyone reruns.
-    // Caller-scoped by the bench, so bigbig/salted don't collide.
-    val t0 = System.nanoTime()
-    val pd = probes.groupBy(col(probeDate).as("__day")).agg(count(lit(1)).as("__pc"))
-    val idd = exploded.groupBy(col("__day")).agg(count(lit(1)).as("__ic"))
-    val row = pd.join(idd, "__day")
-      .agg(sum(col("__pc").cast("double") * col("__ic")).as("__pairs"))
-      .head()
-    val est = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-    val n = math.max(base, math.min(4096.0, est / targetPairsPerPartition).toInt)
-    graft.Metrics.record("range_estimate_ms", (System.nanoTime() - t0) / 1000000L)
-    graft.Metrics.record("range_est_pairs", est.toLong)
-    graft.Metrics.record("range_partitions", n.toLong)
-    n
-  }
-
-  def rangeJoinBucketed(probes: DataFrame, intervals: DataFrame,
-                        probeDate: String, start: String, end: String,
-                        targetPairsPerPartition: Long = 4000000L): DataFrame = {
-    // pin the join's partition count: both inputs are byte-small but
-    // the matched-pair volume is the product of per-day densities, so
-    // AQE — which only sees input bytes — coalesces the exchanges to a
-    // couple of partitions and serializes the expensive part (measured
-    // 5x on a 108M-pair bench join). Explicit hash repartitions are
-    // not AQE-coalescible and carry the day-partitioning through the
-    // join. The COUNT is sized from the estimated pair volume
-    // ([[pairExpansionPartitions]], round 11) so the pin that saves
-    // this join at one scale cannot strangle it at 100x; the explode
-    // itself runs once and is shared estimate-to-join
-    // ([[sizedDayExplode]], round 15).
-    val (exploded, n) = sizedDayExplode(probes, intervals, probeDate,
-      start, end, targetPairsPerPartition)
-    probes.repartition(n, col(probeDate))
-      .join(exploded.repartition(n, col("__day")),
-        col("__day") === col(probeDate)).drop("__day")
-  }
-
-  /** Skew-robust form of [[rangeJoinBucketed]]: probes get a
-    * deterministic salt from `probeFineGrain` (row-identifying columns,
-    * [[graft.ops.Skew.salt]]), exploded intervals replicate across all
-    * `saltBuckets`, and the join keys on (day, salt) — a hot day's
-    * pair expansion spreads over `saltBuckets` reducers instead of
-    * serializing on one. The replication multiplies the (bounded
-    * fan-out) interval side only, never the probe side. Same pinned
-    * partition counts as the unsalted tier, for the same AQE-coalescing
-    * reason; salting is the skew answer precisely BECAUSE the pinned
-    * shuffles opt out of AQE's skew-split. */
-  def rangeJoinBucketedSalted(probes: DataFrame, intervals: DataFrame,
-                              probeDate: String, start: String, end: String,
-                              saltBuckets: Int,
-                              probeFineGrain: Seq[Column],
-                              targetPairsPerPartition: Long = 4000000L): DataFrame = {
-    // volume-derived like the unsalted tier; estimated on the PRE-salt
-    // day explode (salting spreads pairs across reducers, it does not
-    // change their total), which the salt replication then reuses from
-    // the shared checkpoint instead of re-exploding
-    val (dayExploded, n) = sizedDayExplode(probes, intervals, probeDate,
-      start, end, targetPairsPerPartition)
-    val exploded = dayExploded
-      .withColumn("__isalt", explode(sequence(lit(0), lit(saltBuckets - 1))))
-      .repartition(n, col("__day"), col("__isalt"))
-    probes
-      .withColumn("__psalt", graft.ops.Skew.salt(probeFineGrain, saltBuckets))
-      .repartition(n, col(probeDate), col("__psalt"))
-      .join(exploded,
-        col("__day") === col(probeDate) && col("__isalt") === col("__psalt"))
-      .drop("__day", "__isalt", "__psalt")
-  }
-
   /** Matched-pair COUNT per interval-side group — the aggregate-
-    * pushdown form of `countByKey(rangeJoinBucketed(...))` (guide
+    * pushdown form of counting a day equi-join of the probes with the
+    * [[explodeDays]] of the intervals (guide
     * §2.3 "aggregate before you shuffle" / §8 "decide with small
     * rows"): when the consumer only COUNTS the matched pairs, the
     * pair expansion itself is pure waste — the count per group g
@@ -330,9 +187,8 @@ object Temporal {
     * duplicate intervals multiply counts identically. Skew needs no
     * salt in this form — a hot day is one multiplication, not a
     * reducer-sized pair expansion — which is why the salted harness
-    * tier routes here too (the materializing tiers, and their salt,
-    * remain for consumers that need the pair ROWS; PropertySpec pins
-    * this form equal to both). Counting in long: overflows only past
+    * tier routes here too (PropertySpec pins this form equal to a
+    * materializing day join). Counting in long: overflows only past
     * ~9.2e18 pairs per group, at which point the count itself is the
     * wrong question. */
   def rangeCountByKey(probes: DataFrame, intervals: DataFrame,

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -270,7 +268,7 @@ object Vectors {
     * via the upper-triangle self-join with pre-normalized vectors (the
     * norm is computed once per row, the per-pair work is one dot
     * product). O(n^2) pairs — the exact baseline and the correctness
-    * oracle for [[cosineNearDups]]; at corpus scale use the LSH path,
+    * oracle for [[srpNearDups]]; at corpus scale use that LSH path,
     * which trades recall for sub-linear candidates. */
   def cosineNearDupsExact(df: DataFrame, id: String, vec: String,
                           simThreshold: Double): DataFrame = {
@@ -280,42 +278,6 @@ object Vectors {
     val b = normed.select(col(id).as("id_b"), col("__nv").as("__nb"))
     a.join(b, col("id_a") < col("id_b"))
       .withColumn("cos_sim", dot(col("__na"), col("__nb")))
-      .filter(col("cos_sim") >= simThreshold)
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
-  }
-
-  /** Near-duplicate pairs by embedding cosine >= simThreshold —
-    * approximate: candidates come from euclidean random-projection LSH
-    * buckets; each candidate is then EXACTLY rescored with [[cosine]],
-    * so false positives are impossible. On L2-normalized vectors
-    * euclidean distance d and cosine c satisfy d^2 = 2(1-c), so the
-    * LSH join threshold is sqrt(2*(1-simThreshold)).
-    *
-    * Regime note: with the default bucketLength (4.0 >= the unit-ball
-    * diameter 2.0) nearly all projections share a bucket, which makes
-    * recall ~1 at MODERATE thresholds (this is what the exact-equality
-    * spec relies on) but costs near-all-pairs candidates — fine at
-    * fit-in-memory corpus sizes, not the 100 TB path. For the
-    * high-similarity near-DUPLICATE regime (sim >= ~0.8) use
-    * [[srpNearDups]], whose banded sign signatures bucket genuinely
-    * sub-linearly at any corpus size. */
-  def cosineNearDups(df: DataFrame, id: String, vec: String,
-                     simThreshold: Double, numHashTables: Int = 8,
-                     bucketLength: Double = 4.0): DataFrame = {
-    val normed = df.select(col(id), col(vec), normalized(col(vec)).as("__na"))
-      .filter(col("__na").isNotNull)
-      .select(col(id), col(vec), array_to_vector(col("__na")).as("__nv"))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("__nv").setOutputCol("__h")
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables).setSeed(42L)
-    val model = lsh.fit(normed)
-    val distThreshold = math.sqrt(2.0 * (1.0 - simThreshold))
-    model.approxSimilarityJoin(normed, normed, distThreshold, "__d")
-      .select(
-        col(s"datasetA.$id").as("id_a"), col(s"datasetA.$vec").as("__va"),
-        col(s"datasetB.$id").as("id_b"), col(s"datasetB.$vec").as("__vb"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", cosine(col("__va"), col("__vb")))
       .filter(col("cos_sim") >= simThreshold)
       .select(col("id_a"), col("id_b"), col("cos_sim"))
   }
@@ -783,15 +745,6 @@ object Vectors {
       .withColumnRenamed("cid", "vec_id")
   }
 
-  /** IVF (inverted-file) approximate top-k, one-shot form: build the
-    * index inline (full-corpus fit, seeded) and search it. For repeated
-    * queries over the same corpus build the index once with
-    * [[ivfIndex]] and call [[ivfSearch]] — the fit is the dominant cost
-    * and amortizes to zero. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, id: String,
-              vec: String, k: Int, nlist: Int = 16, nprobe: Int = 4): DataFrame =
-    ivfSearch(ivfIndex(corpus, id, vec, nlist), queries, id, vec, k, nprobe)
-
   // ------------------- product quantization (PQ) -------------------
 
   /** Driver-fit PQ codebooks (Jégou et al., TPAMI 2011): the
@@ -956,8 +909,8 @@ object Vectors {
     * the map-side-truncating aggregator, then exact-rescore. Linear in
     * corpus size like [[cosineTopK]] but reading 8 bytes instead of
     * 256+ per vector — the memory-bandwidth-optimal exhaustive tier; at
-    * 100 TB pair it with IVF routing ([[ivfPqSearch]]) so the scan
-    * touches only probed cells. */
+    * 100 TB pair it with IVF routing ([[ivfPqSearchResidual]]) so the
+    * scan touches only probed cells. */
   def pqTopK(index: PqIndexData, queries: DataFrame, id: String,
              vec: String, k: Int, rescoreK: Int = 0): DataFrame = {
     val rk = if (rescoreK > 0) rescoreK else 4 * k
@@ -971,38 +924,6 @@ object Vectors {
     val cands = topKPerGroup(scored.select(col("qid"), col("cid"), col("__adc")),
       "qid", "__adc", "cid", rk)
     pqRescore(index.codes, qn, cands, k)
-  }
-
-  /** IVF routing + PQ compressed-domain scoring + exact rescore — the
-    * full 100 TB composition: the coarse quantizer prunes the corpus to
-    * nprobe cells, ADC scores only those cells' m-byte codes, and the
-    * top rescoreK candidates per query are exactly rescored. Codes here
-    * quantize the vector itself (IVF-Flat routing + PQ storage), which
-    * lets one code column serve both this and the flat [[pqTopK]] scan;
-    * [[ivfPqSearchResidual]] is the faiss-canonical refinement that
-    * quantizes v − centroid(cell) instead — measurably finer ADC on
-    * clustered corpora (VectorsSpec pins the comparison). */
-  def ivfPqSearch(ivf: IvfIndexData, pq: PqIndexData, queries: DataFrame,
-                  id: String, vec: String, k: Int, nprobe: Int = 4,
-                  rescoreK: Int = 0): DataFrame = {
-    val rk = if (rescoreK > 0) rescoreK else 4 * k
-    val lut = pqLutUdf(queries.sparkSession, pq.cb)
-    val qn = normalizedQueries(queries, id, vec)
-      .withColumn("__lut", lut(col("__qv")))
-    // (cid, __cell, __code): at production scale the cell and code are
-    // sibling ingest-time columns of the same table; here the two
-    // build-once indexes join on id
-    val cellCodes = ivf.cells.select(col("cid"), col("__cell"))
-      .join(pq.codes.select(col("cid"), col("__code")), Seq("cid"))
-    val scored = probeCells(ivf.centroids, qn.select(col("qid"), col("__qv")), nprobe)
-      .join(broadcast(qn.select(col("qid"), col("__lut"))), Seq("qid"))
-      .join(cellCodes, Seq("__cell"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("__adc", graft.functions.VectorExprs.pqAdc(
-        col("__code"), col("__lut"), pq.cb.ksub))
-    val cands = topKPerGroup(scored.select(col("qid"), col("cid"), col("__adc")),
-      "qid", "__adc", "cid", rk)
-    pqRescore(pq.codes, qn, cands, k)
   }
 
   // ------------- optimized product quantization (OPQ) -------------
@@ -1186,19 +1107,13 @@ object Vectors {
     * training MSE, so OPQ is NEVER WORSE than plain PQ on the fit
     * sample by construction, not by hope. (The argmin also sidesteps
     * the non-monotonicity of refitting k-means from a fresh seeding
-    * each round.) */
-  def opqFit(corpus: DataFrame, vec: String, m: Int = 8, ksub: Int = 64,
-             sampleFraction: Double = 1.0, seed: Long = 42L,
-             maxSamples: Int = 100000, iters: Int = 10,
-             opqIters: Int = 6): OpqModel =
-    opqFitWithBaseline(corpus, vec, m, ksub, sampleFraction, seed,
-      maxSamples, iters, opqIters)._1
-
-  /** [[opqFit]] that ALSO returns the plain-PQ baseline as an identity
-    * model — the identity evaluation happens inside the fit anyway
-    * (it anchors the never-worse guarantee), so callers comparing
-    * optimized vs plain ([[opqDistortion]] on each) get the baseline
-    * without paying a second codebook fit. */
+    * each round.)
+    *
+    * Returns (optimized, plain-PQ baseline as an identity model) — the
+    * identity evaluation happens inside the fit anyway (it anchors the
+    * never-worse guarantee), so callers comparing optimized vs plain
+    * ([[opqDistortion]] on each) get the baseline without paying a
+    * second codebook fit. */
   def opqFitWithBaseline(corpus: DataFrame, vec: String, m: Int = 8, ksub: Int = 64,
                          sampleFraction: Double = 1.0, seed: Long = 42L,
                          maxSamples: Int = 100000, iters: Int = 10,
@@ -1246,15 +1161,6 @@ object Vectors {
     }
     (OpqModel(d, bestRot, bestCb), OpqModel(d, idRot, cbId))
   }
-
-  /** The plain-PQ baseline as an [[OpqModel]]: identity rotation around
-    * existing codebooks. Lets callers compare plain vs optimized
-    * through the SAME distortion code path ([[opqDistortion]]), so at
-    * the no-gain fixpoint the two numbers agree bit-for-bit. */
-  def opqIdentity(cb: PqCodebooks): OpqModel =
-    OpqModel(cb.dim,
-      Array.tabulate(cb.dim * cb.dim)(ix => if (ix / cb.dim == ix % cb.dim) 1.0 else 0.0),
-      cb)
 
   /** The bare rotation as a scan-local UDF over an ALREADY-normalized
     * double array (one model broadcast per call — build once, reuse
@@ -1329,8 +1235,8 @@ object Vectors {
     * under `model` — rotate, encode, reconstruct, ‖y − ŷ‖², one
     * scan-local pass against the broadcast model; None for an
     * empty/degenerate corpus. The drift statistic and the fit-quality
-    * judge: [[opqFit]] vs [[opqIdentity]] on the same corpus measures
-    * exactly what the rotation bought. */
+    * judge: the two models of [[opqFitWithBaseline]] on the same corpus
+    * measure exactly what the rotation bought. */
   def opqDistortion(corpus: DataFrame, vec: String, model: OpqModel): Option[Double] = {
     val bc = corpus.sparkSession.sparkContext.broadcast(model)
     val errU = udf { (v: Seq[Double]) =>
@@ -1433,12 +1339,6 @@ object Vectors {
     IvfPqIndexData(codes, cb, centroidRelation(spark, centroidArr), centroidArr)
   }
 
-  /** Search the residual index. For the inner-product metric the ADC
-    * decomposes: dot(q, centroid + recon(r)) = dot(q, centroid) +
-    * dot(q, recon(r)) — so ONE query LUT (against the residual
-    * codebooks) serves every probed cell, plus a per-(query, cell)
-    * scalar dot(q, centroid) that rides out of the routing relation.
-    * No per-cell lookup tables, same shuffle shape as [[ivfPqSearch]]. */
   /** Exhaustive compressed-domain scan over the RESIDUAL code column —
     * [[pqTopK]]'s full-corpus tier reading the same codes the routed
     * [[ivfPqSearchResidual]] probes, so ONE stored code column serves
@@ -1469,6 +1369,16 @@ object Vectors {
     pqRescore(idx.codes, qn, cands, k)
   }
 
+  /** Search the residual index — IVF routing + PQ compressed-domain
+    * scoring + exact rescore, the full 100 TB composition: the coarse
+    * quantizer prunes the corpus to nprobe cells, ADC scores only
+    * those cells' m-byte codes, and the top rescoreK candidates per
+    * query are exactly rescored. For the inner-product metric the ADC
+    * decomposes: dot(q, centroid + recon(r)) = dot(q, centroid) +
+    * dot(q, recon(r)) — so ONE query LUT (against the residual
+    * codebooks) serves every probed cell, plus a per-(query, cell)
+    * scalar dot(q, centroid) that rides out of the routing relation.
+    * No per-cell lookup tables. */
   def ivfPqSearchResidual(idx: IvfPqIndexData, queries: DataFrame,
                           id: String, vec: String, k: Int, nprobe: Int = 4,
                           rescoreK: Int = 0): DataFrame = {

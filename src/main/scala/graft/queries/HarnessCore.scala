@@ -218,14 +218,12 @@ object HarnessCore {
       // optimization round 21 this computes through
       // Temporal.rangeCountByKey — the aggregate-pushdown factoring
       // Σ_day |probes(day)|×|intervalDays(prio, day)| (guide §2.3/§8):
-      // identical integer result (PropertySpec pins it against the
-      // materializing tier; the unchanged DuckDB oracle re-proves it
-      // per run), but the 108M-pair expansion never exists in any
+      // identical integer result (PropertySpec pins it against a
+      // materializing day join; the unchanged DuckDB oracle re-proves
+      // it per run), but the 108M-pair expansion never exists in any
       // stage — previously it ran in-core through a partial-agg'd
       // day-keyed join (1.8 s at sf0.1 and the suite's most
-      // contention-amplified key, r20 verdict). Consumers that need
-      // the pair ROWS still use rangeJoinBucketed (join_range_interval
-      // / ScaleSpec / PlanSpec keep that tier pinned).
+      // contention-amplified key, r20 verdict).
       val intervals = t(s, dir, "orders")
         .withColumn("start_date", to_date($"o_orderdate"))
         .withColumn("end_date", date_add($"start_date", 2))
@@ -246,10 +244,8 @@ object HarnessCore {
       // the expansion itself — a hot day is one |probes|×|intervals|
       // multiplication, skew-immune by construction, with the
       // identical integer result (PropertySpec pins equality against
-      // rangeJoinBucketedSalted; the DuckDB oracle re-proves it per
-      // run). Pair-ROW consumers with hot days still use the salted
-      // materializing tier (ScaleSpec pins its biggest-partition
-      // reduction on a planted hot day; PlanSpec pins its shape).
+      // a materializing day join; the DuckDB oracle re-proves it per
+      // run).
       val intervals = t(s, dir, "orders")
         .withColumn("start_date", to_date($"o_orderdate"))
         .withColumn("end_date", date_add($"start_date", 1))

@@ -364,7 +364,7 @@ object HarnessLLM {
       // seed-free md5 + integer arithmetic, so the DuckDB oracle
       // reproduces signatures, band collisions, candidate set, and
       // rescore bit for bit — hash-exact where the seeded Spark-ML
-      // MinHashLSH form (kept in Dedup + DedupSpec) was rows-only.
+      // MinHashLSH form was rows-only.
       Dedup.minhashLshPortableOnShingles(shingledDocsFor(s, dir), "doc_id", "__sh",
         numHashes = 12, bands = 4, jaccardThreshold = 0.5)
         .orderBy($"id_a", $"id_b")
@@ -440,9 +440,9 @@ object HarnessLLM {
       // >= 0.5 pair becomes a candidate (pigeonhole — no LSH recall
       // gap), candidates-only exact rescore keeps it key-partitioned.
       // Deterministic-complete, so DuckDB's brute-force shared-shingle
-      // Jaccard is an exact oracle: hash-green where the LSH-candidate
-      // form (kept as Dedup.minhashNearDupsOnFeatures + DedupSpec) was
-      // rows-only. Shingles come from the shared shingle-once pass.
+      // Jaccard is an exact oracle: hash-green where the seeded
+      // LSH-candidate form was rows-only. Shingles come from the shared
+      // shingle-once pass.
       Dedup.jaccardPairsExactOnShingles(shingledDocsFor(s, dir), "doc_id", "__sh",
         threshold = 0.5)
         .orderBy($"id_a", $"id_b")
@@ -602,7 +602,7 @@ object HarnessLLM {
       // the exact row count plus two booleans the oracle pins to
       // literal true: the rotation is orthonormal (max |R·Rᵀ − I| <
       // 1e-9) and OPQ is no worse than plain PQ. The second is
-      // STRUCTURAL, not empirical: opqFit evaluates the identity
+      // STRUCTURAL, not empirical: the fit evaluates the identity
       // rotation with pqFit's own seed (those codebooks ARE plain PQ)
       // and returns the argmin over evaluated models — and the key
       // bounds its corpus to the fit's 100k-sample cap (vec_id <

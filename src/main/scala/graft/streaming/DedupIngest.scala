@@ -62,9 +62,7 @@ object DedupIngest {
   }
 
   /** One micro-batch of minhash-store maintenance over an
-    * already-shingled (and persisted) batch relation — factored so the
-    * joint maintainer ([[maintainDedupStores]]) can feed both stores
-    * from ONE shingle pass. */
+    * already-shingled (and persisted) batch relation. */
   private def minhashBatch(spark: SparkSession, sh: DataFrame, storeDir: String,
                            numHashes: Int, bands: Int, batchId: Long,
                            compactEvery: Int): Unit = {
@@ -89,13 +87,6 @@ object DedupIngest {
     BatchStore.pinFields(spark, sigParamsFile(storeDir),
       "numHashes" -> numHashes, "bands" -> bands)
 
-  /** The store's persisted signature parameters, falling back to the
-    * given defaults for stores written before the sidecar existed. */
-  private def sigParamsOf(spark: SparkSession, storeDir: String,
-                          numHashes: Int, bands: Int): (Int, Int) =
-    BatchStore.readFields(spark, sigParamsFile(storeDir), "numHashes", "bands")
-      .map(v => (v(0).toInt, v(1).toInt)).getOrElse((numHashes, bands))
-
   /** Fold committed sigs/docs batch partitions into `__batch=-1`,
     * newest batch per doc ([[BatchStore.newestPerDoc]]): a doc_id
     * re-ingested with changed text resolves to its newest
@@ -107,49 +98,6 @@ object DedupIngest {
       BatchStore.newestPerDoc("doc_id", "__band", "__key"))
     BatchStore.fold(spark, s"$storeDir/docs", upToBatch)(
       BatchStore.newestPerDoc("doc_id", "__sh"))
-  }
-
-  /** Probe NEW documents against the stream-maintained signature
-    * store — the incremental-ingest near-dup check: the new docs'
-    * band signatures collide one-way with the stored ones (the corpus
-    * text is never rescanned, never self-paired) and the exact rescore
-    * reads shingles from the store plus the probe batch. Probe doc ids
-    * must be disjoint from stored ids. */
-  def minhashProbeFromStore(spark: SparkSession, storeDir: String,
-                            newDocs: DataFrame, id: String, text: String,
-                            numHashes: Int = 12, bands: Int = 4,
-                            jaccardThreshold: Double = 0.5): DataFrame = {
-    // probe with the parameters the STORE was built with (sidecar),
-    // not the caller's defaults — mismatched band keys join to nothing
-    val (nh, b) = sigParamsOf(spark, storeDir, numHashes, bands)
-    val probeSh = shingled(newDocs, id, text).localCheckpoint(true)
-    val pb = Dedup.portableBandSignatures(probeSh, "doc_id", "__sh", nh, b)
-      .localCheckpoint(true)
-    // the shared lazy band join ([[Dedup.bandProbeCandidatesLazy]])
-    // broadcast-prunes the signature store below its exchange — at
-    // 100 TB the store is the big side and a probe batch touches a
-    // vanishing fraction of the band keyspace. The pre-join distinct
-    // is the compaction-crash-window guard, as everywhere.
-    val storedBands = spark.read.parquet(s"$storeDir/sigs")
-      .select(col("doc_id"), col("__band"), col("__key"))
-      .distinct()
-    // candidate count observed during the checkpoint's own job — the
-    // rescore's pair-volume sizing input (round 22), no extra count()
-    val obsCand = org.apache.spark.sql.Observation()
-    val cand = Dedup.bandProbeCandidatesLazy(pb, storedBands, "doc_id")
-      .observe(obsCand, count(lit(1)).as("__cand"))
-      .localCheckpoint(true)
-    val candRows = Dedup.observedCount(obsCand, "__cand")
-    val storedDocs = spark.read.parquet(s"$storeDir/docs")
-      .select(col("doc_id"), col("__sh"))
-    // two-sided rescore: id_a only ever matches probe shingles, id_b
-    // only stored ones — neither relation shuffles for the other side.
-    // The doc store streams scan-local (no corpus-wide dropDuplicates
-    // shuffle): crash-window duplicates are full-row-identical
-    // relocation copies, collapsed on the match-sized output instead.
-    Dedup.rescoreJaccardTwoSided(cand, probeSh, storedDocs,
-      "doc_id", "__sh", jaccardThreshold, candRows)
-      .dropDuplicates("id_a", "id_b")
   }
 
   /** Maintain the EXACT-probe store from a document stream (round 11)
@@ -186,9 +134,7 @@ object DedupIngest {
     }
 
   /** One micro-batch of jaccard-store maintenance over an
-    * already-shingled (and persisted) batch relation — factored so the
-    * joint maintainer ([[maintainDedupStores]]) can feed both stores
-    * from ONE shingle pass. */
+    * already-shingled (and persisted) batch relation. */
   private def jaccardBatch(spark: SparkSession, sh: DataFrame, storeDir: String,
                            batchId: Long, compactEvery: Int): Unit = {
     val ex = Dedup.hashedShingles(sh, "doc_id", "__sh")
@@ -275,58 +221,6 @@ object DedupIngest {
           .withColumn("__batch", lit(batchId)), s"$storeDir/docs")
       if (BatchStore.compactDue(spark, s"$storeDir/docs", compactEvery))
         compactJaccardStore(spark, storeDir, upToBatch = batchId)
-    }
-  }
-
-  /** JOINT maintenance of a minhash store and a jaccard store from ONE
-    * document stream — the production-ingest shape (round 13, VERDICT
-    * r12 #5): a corpus feeding both stores previously paid the shingle
-    * explode (the dominant featurize cost: text scan + n-gram
-    * generation per doc) once PER STORE. Here each micro-batch
-    * materializes one persisted `(doc_id, __sh)` relation and feeds
-    * both maintainers' batch bodies from it — the md5 band digests and
-    * the xxhash ordering pass stay separate (they are different
-    * features with different portability contracts), but the shared
-    * explode is paid once. Both stores come out BIT-IDENTICAL to their
-    * solo builds (StreamingSpec pins sigs/docs row-for-row and the
-    * served relations), because the batch bodies are the literal solo
-    * code paths over the same shingle relation.
-    *
-    * One streaming query, one checkpoint (under the minhash store):
-    * the store PAIR belongs to this maintainer. Exactly-once on retry
-    * holds per store exactly as solo — dynamic partition overwrite by
-    * batch id. The joint ingest wall lands in the `dedup_joint_ingest_ms`
-    * counter (caller-scoped under the bench). */
-  def maintainDedupStores(stream: DataFrame, id: String, text: String,
-                          minhashDir: String, jaccardDir: String,
-                          numHashes: Int = 12, bands: Int = 4,
-                          trigger: Trigger = Trigger.AvailableNow(),
-                          onBatch: Long => Unit = _ => (),
-                          compactEvery: Int = 0): StreamingQuery = {
-    saveSigParams(stream.sparkSession, minhashDir, numHashes, bands)
-    // counter accumulates per-batch WORK time only (captured inside
-    // foreachBatch) — a suite-start t0 would fold query setup, trigger
-    // waits, and inter-batch idle into the "ingest wall" and make the
-    // number trigger-dependent. No same-batchId correction slot
-    // (round-15 streaming review): within one query lifetime Spark
-    // never re-invokes foreachBatch for a batchId (a failed batch
-    // terminates the query), and a checkpoint-recovery RESTART runs a
-    // fresh closure whose counter starts at zero — so the counter
-    // reads this query run's work, which is what the bench consumes.
-    // foreachBatch is single-threaded per query: a plain var.
-    var totalMs = 0L
-    BatchStore.maintain(stream, minhashDir, trigger) { (batch, batchId) =>
-      val spark = stream.sparkSession
-      val b0 = System.nanoTime()
-      requireNoPendingSwap(spark, jaccardDir)
-      val sh = shingled(batch, id, text).persist()
-      try {
-        minhashBatch(spark, sh, minhashDir, numHashes, bands, batchId, compactEvery)
-        jaccardBatch(spark, sh, jaccardDir, batchId, compactEvery)
-        totalMs += (System.nanoTime() - b0) / 1000000L
-        graft.Metrics.record("dedup_joint_ingest_ms", totalMs)
-        onBatch(batchId)
-      } finally { sh.unpersist(); () }
     }
   }
 
@@ -702,7 +596,7 @@ object DedupIngest {
     * rescanned and no corpus-wide aggregate runs at serve time — the
     * store read is a scan-local projection of (doc_id, __sh, __n,
     * __ha). Guaranteed recall at the threshold (prefix completeness),
-    * unlike [[minhashProbeFromStore]]. Probe ids must be disjoint from
+    * unlike the banded minhash store. Probe ids must be disjoint from
     * stored ids. Output (id_a = probe, id_b = stored match, jaccard). */
   def jaccardProbeFromStore(spark: SparkSession, storeDir: String,
                             newDocs: DataFrame, id: String, text: String,

@@ -73,21 +73,9 @@ object MediaIngest {
       storedHashes(spark, storeDir), maxHamming, "stream_image_candidates")
       .dropDuplicates("id_a", "id_b")
 
-  /** Probe NEW media items against the stream-maintained corpus store
-    * — the incremental-ingest dedup check ("is this already in the
-    * corpus?") without re-pairing the corpus: the store's 8-byte
-    * hashes are the only corpus bytes read. */
-  def imageProbeFromStore(spark: SparkSession, storeDir: String,
-                          probes: DataFrame, id: String, media: String,
-                          maxHamming: Int = 3): DataFrame =
-    Multimodal.imageHammingProbe(storedHashes(spark, storeDir),
-      probes, id, media, maxHamming)
-
   /** Scan-local pruned read of the hash store — NO per-serve distinct
     * or checkpoint: crash-window duplicates are full-row identical, so
-    * the probe's candidate distinct (which carries both hashes)
-    * collapses them in-flight and the near-dup serve dedupes its
-    * output pairs. */
+    * the near-dup serve dedupes its output pairs. */
   private def storedHashes(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(s"$storeDir/hashes")
       .select(col("doc_id").as("__id"), col("__ah"))

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming operators over the `events` stream
   * (SURVEY.md §2.9).
@@ -105,7 +105,7 @@ object Streams {
 
   /** NOTE: keyed state here has NO expiry (the key's oracle folds the
     * whole corpus) — right for a bounded user universe; an unbounded
-    * key space needs [[lastStatePerUserTWS]] with its ttl knob. */
+    * key space needs a `GroupStateTimeout` that drops idle keys. */
   def lastStatePerUser(events: Dataset[Event]): Dataset[UserFinal] = {
     import events.sparkSession.implicits._
     if (events.isStreaming)
@@ -125,134 +125,6 @@ object Streams {
           .get
         UserFinal(uid, s.lastType, s.n)
       }
-  }
-
-  /** The same per-user fold on Spark 4's arbitrary-state v2 API
-    * (`transformWithState` + `StatefulProcessor` + typed `ValueState`):
-    * the modern replacement for flatMapGroupsWithState, with
-    * first-class state TTL and timers (unused here), backed by the
-    * RocksDB state store. Requires
-    * `spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider`. */
-  class LastStateProcessor(ttl: Option[java.time.Duration] = None)
-      extends StatefulProcessor[Long, Event, UserFinal] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[UserState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[UserState]("userState",
-        org.apache.spark.sql.Encoders.product[UserState],
-        ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[UserFinal] = {
-      val prev = if (state.exists()) Some(state.get()) else None
-      val next = rows.foldLeft(prev)((acc, e) => Some(fold(acc, e)))
-      next.foreach(state.update)
-      next.map(st => UserFinal(key, st.lastType, st.n)).iterator
-    }
-  }
-
-  /** `ttl` bounds per-user state for unbounded-cardinality key spaces
-    * (round-15 review: without it the state store grows one UserState
-    * per distinct user forever — fine for a bounded user universe,
-    * fatal for, say, session-scoped ids). TTL requires processing-time
-    * mode; None keeps the legacy keep-forever behavior. */
-  def lastStatePerUserTWS(events: Dataset[Event],
-                          ttl: Option[java.time.Duration] = None): Dataset[UserFinal] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new LastStateProcessor(ttl),
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** A closed session: emitted once a user goes `gap` without activity
-    * (event-time), carrying the fold of everything seen. */
-  case class SessionClose(user_id: Long, n_events: Long, last_ts: Timestamp)
-
-  /** One tracked session: event-time extent plus its fold (here a
-    * count). `armed` on the list wrapper is the single registered
-    * timer's expiry (-1 = none) so re-arms can delete exactly the
-    * previous one. */
-  case class Sess(firstTs: Long, lastTs: Long, n: Long)
-  case class SessList(sessions: List[Sess], armed: Long)
-
-  /** Inactivity-closed sessions via transformWithState EVENT-TIME
-    * TIMERS — the state-machine shape session_window cannot express
-    * (emit-on-close with arbitrary per-key state, e.g. abandoned-cart
-    * alerts). Closes are WATERMARK-CONFIRMED (round-15 review): a
-    * session only emits once the event-time watermark passes
-    * last-activity + gap, because until then a within-watermark
-    * straggler may still arrive and BRIDGE it with a later session —
-    * the previous eager input-driven close emitted (and Append mode
-    * cannot retract) a session a legitimate late event was about to
-    * merge. State is therefore a LIST of pending sessions: input
-    * events insert as unit sessions and a fold merges any neighbors
-    * within `gap` of each other (the same merge the built-in
-    * session_window performs); sessions whose close the watermark has
-    * confirmed emit from input processing or from the single armed
-    * timer (always the EARLIEST pending close; re-arms delete the
-    * previous timer). Watermark-bounded confirmation keeps the list
-    * short: only sessions inside the watermark horizon can be
-    * pending. */
-  class InactivityCloseProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, SessionClose] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[SessList] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessList]("inactSessions",
-        org.apache.spark.sql.Encoders.product[SessList], TTLConfig.NONE)
-
-    /** Merge time-adjacent sessions (next starts within `gap` of the
-      * previous end) — counts add; extents union. */
-    private def mergedSessions(items: List[Sess]): List[Sess] =
-      items.sortBy(_.firstTs).foldLeft(List.empty[Sess]) { (acc, s) =>
-        acc match {
-          case h :: t if s.firstTs < h.lastTs + gapMs =>
-            Sess(h.firstTs, math.max(h.lastTs, s.lastTs), h.n + s.n) :: t
-          case _ => s :: acc
-        }
-      }.reverse
-
-    /** Emit every session the watermark confirms closed, keep the
-      * rest, and maintain the one-timer invariant. */
-    private def settle(key: Long, all: List[Sess], prevArmed: Long,
-                       watermarkMs: Long): Iterator[SessionClose] = {
-      val (done, open) = all.partition(_.lastTs + gapMs <= watermarkMs)
-      val newArmed = open.headOption.map(_.lastTs + gapMs).getOrElse(-1L)
-      if (prevArmed >= 0 && prevArmed != newArmed) getHandle.deleteTimer(prevArmed)
-      if (newArmed >= 0 && newArmed != prevArmed) getHandle.registerTimer(newArmed)
-      if (open.isEmpty) state.clear() else state.update(SessList(open, newArmed))
-      done.map(s => SessionClose(key, s.n, new Timestamp(s.lastTs))).iterator
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[SessionClose] = {
-      val prev = if (state.exists()) state.get() else SessList(Nil, -1L)
-      val evs = rows.map(e => Sess(e.ts.getTime, e.ts.getTime, 1L)).toList
-      settle(key, mergedSessions(prev.sessions ++ evs), prev.armed,
-        timerValues.getCurrentWatermarkInMs())
-    }
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionClose] = {
-      if (!state.exists()) Iterator.empty
-      else {
-        val prev = state.get()
-        // the fired timer is consumed by the runtime — hand settle()
-        // a no-op prior so it never re-deletes it
-        settle(key, prev.sessions, -1L, timerValues.getCurrentWatermarkInMs())
-      }
-    }
-  }
-
-  def inactivityClosedSessions(events: Dataset[Event], gapMinutes: Int = 30,
-                               watermark: String = "10 minutes"): Dataset[SessionClose] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new InactivityCloseProcessor(gapMinutes * 60000L),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Stream-stream equi+range join with watermarks: attribute each

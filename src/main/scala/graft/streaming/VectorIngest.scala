@@ -343,8 +343,8 @@ object VectorIngest {
     * store's persisted `__sig` band signatures and rescore against its
     * stored normalized vectors, so the corpus is NEVER re-signed and
     * never rescanned beyond the (cid, __sig, __cv) columns — exactly
-    * how the text and media probes serve ([[DedupIngest
-    * .minhashProbeFromStore]], [[MediaIngest]]). Probes are signed with
+    * how the text and media stores serve ([[DedupIngest
+    * .jaccardProbeFromStore]], [[MediaIngest]]). Probes are signed with
     * the geometry from the store's `_srp_params` sidecar (falling back
     * to the caller's bootstrap for stores written before the sidecar
     * existed) — signing with anything else would be the silent

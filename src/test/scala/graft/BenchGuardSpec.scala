@@ -809,23 +809,40 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(Bench.stealFrac(100L, 0.0, 32) == -1.0)
   }
 
-  /** `file:line: text` of every line under `src/main/scala/<sub>` that
-    * matches `pattern`, in `.scala` files `keep` admits. */
-  private def sourceHits(sub: String, pattern: scala.util.matching.Regex,
-                         keep: String => Boolean = _ => true): List[String] = {
+  /** The checkout root: the nearest directory at or above the working
+    * directory that holds `src/main/scala/graft`. */
+  private lazy val repoRoot: java.io.File = {
     var dir = new java.io.File(sys.props("user.dir")).getAbsoluteFile
     while (dir != null && !new java.io.File(dir, "src/main/scala/graft").isDirectory)
       dir = dir.getParentFile
     assert(dir != null, s"no src/main/scala/graft above ${sys.props("user.dir")}")
-    val root = new java.io.File(dir, s"src/main/scala/$sub").toPath
-    java.nio.file.Files.walk(root).iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") && keep(f.getFileName.toString))
+    dir
+  }
+
+  /** `.scala` files under `dir` (relative to the checkout root),
+    * recursively. */
+  private def scalaFiles(dir: String): List[java.nio.file.Path] = {
+    val root = new java.io.File(repoRoot, dir)
+    assert(root.isDirectory, s"no $dir under $repoRoot")
+    java.nio.file.Files.walk(root.toPath).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+  }
+
+  private def linesOf(f: java.nio.file.Path): List[String] =
+    java.nio.file.Files.readAllLines(f).asScala.toList
+
+  /** `file:line: text` of every line under `src/main/scala/<sub>` that
+    * matches `pattern`, in `.scala` files `keep` admits. */
+  private def sourceHits(sub: String, pattern: scala.util.matching.Regex,
+                         keep: String => Boolean = _ => true): List[String] = {
+    val root = new java.io.File(repoRoot, s"src/main/scala/$sub").toPath
+    scalaFiles(s"src/main/scala/$sub")
+      .filter(f => keep(f.getFileName.toString))
       .flatMap { f =>
-        val lines = java.nio.file.Files.readAllLines(f).asScala
-        lines.zipWithIndex.collect {
+        linesOf(f).zipWithIndex.collect {
           case (l, i) if pattern.findFirstIn(l).isDefined => s"${root.relativize(f)}:${i + 1}: ${l.trim}"
         }
-      }.toList
+      }
   }
 
   test("src/main reads no graft.-prefixed JVM system property (no hidden A/B switches)") {
@@ -843,5 +860,34 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     val hits = sourceHits("graft/streaming", """partitionOverwriteMode|CompactedBatchId =""".r,
       keep = _ != "BatchStore.scala")
     assert(hits.isEmpty, hits.mkString("store layout outside BatchStore:\n", "\n", ""))
+  }
+
+  test("every public operator in ops, streaming and io has a caller outside the tests") {
+    // an operator no query key, workload or other operator calls is a
+    // second code path that only its own tests run. The keep list
+    // stays on purpose: quantizerDistortion is the only way to compute
+    // a RefitPolicy baseline, srpParams/srpRecall are the LSH
+    // parameter math srpNearDups' scaladoc sends users to, and
+    // pruneAvroSchema is the strict single-generation contract
+    val keep = Set("quantizerDistortion", "srpParams", "srpRecall", "pruneAvroSchema")
+    val comment = (l: String) => {
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    // word -> the (file, line) sites of every non-comment line using it
+    val uses = (scalaFiles("src/main") ++ scalaFiles("perfbench/src")).flatMap { f =>
+      linesOf(f).zipWithIndex.filterNot(x => comment(x._1)).flatMap { case (l, i) =>
+        """\w+""".r.findAllIn(l).toSet.map((w: String) => w -> (f, i))
+      }
+    }.groupMap(_._1)(_._2)
+    val Def = """  def (\w+)\b.*""".r
+    val uncalled = for {
+      sub <- List("ops", "streaming", "io")
+      f <- scalaFiles(s"src/main/scala/graft/$sub") if f.getParent.getFileName.toString == sub
+      (Def(name), i) <- linesOf(f).zipWithIndex
+      if uses.getOrElse(name, Nil).forall(_ == ((f, i)))
+    } yield s"$name (${f.getFileName}:${i + 1})"
+    assert(uncalled.map(_.takeWhile(_ != ' ')).toSet == keep,
+      uncalled.mkString("public defs with no caller in src/main or perfbench/src:\n", "\n", ""))
   }
 }

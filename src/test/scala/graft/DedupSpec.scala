@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Text}
 
-/** Invariants for the hash-based dedup ops the DuckDB oracle can't
-  * reproduce (seeded MinHash/SimHash families). */
+/** Invariants of the dedup ops beyond the DuckDB oracle's reach:
+  * SimHash signatures, kernel-vs-reference equivalence, plan shapes
+  * and driver-action counts. */
 class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   private def corpus() = {
@@ -22,23 +23,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
   }
 
-  test("minhash finds planted near-duplicates and skips unrelated docs") {
-    import spark.implicits._
-    val pairs = Dedup.minhashNearDups(corpus(), "doc_id", $"text",
-      jaccardDistThreshold = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 2L)), "exact copy must collide")
-    assert(pairs.contains((0L, 1L)) && pairs.contains((1L, 2L)), "near-dup must collide")
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L), "unrelated doc must not collide")
-  }
-
-  test("minhash is deterministic across runs (fixed seed)") {
-    import spark.implicits._
-    def run() = Dedup.minhashNearDups(corpus(), "doc_id", $"text", 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(run() == run())
-  }
-
   test("simhash: identical docs get identical signatures; near-dups are close in hamming") {
     import spark.implicits._
     val sig = Dedup.simhash(corpus(), $"doc_id", $"text")
@@ -47,21 +31,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(sig(0L) == sig(2L), "identical text, identical simhash")
     assert(hamming(sig(0L), sig(1L)) < hamming(sig(0L), sig(4L)),
       "near-dup closer than unrelated")
-  }
-
-  test("ngram jaccard on LSH candidates: exact copy scores 1.0") {
-    import spark.implicits._
-    val docs = corpus()
-    val cands = Dedup.minhashNearDups(docs, "doc_id", $"text", 0.9)
-    val sh = docs.select($"doc_id", Dedup.shingles($"text").as("sh"))
-    val scored = Dedup.jaccardOnPairs(
-      cands.join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), "id_a")
-        .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), "id_b"),
-      $"sh_a", $"sh_b")
-      .select($"id_a", $"id_b", $"jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(scored((0L, 2L)) == 1.0)
-    assert(scored((0L, 1L)) > 0.5 && scored((0L, 1L)) < 1.0)
   }
 
   test("jaccardPairsExact equals brute-force all-pairs at every threshold (prefix completeness)") {
@@ -322,36 +291,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(removed.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
-  test("levenshtein rescoring ranks the planted near-dup above unrelated") {
-    import spark.implicits._
-    val pairs = Seq(
-      (0L, 1L, "the quick brown fox", "the quick brown cat"),
-      (0L, 4L, "the quick brown fox", "completely different words here"))
-      .toDF("id_a", "id_b", "ta", "tb")
-    val scored = Dedup.levenshteinOnPairs(pairs, $"ta", $"tb")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(4)).toMap
-    assert(scored((0L, 1L)) > 0.8)
-    assert(scored((0L, 1L)) > scored((0L, 4L)))
-  }
-
-  test("stratified sample respects per-stratum fractions and is seeded-deterministic") {
-    import spark.implicits._
-    val docs = spark.read.parquet(sf("documents"))
-    val fractions = Map("en" -> 0.5, "fr" -> 0.1)
-    def run() = Dedup.stratifiedSample(docs, "lang", fractions)
-        .groupBy($"lang").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = run()
-    val totals = docs.groupBy($"lang").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got.keySet.subsetOf(fractions.keySet), "unlisted strata are dropped")
-    fractions.foreach { case (k, f) =>
-      val expected = totals(k) * f
-      assert(math.abs(got.getOrElse(k, 0L) - expected) <= totals(k) * 0.25,
-        s"$k: got ${got.get(k)}, expected ~$expected")
-    }
-    assert(run() == got, "sampleBy must be deterministic under a fixed seed")
-  }
-
   test("clusterPairs finds connected components and min-id keepers") {
     import spark.implicits._
     // components: {0,1,2} (chain), {5,6}, {8,9,10,11} (star on 8)
@@ -409,18 +348,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(removed == Set("doc-b", "doc-c", "doc-y"))
   }
 
-  test("minhashNearDups leaves no cached (non-checkpoint) RDD behind") {
-    import spark.implicits._
-    val docs = spark.read.parquet(sf("documents"))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Dedup.minhashNearDups(docs, "doc_id", $"text", jaccardDistThreshold = 0.8).count()
-    val leaked = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
-    // localCheckpoint blocks are context-cleaned on GC; an explicit
-    // cache that outlives the call is the leak this pins against
-    assert(leaked.isEmpty, s"leaked cached RDDs: ${leaked.keys}")
-  }
-
   test("repetitionScore: repeated text scores high, distinct text zero, <2-token docs excluded") {
     import spark.implicits._
     val docs = Seq(
@@ -465,61 +392,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(nullElems.filter(
       not($"fast.n_bg" <=> $"udf._1") || not($"fast.n_bg_d" <=> $"udf._2"))
       .count() == 0)
-  }
-
-  test("ngram-jaccard candidate net tied to the rescore cutoff prunes, loses nothing") {
-    import spark.implicits._
-    // The harness rescore keeps jaccard >= 0.2 (distance <= 0.8); a
-    // candidate net at 0.85 must (a) admit no more pairs than the old
-    // demo-wide 0.9 net, and (b) surface the SAME surviving pair set
-    // after the exact rescore.
-    val docs = spark.read.parquet(sf("documents"))
-    val feats = Dedup.minhashFeaturize(docs, "doc_id", $"text").persist()
-    def survivors(net: Double): (Long, Set[(Long, Long)]) = {
-      val cands = Dedup.minhashNearDupsOnFeatures(feats, "doc_id", net)
-      val sh = feats.select($"doc_id", $"__sh".as("sh"))
-      val surv = Dedup.jaccardOnPairs(
-        cands.join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), "id_a")
-          .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), "id_b"),
-        $"sh_a", $"sh_b")
-        .filter($"jaccard" >= 0.2)
-        .select($"id_a", $"id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      (cands.count(), surv)
-    }
-    val (nWide, sWide) = survivors(0.9)
-    val (nTight, sTight) = survivors(0.85)
-    feats.unpersist(blocking = true)
-    assert(nTight <= nWide, s"tight net admitted MORE candidates: $nTight > $nWide")
-    assert(sTight == sWide, "tightening the net must not change the rescored pair set")
-  }
-
-  test("the candidate-net margin covers the observed feature-vs-shingle deviation") {
-    import org.apache.spark.sql.functions.{abs, lit, max}
-    import spark.implicits._
-    // The 0.85 net = the 0.8 rescore bound + a margin for the gap
-    // between HashingTF-feature Jaccard (what MinHashLSH's distCol
-    // measures, subject to 2^18-bucket collisions) and true shingle
-    // Jaccard (what the rescore keeps). Derive the margin from the
-    // data instead of trusting a constant: over EVERY bucket-surfaced
-    // pair, 0.8 + the worst observed deviation must stay inside the
-    // net — a corpus that drifts past it fails here, loudly, instead
-    // of silently dropping rescore-survivable pairs at the net.
-    val docs = spark.read.parquet(sf("documents"))
-    val feats = Dedup.minhashFeaturize(docs, "doc_id", $"text").persist()
-    val cands = Dedup.minhashNearDupsOnFeatures(feats, "doc_id",
-      jaccardDistThreshold = 1.0)
-    val sh = feats.select($"doc_id", $"__sh".as("sh"))
-    val dev = Dedup.jaccardOnPairs(
-      cands.join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), "id_a")
-        .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), "id_b"),
-      $"sh_a", $"sh_b")
-      .select(abs((lit(1.0) - $"jaccard") - $"jaccard_dist").as("dev"))
-      .agg(max($"dev")).head().getDouble(0)
-    feats.unpersist(blocking = true)
-    assert(0.8 + dev <= 0.85,
-      f"rescore bound 0.8 + observed feature-vs-shingle deviation $dev%.4f " +
-        "escapes the 0.85 candidate net — survivable pairs could be dropped")
   }
 
   test("contaminatedIds flags exactly the docs sharing an n-gram with the benchmark") {
@@ -806,16 +678,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("range-join tiers schedule their PINNED driver-action counts (the round-15 fused-explode contract)") {
-    // same anatomy as the jaccard de-flag above, applied to the other
-    // chronic flag-magnet family (VERDICT r14 #1): the pair-volume
-    // estimate is the tier's only pre-join action, and the day-exploded
-    // interval relation it materializes (a lazy local checkpoint) is
-    // REUSED by the join instead of re-exploded — so each bucketed tier
-    // is exactly estimate + the caller's action, and the broadcast tier
-    // schedules nothing before the caller's action at all. A regression
-    // that re-introduces a second explode pass cannot change these
-    // counts, but one that adds an eager checkpoint/count job does —
-    // and fails here instead of as a driver-bench guard flag.
+    // same anatomy as the jaccard de-flag above, applied to the range
+    // joins (VERDICT r14 #1): the broadcast tier schedules nothing
+    // before the caller's action at all. A regression that adds an
+    // eager checkpoint/count job fails here instead of as a
+    // driver-bench guard flag.
     import org.apache.spark.sql.functions._
     val s2 = spark.newSession()
     import s2.implicits._
@@ -824,7 +691,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .withColumn("end_date", date_add($"start_date", 2))
       .select($"o_orderpriority", $"start_date", $"end_date")
     val probes = s2.read.parquet(sf("lineitem"))
-      .select($"l_orderkey", $"l_linenumber", to_date($"l_shipdate").as("ship_d"))
+      .select(to_date($"l_shipdate").as("ship_d"))
     val broadcastActions = actionsOf(s2) {
       graft.ops.Temporal.rangeJoinBroadcastProbes(
         probes.limit(50), intervals, "ship_d", "start_date", "end_date").count()
@@ -832,31 +699,5 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(broadcastActions.size == 1,
       s"broadcast tier must stay 1 driver action, saw ${broadcastActions.size}: $broadcastActions")
-    // the exact action-name sequence, not just a count: the LAZY
-    // checkpoint registers a "localCheckpoint" listener entry but
-    // schedules NO job (it materializes inside the estimate's head) —
-    // a regression to an EAGER checkpoint keeps the same names while
-    // adding a scheduled job, which the bucketed tier's wall counter
-    // (range_estimate_ms) and the r14 contention anatomy would surface;
-    // a regression adding a separate count/collect changes this list.
-    val bucketedActions = actionsOf(s2) {
-      graft.ops.Temporal.rangeJoinBucketed(
-        probes, intervals, "ship_d", "start_date", "end_date").count()
-      ()
-    }
-    assert(bucketedActions == Seq("localCheckpoint", "head", "count"),
-      s"bucketed tier must stay lazy-checkpoint + estimate + count, saw $bucketedActions")
-    val saltedActions = actionsOf(s2) {
-      graft.ops.Temporal.rangeJoinBucketedSalted(
-        probes, intervals, "ship_d", "start_date", "end_date",
-        saltBuckets = 4, probeFineGrain = Seq($"l_orderkey", $"l_linenumber")).count()
-      ()
-    }
-    assert(saltedActions == Seq("localCheckpoint", "head", "count"),
-      s"salted tier must stay lazy-checkpoint + estimate + count, saw $saltedActions")
-    // the fusion must not have cost the counters their values: the
-    // estimate still records its pair volume and partition count
-    assert(graft.Metrics.snapshot.exists(_._1.endsWith("range_est_pairs")),
-      "the estimate's volume counter must survive the fusion")
   }
 }

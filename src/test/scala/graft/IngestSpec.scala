@@ -19,16 +19,6 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
 
   private val stage = "/tmp/graft_ingest_test"
 
-  test("csvInferred round-trips types for the convenience path") {
-    Files.createDirectories(Paths.get(stage))
-    Files.writeString(Paths.get(s"$stage/infer.csv"),
-      "id,score,name\n1,2.5,alpha\n2,3.0,beta\n")
-    val df = Sources.csvInferred(spark, s"$stage/infer.csv")
-    assert(df.schema("id").dataType.typeName == "integer")
-    assert(df.schema("score").dataType.typeName == "double")
-    assert(df.count() == 2)
-  }
-
   test("JDBC round-trip against embedded Derby: replace semantics + partitioned read") {
     import spark.implicits._
     val url = Sources.embeddedDerbyUrl(s"$stage/derby")
@@ -48,13 +38,6 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     val back = part.orderBy($"c_custkey").collect().toSeq
     val orig = cust.orderBy($"c_custkey").collect().toSeq
     assert(back == orig, "JDBC round-trip must be lossless")
-  }
-
-  test("collectSortedMap returns the sorted small-dimension map") {
-    import spark.implicits._
-    val dim = Seq(("b", 2), ("a", 1), ("c", 3)).toDF("k", "v")
-    val m = graft.ops.Relational.collectSortedMap(dim, "k", "v")
-    assert(m == Map("a" -> 1, "b" -> 2, "c" -> 3))
   }
 
   test("malformed rows: PERMISSIVE captures them, DROPMALFORMED drops them") {
@@ -506,7 +489,7 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     val allCodes = Array.tabulate(256)(_.toByte)
     val d = Multimodal.ulawWavDecode(Multimodal.ulawWavEncode(8000, 1, allCodes)).get
     assert(d.sampleRate == 8000 && d.channels == 1 && d.samples.length == 256)
-    val mismatches = (0 until 256).filter(i => d.samples(i) != Multimodal.ulawToLinear(i))
+    val mismatches = (0 until 256).filter(i => d.samples(i) != IngestSpec.ulawToLinear(i))
     assert(mismatches.isEmpty, s"JDK table diverges from G.711 at codes $mismatches")
     // stereo container facts survive the codec chain
     val st = Multimodal.ulawWavDecode(
@@ -603,5 +586,19 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     assert(prepped.count() == 1)
     prepped.unpersist()
     assert(added.isEmpty)
+  }
+}
+
+object IngestSpec {
+
+  /** The G.711 mu-law expansion closed form (the spec's segment
+    * table as arithmetic) — the oracle-side contract
+    * `Multimodal.ulawWavDecode` is pinned against: the JDK codec's
+    * output equals this for every code 0..255 (IngestSpec sweeps all
+    * of them). */
+  def ulawToLinear(u: Int): Int = {
+    val v = (~u) & 0xFF
+    val mag = ((((v & 0xF) << 3) + 0x84) << ((v >> 4) & 7)) - 0x84
+    if ((v & 0x80) != 0) -mag else mag
   }
 }

@@ -86,69 +86,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("rangeJoinBucketed (big-x-big tier) is a shuffled equi-join with pinned partition counts") {
-    import spark.implicits._
-    val intervals = spark.read.parquet(sf("orders"))
-      .withColumn("d0", to_date($"o_orderdate"))
-      .withColumn("d1", date_add($"d0", 2))
-      .select($"o_orderpriority", $"d0", $"d1")
-    val probes = spark.read.parquet(sf("lineitem"))
-      .select(to_date($"l_shipdate").as("ship_d"))
-    val df = Temporal.rangeJoinBucketed(probes, intervals, "ship_d", "d0", "d1")
-    val p = plan(df)
-    // day-keyed equi-join, never a nested loop over the interval set
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    // both sides arrive via REPARTITION_BY_COL with an explicit count, so
-    // AQE cannot coalesce the byte-tiny exchanges and serialize the
-    // pair-expansion stage (measured 16.8 s -> 1.9 s at sf0.1)
-    val n = spark.sessionState.conf.numShufflePartitions
-    assert(df.rdd.getNumPartitions == n, s"join ran on ${df.rdd.getNumPartitions} partitions, want $n")
-  }
-
-  test("range join partition count scales with estimated pair volume, floors at the session pin") {
-    import spark.implicits._
-    // 20k probes on ONE day x 10 intervals covering it = 200k pairs;
-    // at 1000 pairs/partition the derived count must be 200, not the
-    // session's 32 — the 100 TB guard: the pin that saves this join at
-    // one scale must not serialize it at 100x
-    val probes = (1 to 20000).map(_ => java.sql.Date.valueOf("2024-03-01")).toDF("ship_d")
-    val intervals = (1 to 10).map(i =>
-      (i, java.sql.Date.valueOf("2024-03-01"), java.sql.Date.valueOf("2024-03-01")))
-      .toDF("iid", "d0", "d1")
-    val scaled = Temporal.rangeJoinBucketed(probes, intervals, "ship_d", "d0", "d1",
-      targetPairsPerPartition = 1000L)
-    assert(scaled.rdd.getNumPartitions == 200,
-      s"200k estimated pairs / 1k target should derive 200 partitions, got ${scaled.rdd.getNumPartitions}")
-    assert(scaled.count() == 200000L)
-  }
-
-  test("salted range join: the (day, salt) hash partitioning survives into the executed plan") {
-    import spark.implicits._
-    val intervals = spark.read.parquet(sf("orders"))
-      .withColumn("d0", to_date($"o_orderdate"))
-      .withColumn("d1", date_add($"d0", 2))
-      .select($"o_orderpriority", $"d0", $"d1")
-    val probes = spark.read.parquet(sf("lineitem"))
-      .select(to_date($"l_shipdate").as("ship_d"), $"l_orderkey", $"l_linenumber")
-    val df = Temporal.rangeJoinBucketedSalted(probes, intervals,
-      "ship_d", "d0", "d1", saltBuckets = 4,
-      probeFineGrain = Seq($"l_orderkey", $"l_linenumber"))
-    val p = plan(df)
-    // the salted tier exists BECAUSE its pinned REPARTITION_BY_NUM
-    // shuffles opt out of AQE skew-split (Temporal.scala) — so a future
-    // optimizer/AQE change that re-coalesces them into fewer partitions
-    // (serializing the hot day again) must fail here, not in a 100 TB run
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-    assert("hashpartitioning\\([^)]*__psalt".r.findFirstIn(p).nonEmpty,
-      s"probe side must arrive hash-partitioned on (day, salt):\n$p")
-    assert("hashpartitioning\\([^)]*__isalt".r.findFirstIn(p).nonEmpty,
-      s"interval side must arrive hash-partitioned on (day, salt):\n$p")
-    val n = spark.sessionState.conf.numShufflePartitions
-    assert(df.rdd.getNumPartitions == n,
-      s"join ran on ${df.rdd.getNumPartitions} partitions, want the pinned $n")
-  }
-
   test("date-partitioned layout prunes partitions for a date-ranged query") {
     import spark.implicits._
     val out = "/tmp/graft_part_test"
@@ -244,12 +181,14 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val q = emb.filter($"vec_id" < 5)
     val ivf = graft.ops.Vectors.ivfIndex(emb, "vec_id", "embedding", nlist = 4)
     val pq = graft.ops.Vectors.pqIndex(emb, "vec_id", "embedding", m = 8, ksub = 16)
+    val ivfPq = graft.ops.Vectors.ivfPqIndex(emb, "vec_id", "embedding",
+      nlist = 4, m = 8, ksub = 16)
     for (df <- Seq(
       graft.ops.Vectors.cosineTopK(emb, q, "vec_id", "embedding", k = 10),
       graft.ops.Vectors.annTopK(emb, q, "vec_id", "embedding", k = 10),
       graft.ops.Vectors.ivfSearch(ivf, q, "vec_id", "embedding", k = 10),
       graft.ops.Vectors.pqTopK(pq, q, "vec_id", "embedding", k = 10),
-      graft.ops.Vectors.ivfPqSearch(ivf, pq, q, "vec_id", "embedding", k = 10))) {
+      graft.ops.Vectors.ivfPqSearchResidual(ivfPq, q, "vec_id", "embedding", k = 10))) {
       val p = plan(df)
       assert(!p.contains("Window"), p)
       assert(p.contains("partial_topkbyvalue") || p.contains("ObjectHashAggregate"), p)

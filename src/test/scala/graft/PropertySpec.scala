@@ -123,27 +123,39 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("rangeJoinBucketed equals rangeJoinBroadcastProbes (the two scale tiers)") {
+  test("rangeJoinBroadcastProbes equals a plain-Scala enumeration of pairs") {
     import spark.implicits._
-    val probes = spark.range(1).select(explode(sequence(
-      lit(Date.valueOf("1996-01-01")), lit(Date.valueOf("1996-12-01")),
-      expr("interval 1 month"))).as("d"))
-    val intervals = spark.read.parquet(sf("orders"))
-      .withColumn("start_date", to_date($"o_orderdate"))
-      .withColumn("end_date", date_add($"start_date", 30))
-      .select($"o_orderkey", $"start_date", $"end_date")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select($"o_orderkey", $"d").collect()
-        .map(r => (r.getLong(0), r.getDate(1).toString)).toSet
-    val broadcastSide = pairs(graft.ops.Temporal.rangeJoinBroadcastProbes(
-      probes, intervals, "d", "start_date", "end_date"))
-    val bucketed = pairs(graft.ops.Temporal.rangeJoinBucketed(
-      probes, intervals, "d", "start_date", "end_date"))
-    assert(broadcastSide.nonEmpty)
-    assert(bucketed == broadcastSide)
+    // duplicate rows multiply; single-day intervals match their day;
+    // inverted (end < start) and null-bounded intervals match nothing
+    trials { rnd =>
+      val probes = List.fill(1 + rnd.nextInt(20))(rnd.nextInt(30))
+        .zipWithIndex.map { case (d, i) => (i.toLong, d) }
+      val distinct = List.fill(1 + rnd.nextInt(30)) {
+        val s = rnd.nextInt(30)
+        val e = rnd.nextInt(4) match {
+          case 0 => s
+          case 1 => s - 1 - rnd.nextInt(3)
+          case _ => s + rnd.nextInt(8)
+        }
+        (Some(s).filter(_ => rnd.nextInt(8) != 0), Some(e).filter(_ => rnd.nextInt(8) != 0))
+      }.zipWithIndex.map { case ((s, e), i) => (i.toLong, s, e) }
+      val intervals = distinct ++ distinct.filter(_ => rnd.nextInt(4) == 0)
+      val expected = (for {
+        (iid, Some(s), Some(e)) <- intervals
+        (pid, d) <- probes if s <= d && d <= e
+      } yield (iid, pid)).sorted
+      val got = Temporal.rangeJoinBroadcastProbes(
+        probes.map { case (p, d) => (p, toDate(d)) }.toDF("pid", "d"),
+        intervals.map { case (i, s, e) => (i, s.map(toDate), e.map(toDate)) }
+          .toDF("iid", "d0", "d1"),
+        "d", "d0", "d1")
+        .select($"iid", $"pid").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toList.sorted
+      assert(got == expected)
+    }
   }
 
-  test("rangeCountByKey equals count-over-materialized-pairs (plain AND salted tiers)") {
+  test("rangeCountByKey equals count-over-materialized-pairs") {
     import spark.implicits._
     // randomized multisets: duplicate probe dates, duplicate and
     // inverted intervals, multiple groups — every multiplicity case
@@ -162,16 +174,13 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       }.toDF("grp", "d0", "d1")
       def counted(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val expected = counted(graft.ops.Aggregates.countByKey(
-        graft.ops.Temporal.rangeJoinBucketed(probes, intervals, "d", "d0", "d1"),
-        Seq($"grp"), "n"))
-      val expectedSalted = counted(graft.ops.Aggregates.countByKey(
-        graft.ops.Temporal.rangeJoinBucketedSalted(probes, intervals, "d",
-          "d0", "d1", saltBuckets = 4, probeFineGrain = Seq($"pid")),
-        Seq($"grp"), "n"))
-      val fused = counted(graft.ops.Temporal.rangeCountByKey(
+      // the materializing reference: one row per (probe, interval day)
+      // pair from a day equi-join, counted per group
+      val days = Temporal.explodeDays(intervals, "__day", $"d0", $"d1")
+      val expected = counted(Aggregates.countByKey(
+        probes.join(days, $"d" === $"__day"), Seq($"grp"), "n"))
+      val fused = counted(Temporal.rangeCountByKey(
         probes, intervals, "d", "d0", "d1", Seq($"grp"), "n"))
-      assert(expected == expectedSalted)
       assert(fused == expected)
     }
   }
@@ -556,7 +565,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
         Multimodal.ulawWavEncode(8000, channels, codes)).get
       assert(wav.channels == channels && wav.samples.length == n)
       codes.zip(wav.samples).foreach { case (c, s) =>
-        assert(s == Multimodal.ulawToLinear(c & 0xFF),
+        assert(s == IngestSpec.ulawToLinear(c & 0xFF),
           "the JDK codec chain must match the spec's segment arithmetic")
       }
     }

@@ -14,6 +14,18 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
+  /** File-level (min, max) stats of `statCols` for every file under
+    * `dir` — the spec's window into what scan-time pruning would skip:
+    * a predicate box prunes every file whose stat box misses it. */
+  private def fileStats(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        statCols: Seq[String]): DataFrame = {
+    val aggs = statCols.flatMap(c =>
+      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+    spark.read.parquet(dir)
+      .groupBy(input_file_name().as("file"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
   test("saltedAggregate equals plain groupBy aggregation") {
     import spark.implicits._
     val li = spark.read.parquet(sf("lineitem"))
@@ -50,40 +62,6 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
       .groupBy($"s").count().collect().map(_.getLong(1))
     assert(buckets.length == 8, "all 8 salt buckets populated")
     assert(buckets.max < 1000 / 8 * 2, s"roughly uniform: ${buckets.toSeq}")
-  }
-
-  test("salted range join: equals the unsalted tier and spreads a hot day over the buckets") {
-    import spark.implicits._
-    import graft.ops.Temporal
-    // hot-day corpus: 60% of probes land on ONE day — on the unsalted
-    // tier (pinned REPARTITION_BY_NUM shuffles, which AQE's
-    // OptimizeSkewedJoin does not split) that whole day's pair
-    // expansion serializes on one reducer
-    val hot = java.sql.Date.valueOf("1995-06-01")
-    val probes = ((0 until 30000).map(i => (i.toLong, hot)) ++
-      (0 until 20000).map(i =>
-        ((100000 + i).toLong, java.sql.Date.valueOf(f"1995-07-${i % 28 + 1}%02d"))))
-      .toDF("probe_id", "d")
-    val intervals = (0 until 50).map { j =>
-      val s = java.sql.Date.valueOf(f"1995-${if (j % 2 == 0) "05" else "06"}-${j % 28 + 1}%02d")
-      (j.toLong, s, new java.sql.Date(s.getTime + 14L * 86400 * 1000))
-    }.toDF("iv_id", "s", "e")
-    val buckets = 8
-    val salted = Temporal.rangeJoinBucketedSalted(
-      probes, intervals, "d", "s", "e", buckets, Seq($"probe_id"))
-    val unsalted = Temporal.rangeJoinBucketed(probes, intervals, "d", "s", "e")
-    // identical pair sets
-    def pairs(df: DataFrame) =
-      df.select($"probe_id", $"iv_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(salted) == pairs(unsalted))
-    // and the hot day's rows genuinely spread: the biggest partition of
-    // the salted join holds a bucket-sized share, not the whole day
-    def maxPartRows(df: DataFrame): Long =
-      df.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().max
-    val mu = maxPartRows(unsalted)
-    val ms = maxPartRows(salted)
-    assert(ms * 2 <= mu,
-      s"salting should at least halve the biggest partition: unsalted=$mu salted=$ms")
   }
 
   test("jaccard prefix-filter candidates grow sub-quadratically with corpus size") {
@@ -183,7 +161,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
     assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
     // file-level min/max boxes — what parquet scan-time skipping reads
     def touched(dir: String, c: String, lo: Long, hi: Long): Long =
-      Layout.fileStats(spark, dir, Seq("l_partkey", "l_orderkey"))
+      fileStats(spark, dir, Seq("l_partkey", "l_orderkey"))
         .filter(col(s"min_$c") <= hi && col(s"max_$c") >= lo)
         .count()
     val files = spark.read.parquet(zdir).select(input_file_name()).distinct().count()
@@ -227,7 +205,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
     val back = spark.read.parquet(qdir)
     assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
     def touched(dir: String, lo: Double, hi: Double): Long =
-      Layout.fileStats(spark, dir, Seq("a"))
+      fileStats(spark, dir, Seq("a"))
         .filter(col("min_a") <= hi && col("max_a") >= lo).count()
     val files = spark.read.parquet(qdir).select(input_file_name()).distinct().count()
     assert(files >= 12, s"expected ~16 files, got $files")
@@ -341,7 +319,7 @@ class ScaleSpec extends AnyFunSuite with SparkTestBase {
       li.repartition(64, $"l_orderkey").write.mode("overwrite").parquet(dir)
     }
     def touched(dir: String, c: String, lo: Long, hi: Long): Long =
-      Layout.fileStats(spark, dir, Seq("l_partkey", "l_orderkey"))
+      fileStats(spark, dir, Seq("l_partkey", "l_orderkey"))
         .filter(col(s"min_$c") <= hi && col(s"max_$c") >= lo).count()
     def files(dir: String) = new java.io.File(dir).listFiles()
       .count(f => f.getName.endsWith(".parquet"))

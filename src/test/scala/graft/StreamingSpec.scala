@@ -19,20 +19,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   private def e(id: Long, t: String, uid: Long = 1L, typ: String = "click"): Event =
     Event(id, ts(t), uid, typ, 1.0, "{}")
 
-  /** transformWithState needs the RocksDB state store; set it for the
-    * block and restore whatever was configured before. */
-  private def withRocksDBStateStore(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("tumbling counts: stream equals batch on the same data") {
     import spark.implicits._
     val events = Seq(
@@ -137,27 +123,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(last.getLong(0) == 7L)
     assert(last.getString(1) == "purchase")
     assert(last.getLong(2) == 2L)
-  }
-
-  test("transformWithState (arbitrary-state v2) matches flatMapGroupsWithState") {
-    import spark.implicits._
-    withRocksDBStateStore {
-      val ms = MemoryStream[Event](spark)
-      val q = Streams.lastStatePerUserTWS(ms.toDS())
-        .writeStream.format("memory").queryName("tws_t")
-        .outputMode("update").start()
-      ms.addData(e(1, "2024-01-01 10:00:00", uid = 7, typ = "view"))
-      q.processAllAvailable()
-      ms.addData(e(2, "2024-01-01 10:05:00", uid = 7, typ = "purchase"),
-        e(3, "2024-01-01 10:06:00", uid = 9, typ = "signup"))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table("tws_t").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      // latest state per user: user 7 folded over both batches
-      assert(rows.contains((7L, "purchase", 2L)))
-      assert(rows.contains((9L, "signup", 1L)))
-    }
   }
 
   test("stream-stream attribution join: stream equals batch, horizon excludes stale views") {
@@ -280,46 +245,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val batch = Streams.tumblingCounts((events1 ++ events2).toDF())
       .orderBy("window_start", "event_type").collect()
     assert(snap.toSeq == batch.toSeq)
-  }
-
-  test("event-time timers close inactive sessions (transformWithState timer API)") {
-    import spark.implicits._
-    withRocksDBStateStore {
-      val ms = MemoryStream[Event](spark)
-      val q = Streams.inactivityClosedSessions(ms.toDS(), gapMinutes = 30)
-        .writeStream.format("memory").queryName("inact_t")
-        .outputMode("append").start()
-      // user 7 active at 12:00 -> timer armed at 12:30; wm lags at 11:50
-      ms.addData(e(1, "2024-01-01 12:00:00", uid = 7))
-      q.processAllAvailable()
-      assert(spark.table("inact_t").isEmpty) // watermark has not passed 12:30
-      // a second event exactly at the gap boundary starts a NEW
-      // session — but the first session's close is WATERMARK-CONFIRMED
-      // (round 15): until wm >= 12:30, a straggler above the watermark
-      // can still arrive and BRIDGE the two, so nothing emits yet
-      // (the previous eager close emitted here and could not retract)
-      ms.addData(e(2, "2024-01-01 12:30:00", uid = 7))
-      q.processAllAvailable()
-      assert(spark.table("inact_t").isEmpty,
-        "a gap-crossing event must not eagerly close a session the " +
-          "watermark (12:20) has not yet confirmed")
-      // the bridging straggler: 12:25 is above the watermark (12:20)
-      // so the contract admits it, and it sits within gap of BOTH
-      // sessions — ground truth collapses to ONE 3-event session
-      ms.addData(e(3, "2024-01-01 12:25:00", uid = 7))
-      q.processAllAvailable()
-      // sentinels advance the watermark past 13:00 (= merged session
-      // end 12:30 + gap), firing the timer for the merged session
-      ms.addData(e(4, "2024-01-01 13:30:00", uid = 9))
-      q.processAllAvailable()
-      ms.addData(e(5, "2024-01-01 13:40:00", uid = 9))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table("inact_t").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(rows.count(_._1 == 7L) == 1 && rows.contains((7L, 3L)),
-        s"the straggler must merge the two sessions into one 3-event close: ${rows.toSeq}")
-    }
   }
 
   test("drift auto-refit: quantizer refits mid-stream, store reconciled, baseline resets") {
@@ -787,7 +712,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val b2 = cluster(axis(1), 30, 1000L, 2)
     val fitDf = (b1 ++ b2).toDF("vec_id", "embedding")
     val centroids = Vectors.fitQuantizer(fitDf, "embedding", nlist = 2)
-    val opqM = Vectors.opqFit(fitDf, "embedding", m = 2, ksub = 16)
+    val opqM = Vectors.opqFitWithBaseline(fitDf, "embedding", m = 2, ksub = 16)._1
     val boot = VectorIngest.IndexBootstrap(dim, centroids, opq = Some(opqM))
     val store = "/tmp/graft_test/vec_opq_spec"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
@@ -876,14 +801,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // batch partition beside its relocated copy) stays dedup-safe
     MediaIngest.compactImageHashes(spark, store, upToBatch = Long.MaxValue)
     assert(pairs(MediaIngest.imageNearDupsFromStore(spark, store, maxHamming = 3)) == served)
-    // the one-way probe finds the stored duplicate of a NEW item
-    // without self-pairing the corpus — and misses a fresh payload
-    val probed = MediaIngest.imageProbeFromStore(spark, store,
-      Seq((100L, img(1)), (101L, img(7))).toDF("doc_id", "media"),
-      "doc_id", "media", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // ...including the cross-format twin: one probe, both containers
-    assert(probed == Set((100L, 2L, 0), (100L, 5L, 0)), probed.toString)
   }
 
   test("stream-maintained minhash store serves exactly the batch near-dup pairs") {
@@ -962,15 +879,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(partitions("sigs") == 2 &&
       pairs(DedupIngest.nearDupsFromStore(spark, store)) === batch,
       "compaction is idempotent and self-heals the stale partition")
-    // the one-way probe: a verbatim copy of doc 1 (new id) matches its
-    // original and doc 1's own near-dups; unrelated text matches nothing
-    val probed = DedupIngest.minhashProbeFromStore(spark, store,
-      Seq((500L, base), (501L, "nothing like anything stored in this corpus at all"))
-        .toDF("doc_id", "text"), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(probed.contains((500L, 1L)), s"verbatim copy must match its original: $probed")
-    assert(!probed.exists(_._1 == 501L), s"fresh text must match nothing: $probed")
-    assert(probed.map(_._2).forall(c => c < 100L), "matches come from the store only")
   }
 
   test("stream-maintained jaccard store serves the exact probe: stream == batch == brute force") {
@@ -1042,76 +950,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       s"crash-window serve must emit no duplicate rows: ${inWindow.length} rows")
     assert(inWindow.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap === batch,
       "serving inside the compaction crash window must not change pairs")
-  }
-
-  test("joint dedup maintenance: both stores bit-identical to solo builds, one shingle pass") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.streaming.DedupIngest
-    // the production-ingest shape (round 13): one stream feeds BOTH
-    // stores; the stores must be row-for-row the solo builds' (the
-    // batch bodies are the literal solo code paths over one shared
-    // persisted shingle relation), so every solo serve contract —
-    // including the batch-op oracles — transfers verbatim
-    val base = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = Seq(
-      (1L, base),
-      (2L, base + " tail"),
-      (3L, "completely different words entirely here about spark plans"),
-      (4L, base.replace("lazy", "sleepy")),
-      (5L, "completely different words entirely here about spark joins"))
-    val roots = Seq("minhash_solo", "jaccard_solo", "minhash_joint", "jaccard_joint")
-      .map(n => n -> s"/tmp/graft_test/joint_$n").toMap
-    roots.values.foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    def feed(start: org.apache.spark.sql.streaming.StreamingQuery,
-             ms: MemoryStream[(Long, String)]): Unit = {
-      ms.addData(docs(0), docs(2)); start.processAllAvailable()
-      ms.addData(docs(1), docs(4)); start.processAllAvailable()
-      ms.addData(docs(3)); start.processAllAvailable()
-      start.stop()
-    }
-    val msA = MemoryStream[(Long, String)](spark)
-    feed(DedupIngest.maintainMinhash(msA.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", roots("minhash_solo"), trigger = Trigger.ProcessingTime(0)), msA)
-    val msB = MemoryStream[(Long, String)](spark)
-    feed(DedupIngest.maintainJaccardStore(msB.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", roots("jaccard_solo"), trigger = Trigger.ProcessingTime(0)), msB)
-    val msJ = MemoryStream[(Long, String)](spark)
-    feed(DedupIngest.maintainDedupStores(msJ.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", roots("minhash_joint"), roots("jaccard_joint"),
-      trigger = Trigger.ProcessingTime(0)), msJ)
-    // store-level bit identity, every data column incl. the batch stamp
-    def rows(dir: String, canonArrays: Boolean = false) = {
-      val df = spark.read.parquet(dir)
-      val c = if (canonArrays)
-        df.withColumn("__sh", concat_ws("|", col("__sh"))) else df
-      c.collect().map(_.toString).toSet
-    }
-    assert(rows(s"${roots("minhash_joint")}/sigs") ===
-      rows(s"${roots("minhash_solo")}/sigs"), "sigs must be bit-identical")
-    assert(rows(s"${roots("minhash_joint")}/docs", canonArrays = true) ===
-      rows(s"${roots("minhash_solo")}/docs", canonArrays = true),
-      "minhash docs must be bit-identical")
-    def jdocs(root: String) = spark.read.parquet(s"$root/docs")
-      .select(col("doc_id"), concat_ws("|", col("__sh")).as("sh"),
-        concat_ws("|", col("__ha")).as("ha"), col("__n"), col("__ogen"), col("__batch"))
-      .collect().map(_.toString).toSet
-    assert(jdocs(roots("jaccard_joint")) === jdocs(roots("jaccard_solo")),
-      "jaccard docs (incl. ordered hash arrays) must be bit-identical")
-    assert(rows(s"${roots("jaccard_joint")}/dford") ===
-      rows(s"${roots("jaccard_solo")}/dford"),
-      "the frozen df authority must be bit-identical")
-    // serve-level identity on both tiers
-    def nd(root: String) = DedupIngest.nearDupsFromStore(spark, root)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(nd(roots("minhash_joint")) === nd(roots("minhash_solo")))
-    val probes = Seq((500L, base)).toDF("doc_id", "text")
-    def jp(root: String) = DedupIngest.jaccardProbeFromStore(spark, root, probes,
-      "doc_id", "text", jaccardThreshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(jp(roots("jaccard_joint")) === jp(roots("jaccard_solo")))
-    assert(jp(roots("jaccard_joint")).contains((500L, 1L)))
   }
 
   test("jaccard store order refresh: drifted bootstrap costs candidates, refresh recovers, results unchanged") {
@@ -1678,13 +1516,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         MemoryStream[(Long, String)](spark).toDF().toDF("doc_id", "text"),
         "doc_id", "text", store, numHashes = 12, bands = 4)
     }
-    // and the probe reads the pin back through the same URI (16/8
-    // geometry, NOT the 12/4 defaults it was called with)
-    val hits = DedupIngest.minhashProbeFromStore(spark, store,
-      Seq((100L, "the quick brown fox jumps over the lazy dog again today"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", jaccardThreshold = 0.3)
-    assert(hits.count() >= 1, "probe must collide under the store's pinned geometry")
   }
 
   test("funnelSteps: strict first-touch chain on a hand-computed log") {

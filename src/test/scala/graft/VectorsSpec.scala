@@ -92,11 +92,13 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     // recall tracks probe coverage (nprobe/nlist) plus the query-near-
     // cell boost; probe half the cells and assert well above the 50%
     // coverage floor, plus determinism.
-    val ivf = pairs(Vectors.ivfTopK(emb, q, "vec_id", "embedding", 10, nlist = 16, nprobe = 8))
+    def ivfRun() = pairs(Vectors.ivfSearch(
+      Vectors.ivfIndex(emb, "vec_id", "embedding", nlist = 16), q, "vec_id", "embedding", 10,
+      nprobe = 8))
+    val ivf = ivfRun()
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.55, s"recall=$recall")
-    assert(ivf == pairs(Vectors.ivfTopK(emb, q, "vec_id", "embedding", 10, nlist = 16, nprobe = 8)),
-      "IVF must be deterministic (fixed seed)")
+    assert(ivf == ivfRun(), "IVF must be deterministic (fixed seed)")
   }
 
   test("prebuilt IVF index: sample-fit quantizer keeps recall, search is fit-free") {
@@ -115,11 +117,6 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(recall >= 0.55, s"recall=$recall")
     assert(got == pairs(Vectors.ivfSearch(idx, q, "vec_id", "embedding", 10, nprobe = 8)),
       "repeated searches over one index must be identical")
-    // full-fit index + default nprobe must reproduce the one-shot form
-    val full = Vectors.ivfIndex(emb, "vec_id", "embedding", nlist = 16)
-    assert(pairs(Vectors.ivfSearch(full, q, "vec_id", "embedding", 10, nprobe = 8)) ==
-      pairs(Vectors.ivfTopK(emb, q, "vec_id", "embedding", 10, nlist = 16, nprobe = 8)),
-      "ivfTopK must equal ivfIndex+ivfSearch with the same parameters")
   }
 
   test("derived sample fraction: clustered layout larger than the cap stays unbiased") {
@@ -146,22 +143,6 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     val again = Vectors.normalizedSample(corpus, "v", 1.0, 42L, maxSamples = 500)
     assert(again.map(_.toSeq).toSeq == sample.map(_.toSeq).toSeq)
     corpus.unpersist()
-  }
-
-  test("cosineNearDups finds exactly the brute-force pair set") {
-    import spark.implicits._
-    val emb = spark.read.parquet(sf("embeddings"))
-    val tau = 0.45
-    val got = Vectors.cosineNearDups(emb, "vec_id", "embedding", tau)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val a = emb.select($"vec_id".as("id_a"), $"embedding".as("ea"))
-    val b = emb.select($"vec_id".as("id_b"), $"embedding".as("eb"))
-    val brute = a.join(b, $"id_a" < $"id_b")
-      .withColumn("c", Vectors.cosine($"ea", $"eb"))
-      .filter($"c" >= tau)
-      .select($"id_a", $"id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == brute, s"got=${got.size} brute=${brute.size} missing=${brute -- got}")
   }
 
   test("native dot/l2norm expressions are bit-identical to the HOF fold") {
@@ -442,11 +423,12 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(rRefit >= 0.9, s"refit recall=$rRefit")
   }
 
-  test("ivfTopK leaves no cached (non-checkpoint) RDD behind") {
+  test("ivfSearch over an ivfIndex leaves no cached (non-checkpoint) RDD behind") {
     import spark.implicits._
     val emb = spark.read.parquet(sf("embeddings"))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Vectors.ivfTopK(emb, emb.filter($"vec_id" < 3), "vec_id", "embedding", 5).count()
+    Vectors.ivfSearch(Vectors.ivfIndex(emb, "vec_id", "embedding"),
+      emb.filter($"vec_id" < 3), "vec_id", "embedding", 5).count()
     val leaked = spark.sparkContext.getPersistentRDDs
       .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
     assert(leaked.isEmpty, s"leaked cached RDDs: ${leaked.keys}")
@@ -530,7 +512,7 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
       "PQ search must be deterministic (seeded fit, pinned tiebreaks)")
   }
 
-  test("PQ planted closed form: pqTopK and ivfPqSearch surface exact copies first") {
+  test("PQ planted closed form: pqTopK and residual IVF-PQ surface exact copies first") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // the harness construction: 10 scaled copies of each query planted
@@ -551,8 +533,10 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     def triples(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(triples(Vectors.pqTopK(pqIdx, q, "vec_id", "embedding", 10, rescoreK = 40)) == expected)
-    val ivfIdx = Vectors.ivfIndex(corpus, "vec_id", "embedding", nlist = 16)
-    assert(triples(Vectors.ivfPqSearch(ivfIdx, pqIdx, q, "vec_id", "embedding",
+    // a copy shares its query's cell AND residual code, so the routed
+    // residual search ranks it first the same way
+    val ivfPqIdx = Vectors.ivfPqIndex(corpus, "vec_id", "embedding", nlist = 16, m = 8, ksub = 64)
+    assert(triples(Vectors.ivfPqSearchResidual(ivfPqIdx, q, "vec_id", "embedding",
       10, nprobe = 4, rescoreK = 40)) == expected)
   }
 
@@ -631,10 +615,11 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     val corpus = (0 until 400).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
-    val opq = Vectors.opqFit(corpus, "embedding", m = 2, ksub = 8)
+    val (opq, plain) = Vectors.opqFitWithBaseline(corpus, "embedding", m = 2, ksub = 8)
     assert(opq.orthonormalityError < 1e-9, s"err=${opq.orthonormalityError}")
-    val plain = Vectors.opqIdentity(
-      Vectors.pqFit(corpus, "embedding", m = 2, ksub = 8))
+    // the identity baseline carries exactly plain PQ's codebooks
+    assert(java.util.Arrays.equals(plain.cb.flat,
+      Vectors.pqFit(corpus, "embedding", m = 2, ksub = 8).flat))
     val msePq = Vectors.opqDistortion(corpus, "embedding", plain).get
     val mseOpq = Vectors.opqDistortion(corpus, "embedding", opq).get
     // iteration 0 of the fit IS plain PQ (identity rotation, same
@@ -642,7 +627,7 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     // training corpus this inequality is structural
     assert(mseOpq <= msePq + 1e-12, s"opq=$mseOpq pq=$msePq")
     // seeded driver-side fit: bit-for-bit deterministic
-    val again = Vectors.opqFit(corpus, "embedding", m = 2, ksub = 8)
+    val again = Vectors.opqFitWithBaseline(corpus, "embedding", m = 2, ksub = 8)._1
     assert(java.util.Arrays.equals(again.rotation, opq.rotation))
     assert(java.util.Arrays.equals(again.cb.flat, opq.cb.flat))
   }
@@ -661,9 +646,7 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
         if (d < 4) rnd.nextGaussian().toFloat else (rnd.nextGaussian() * 0.01).toFloat)
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
-    val opq = Vectors.opqFit(corpus, "embedding", m = 2, ksub = 8)
-    val plain = Vectors.opqIdentity(
-      Vectors.pqFit(corpus, "embedding", m = 2, ksub = 8))
+    val (opq, plain) = Vectors.opqFitWithBaseline(corpus, "embedding", m = 2, ksub = 8)
     val msePq = Vectors.opqDistortion(corpus, "embedding", plain).get
     val mseOpq = Vectors.opqDistortion(corpus, "embedding", opq).get
     assert(mseOpq < msePq * 0.9,
