@@ -199,15 +199,7 @@ object Dedup {
     // sibling).
     val banded = portableBandSignatures(sh, id, shCol, numHashes, bands)
       .persist()
-    val obsCand = org.apache.spark.sql.Observation()
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col(s"a.$id") < col(s"b.$id"))
-      .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
-      .distinct()
-      .observe(obsCand, count(lit(1)).as("__cand"))
-      .localCheckpoint(true)
-    val candRows = observedCount(obsCand, "__cand")
+    val (cand, candRows) = Bands.counted(Bands.selfJoin(banded, id))
     graft.Metrics.record("minhash_band_candidates", candRows)
     banded.unpersist(blocking = false)
     rescoreJaccard(cand, sh, id, shCol, jaccardThreshold, candRows)
@@ -681,40 +673,43 @@ object Dedup {
     * prune is an optimization and must never cost feasibility. 10M
     * 64-bit keys ~ 80 MB broadcast, comfortably inside a production
     * executor. */
-  private[graft] def maybeBroadcast(keys: DataFrame,
-                                    maxRows: Long = BroadcastKeysMaxRows): DataFrame =
-    if (keys.count() <= maxRows) broadcast(keys) else keys
+  private[graft] def maybeBroadcast(keys: DataFrame): DataFrame =
+    hintedIfSmall(keys, keys.count())
 
-  /** The LAZY candidate-generation join of the one-way probe —
-    * factored out of [[probePairsOnOrdered]] (which eagerly
-    * checkpoints it) so PlanSpec can pin its physical shape: the
-    * probe's prefix VOCABULARY broadcast-prunes the corpus postings
-    * BELOW their exchange (the [[graft.streaming.TextIngest
-    * .bm25FromStore]] query-vocabulary discipline): at 100 TB the
-    * corpus postings are the big side and a probe batch touches a
-    * vanishing fraction of the shingle space — without the semi-join
-    * every corpus posting shuffles to serve a handful of probes.
-    * Cost-only: a dropped posting shares no shingle with any probe
-    * prefix and could never produce a candidate. */
-  private[graft] def probeCandidatesLazy(pOrd: DataFrame, cOrd: DataFrame,
-                                         id: String, threshold: Double,
-                                         shufflePartitions: Int): DataFrame =
-    probeCandidatesOn(pOrd, prunedCorpusPostings(pOrd, cOrd, id, threshold),
-      id, threshold, shufflePartitions)
+  /** `df` broadcast-hinted iff `rows`, its row count, is within
+    * [[BroadcastKeysMaxRows]] — [[maybeBroadcast]] with the count
+    * already in hand. */
+  private def hintedIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastKeysMaxRows) broadcast(df) else df
+
+  /** The probe side's prefix-postings counts `(__h, __pc)` of the
+    * one-way probe ([[probePairsOnOrdered]]): one row per hash of the
+    * probe prefix VOCABULARY, so its row count is the vocabulary size
+    * the broadcast gate of [[prunedCorpusPostings]] reads. */
+  private[graft] def probePrefixCounts(pOrd: DataFrame, id: String,
+                                       threshold: Double): DataFrame =
+    prefixPostings(pOrd, id, threshold)
+      .groupBy(col("__h")).agg(count(lit(1)).as("__pc"))
 
   /** Probe-vocabulary-pruned corpus prefix postings — THE corpus-side
-    * relation of the one-way probe, factored so the eager caller
-    * ([[probePairsOnOrdered]]) can persist ONE corpus-postings pass
-    * that feeds both the collision estimate and the candidate join. */
-  private[graft] def prunedCorpusPostings(pOrd: DataFrame, cOrd: DataFrame,
-                                          id: String, threshold: Double): DataFrame = {
-    val pVocab = prefixPostings(pOrd, id, threshold).select(col("__h")).distinct()
+    * relation of the one-way probe: the probe's prefix vocabulary
+    * (`pCounts` from [[probePrefixCounts]], `vocabRows` its row count)
+    * broadcast-prunes the corpus postings BELOW their exchange (the
+    * [[graft.streaming.TextIngest.bm25FromStore]] query-vocabulary
+    * discipline): at 100 TB the corpus postings are the big side and a
+    * probe batch touches a vanishing fraction of the shingle space —
+    * without the semi-join every corpus posting shuffles to serve a
+    * handful of probes. Cost-only: a dropped posting shares no shingle
+    * with any probe prefix and could never produce a candidate. */
+  private[graft] def prunedCorpusPostings(cOrd: DataFrame, pCounts: DataFrame,
+                                          vocabRows: Long, id: String,
+                                          threshold: Double): DataFrame =
     prefixPostings(cOrd, id, threshold)
-      .join(maybeBroadcast(pVocab), Seq("__h"), "left_semi")
-  }
+      .join(hintedIfSmall(pCounts.select(col("__h")), vocabRows), Seq("__h"), "left_semi")
 
-  /** The candidate join body over an already-pruned corpus postings
-    * relation (see [[probeCandidatesLazy]] for the plan contract). */
+  /** The LAZY candidate-generation join of the one-way probe over
+    * [[prunedCorpusPostings]] ([[probePairsOnOrdered]] checkpoints it
+    * eagerly, fused with its hash-overlap gate). */
   private[graft] def probeCandidatesOn(pOrd: DataFrame, cPruned: DataFrame,
                                        id: String, threshold: Double,
                                        shufflePartitions: Int): DataFrame = {
@@ -760,21 +755,13 @@ object Dedup {
     //    pVocab.count() job reads off the same tiny aggregate the
     //    estimate needs anyway. Probe-side only: scans nothing
     //    corpus-sized.
-    val pCounts = prefixPostings(pOrd, id, threshold)
-      .groupBy(col("__h")).agg(count(lit(1)).as("__pc"))
-      .persist()
+    val pCounts = probePrefixCounts(pOrd, id, threshold).persist()
     val vocabRows = pCounts.count()
-    // the maybeBroadcast discipline with the count already in hand:
-    // past the row bound the prune degrades to a shuffled semi-join
-    // rather than failing a huge-probe job at Spark's broadcast limits
-    def hinted(df: DataFrame) =
-      if (vocabRows <= BroadcastKeysMaxRows) broadcast(df) else df
     // probe-vocabulary-pruned corpus postings, persisted — the ONE
     // corpus-postings pass (round 12), feeding estimate + candidates.
     // Pruning keeps the estimate Σ_h pc(h)·cc(h) IDENTICAL (hashes
     // outside the probe vocabulary contribute zero to the product).
-    val cPruned = prefixPostings(cOrd, id, threshold)
-      .join(hinted(pCounts.select(col("__h"))), Seq("__h"), "left_semi")
+    val cPruned = prunedCorpusPostings(cOrd, pCounts, vocabRows, id, threshold)
       .persist()
     //  job 2 — the collision estimate, whose action materializes the
     //    cPruned cache; its probe side is the CACHED pCounts
@@ -782,7 +769,7 @@ object Dedup {
     //    re-derived postings aggregate.
     val shufflePartitions = {
       val row = cPruned.groupBy(col("__h")).agg(count(lit(1)).as("__cc"))
-        .join(hinted(pCounts), "__h")
+        .join(hintedIfSmall(pCounts, vocabRows), "__h")
         .agg(sum(col("__pc").cast("double") * col("__cc")).as("__v"))
         .head()
       val est = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
@@ -833,36 +820,13 @@ object Dedup {
       .persist()
     val pb = portableBandSignatures(probeSh, id, shCol, numHashes, bands)
       .persist()
-    // the candidate volume rides the eager checkpoint as an observed
-    // metric (round 14) — same value the count() reported, one fewer
-    // scheduled job per probe
-    val obsCand = org.apache.spark.sql.Observation()
-    val cand = bandProbeCandidatesLazy(pb, cb, id)
-      .observe(obsCand, count(lit(1)).as("__cand"))
-      .localCheckpoint(true)
-    val candRows = observedCount(obsCand, "__cand")
+    val (cand, candRows) = Bands.counted(Bands.probeJoin(
+      pb.withColumnRenamed(id, "id_a"), cb.withColumnRenamed(id, "id_b")))
     graft.Metrics.record("minhash_probe_candidates", candRows)
     cb.unpersist(blocking = false)
     pb.unpersist(blocking = false)
     rescoreJaccardTwoSided(cand, probeSh, corpusSh, id, shCol, jaccardThreshold,
       candRows)
-  }
-
-  /** The LAZY band-collision join of the one-way minhash probe of
-    * [[minhashProbeOnShingles]] (factored out so PlanSpec can pin its
-    * shape): the probe's band keys broadcast-prune the corpus
-    * signatures below their exchange — cost-only, a signature matching
-    * no probe band key can never collide — so a small probe batch
-    * never shuffles the corpus-sized band relation. Both inputs are (id, __band, __key) relations
-    * signed with the SAME parameters. */
-  private[graft] def bandProbeCandidatesLazy(pb: DataFrame, cb: DataFrame,
-                                             id: String): DataFrame = {
-    val pKeys = pb.select(col("__band"), col("__key")).distinct()
-    pb.as("p").join(
-        cb.join(maybeBroadcast(pKeys), Seq("__band", "__key"), "left_semi").as("c"),
-        col("p.__band") === col("c.__band") && col("p.__key") === col("c.__key"))
-      .select(col(s"p.$id").as("id_a"), col(s"c.$id").as("id_b"))
-      .distinct()
   }
 
   /** The rescore with separate shingle relations per pair side (equal

@@ -765,9 +765,7 @@ object Multimodal {
   /** The media-column wrapper of [[hammingNearDupsOnHashes]]: decode +
     * hash scan-local, eager-checkpoint the tiny (id, hash) relation so
     * neither the self-join's two sides nor the two rescore joins
-    * re-decode the corpus (every downstream join is explicitly
-    * repartition-pinned, so the checkpoint's missing stats cannot
-    * demote a plan — the minhash/jaccard lifecycle lesson). */
+    * re-decode the corpus. */
   private def hammingNearDups(df: DataFrame, id: String, media: String,
                               hashU: org.apache.spark.sql.expressions.UserDefinedFunction,
                               maxHamming: Int, candMetric: String): DataFrame =
@@ -808,9 +806,8 @@ object Multimodal {
     * Probes hash scan-local, explode into the same pigeonhole bands,
     * and join the corpus's banded relation one-way; the exact
     * `bit_count` rescore keeps matches within the radius. The corpus
-    * side shuffles once on the band key (at production scale the
-    * banded relation is itself a persisted ingest-time layout, so a
-    * daily probe pays only the probe-side shuffle); output is
+    * side is pruned to the probe's band keys before its one band-key
+    * shuffle ([[Bands.probeJoin]]); output is
     * (probe_id, dup_id, hamming), one row per within-radius corpus
     * match. Named for its hash space: probes hash with [[aHash64]],
     * so `corpusHashes.__ah` MUST be aHash64 values — probing an
@@ -829,33 +826,26 @@ object Multimodal {
                            media: String, maxHamming: Int,
                            hashU: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming in [0, 32)")
-    val bands = maxHamming + 1
-    val bandsU = udf((h: Long) => hammingBands(h, bands))
-    val n = probes.sparkSession.sessionState.conf.numShufflePartitions
     val ph = probes.select(col(id).as("probe_id"), hashU(col(media)).as("__ph"))
       .filter(col("__ph").isNotNull)
       .localCheckpoint(true)
-    // the probe batch's band keys broadcast-prune the corpus band
-    // relation below its exchange (cost-only: a corpus hash agreeing
-    // with no probe on any band can never be within the radius) — the
-    // corpus side is the persisted ingest-time hash column at scale
-    // and must not shuffle in full for a handful of probes
-    val pKeys = ph.select(explode(bandsU(col("__ph"))).as("__bk")).distinct()
-    val corpusBands = corpusHashes
-      .select(col("__id").as("dup_id"), col("__ah"),
-        explode(bandsU(col("__ah"))).as("__bk"))
-      .join(graft.ops.Dedup.maybeBroadcast(pKeys), Seq("__bk"), "left_semi")
-      .repartition(n, col("__bk"))
-    val cand = ph.select(col("probe_id"), col("__ph"),
-        explode(bandsU(col("__ph"))).as("__bk"))
-      .repartition(n, col("__bk"))
-      .join(corpusBands, Seq("__bk"))
-      .select(col("probe_id"), col("dup_id"), col("__ph"), col("__ah"))
-      .distinct()
-    cand
+    // both hashes ride through the band join as payload, so the exact
+    // rescore needs no join back to either side
+    val corpus = corpusHashes.select(col("__id").as("dup_id"), col("__ah"))
+    Bands.probeJoin(hammingBanded(ph, "__ph", maxHamming),
+        hammingBanded(corpus, "__ah", maxHamming))
       .withColumn("hamming", bit_count(col("__ph").bitwiseXOR(col("__ah"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("probe_id"), col("dup_id"), col("hamming"))
+  }
+
+  /** `df` with its 64-bit `hash` column split into the maxHamming+1
+    * pigeonhole bit-bands ([[hammingBands]]) as [[Bands]] rows
+    * `(__band, __key)`, one per band. */
+  private[graft] def hammingBanded(df: DataFrame, hash: String,
+                                   maxHamming: Int): DataFrame = {
+    val bandsU = udf((h: Long) => hammingBands(h, maxHamming + 1))
+    df.select(col("*"), posexplode(bandsU(col(hash))).as(Seq("__band", "__key")))
   }
 
   /** The shared multi-index Hamming join over any 64-bit perceptual
@@ -872,22 +862,10 @@ object Multimodal {
   private[graft] def hammingNearDupsOnHashes(hashed: DataFrame, maxHamming: Int,
                                              candMetric: String): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming in [0, 32)")
-    val bands = maxHamming + 1
-    val bandsU = udf((h: Long) => hammingBands(h, bands))
-    val n = hashed.sparkSession.sessionState.conf.numShufflePartitions
-    val banded = hashed.select(col("__id"), explode(bandsU(col("__ah"))).as("__bk"))
-      .repartition(n, col("__bk"))
-    val obsCand = org.apache.spark.sql.Observation()
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.__bk") === col("b.__bk") && col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
-      .observe(obsCand, count(lit(1)).as("__cand"))
-      .localCheckpoint(true)
-    graft.Metrics.record(candMetric,
-      graft.ops.Dedup.observedCount(obsCand, "__cand"))
+    val (cand, candRows) = Bands.counted(
+      Bands.selfJoin(hammingBanded(hashed, "__ah", maxHamming), "__id"))
+    graft.Metrics.record(candMetric, candRows)
     cand
-      .repartition(n, col("id_a"), col("id_b"))
       .join(hashed.select(col("__id").as("id_a"), col("__ah").as("__ha")), Seq("id_a"))
       .join(hashed.select(col("__id").as("id_b"), col("__ah").as("__hb")), Seq("id_b"))
       .withColumn("hamming", bit_count(col("__ha").bitwiseXOR(col("__hb"))))

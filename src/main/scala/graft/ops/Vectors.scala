@@ -213,6 +213,10 @@ object Vectors {
     * bucket in any band. Only ids travel through the bucket join — the
     * query signature relation is tiny and broadcast, so candidate
     * generation is one scan of the corpus plus a broadcast probe.
+    * This is the one band join outside [[Bands]]: its queries are a
+    * handful of rows that are also corpus rows (hence `qid =!= cid`),
+    * broadcast whole with no size check, where [[Bands.probeJoin]]
+    * would add a [[Dedup.maybeBroadcast]] count job to every search.
     *
     * Exposed to the spec so "how many candidates did the buckets
     * admit?" is directly assertable (the pruning gate). */
@@ -329,33 +333,18 @@ object Vectors {
     * normalized copy (cosine is scale-invariant). */
   def srpNearDupsOnSigs(withSig: DataFrame, id: String, sig: String,
                         vec: String, simThreshold: Double): DataFrame = {
-    // ids ONLY through the band join: carrying the vectors would
-    // multiply the shuffle payload by ~bands per side; instead the
-    // deduped candidate pair list re-joins the corpus to fetch the two
-    // vectors exactly once per pair for the rescore.
-    // The signature relation PERSISTS across its four appearances
-    // (two band-join sides, two rescore joins — round-15 review: the
-    // siblings measured exchange reuse failing on exactly this shape
-    // and pinned persist + eager candidate checkpoint), and candidate
-    // volume rides the checkpoint action as an observed metric so the
-    // op's scale variable shows in the bench counters like the
-    // jaccard/minhash tiers'.
+    // the deduped candidate pair list re-joins the corpus to fetch the
+    // two vectors exactly once per pair for the rescore. The signature
+    // relation PERSISTS across its four appearances (two band-join
+    // sides, two rescore joins — round 15: the siblings measured
+    // exchange reuse failing on exactly this shape and pinned persist +
+    // eager candidate checkpoint).
     val sigRel = withSig.select(col(id), col(sig).as("__sig"), col(vec).as("__v"))
       .persist()
     try {
-      val sigs = sigRel.select(col(id), posexplode(col("__sig")).as(Seq("__band", "__key")))
-      val a = sigs.select(col("__band"), col("__key"), col(id).as("id_a"))
-      val b = sigs.select(col("__band"), col("__key"), col(id).as("id_b"))
-      val obs = org.apache.spark.sql.Observation()
-      val cands = a.join(b, Seq("__band", "__key"))
-        .filter(col("id_a") < col("id_b"))
-        // a pair colliding in several bands appears once per collision;
-        // id-keyed dedup before the (more expensive) rescore
-        .dropDuplicates("id_a", "id_b")
-        .observe(obs, count(lit(1)).as("__cand"))
-        .localCheckpoint(true)
-      graft.Metrics.record("srp_neardup_candidates",
-        graft.ops.Dedup.observedCount(obs, "__cand"))
+      val (cands, candRows) = Bands.counted(Bands.selfJoin(
+        sigRel.select(col(id), posexplode(col("__sig")).as(Seq("__band", "__key"))), id))
+      graft.Metrics.record("srp_neardup_candidates", candRows)
       cands
         .join(sigRel.select(col(id).as("id_a"), col("__v").as("__va")), Seq("id_a"))
         .join(sigRel.select(col(id).as("id_b"), col("__v").as("__vb")), Seq("id_b"))
@@ -421,47 +410,24 @@ object Vectors {
                      probesWithSig: DataFrame, id: String, sig: String,
                      vec: String, simThreshold: Double): DataFrame = {
     // eagerly reduced to the tiny (probe_id, dup_id) list before the
-    // two rescore joins; the count is then free, and candidate volume —
-    // THE scale variable of a banded probe — lands in the bench
-    // counters instead of hiding inside wall clock (the jaccard/minhash
-    // counter discipline)
+    // two rescore joins; candidate volume — THE scale variable of a
+    // banded probe — lands in the bench counters instead of hiding
+    // inside wall clock (the jaccard/minhash counter discipline). The
+    // band join runs AFTER the caller's newest-version fold, which must
+    // see every version of a cid to pick the newest.
     val pBands = probesWithSig
       .select(col(id).as("probe_id"), posexplode(col(sig)).as(Seq("__band", "__key")))
       .localCheckpoint(true)
-    val obsCand = org.apache.spark.sql.Observation()
-    val cands = srpProbeCandidatesLazy(pBands, corpusSigs, id, sig)
-      .observe(obsCand, count(lit(1)).as("__cand"))
-      .localCheckpoint(true)
-    graft.Metrics.record("srp_probe_candidates",
-      graft.ops.Dedup.observedCount(obsCand, "__cand"))
+    val cBands = corpusSigs
+      .select(col(id).as("dup_id"), posexplode(col(sig)).as(Seq("__band", "__key")))
+    val (cands, candRows) = Bands.counted(Bands.probeJoin(pBands, cBands))
+    graft.Metrics.record("srp_probe_candidates", candRows)
     cands
       .join(probesWithSig.select(col(id).as("probe_id"), col(vec).as("__va")), Seq("probe_id"))
       .join(corpusVecs.select(col(id).as("dup_id"), col(vec).as("__vb")), Seq("dup_id"))
       .withColumn("cos_sim", cosine(col("__va"), col("__vb")))
       .filter(col("cos_sim") >= simThreshold)
       .select(col("probe_id"), col("dup_id"), col("cos_sim"))
-  }
-
-  /** The LAZY band-collision join of the SRP probe (factored out of
-    * [[srpProbeOnSigs]], which eagerly checkpoints it, so PlanSpec can
-    * pin its shape): probe band keys broadcast-prune the corpus band
-    * relation below its exchange (cost-only: a corpus signature
-    * matching no probe band key can never collide) — a probe batch
-    * touches a vanishing fraction of the keyspace, so the store-sized
-    * side never shuffles in full. Applied AFTER the caller's
-    * newest-version fold, which must see every version of a cid to
-    * pick the newest. `pBands` is the probe side already exploded to
-    * (probe_id, __band, __key). */
-  private[graft] def srpProbeCandidatesLazy(pBands: DataFrame,
-                                            corpusSigs: DataFrame, id: String,
-                                            sig: String): DataFrame = {
-    val cBands = corpusSigs
-      .select(col(id).as("dup_id"), posexplode(col(sig)).as(Seq("__band", "__key")))
-    val pKeys = pBands.select(col("__band"), col("__key")).distinct()
-    pBands
-      .join(cBands.join(Dedup.maybeBroadcast(pKeys), Seq("__band", "__key"), "left_semi"),
-        Seq("__band", "__key"))
-      .dropDuplicates("probe_id", "dup_id")
   }
 
   /** A prebuilt IVF index. `cells` carries each corpus vector's coarse-

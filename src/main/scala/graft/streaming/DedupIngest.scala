@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.Dedup
+import graft.ops.{Bands, Dedup}
 
 /** Streaming NEAR-DUP maintenance — the dedup analog of
   * [[TextIngest]]'s inverted index: as documents stream in, every
@@ -52,26 +52,18 @@ object DedupIngest {
                       compactEvery: Int = 0): StreamingQuery = {
     saveSigParams(stream.sparkSession, storeDir, numHashes, bands)
     BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
+      val spark = stream.sparkSession
       val sh = shingled(batch, id, text).persist()
       try {
-        minhashBatch(stream.sparkSession, sh, storeDir, numHashes, bands,
-          batchId, compactEvery)
+        BatchStore.overwritePartitions(
+          Dedup.portableBandSignatures(sh, "doc_id", "__sh", numHashes, bands)
+            .withColumn("__batch", lit(batchId)), s"$storeDir/sigs")
+        BatchStore.overwritePartitions(sh.withColumn("__batch", lit(batchId)), s"$storeDir/docs")
+        if (BatchStore.compactDue(spark, s"$storeDir/sigs", compactEvery))
+          compactMinhash(spark, storeDir, upToBatch = batchId)
         onBatch(batchId)
       } finally { sh.unpersist(); () }
     }
-  }
-
-  /** One micro-batch of minhash-store maintenance over an
-    * already-shingled (and persisted) batch relation. */
-  private def minhashBatch(spark: SparkSession, sh: DataFrame, storeDir: String,
-                           numHashes: Int, bands: Int, batchId: Long,
-                           compactEvery: Int): Unit = {
-    BatchStore.overwritePartitions(
-      Dedup.portableBandSignatures(sh, "doc_id", "__sh", numHashes, bands)
-        .withColumn("__batch", lit(batchId)), s"$storeDir/sigs")
-    BatchStore.overwritePartitions(sh.withColumn("__batch", lit(batchId)), s"$storeDir/docs")
-    if (BatchStore.compactDue(spark, s"$storeDir/sigs", compactEvery))
-      compactMinhash(spark, storeDir, upToBatch = batchId)
   }
 
   /** The signature parameters pinned beside the store
@@ -128,101 +120,94 @@ object DedupIngest {
       requireNoPendingSwap(spark, storeDir)
       val sh = shingled(batch, id, text).persist()
       try {
-        jaccardBatch(spark, sh, storeDir, batchId, compactEvery)
+        val ex = Dedup.hashedShingles(sh, "doc_id", "__sh")
+        val dfordDir = s"$storeDir/dford"
+        val dfordFs = BatchStore.fs(spark, dfordDir)
+        val marker = new org.apache.hadoop.fs.Path(s"$dfordDir/_SUCCESS")
+        // bootstrap: freeze the ordering authority from the first
+        // NON-EMPTY batch (first writer wins — the _SUCCESS marker is the
+        // atomic commit, a replayed batch 0 overwrites identically; an
+        // empty first batch defers the freeze rather than pinning a
+        // vocab-0 authority that would cost candidate volume for the
+        // store's whole life — round 15).
+        // __gen tags the order GENERATION (0 at bootstrap, bumped by
+        // [[refreshOrderAuthority]]); every docs row carries the
+        // generation it was ordered under, so a serve can PROVE the
+        // shared-total-order premise instead of assuming it.
+        if (!dfordFs.exists(marker)) {
+          // a LOST authority must never silently re-freeze (round
+          // 15): re-bootstrapping stamps __gen=0 again, so
+          // on a never-refreshed store the generation proof could not
+          // tell the new authority from the vanished one the docs rows
+          // were actually ordered under — prefix completeness would break
+          // silently. The sidecar is the witness: meta without a
+          // committed dford means the authority vanished (external
+          // cleanup, or a deployment writing no _SUCCESS markers —
+          // mapreduce.fileoutputcommitter.marksuccessfuljobs=false is
+          // unsupported for this store).
+          require(readOrderMeta(spark, storeDir).isEmpty,
+            s"jaccard store $storeDir: _order_meta records a frozen ordering " +
+              "authority but dford carries no _SUCCESS commit — the authority " +
+              "was lost after docs rows were ordered under it. Refusing to " +
+              "silently re-freeze a NEW order (stored prefix arrays would no " +
+              "longer share a total order with new ones); restore dford or run " +
+              "refreshOrderAuthority to rewrite the store under one authority")
+          if (!ex.isEmpty) {
+            ex.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
+              .withColumn("__gen", lit(0L))
+              .write.mode("overwrite").parquet(dfordDir)
+            // order-meta sidecar at bootstrap: generation 0 + the
+            // vocabulary size the broadcast gate sizes against (one
+            // count, once per store lifetime)
+            writeOrderMeta(spark, storeDir, 0L,
+              spark.read.parquet(dfordDir).count())
+          }
+        } else if (readOrderMeta(spark, storeDir).isEmpty) {
+          // HEAL the crash window between the dford commit and the
+          // sidecar write (round 15): without the heal the store
+          // is sidecar-less forever — every batch/probe pays the
+          // un-hinted vocabulary shuffle, and worse, a later LOST dford
+          // would pass the re-freeze guard above (meta absent too) and
+          // silently re-freeze a new order. The heal self-certifies ONLY
+          // after re-proving the shared-order premise from the docs rows
+          // themselves — the same proof a sidecar-less serve runs — so an
+          // unknown-provenance store with genuinely mixed generations
+          // keeps its loud serve failure, never a silently written pin.
+          val dford0 = spark.read.parquet(dfordDir)
+          val gen0 = orderGen(dford0)
+          val docsDir = new org.apache.hadoop.fs.Path(s"$storeDir/docs")
+          val proved =
+            if (!dfordFs.exists(docsDir)) true // no docs yet: nothing ordered
+            else {
+              val docs = spark.read.parquet(docsDir.toString)
+              if (!docs.columns.contains("__ogen")) gen0 == 0L
+              else {
+                val r = docs.agg(min(col("__ogen")), max(col("__ogen"))).head()
+                r.isNullAt(0) || (r.getLong(0) == gen0 && r.getLong(1) == gen0)
+              }
+            }
+          if (proved) writeOrderMeta(spark, storeDir, gen0, dford0.count())
+        }
+        // no authority yet (empty batches so far): nothing to order or
+        // store — the freeze waits for the first real batch
+        if (dfordFs.exists(marker)) {
+          val dford = spark.read.parquet(dfordDir)
+          val gen = orderGen(dford)
+          // the order join is per-batch: against a small vocabulary
+          // (sidecar-proven) the authority broadcasts and the batch
+          // skips the vocabulary shuffle entirely
+          BatchStore.overwritePartitions(
+            Dedup.orderedByDf(ex, dfreqFor(spark, storeDir, dford), "doc_id")
+              .join(sh, "doc_id")
+              .select(col("doc_id"), col("__sh"), col("__n"), col("__ha"))
+              .withColumn("__ogen", lit(gen))
+              .withColumn("__batch", lit(batchId)), s"$storeDir/docs")
+          if (BatchStore.compactDue(spark, s"$storeDir/docs", compactEvery))
+            compactJaccardStore(spark, storeDir, upToBatch = batchId)
+        }
         onBatch(batchId)
       } finally { sh.unpersist(); () }
     }
-
-  /** One micro-batch of jaccard-store maintenance over an
-    * already-shingled (and persisted) batch relation. */
-  private def jaccardBatch(spark: SparkSession, sh: DataFrame, storeDir: String,
-                           batchId: Long, compactEvery: Int): Unit = {
-    val ex = Dedup.hashedShingles(sh, "doc_id", "__sh")
-    val dfordDir = s"$storeDir/dford"
-    val dfordFs = BatchStore.fs(spark, dfordDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$dfordDir/_SUCCESS")
-    // bootstrap: freeze the ordering authority from the first
-    // NON-EMPTY batch (first writer wins — the _SUCCESS marker is the
-    // atomic commit, a replayed batch 0 overwrites identically; an
-    // empty first batch defers the freeze rather than pinning a
-    // vocab-0 authority that would cost candidate volume for the
-    // store's whole life — round-15 streaming review).
-    // __gen tags the order GENERATION (0 at bootstrap, bumped by
-    // [[refreshOrderAuthority]]); every docs row carries the
-    // generation it was ordered under, so a serve can PROVE the
-    // shared-total-order premise instead of assuming it.
-    if (!dfordFs.exists(marker)) {
-      // a LOST authority must never silently re-freeze (round-15
-      // streaming review): re-bootstrapping stamps __gen=0 again, so
-      // on a never-refreshed store the generation proof could not
-      // tell the new authority from the vanished one the docs rows
-      // were actually ordered under — prefix completeness would break
-      // silently. The sidecar is the witness: meta without a
-      // committed dford means the authority vanished (external
-      // cleanup, or a deployment writing no _SUCCESS markers —
-      // mapreduce.fileoutputcommitter.marksuccessfuljobs=false is
-      // unsupported for this store).
-      require(readOrderMeta(spark, storeDir).isEmpty,
-        s"jaccard store $storeDir: _order_meta records a frozen ordering " +
-          "authority but dford carries no _SUCCESS commit — the authority " +
-          "was lost after docs rows were ordered under it. Refusing to " +
-          "silently re-freeze a NEW order (stored prefix arrays would no " +
-          "longer share a total order with new ones); restore dford or run " +
-          "refreshOrderAuthority to rewrite the store under one authority")
-      if (!ex.isEmpty) {
-        ex.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-          .withColumn("__gen", lit(0L))
-          .write.mode("overwrite").parquet(dfordDir)
-        // order-meta sidecar at bootstrap: generation 0 + the
-        // vocabulary size the broadcast gate sizes against (one
-        // count, once per store lifetime)
-        writeOrderMeta(spark, storeDir, 0L,
-          spark.read.parquet(dfordDir).count())
-      }
-    } else if (readOrderMeta(spark, storeDir).isEmpty) {
-      // HEAL the crash window between the dford commit and the
-      // sidecar write (round-15 review): without the heal the store
-      // is sidecar-less forever — every batch/probe pays the
-      // un-hinted vocabulary shuffle, and worse, a later LOST dford
-      // would pass the re-freeze guard above (meta absent too) and
-      // silently re-freeze a new order. The heal self-certifies ONLY
-      // after re-proving the shared-order premise from the docs rows
-      // themselves — the same proof a sidecar-less serve runs — so an
-      // unknown-provenance store with genuinely mixed generations
-      // keeps its loud serve failure, never a silently written pin.
-      val dford0 = spark.read.parquet(dfordDir)
-      val gen0 = orderGen(dford0)
-      val docsDir = new org.apache.hadoop.fs.Path(s"$storeDir/docs")
-      val proved =
-        if (!dfordFs.exists(docsDir)) true // no docs yet: nothing ordered
-        else {
-          val docs = spark.read.parquet(docsDir.toString)
-          if (!docs.columns.contains("__ogen")) gen0 == 0L
-          else {
-            val r = docs.agg(min(col("__ogen")), max(col("__ogen"))).head()
-            r.isNullAt(0) || (r.getLong(0) == gen0 && r.getLong(1) == gen0)
-          }
-        }
-      if (proved) writeOrderMeta(spark, storeDir, gen0, dford0.count())
-    }
-    // no authority yet (empty batches so far): nothing to order or
-    // store — the freeze waits for the first real batch
-    if (dfordFs.exists(marker)) {
-      val dford = spark.read.parquet(dfordDir)
-      val gen = orderGen(dford)
-      // the order join is per-batch: against a small vocabulary
-      // (sidecar-proven) the authority broadcasts and the batch
-      // skips the vocabulary shuffle entirely
-      BatchStore.overwritePartitions(
-        Dedup.orderedByDf(ex, dfreqFor(spark, storeDir, dford), "doc_id")
-          .join(sh, "doc_id")
-          .select(col("doc_id"), col("__sh"), col("__n"), col("__ha"))
-          .withColumn("__ogen", lit(gen))
-          .withColumn("__batch", lit(batchId)), s"$storeDir/docs")
-      if (BatchStore.compactDue(spark, s"$storeDir/docs", compactEvery))
-        compactJaccardStore(spark, storeDir, upToBatch = batchId)
-    }
-  }
 
   /** Fold committed docs batch partitions into `__batch=-1`, newest
     * batch per doc ([[BatchStore.newestPerDoc]]) — a re-ingested doc_id
@@ -689,17 +674,8 @@ object DedupIngest {
     // match-sized output
     val docs = spark.read.parquet(s"$storeDir/docs")
       .select(col("doc_id"), col("__sh"))
-    // candidate count observed during the checkpoint's own job — the
-    // rescore's pair-volume sizing input (round 22), no extra count()
-    val obsCand = org.apache.spark.sql.Observation()
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.__band") === col("b.__band") && col("a.__key") === col("b.__key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-      .observe(obsCand, count(lit(1)).as("__cand"))
-      .localCheckpoint(true)
-    val candRows = Dedup.observedCount(obsCand, "__cand")
+    // the candidate count is the rescore's pair-volume sizing input
+    val (cand, candRows) = Bands.counted(Bands.selfJoin(banded, "doc_id"))
     banded.unpersist(blocking = false)
     Dedup.rescoreJaccard(cand, docs, "doc_id", "__sh", jaccardThreshold, candRows)
       .dropDuplicates("id_a", "id_b")

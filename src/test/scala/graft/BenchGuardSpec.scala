@@ -862,6 +862,23 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.isEmpty, hits.mkString("store layout outside BatchStore:\n", "\n", ""))
   }
 
+  test("band-collision joins live in Bands only, and no partition count reads the session width") {
+    // the self-join, the pruned probe join and their sizing are one
+    // decision; a copy in a family module drifts from it. Matches a
+    // join keyed on `__band`/`__bk` (a `Seq` of join columns or an
+    // aliased equality) and every numShufflePartitions read
+    val bandJoin =
+      """(?<!\.as\()Seq\("__(band|bk)"|\.__(band|bk)"\)\s*===|numShufflePartitions""".r
+    // annCandidates broadcasts its whole query band relation with no
+    // count job (a handful of queries that are also corpus rows; see
+    // its scaladoc), so it stays outside Bands
+    val annQueryJoin =
+      """sigs(corpus, "cid").join(broadcast(sigs(queries, "qid")), Seq("__band", "__key"))"""
+    val hits = sourceHits("graft", bandJoin, keep = _ != "Bands.scala")
+      .filterNot(h => h.startsWith("ops/Vectors.scala:") && h.endsWith(annQueryJoin))
+    assert(hits.isEmpty, hits.mkString("band joins or session-width reads outside Bands:\n", "\n", ""))
+  }
+
   test("every public operator in ops, streaming and io has a caller outside the tests") {
     // an operator no query key, workload or other operator calls is a
     // second code path that only its own tests run. The keep list

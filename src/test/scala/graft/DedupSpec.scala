@@ -167,7 +167,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     }
     val full = est(graft.ops.Dedup.prefixPostings(cOrd, "doc_id", 0.5))
-    val pruned = est(graft.ops.Dedup.prunedCorpusPostings(pOrd, cOrd, "doc_id", 0.5))
+    val pCounts = graft.ops.Dedup.probePrefixCounts(pOrd, "doc_id", 0.5)
+    val pruned = est(graft.ops.Dedup.prunedCorpusPostings(
+      cOrd, pCounts, pCounts.count(), "doc_id", 0.5))
     assert(full > 0.0, "planted corpus must produce prefix collisions")
     assert(pruned == full,
       s"pruned-postings estimate must equal the full estimate: $pruned vs $full")

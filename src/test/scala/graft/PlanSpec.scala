@@ -316,6 +316,16 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       cand, sh, sh, "doc_id", "__sh", 0.5, candRows = 1L))
     assert(!rescorePlan.contains("CartesianProduct"), rescorePlan)
     assert(!rescorePlan.contains("BroadcastNestedLoopJoin"), rescorePlan)
+    // the media family's Hamming self-join: the lazy band join and the
+    // op's id-keyed rescore behind its candidate checkpoint
+    val hashed = Seq((1L, 0x0fL), (2L, 0x0eL), (3L, -1L)).toDF("__id", "__ah")
+    for (df <- Seq(
+      graft.ops.Bands.selfJoin(graft.ops.Multimodal.hammingBanded(hashed, "__ah", 3), "__id"),
+      graft.ops.Multimodal.hammingNearDupsOnHashes(hashed, 3, "plan_hamming_candidates"))) {
+      val p = plan(df)
+      assert(!p.contains("CartesianProduct"), p)
+      assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    }
   }
 
   test("probe joins broadcast-prune the corpus side below its exchange (LeftSemi)") {
@@ -337,17 +347,24 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       graft.ops.Dedup.hashedShingles(sh, "doc_id", "__sh"), dfreq, "doc_id")
     val pOrd = graft.ops.Dedup.orderedByDf(
       graft.ops.Dedup.hashedShingles(probes, "doc_id", "__sh"), dfreq, "doc_id")
-    val jacCand = graft.ops.Dedup.probeCandidatesLazy(pOrd, cOrd, "doc_id", 0.5, 32)
-    val mhCand = graft.ops.Dedup.bandProbeCandidatesLazy(
-      graft.ops.Dedup.portableBandSignatures(probes, "doc_id", "__sh"),
-      graft.ops.Dedup.portableBandSignatures(sh, "doc_id", "__sh"), "doc_id")
-    // the SRP embedding probe's band join, same contract
-    val corpusSigs = Seq((1L, Seq(3, 7)), (2L, Seq(4, 9)))
-      .toDF("cid", "__sig")
-    val pBands = Seq((9L, Seq(3, 7))).toDF("cid", "__sig")
-      .select($"cid".as("probe_id"), posexplode($"__sig").as(Seq("__band", "__key")))
-    val srpCand = graft.ops.Vectors.srpProbeCandidatesLazy(
-      pBands, corpusSigs, "cid", "__sig")
+    // the jaccard probe's live candidate join, as probePairsOnOrdered
+    // builds it
+    val pCounts = graft.ops.Dedup.probePrefixCounts(pOrd, "doc_id", 0.5)
+    val jacCand = graft.ops.Dedup.probeCandidatesOn(pOrd,
+      graft.ops.Dedup.prunedCorpusPostings(cOrd, pCounts, pCounts.count(), "doc_id", 0.5),
+      "doc_id", 0.5, 32)
+    // the shared band probe join over the minhash signatures
+    val mhCand = graft.ops.Bands.probeJoin(
+      graft.ops.Dedup.portableBandSignatures(probes, "doc_id", "__sh")
+        .withColumnRenamed("doc_id", "id_a"),
+      graft.ops.Dedup.portableBandSignatures(sh, "doc_id", "__sh")
+        .withColumnRenamed("doc_id", "id_b"))
+    // ... and over SRP embedding signatures, same contract
+    def srpBands(df: org.apache.spark.sql.DataFrame, as: String) =
+      df.select($"cid".as(as), posexplode($"__sig").as(Seq("__band", "__key")))
+    val srpCand = graft.ops.Bands.probeJoin(
+      srpBands(Seq((9L, Seq(3, 7))).toDF("cid", "__sig"), "probe_id"),
+      srpBands(Seq((1L, Seq(3, 7)), (2L, Seq(4, 9))).toDF("cid", "__sig"), "dup_id"))
     for (df <- Seq(jacCand, mhCand, srpCand)) {
       val p = plan(df)
       assert(p.contains("LeftSemi"),

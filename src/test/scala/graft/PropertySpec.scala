@@ -465,6 +465,42 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("Bands self and probe joins equal a plain-Scala enumeration of colliding pairs") {
+    import spark.implicits._
+    // few bands and keys, so pairs collide in several bands; every
+    // relation repeats rows; ids 0-7 all share key 99 in two bands
+    def draw(rnd: Random, ids: Int, idBase: Long, n: Int): List[(Long, Int, Long)] = {
+      val rows = List.fill(n)((idBase + rnd.nextInt(ids), rnd.nextInt(3), rnd.nextInt(4).toLong))
+      rows ++ rows.take(3)
+    }
+    val crowd = for (i <- (0L until 8L).toList; b <- List(0, 1)) yield (i, b, 99L)
+    def selfPairs(rows: List[(Long, Int, Long)]) = (for {
+      (a, ba, ka) <- rows; (b, bb, kb) <- rows if ba == bb && ka == kb && a < b
+    } yield (a, b)).distinct.sorted
+    // payload columns ride through the probe join: the probe's is a
+    // string, the corpus's a long
+    def probeRows(probe: List[(Long, Int, Long)], corpus: List[(Long, Int, Long)]) = (for {
+      (p, bp, kp) <- probe; (c, bc, kc) <- corpus if bp == bc && kp == kc
+    } yield (p, s"p$p", c, c * 31)).distinct.sorted
+    def probeDf(rows: List[(Long, Int, Long)]) = rows.toDF("probe_id", "__band", "__key")
+      .withColumn("pp", concat(lit("p"), $"probe_id"))
+    def corpusDf(rows: List[(Long, Int, Long)]) = rows.toDF("dup_id", "__band", "__key")
+      .withColumn("cp", $"dup_id" * 31)
+    def probed(probe: List[(Long, Int, Long)], corpus: List[(Long, Int, Long)]) =
+      graft.ops.Bands.probeJoin(probeDf(probe), corpusDf(corpus))
+        .select("probe_id", "pp", "dup_id", "cp").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toList.sorted
+    trials { rnd =>
+      val corpus = draw(rnd, 12, 0L, 1 + rnd.nextInt(30)) ++ crowd
+      val probe = (100L, 0, 99L) :: draw(rnd, 6, 100L, rnd.nextInt(10))
+      val self = graft.ops.Bands.selfJoin(corpus.toDF("id", "__band", "__key"), "id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
+      assert(self == selfPairs(corpus))
+      assert(probed(probe, corpus) == probeRows(probe, corpus))
+    }
+    assert(probed(Nil, crowd).isEmpty)
+  }
+
   test("portable dedup ops are layout-invariant: any repartitioning, same output") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
