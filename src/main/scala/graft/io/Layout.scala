@@ -213,7 +213,7 @@ object Layout {
     fs.delete(tmp, true)
     // FLAT directories only: the rewrite carries no partitionBy, so
     // compacting a Hive-partitioned layout here would silently flatten
-    // it (and the swap would drop sidecar dirs like _quantizer) —
+    // it (and the swap would drop sidecar dirs like _srp_params) —
     // partitioned stores compact per partition (see
     // [[graft.streaming.VectorIngest.compactStore]] for the
     // __batch-partitioned form)
@@ -228,7 +228,7 @@ object Layout {
     val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
     write(spark.read.parquet(dir), n, tmp.toString)
     // swap data files only — underscore sidecars (_SUCCESS aside, e.g.
-    // a _checkpoint or _quantizer dir) survive the rewrite untouched
+    // a _checkpoint or _srp_params dir) survive the rewrite untouched
     entries.filterNot(_.getPath.getName.startsWith("_"))
       .foreach(e => fs.delete(e.getPath, true))
     fs.listStatus(tmp).filterNot(_.getPath.getName.startsWith("_")).foreach { e =>

@@ -436,8 +436,8 @@ object Vectors {
     * query ever pays the quantizer fit. `centroids` is the nlist-row
     * routing relation, broadcast at search time; `centroidArr` the same
     * centroids as the raw driver-side array, for streaming maintenance
-    * and drift monitoring (assigning NEW batches needs the frozen
-    * quantizer, not the routing relation). */
+    * (assigning NEW batches needs the frozen quantizer, not the routing
+    * relation). */
   final case class IvfIndexData(cells: DataFrame, centroids: DataFrame,
                                 centroidArr: Array[Array[Double]])
 
@@ -492,9 +492,9 @@ object Vectors {
     * and cell QUALITY needs only a representative sample (the faiss
     * design); a distributed k-means would spend multiple scheduled
     * jobs to compute what a driver loop over ≤100k points does in
-    * milliseconds. Exposed separately from [[ivfIndex]] so a drifted
-    * corpus can REFIT from a fresh sample and re-derive the index via
-    * [[ivfIndexFrom]]. */
+    * milliseconds. Exposed separately from [[ivfIndex]] so a stream
+    * bootstrap or a caller holding its own centroids can derive the
+    * index via [[ivfIndexFrom]]. */
   def fitQuantizer(corpus: DataFrame, vec: String, nlist: Int = 16,
                    sampleFraction: Double = 1.0, seed: Long = 42L,
                    maxSamples: Int = 100000, iters: Int = 10): Array[Array[Double]] =
@@ -560,8 +560,7 @@ object Vectors {
     * expression — nlist dot expressions would bloat the codegen method
     * (the SrpBandKeys lesson), and this is a once-per-ingest pass, not
     * a query path. Shared by the batch index build and the streaming
-    * maintenance loop so their cells agree by construction; the
-    * distance rides along so drift monitoring costs no second scan.
+    * maintenance loop so their cells agree by construction.
     *
     * The centroid broadcast is created HERE, once per assigner — build
     * the assigner once and reuse it across calls (the streaming
@@ -593,7 +592,7 @@ object Vectors {
     v => assign(v)
   }
 
-  /** The per-row index-column projection: (cid, __cell, __cv, __d2) for
+  /** The per-row index-column projection: (cid, __cell, __cv) for
     * every non-degenerate vector — identical for a static corpus and a
     * streaming micro-batch, which is what makes stream-maintained cells
     * provably equal to a batch build.
@@ -608,8 +607,7 @@ object Vectors {
     df.filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
       .select(col(id).as("cid"), normalized(col(vec)).as("__na"))
       .withColumn("__a", assign(col("__na")))
-      .select(col("cid"), col("__a._1").as("__cell"), col("__na").as("__cv"),
-        col("__a._2").as("__d2"))
+      .select(col("cid"), col("__a._1").as("__cell"), col("__na").as("__cv"))
   }
 
   /** The nlist-row routing relation for a centroid array — broadcast
@@ -627,18 +625,17 @@ object Vectors {
       .toDF("__cell", "__centroid", "__cn2")
 
   /** Derive the full index from a corpus and an ALREADY-FIT quantizer
-    * — the refit path (drift detected → [[fitQuantizer]] on a fresh
-    * sample → re-derive) and the spec's handle for building an index
-    * over one distribution with another's centroids. Cell assignment
-    * is the one genuinely data-sized step: a single scan-local pass.
+    * — what [[ivfIndex]] runs after its fit, and the handle for
+    * building an index over one distribution with another's centroids.
+    * Cell assignment is the one genuinely data-sized step: a single
+    * scan-local pass.
     * The cells relation is eagerly materialized (`localCheckpoint`) —
     * the in-session analog of persisting a `__cell` column with the
     * table — so searches never re-run the fit or the normalization
     * scan. */
   def ivfIndexFrom(corpus: DataFrame, id: String, vec: String,
                    centroidArr: Array[Array[Double]]): IvfIndexData = {
-    val cells = cellColumns(corpus, id, vec, centroidArr).drop("__d2")
-      .localCheckpoint(true)
+    val cells = cellColumns(corpus, id, vec, centroidArr).localCheckpoint(true)
     IvfIndexData(cells, centroidRelation(corpus.sparkSession, centroidArr), centroidArr)
   }
 
@@ -649,26 +646,6 @@ object Vectors {
                maxSamples: Int = 100000, iters: Int = 10): IvfIndexData =
     ivfIndexFrom(corpus, id, vec,
       fitQuantizer(corpus, vec, nlist, sampleFraction, seed, maxSamples, iters))
-
-  /** Mean squared assignment distance of a corpus (or micro-batch)
-    * against a quantizer — the drift statistic: a distribution the
-    * quantizer was fit on scores near its training distortion, a
-    * shifted one scores higher (its mass sits far from every
-    * centroid). One scan-local pass; None for an empty/degenerate
-    * batch. */
-  def quantizerDistortion(df: DataFrame, id: String, vec: String,
-                          centroidArr: Array[Array[Double]]): Option[Double] =
-    cellColumns(df, id, vec, centroidArr)
-      .agg(avg(col("__d2")).as("__md"))
-      .take(1).headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-
-  /** Refit trigger: the current (batch) distortion degraded past
-    * `factor` times the fit-time baseline. The factor rides well above
-    * sampling noise (same-distribution batches score within a few
-    * percent of baseline) while any real shift — new embedding model,
-    * new domain — lands far past 2x on normalized vectors. */
-  def shouldRefit(current: Double, baseline: Double, factor: Double = 2.0): Boolean =
-    current > baseline * factor
 
   /** Queries as (qid, __qv) with __qv normalized to unit length —
     * degenerate (zero/null) query vectors are dropped, not scored. */
@@ -1200,8 +1177,7 @@ object Vectors {
   /** Mean squared PQ reconstruction error of the (normalized) corpus
     * under `model` — rotate, encode, reconstruct, ‖y − ŷ‖², one
     * scan-local pass against the broadcast model; None for an
-    * empty/degenerate corpus. The drift statistic and the fit-quality
-    * judge: the two models of [[opqFitWithBaseline]] on the same corpus
+    * empty/degenerate corpus. The fit-quality judge: the two models of [[opqFitWithBaseline]] on the same corpus
     * measure exactly what the rotation bought. */
   def opqDistortion(corpus: DataFrame, vec: String, model: OpqModel): Option[Double] = {
     val bc = corpus.sparkSession.sparkContext.broadcast(model)

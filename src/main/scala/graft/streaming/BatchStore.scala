@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    does not accumulate one small partition per micro-batch;
   *  - the streaming query's checkpoint lives at `$storeDir/_checkpoint`
   *    ([[maintain]]);
-  *  - small-text sidecars (`_quantizer`, `_srp_params`, `_sig_params`,
+  *  - small `k=v` sidecars (`_srp_params`, `_sig_params`,
   *    `_order_meta`) pin the parameters a store was built with
   *    ([[pinFields]], [[readFields]]).
   *
@@ -146,58 +146,48 @@ private[graft] object BatchStore {
       .select(dataCols.map(col): _*)
       .distinct()
 
-  /** Write `body` to `file` (full path under the store): tmp file in
-    * the sidecar directory, then delete-dest + rename — a concurrent
-    * reader sees the OLD file or (in the delete-to-rename window) NO
-    * file, never a torn one, and every sidecar defines an absent
-    * fallback. Rename is atomic on HDFS and local filesystems; object
-    * stores emulate it per-object, which suffices for one small file. */
-  def writeSidecar(spark: SparkSession, file: String, body: String): Unit = {
+  /** Write a `k=v`-per-line sidecar, keys in the given order: tmp
+    * file in the sidecar directory, then delete-dest + rename — a
+    * concurrent reader sees the OLD file or (in the delete-to-rename
+    * window) NO file, never a torn one, and every sidecar defines an
+    * absent fallback. Rename is atomic on HDFS and local filesystems;
+    * object stores emulate it per-object, which suffices for one small
+    * file. */
+  def writeFields(spark: SparkSession, file: String, fields: (String, Any)*): Unit = {
     val dest = new Path(file)
     val f = fs(spark, dest)
     f.mkdirs(dest.getParent)
     val tmp = new Path(dest.getParent, "." + dest.getName + ".tmp")
     val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try out.write(fields.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("UTF-8"))
+    finally out.close()
     f.delete(dest, false)
     require(f.rename(tmp, dest),
       s"sidecar swap $tmp -> $dest failed — refusing to leave a stale pin")
     ()
   }
 
-  /** The sidecar's full content, or None when absent. The exists/open
-    * pair races the writer's delete-to-rename window, so a
-    * FileNotFoundException from open IS the absent case, not an error. */
-  def readSidecar(spark: SparkSession, file: String): Option[String] = {
+  /** The values of a `k=v`-per-line sidecar, in the order of `keys`;
+    * None when the sidecar is absent. The exists/open pair races the
+    * writer's delete-to-rename window, so a FileNotFoundException from
+    * open IS the absent case, not an error. A key the file lacks
+    * throws. */
+  def readFields(spark: SparkSession, file: String, keys: String*): Option[Seq[String]] = {
     val dest = new Path(file)
     val f = fs(spark, dest)
-    if (!f.exists(dest)) None
+    val in = if (!f.exists(dest)) null else try f.open(dest) catch {
+      case _: java.io.FileNotFoundException => null
+    }
+    if (in == null) None
     else {
-      val in = try f.open(dest) catch {
-        case _: java.io.FileNotFoundException => null
-      }
-      if (in == null) None
-      else try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, "UTF-8"))
+      val fields = try {
+        scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .map(_.split("=", 2)).collect { case Array(k, v) => k -> v.trim }.toMap
       } finally in.close()
+      Some(keys.map(k => fields.getOrElse(k,
+        throw new IllegalArgumentException(s"sidecar $file has no $k= line"))))
     }
   }
-
-  /** Write a `k=v`-per-line sidecar, keys in the given order. */
-  def writeFields(spark: SparkSession, file: String, fields: (String, Any)*): Unit =
-    writeSidecar(spark, file, fields.map { case (k, v) => s"$k=$v\n" }.mkString)
-
-  /** The values of a `k=v`-per-line sidecar, read by position in the
-    * order of `keys`; None when the sidecar is absent. */
-  def readFields(spark: SparkSession, file: String, keys: String*): Option[Seq[String]] =
-    readSidecar(spark, file).map { txt =>
-      val lines = txt.split("\n")
-      keys.zipWithIndex.map { case (k, i) => lines(i).stripPrefix(s"$k=").trim }
-    }
 
   /** Pin build parameters beside a store: first writer wins, and a
     * changed re-declaration throws — band keys are only comparable

@@ -99,16 +99,15 @@ object DedupIngest {
     * [[Dedup.probePairsOnOrdered]] needs) to `$storeDir/docs`. The
     * ordering authority is a DOCUMENT-FREQUENCY relation FROZEN at
     * bootstrap from the first batch and persisted to
-    * `$storeDir/dford` — the [[VectorIngest]] frozen-hyperplane
-    * discipline: later batches order their shingles against it
-    * batch-locally (one keyed join, no cross-batch aggregate, no
-    * state store). Freezing is CORRECTNESS-FREE: prefix completeness
-    * holds under any shared total order, so df drift only ever costs
-    * candidate volume, never recall — refreshing dford (and rewriting
-    * `__ha`) at a compaction boundary is a cost optimization, exactly
-    * like the quantizer refit. Serving probes needs no threshold
-    * pinned at ingest: the store holds FULL ordered arrays and the
-    * serve derives its prefix slices scan-locally, so one store
+    * `$storeDir/dford` for the store's whole life — the
+    * [[VectorIngest]] frozen-hyperplane discipline: later batches order
+    * their shingles against it batch-locally (one keyed join, no
+    * cross-batch aggregate, no state store). Freezing is
+    * CORRECTNESS-FREE: prefix completeness holds under any shared total
+    * order, so df drift (an unrepresentative bootstrap batch) only ever
+    * costs candidate volume, never recall. Serving probes needs no
+    * threshold pinned at ingest: the store holds FULL ordered arrays
+    * and the serve derives its prefix slices scan-locally, so one store
     * answers probes at any threshold. */
   def maintainJaccardStore(stream: DataFrame, id: String, text: String,
                            storeDir: String,
@@ -117,7 +116,6 @@ object DedupIngest {
                            compactEvery: Int = 0): StreamingQuery =
     BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
       val spark = stream.sparkSession
-      requireNoPendingSwap(spark, storeDir)
       val sh = shingled(batch, id, text).persist()
       try {
         val ex = Dedup.hashedShingles(sh, "doc_id", "__sh")
@@ -130,19 +128,14 @@ object DedupIngest {
         // empty first batch defers the freeze rather than pinning a
         // vocab-0 authority that would cost candidate volume for the
         // store's whole life — round 15).
-        // __gen tags the order GENERATION (0 at bootstrap, bumped by
-        // [[refreshOrderAuthority]]); every docs row carries the
-        // generation it was ordered under, so a serve can PROVE the
-        // shared-total-order premise instead of assuming it.
         if (!dfordFs.exists(marker)) {
           // a LOST authority must never silently re-freeze (round
-          // 15): re-bootstrapping stamps __gen=0 again, so
-          // on a never-refreshed store the generation proof could not
-          // tell the new authority from the vanished one the docs rows
-          // were actually ordered under — prefix completeness would break
-          // silently. The sidecar is the witness: meta without a
-          // committed dford means the authority vanished (external
-          // cleanup, or a deployment writing no _SUCCESS markers —
+          // 15): the stored docs rows were ordered under the vanished
+          // authority, and a new one would not share its total order —
+          // prefix completeness would break silently. The sidecar is
+          // the witness: meta without a committed dford means the
+          // authority vanished (external cleanup, or a deployment
+          // writing no _SUCCESS markers —
           // mapreduce.fileoutputcommitter.marksuccessfuljobs=false is
           // unsupported for this store).
           require(readOrderMeta(spark, storeDir).isEmpty,
@@ -150,49 +143,26 @@ object DedupIngest {
               "authority but dford carries no _SUCCESS commit — the authority " +
               "was lost after docs rows were ordered under it. Refusing to " +
               "silently re-freeze a NEW order (stored prefix arrays would no " +
-              "longer share a total order with new ones); restore dford or run " +
-              "refreshOrderAuthority to rewrite the store under one authority")
-          if (!ex.isEmpty) {
+              "longer share a total order with new ones); restore dford or " +
+              "rebuild the store from its source")
+          if (!ex.isEmpty)
             ex.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-              .withColumn("__gen", lit(0L))
               .write.mode("overwrite").parquet(dfordDir)
-            // order-meta sidecar at bootstrap: generation 0 + the
-            // vocabulary size the broadcast gate sizes against (one
-            // count, once per store lifetime)
-            writeOrderMeta(spark, storeDir, 0L,
-              spark.read.parquet(dfordDir).count())
-          }
-        } else if (readOrderMeta(spark, storeDir).isEmpty) {
-          // HEAL the crash window between the dford commit and the
-          // sidecar write (round 15): without the heal the store
-          // is sidecar-less forever — every batch/probe pays the
-          // un-hinted vocabulary shuffle, and worse, a later LOST dford
-          // would pass the re-freeze guard above (meta absent too) and
-          // silently re-freeze a new order. The heal self-certifies ONLY
-          // after re-proving the shared-order premise from the docs rows
-          // themselves — the same proof a sidecar-less serve runs — so an
-          // unknown-provenance store with genuinely mixed generations
-          // keeps its loud serve failure, never a silently written pin.
-          val dford0 = spark.read.parquet(dfordDir)
-          val gen0 = orderGen(dford0)
-          val docsDir = new org.apache.hadoop.fs.Path(s"$storeDir/docs")
-          val proved =
-            if (!dfordFs.exists(docsDir)) true // no docs yet: nothing ordered
-            else {
-              val docs = spark.read.parquet(docsDir.toString)
-              if (!docs.columns.contains("__ogen")) gen0 == 0L
-              else {
-                val r = docs.agg(min(col("__ogen")), max(col("__ogen"))).head()
-                r.isNullAt(0) || (r.getLong(0) == gen0 && r.getLong(1) == gen0)
-              }
-            }
-          if (proved) writeOrderMeta(spark, storeDir, gen0, dford0.count())
         }
         // no authority yet (empty batches so far): nothing to order or
         // store — the freeze waits for the first real batch
         if (dfordFs.exists(marker)) {
+          // order-meta sidecar: the vocabulary size the broadcast gate
+          // sizes against (one count, once per store lifetime), written
+          // right after the bootstrap commit — and HEALED by the next
+          // batch when a crash fell between the two (round 15): without
+          // the heal the store is sidecar-less forever — every
+          // batch/probe pays the un-hinted vocabulary shuffle, and
+          // worse, a later LOST dford would pass the re-freeze guard
+          // above (meta absent too) and silently re-freeze a new order.
+          if (readOrderMeta(spark, storeDir).isEmpty)
+            writeOrderMeta(spark, storeDir, spark.read.parquet(dfordDir).count())
           val dford = spark.read.parquet(dfordDir)
-          val gen = orderGen(dford)
           // the order join is per-batch: against a small vocabulary
           // (sidecar-proven) the authority broadcasts and the batch
           // skips the vocabulary shuffle entirely
@@ -200,7 +170,6 @@ object DedupIngest {
             Dedup.orderedByDf(ex, dfreqFor(spark, storeDir, dford), "doc_id")
               .join(sh, "doc_id")
               .select(col("doc_id"), col("__sh"), col("__n"), col("__ha"))
-              .withColumn("__ogen", lit(gen))
               .withColumn("__batch", lit(batchId)), s"$storeDir/docs")
           if (BatchStore.compactDue(spark, s"$storeDir/docs", compactEvery))
             compactJaccardStore(spark, storeDir, upToBatch = batchId)
@@ -214,90 +183,27 @@ object DedupIngest {
     * resolves to its newest ordered arrays at the fold
     * (compaction-bounded update visibility, like every doc-grained
     * tier). dford is bootstrap-frozen and untouched. */
-  def compactJaccardStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit = {
-    requireNoPendingSwap(spark, storeDir)
-    BatchStore.fold(spark, s"$storeDir/docs", upToBatch) { loaded =>
-      // __ogen guard for stores written before the generation stamp
-      // existed (treated as generation 0, matching orderGen's fallback)
-      val stamped =
-        if (loaded.columns.contains("__ogen")) loaded
-        else loaded.withColumn("__ogen", lit(0L))
-      BatchStore.newestPerDoc("doc_id", "__sh", "__n", "__ha", "__ogen")(stamped)
-    }
-  }
+  def compactJaccardStore(spark: SparkSession, storeDir: String, upToBatch: Long): Unit =
+    BatchStore.fold(spark, s"$storeDir/docs", upToBatch)(
+      BatchStore.newestPerDoc("doc_id", "__sh", "__n", "__ha"))
 
-  /** The order GENERATION a dford relation declares (0 when the
-    * column is absent or the relation is empty). */
-  private def orderGen(dford: DataFrame): Long =
-    if (!dford.columns.contains("__gen")) 0L
-    else {
-      val r = dford.agg(max(col("__gen"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-
-  private def swapMarker(storeDir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$storeDir/_swap_pending")
-
-  /** Whole-refresh exclusion marker (round 12): taken BEFORE
-    * [[refreshOrderAuthority]] snapshots the docs dir, removed after
-    * the swap (and the order-meta sidecar) complete. `_swap_pending`
-    * alone only covered the SWAP window — a maintenance batch
-    * committing between the docs snapshot and the swap passed
-    * [[requireNoPendingSwap]], was recorded committed in the stream
-    * checkpoint, and was then deleted with the whole pre-refresh docs
-    * dir: silent recall loss through a crack the docstring claimed
-    * closed. The lock makes every store writer and reader refuse for
-    * the refresh's WHOLE duration, and [[refreshOrderAuthority]]
-    * additionally re-lists the batch partitions before its commit
-    * point, so even a batch already past its marker check when the
-    * lock appeared aborts the refresh loudly instead of being eaten. */
-  private def refreshLockMarker(storeDir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$storeDir/_refresh_lock")
-
-  /** Refuse to touch a store whose order refresh is running or died
-    * mid-flight — every writer AND reader of the jaccard store calls
-    * this first, so an interrupted [[refreshOrderAuthority]] can only
-    * ever surface as this loud error (repaired by rerunning the
-    * refresh, which completes or aborts the interrupted one), never as
-    * a maintenance batch quietly recreating a truncated docs dir that
-    * would PASS the generation check while missing the corpus. */
-  private def requireNoPendingSwap(spark: SparkSession, storeDir: String): Unit = {
-    val fs = BatchStore.fs(spark, storeDir)
-    require(!fs.exists(swapMarker(storeDir)),
-      s"store $storeDir has an interrupted order refresh (_swap_pending); " +
-        "rerun refreshOrderAuthority to complete it before using the store")
-    require(!fs.exists(refreshLockMarker(storeDir)),
-      s"store $storeDir has an order refresh in progress or interrupted " +
-        "(_refresh_lock); wait for it or rerun refreshOrderAuthority to " +
-        "complete/abort it before using the store")
-  }
-
-  /** Order-meta SIDECAR (round 12): the store's current order
-    * generation plus the authority's vocabulary size, maintained by
-    * the same marker protocol that maintains dford itself (bootstrap
-    * writes it, [[refreshOrderAuthority]] rewrites it inside the
-    * refresh lock, after the swap). Two serve-path costs it removes:
-    * the per-serve min/max proof over every docs row's `__ogen`
-    * (O(#files) footer IO, redundant at many-serves-per-refresh
-    * cadence), and a per-batch/per-serve `count()` that a broadcast
-    * gate on the dford join would otherwise need. Stores written
-    * before the sidecar existed fall back to the scan proof and the
-    * un-hinted shuffle join — the sidecar is a protocol-maintained
-    * fast path, never a weakening of the check for stores of unknown
-    * provenance. */
-  private[graft] case class OrderMeta(gen: Long, vocab: Long)
-
+  /** Order-meta SIDECAR (round 12): the frozen authority's vocabulary
+    * size, written once at bootstrap (or by the heal above). It lets
+    * the dford join's broadcast gate ([[dfreqFor]]) size the authority
+    * without a per-batch/per-serve `count()`, and it is the witness
+    * the lost-authority guard reads. Stores written before the sidecar
+    * existed keep the un-hinted shuffle join. */
   private def orderMetaFile(storeDir: String): String =
     s"$storeDir/_order_meta/meta.txt"
 
   private[graft] def writeOrderMeta(spark: SparkSession, storeDir: String,
-                             gen: Long, vocab: Long): Unit =
-    BatchStore.writeFields(spark, orderMetaFile(storeDir), "gen" -> gen, "vocab" -> vocab)
+                                    vocab: Long): Unit =
+    BatchStore.writeFields(spark, orderMetaFile(storeDir), "vocab" -> vocab)
 
-  private[graft] def readOrderMeta(spark: SparkSession,
-                                       storeDir: String): Option[OrderMeta] =
-    BatchStore.readFields(spark, orderMetaFile(storeDir), "gen", "vocab")
-      .map(v => OrderMeta(v(0).toLong, v(1).toLong))
+  /** The authority's vocabulary size the sidecar records; None when
+    * the store has no sidecar. */
+  private[graft] def readOrderMeta(spark: SparkSession, storeDir: String): Option[Long] =
+    BatchStore.readFields(spark, orderMetaFile(storeDir), "vocab").map(_.head.toLong)
 
   /** Broadcast bound for the dford (ordering-authority) join — the
     * [[graft.ops.Dedup.maybeBroadcast]] discipline sized for dford's
@@ -312,264 +218,10 @@ object DedupIngest {
     * round-12 store) the join stays a shuffle: the status quo, no
     * feasibility risk. */
   private[graft] def dfreqFor(spark: SparkSession, storeDir: String,
-                       dford: DataFrame): DataFrame = {
-    val dfreq = dford.drop("__gen")
-    if (readOrderMeta(spark, storeDir)
-          .exists(m => m.vocab >= 0 && m.vocab <= DfordBroadcastMaxRows))
-      broadcast(dfreq)
-    else dfreq
-  }
-
-  /** Complete (or clean up) an interrupted refresh, idempotently.
-    * Two distinct interrupted states, told apart by which markers
-    * survive:
-    *
-    *  - `_swap_pending` present: the swap marker is only ever created
-    *    AFTER both `__rewrite` dirs are fully written, so recovery
-    *    always rolls FORWARD to the new generation; the pre-swap copy
-    *    survives as `__old` until its dir's swap finishes, so no crash
-    *    point leaves the store without a full copy of the corpus. The
-    *    order-meta sidecar is rewritten from the rolled-forward dford
-    *    (the crash may have hit between swap and sidecar write).
-    *  - `_refresh_lock` alone: the refresh died BEFORE its commit
-    *    point — the store proper was never mutated, so recovery
-    *    ABORTS: drop any partial `__rewrite` dirs and the lock. The
-    *    store stays on its old, consistent generation.
-    */
-  private def recoverPendingSwap(spark: SparkSession, storeDir: String): Unit = {
-    val fs = BatchStore.fs(spark, storeDir)
-    val marker = swapMarker(storeDir)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    if (!fs.exists(marker)) {
-      if (fs.exists(refreshLockMarker(storeDir))) {
-        // lock-only death: pre-commit (store untouched), mid-abort
-        // with docs renamed aside (the round-12 aside-first listing
-        // found a slipped batch and died before the rename back), or
-        // post-swap-pre-sidecar (store fully swapped, sidecar stale).
-        // Roll any aside dir back first — without the swap marker no
-        // rewrite was ever committed, so the aside copy IS the store —
-        // then abort the rewrite dirs and re-derive the sidecar FROM
-        // dford, correct in every lock-only state.
-        for (sub <- Seq("docs", "dford")) {
-          val target = p(s"$storeDir/$sub")
-          val old = p(s"$storeDir/${sub}__old")
-          if (!fs.exists(target) && fs.exists(old))
-            require(fs.rename(old, target), s"rollback $old failed")
-        }
-        for (sub <- Seq("docs", "dford")) fs.delete(p(s"$storeDir/${sub}__rewrite"), true)
-        if (fs.exists(p(s"$storeDir/dford/_SUCCESS"))) {
-          val dford = spark.read.parquet(s"$storeDir/dford")
-          writeOrderMeta(spark, storeDir, orderGen(dford), dford.count())
-        }
-        fs.delete(refreshLockMarker(storeDir), true)
-      }
-      return
-    }
-    for (sub <- Seq("docs", "dford")) {
-      val target = p(s"$storeDir/$sub")
-      val tmp = p(s"$storeDir/${sub}__rewrite")
-      val old = p(s"$storeDir/${sub}__old")
-      if (fs.exists(tmp) && fs.exists(target) && !fs.exists(old)) {
-        // this dir's swap never started: run it
-        require(fs.rename(target, old), s"rename $target aside failed")
-        require(fs.rename(tmp, target), s"rename $tmp in failed")
-        fs.delete(old, true)
-      } else if (!fs.exists(target) && fs.exists(tmp)) {
-        // died between the aside-rename and the in-rename: roll forward
-        require(fs.rename(tmp, target), s"rename $tmp in failed")
-        fs.delete(old, true)
-      } else if (!fs.exists(target) && fs.exists(old)) {
-        // rewrite vanished (external cleanup): roll back to the copy
-        require(fs.rename(old, target), s"rollback $old failed")
-      } else if (fs.exists(target) && fs.exists(old)) {
-        if (!fs.exists(p(s"$storeDir/$sub/_SUCCESS")) &&
-            fs.exists(p(s"$storeDir/${sub}__rewrite/_SUCCESS"))) {
-          // ghost target: a dying pre-lock committer can recreate an
-          // empty output dir after the aside rename. A real store dir
-          // (original or swapped-in) always carries its parquet
-          // _SUCCESS, so _SUCCESS-less target + complete rewrite means
-          // the in-rename never ran — without this guard the branch
-          // below would delete BOTH real copies and leave the ghost.
-          fs.delete(target, true)
-          require(fs.rename(tmp, target), s"rename $tmp in failed")
-          fs.delete(old, true)
-        } else {
-          // swap completed; the aside copy is leftover
-          fs.delete(old, true)
-          fs.delete(tmp, true)
-        }
-      }
-    }
-    // re-derive the sidecar from the rolled-forward authority: the
-    // crash may have landed between the swap and the sidecar write
-    val dford = spark.read.parquet(s"$storeDir/dford")
-    writeOrderMeta(spark, storeDir, orderGen(dford), dford.count())
-    fs.delete(marker, true)
-    fs.delete(refreshLockMarker(storeDir), true)
-    ()
-  }
-
-  /** Refresh the store's frozen df-order authority from the FULL
-    * current corpus and rewrite every stored row's `__n`/`__ha` under
-    * it — the [[VectorIngest.RefitPolicy]] analog for the exact-probe
-    * store. Pure COST maintenance, never correctness: results are
-    * order-independent, but a drifted corpus (bootstrap batch
-    * unrepresentative — its tokens frozen "rare", later-common tokens
-    * at df 0 sorting FIRST into every prefix) inflates candidate
-    * volume until the authority reflects reality. STOP-THE-WORLD: the
-    * store must have no active maintenance stream and no concurrent
-    * probes — a probe signed with the new authority against
-    * partially-rewritten rows loses the shared-total-order premise
-    * prefix completeness stands on (unlike the other stores' crash
-    * windows, which only ever cost duplicates, this one would cost
-    * recall). The crash DISCIPLINE that makes this safe to rerun:
-    * both relations are fully materialized from pre-mutation state
-    * (eager checkpoints), each lands via write-temp + delete + rename
-    * (never a partial in-place overwrite — the full-store rewrite also
-    * absorbs any stale compaction partitions, which dynamic overwrite
-    * would have left in place with OLD-order rows), the docs swap
-    * completes before the dford swap, and the generation stamp
-    * (`__gen` in dford, `__ogen` on every docs row) bumps together.
-    * The swap itself is the marker protocol: the `_refresh_lock` is
-    * taken BEFORE the docs snapshot (round 12 — so every maintenance
-    * batch, probe, and compaction refuses for the refresh's WHOLE
-    * duration, not just the swap window; previously a batch committing
-    * between snapshot and swap passed the check and was then silently
-    * deleted with the replaced docs dir), both `__rewrite` dirs are
-    * FULLY written before `_swap_pending` is created, the docs
-    * batch-partition listing is re-checked against the pre-snapshot
-    * listing before any mutation (a batch already mid-execution when
-    * the lock appeared — past its own marker check — aborts the
-    * refresh loudly instead of being eaten), docs then renames ASIDE
-    * and the now-immutable aside copy is re-listed once more before
-    * the commit point (round 12 — the listing-then-rename order left
-    * an instants-wide window where a stalled batch could still commit
-    * unseen; aside-first makes the last check race-free, and a
-    * mismatch rolls docs back untouched), each dir then completes its
-    * swap via rename-in (a full copy of the corpus exists on disk at
-    * every instant — never a delete-then-rename hole), the order-meta
-    * sidecar rewrites, and the markers drop last. Every store reader and writer refuses
-    * while either marker exists ([[requireNoPendingSwap]]), and
-    * rerunning this op first completes or aborts the interrupted
-    * refresh ([[recoverPendingSwap]]) — so any crash leaves either a
-    * consistent store or a loud, rerun-to-repair refusal. Silent
-    * recall loss is not a reachable state. A maintenance stream
-    * restarted afterwards picks the refreshed authority up
-    * automatically (dford is re-read every batch). */
-  def refreshOrderAuthority(spark: SparkSession, storeDir: String): Unit =
-    refreshOrderAuthority(spark, storeDir, () => ())
-
-  /** Test seams: `afterSnapshot` runs between the docs snapshot and
-    * the commit-point listing re-check; `afterRecheck` runs between
-    * that re-check and the docs aside-rename — the two windows where a
-    * concurrent maintenance batch can land. The spec injects commits
-    * at each to prove both the pre-mutation drift-abort and the
-    * post-aside rollback fire. */
-  private[graft] def refreshOrderAuthority(spark: SparkSession, storeDir: String,
-                                           afterSnapshot: () => Unit,
-                                           afterRecheck: () => Unit = () => ()): Unit = {
-    recoverPendingSwap(spark, storeDir)
-    val dir = s"$storeDir/docs"
-    val fs = BatchStore.fs(spark, storeDir)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def batchListing(): Set[String] =
-      BatchStore.batchPartitionDirs(spark, dir).map(_.getName).toSet
-    // whole-refresh exclusion: from here until the markers drop, every
-    // store writer and reader refuses (requireNoPendingSwap)
-    fs.create(refreshLockMarker(storeDir), true).close()
-    val preSnapshot = batchListing()
-    val newGen = orderGen(spark.read.parquet(s"$storeDir/dford")) + 1L
-    val docs = spark.read.parquet(dir)
-      .select(col("doc_id"), col("__sh"), col("__batch"))
-      .dropDuplicates("doc_id")
-      .localCheckpoint(true)
-    afterSnapshot()
-    val ex = Dedup.hashedShingles(docs, "doc_id", "__sh")
-    val newDford = ex.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-      .withColumn("__gen", lit(newGen))
-      .localCheckpoint(true)
-    val rewritten = Dedup.orderedByDf(ex, newDford.drop("__gen"), "doc_id")
-      .join(docs, "doc_id")
-      .select(col("doc_id"), col("__sh"), col("__n"), col("__ha"),
-        lit(newGen).as("__ogen"), col("__batch"))
-      .localCheckpoint(true)
-    // 1. both rewrites land completely before any mutation is visible
-    fs.delete(p(s"${dir}__rewrite"), true)
-    rewritten.write.partitionBy("__batch").parquet(s"${dir}__rewrite")
-    fs.delete(p(s"$storeDir/dford__rewrite"), true)
-    newDford.write.parquet(s"$storeDir/dford__rewrite")
-    // 2. concurrency proof at the commit point: a maintenance batch
-    //    already executing when the lock appeared (its own marker
-    //    check passed earlier) may have committed a partition the
-    //    snapshot never saw — swapping would delete rows the stream
-    //    checkpoint records as durable. Abort instead: the store
-    //    proper is untouched (the slipped batch ordered itself under
-    //    the CURRENT authority, so the old state stays fully
-    //    consistent); only the rewrite dirs and the lock drop.
-    val postRewrite = batchListing()
-    if (postRewrite != preSnapshot) {
-      for (sub <- Seq("docs", "dford")) fs.delete(p(s"$storeDir/${sub}__rewrite"), true)
-      fs.delete(refreshLockMarker(storeDir), true)
-      throw new IllegalStateException(
-        s"refreshOrderAuthority($storeDir) aborted: maintenance batches " +
-          s"committed during the refresh (${(postRewrite -- preSnapshot).mkString(", ")}); " +
-          "stop the maintenance stream, then rerun the refresh")
-    }
-    afterRecheck()
-    // 3. docs aside FIRST, then the last-word listing (round 12): the
-    //    step-2 re-check aborts the common slipped-batch case before
-    //    any mutation, but a batch already past its own marker check
-    //    could still commit in the instants between that listing and
-    //    the swap — the one window the lock protocol left. Renaming
-    //    docs aside before the commit point makes the remaining check
-    //    RACE-FREE: the aside copy has no writers (new writers refuse
-    //    on the lock; a pre-lock in-flight committer's staging path
-    //    vanished with the rename, so its commit fails loudly in the
-    //    stream — never silently into a dir about to be deleted). If
-    //    the immutable listing shows a batch slipped past step 2, roll
-    //    docs back and abort: nothing lost, nothing swapped.
-    val docsTarget = p(dir)
-    val docsOld = p(s"${dir}__old")
-    require(fs.rename(docsTarget, docsOld), s"rename $docsTarget aside failed")
-    val asideListing = BatchStore.batchPartitionDirs(spark, s"${dir}__old")
-      .map(_.getName).toSet
-    if (asideListing != preSnapshot) {
-      require(fs.rename(docsOld, docsTarget), s"rollback $docsOld failed")
-      for (sub <- Seq("docs", "dford")) fs.delete(p(s"$storeDir/${sub}__rewrite"), true)
-      fs.delete(refreshLockMarker(storeDir), true)
-      throw new IllegalStateException(
-        s"refreshOrderAuthority($storeDir) aborted at the swap: maintenance " +
-          "batches committed after the commit-point listing " +
-          s"(${(asideListing -- preSnapshot).mkString(", ")}); the store was " +
-          "rolled back untouched — stop the maintenance stream, then rerun " +
-          "the refresh")
-    }
-    // 4. commit point: marker present => every rewrite is complete AND
-    //    the aside listing matched, so recovery always rolls forward.
-    //    docs completes first; dford (no concurrent writers — frozen
-    //    after bootstrap) swaps aside/in/drop under the same marker.
-    fs.create(swapMarker(storeDir), true).close()
-    require(fs.rename(p(s"${dir}__rewrite"), docsTarget),
-      "rename docs__rewrite in failed")
-    fs.delete(docsOld, true)
-    locally {
-      val target = p(s"$storeDir/dford")
-      require(fs.rename(target, p(s"$storeDir/dford__old")),
-        s"rename $target aside failed")
-      require(fs.rename(p(s"$storeDir/dford__rewrite"), target),
-        "rename dford__rewrite in failed")
-      fs.delete(p(s"$storeDir/dford__old"), true)
-    }
-    fs.delete(swapMarker(storeDir), true)
-    // 5. sidecar + lock drop: still inside the lock, so a crash after
-    //    the swap but before this write leaves a loud refusal (lock
-    //    present), and the rerun's recovery re-derives the sidecar
-    //    from the swapped-in dford before aborting the lock.
-    writeOrderMeta(spark, storeDir, newGen, newDford.count())
-    fs.delete(refreshLockMarker(storeDir), true)
-    spark.catalog.refreshByPath(dir)
-    spark.catalog.refreshByPath(s"$storeDir/dford")
-  }
+                              dford: DataFrame): DataFrame =
+    if (readOrderMeta(spark, storeDir).exists(v => v >= 0 && v <= DfordBroadcastMaxRows))
+      broadcast(dford)
+    else dford
 
   /** Exact one-way Jaccard probe served OFF THE STORE: the probe batch
     * orders its shingles against the store's frozen dford (the shared
@@ -586,43 +238,9 @@ object DedupIngest {
   def jaccardProbeFromStore(spark: SparkSession, storeDir: String,
                             newDocs: DataFrame, id: String, text: String,
                             jaccardThreshold: Double = 0.5): DataFrame = {
-    requireNoPendingSwap(spark, storeDir)
     val probeSh = shingled(newDocs, id, text).localCheckpoint(true)
     val dford = spark.read.parquet(s"$storeDir/dford")
-    // PROVE the shared-total-order premise before joining anything: a
-    // store mutated outside the marker protocol (a re-bootstrapped
-    // dford beside older rows, external surgery) leaves generations
-    // disagreeing, and probing across orders would silently lose
-    // recall — the one failure mode this store must never take
-    // silently. Fast path (round 12): the order-meta SIDECAR, written
-    // by bootstrap and rewritten by every refresh INSIDE the refresh
-    // lock, declares the generation all docs rows were ordered under —
-    // comparing it to dford's is one metadata read, no per-serve
-    // aggregate over the store. Stores without the sidecar (written
-    // before it existed) keep the scan proof: a min/max over `__ogen`,
-    // one column constant per file (dictionary/RLE — kilobytes per
-    // file), O(#files) footer-and-page IO, not O(corpus bytes).
-    val gen = orderGen(dford)
     val storedRaw = spark.read.parquet(s"$storeDir/docs")
-    readOrderMeta(spark, storeDir) match {
-      case Some(meta) =>
-        require(meta.gen == gen,
-          s"store $storeDir order-generation mismatch: dford declares $gen but " +
-            s"the order-meta sidecar declares ${meta.gen} — a " +
-            "refreshOrderAuthority was interrupted or the store was mutated " +
-            "outside the marker protocol; rerun refreshOrderAuthority to repair")
-      case None if storedRaw.columns.contains("__ogen") =>
-        val genBounds = storedRaw.agg(
-          min(col("__ogen")).as("mn"), max(col("__ogen")).as("mx")).head()
-        if (!genBounds.isNullAt(0))
-          require(genBounds.getLong(0) == gen && genBounds.getLong(1) == gen,
-            s"store $storeDir order-generation mismatch: dford declares $gen but " +
-              s"docs carry [${genBounds.getLong(0)}, ${genBounds.getLong(1)}] — " +
-              "a refreshOrderAuthority was interrupted; rerun it to repair")
-      case None => require(gen == 0L,
-        s"store $storeDir has a generation-$gen dford but pre-generation docs; " +
-          "rerun refreshOrderAuthority to rewrite them consistently")
-    }
     val pOrd = Dedup.orderedByDf(
       Dedup.hashedShingles(probeSh, "doc_id", "__sh"),
       dfreqFor(spark, storeDir, dford), "doc_id")

@@ -21,12 +21,12 @@ import graft.ops.Vectors
   * table itself uses at production (the `__cell`/`__sig` columns
   * written WITH the table).
   *
-  * Drift: each batch's mean squared assignment distance rides along on
-  * the assignment pass (no second scan) and feeds
-  * [[Vectors.shouldRefit]] — when a shifted distribution degrades the
-  * quantizer past the bound, refit via [[Vectors.fitQuantizer]] on a
-  * fresh sample and re-derive with [[Vectors.ivfIndexFrom]]
-  * (VectorsSpec shows recall recovering after an injected shift).
+  * Every parameter stays frozen for the store's whole life, the IVF
+  * quantizer included: a shifted distribution can cost IVF recall at
+  * low nprobe, never correctness of the stored columns. A corpus that
+  * has outgrown its quantizer gets a new store from a fresh bootstrap
+  * ([[Vectors.fitQuantizer]] on a current sample; VectorsSpec shows a
+  * fresh fit beating a stale one on a shifted corpus).
   */
 object VectorIngest {
 
@@ -34,9 +34,9 @@ object VectorIngest {
     * geometry (dim/bits/bands/seed), the fitted coarse quantizer, and
     * optionally the PQ codebooks (compressed-domain codes maintained
     * with the same freeze discipline — codebooks never change
-    * mid-stream, exactly like the hyperplanes; only the IVF routing
-    * participates in drift refits). Freezing these at bootstrap is
-    * what makes per-batch columns bit-identical to a batch build. */
+    * mid-stream, exactly like the hyperplanes and the quantizer).
+    * Freezing these at bootstrap is what makes per-batch columns
+    * bit-identical to a batch build. */
   final case class IndexBootstrap(dim: Int, centroids: Array[Array[Double]],
                                   bits: Int = 12, bands: Int = 8,
                                   seed: Long = 42L,
@@ -50,12 +50,12 @@ object VectorIngest {
     IndexBootstrap(dim, index.centroidArr, bits, bands, seed)
 
   /** The per-batch index-column projection, identical for static and
-    * streaming frames: (cid, __sig, __cell, __cv, __d2[, __code]).
+    * streaming frames: (cid, __sig, __cell, __cv[, __code][, __ocode]).
     * `__sig` is the banded SRP signature array (near-dup bucketing),
     * `__cell` the IVF routing cell, `__cv` the normalized vector the
-    * searcher scores against, `__d2` the squared assignment distance
-    * the drift monitor averages, `__code` the m-byte PQ code when the
-    * bootstrap carries codebooks. */
+    * searcher scores against, `__code` the m-byte PQ code when the
+    * bootstrap carries codebooks, `__ocode` the OPQ code when it
+    * carries an OPQ model. */
   def indexColumns(df: DataFrame, id: String, vec: String,
                    b: IndexBootstrap): DataFrame =
     indexColumns(df, id, vec, b,
@@ -81,49 +81,11 @@ object VectorIngest {
         Vectors.normalized(col(vec)).as("__na"))
       .withColumn("__a", assign(col("__na")))
     val cols = Seq(col("cid"), col("__sig"), col("__a._1").as("__cell"),
-      col("__na").as("__cv"), col("__a._2").as("__d2")) ++
+      col("__na").as("__cv")) ++
       encode.map(enc => enc(col("__na")).as("__code")) ++
       oEncode.map(enc => enc(col("__na")).as("__ocode"))
     base.select(cols: _*)
   }
-
-  /** Auto-refit policy for [[maintainIndex]]: when a batch's mean
-    * squared assignment distortion exceeds `factor` times the running
-    * baseline ([[Vectors.shouldRefit]]), the loop refits the coarse
-    * quantizer from the store + the arriving batch, REASSIGNS every
-    * stored row's cell under the new centroids (reconciling rows
-    * assigned under the old quantizer), persists the new quantizer to
-    * the store's sidecar, and resets the baseline to the post-refit
-    * distortion — all mid-stream, without stopping the query. */
-  final case class RefitPolicy(baseline: Double, factor: Double = 2.0,
-                               nlist: Int = 16, seed: Long = 42L,
-                               iters: Int = 10, maxSamples: Int = 100000)
-
-  private def quantizerFile(storeDir: String): String =
-    s"$storeDir/_quantizer/centroids.txt"
-
-  /** Persist the CURRENT quantizer (baseline distortion + centroids)
-    * to the store's sidecar — underscore-prefixed, so parquet readers
-    * skip it like `_checkpoint`. Through [[BatchStore.writeSidecar]]:
-    * a restart or concurrent searcher sees the old quantizer, the new
-    * one, or (mid-swap) none — never a torn file. */
-  private[graft] def saveQuantizer(spark: org.apache.spark.sql.SparkSession,
-                                   storeDir: String, baseline: Double,
-                                   centroids: Array[Array[Double]]): Unit =
-    BatchStore.writeSidecar(spark, quantizerFile(storeDir),
-      (s"baseline=$baseline" +: centroids.toSeq.map(_.mkString(",")))
-        .mkString("", "\n", "\n"))
-
-  /** The persisted (baseline, centroids) of a store whose quantizer
-    * has been refit mid-stream; None for a store still on its
-    * bootstrap quantizer. */
-  private[graft] def loadQuantizer(spark: org.apache.spark.sql.SparkSession,
-                                   storeDir: String): Option[(Double, Array[Array[Double]])] =
-    BatchStore.readSidecar(spark, quantizerFile(storeDir)).map { txt =>
-      val lines = txt.split("\n")
-      (lines.head.stripPrefix("baseline=").toDouble,
-        lines.tail.filter(_.nonEmpty).map(_.split(",").map(_.toDouble)))
-    }
 
   /** The SRP signature geometry pinned beside the store
     * ([[BatchStore.pinFields]]): band keys are only comparable between
@@ -141,68 +103,6 @@ object VectorIngest {
     BatchStore.readFields(spark, srpParamsFile(storeDir), "dim", "bits", "bands", "seed")
       .map(v => (v(0).toInt, v(1).toInt, v(2).toInt, v(3).toLong))
 
-  private def storeHasData(spark: org.apache.spark.sql.SparkSession,
-                           storeDir: String): Boolean =
-    BatchStore.batchPartitionDirs(spark, storeDir).nonEmpty
-
-  /** Refit-in-progress marker (round 15, streaming review): the
-    * mid-stream refit rewrites every stored row's `__cell` partition
-    * by partition and only then persists the new quantizer — a crash
-    * (or a concurrent reader) inside that window sees cells assigned
-    * under centroids the `_quantizer` sidecar does not hold, and IVF
-    * routing silently degrades. The marker brackets the whole
-    * reassign + save: readers refuse loudly while it exists
-    * ([[requireNoPendingRefit]]), and the maintenance stream itself
-    * HEALS an interrupted refit at its next batch — it reassigns the
-    * entire store under the sidecar's (= authoritative) quantizer,
-    * which restores cells ≡ sidecar at every crash point: pre-save
-    * crashes roll back to the old quantizer (the replayed batch then
-    * re-triggers the refit deterministically — seeded fit, same
-    * inputs), post-save crashes roll forward to the new one.
-    *
-    * ENTRY gate, not an in-flight fence: a reader whose plan was
-    * issued before the marker appeared can still scan partitions
-    * mid-rewrite (mixed cells, or a vanished overwritten file) —
-    * the caveat every dynamic-partition-overwrite maintenance op in
-    * this layer carries; serving replicas should quiesce reads for
-    * the refit window or accept the documented transient. */
-  private def refitMarker(storeDir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(s"$storeDir/_refit_pending")
-
-  private def requireNoPendingRefit(spark: org.apache.spark.sql.SparkSession,
-                                    storeDir: String): Unit =
-    require(!BatchStore.fs(spark, storeDir).exists(refitMarker(storeDir)),
-      s"store $storeDir has a quantizer refit in progress or interrupted " +
-        "(_refit_pending): cell assignments and the _quantizer sidecar may " +
-        "disagree, so IVF routing would be silently wrong. Wait for the " +
-        "refit, or restart the maintainIndex stream — its next batch " +
-        "reconciles the store and clears the marker")
-
-  /** Reassign every stored row's cell under `assign` — the refit's
-    * reconcile step, also the heal path for an interrupted refit.
-    * Materializes first: the write replaces the partitions the
-    * reassignment reads. Signatures and PQ/OPQ codes are
-    * frozen-parameter columns and carry through untouched. */
-  private def reassignStore(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String,
-                            assign: Column => Column): Unit = {
-    val stored = spark.read.parquet(storeDir)
-    val keep = Seq(col("cid"), col("__sig"), col("__a._1").as("__cell"),
-      col("__cv"), col("__a._2").as("__d2")) ++
-      (if (stored.columns.contains("__code")) Seq(col("__code")) else Nil) ++
-      (if (stored.columns.contains("__ocode")) Seq(col("__ocode")) else Nil) :+
-      col("__batch")
-    val reassigned = stored
-      .withColumn("__a", assign(col("__cv")))
-      .select(keep: _*)
-      .localCheckpoint(true)
-    BatchStore.overwritePartitions(reassigned, storeDir)
-  }
-
-  private def distortionOf(cols: DataFrame): Option[Double] =
-    cols.agg(avg(col("__d2"))).take(1).headOption
-      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-
   /** Fold every batch partition strictly below `upToBatch` (including
     * a previous compacted partition) into the single reserved
     * `__batch=-1` partition ([[BatchStore.fold]]) — the maintenance
@@ -213,8 +113,7 @@ object VectorIngest {
     * not whichever row a partition scan sees first — which also makes
     * the fold idempotent over the compaction crash window. */
   def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
-                   upToBatch: Long): Unit = {
-    requireNoPendingRefit(spark, storeDir)
+                   upToBatch: Long): Unit =
     BatchStore.fold(spark, storeDir, upToBatch) { read =>
       val dataCols = read.columns.filter(_ != "__batch")
       read
@@ -223,15 +122,12 @@ object VectorIngest {
           col("__batch")).as("__r"))
         .select(col("cid") +: dataCols.filter(_ != "cid").map(c => col(s"__r.$c")): _*)
     }
-  }
 
   /** Run the maintenance loop over a streaming frame: write index
-    * columns for every arriving micro-batch to the parquet store and
-    * report the batch's mean assignment distortion to `onBatch` (the
-    * drift-detection hook; None for an empty batch). Returns the
-    * started query; callers await it. AvailableNow by default so a
-    * bounded source drains and stops — pass ProcessingTime for a
-    * long-lived feed.
+    * columns for every arriving micro-batch to the parquet store, with
+    * the bootstrap's frozen parameters. Returns the started query;
+    * callers await it. AvailableNow by default so a bounded source
+    * drains and stops — pass ProcessingTime for a long-lived feed.
     *
     * Exactly-once store contents: each batch lands in its own
     * `__batch=<id>` partition via DYNAMIC partition overwrite, so a
@@ -242,99 +138,29 @@ object VectorIngest {
     * the final store really is row-identical to a one-shot batch build
     * on failure-free AND replayed runs (StreamingSpec pins both).
     *
-    * `refit` closes the drift loop (see [[RefitPolicy]]): on trigger,
-    * the quantizer refits from store + batch, the store's cells are
-    * reassigned, the new quantizer persists to the `_quantizer`
-    * sidecar (so restarts and [[indexFromStore]] pick it up), and
-    * `onRefit` fires. SRP signatures are untouched — the hyperplanes
-    * stay frozen; only the IVF routing refits.
-    *
     * `compactEvery` > 0 bounds the store's partition count: whenever
     * the store reaches that many batch partitions, committed ones fold
     * into the reserved compacted partition ([[compactStore]]). */
   def maintainIndex(stream: DataFrame, id: String, vec: String,
                     b: IndexBootstrap, storeDir: String,
-                    onBatch: (Long, Option[Double]) => Unit = (_, _) => (),
                     trigger: Trigger = Trigger.AvailableNow(),
-                    refit: Option[RefitPolicy] = None,
-                    onRefit: (Long, Array[Array[Double]]) => Unit = (_, _) => (),
                     compactEvery: Int = 0): StreamingQuery = {
     val spark = stream.sparkSession
     // pin the SRP geometry beside the store before any batch lands, so
     // every later probe signs with the store's parameters, not its own
     saveSrpParams(spark, storeDir, b)
-    // resume the quantizer a previous run's refit persisted; otherwise
-    // start from the bootstrap. One assigner (= one centroid
-    // broadcast) per quantizer generation, reused across batches.
-    var (baseline, centroids) = loadQuantizer(spark, storeDir) match {
-      case Some((base, cs)) => (Some(base), cs)
-      case None => (refit.map(_.baseline), b.centroids)
-    }
-    var assign = Vectors.cellAssigner(spark, centroids)
-    // PQ codebooks are frozen like the hyperplanes: one encoder (= one
-    // codebook broadcast) for the stream's whole life
+    // the quantizer, PQ codebooks and OPQ rotation are frozen like the
+    // hyperplanes: one assigner/encoder (= one broadcast each) for the
+    // stream's whole life
+    val assign = Vectors.cellAssigner(spark, b.centroids)
     val encode = b.pq.map(cb => Vectors.pqEncoder(spark, cb))
-    // the OPQ rotation + codebooks are frozen the same way
     val oEncode = b.opq.map(m => Vectors.opqCodeColumn(spark, m))
     BatchStore.maintain(stream, storeDir, trigger) { (batch, batchId) =>
-      // heal an interrupted refit FIRST (round 15): reassign the
-      // whole store under the sidecar's quantizer — the authority —
-      // restoring cells ≡ sidecar at every crash point, then clear
-      // the marker so readers serve again. A pre-save crash rolls
-      // back (this replayed batch re-triggers the refit, seeded and
-      // deterministic); a post-save crash rolls forward.
-      if (BatchStore.fs(spark, storeDir).exists(refitMarker(storeDir))) {
-        val (hb, hc) = loadQuantizer(spark, storeDir) match {
-          case Some((base, cs)) => (Some(base), cs)
-          case None => (refit.map(_.baseline), b.centroids)
-        }
-        baseline = hb.orElse(baseline); centroids = hc
-        assign = Vectors.cellAssigner(spark, centroids)
-        if (storeHasData(spark, storeDir))
-          reassignStore(spark, storeDir, assign)
-        BatchStore.fs(spark, storeDir).delete(refitMarker(storeDir), false)
-        ()
-      }
-      var cols = indexColumns(batch, id, vec, b, assign, encode, oEncode).persist()
-      try {
-        var d = distortionOf(cols)
-        for (p <- refit; dd <- d; base <- baseline
-             if Vectors.shouldRefit(dd, base, p.factor)) {
-          // 1. refit on the full observed distribution: everything
-          //    already stored plus the drifting batch (__cv is the
-          //    normalized vector, so the fit is normalization-stable)
-          val batchVecs = cols.select(col("__cv"))
-          val fitInput =
-            if (storeHasData(spark, storeDir))
-              spark.read.parquet(storeDir).select(col("__cv")).unionByName(batchVecs)
-            else batchVecs
-          val newCentroids = Vectors.fitQuantizer(fitInput, "__cv", p.nlist,
-            sampleFraction = 1.0, seed = p.seed, maxSamples = p.maxSamples,
-            iters = p.iters)
-          val newAssign = Vectors.cellAssigner(spark, newCentroids)
-          // 2. reconcile under the refit marker: readers refuse
-          //    while cells and sidecar can disagree, and a crash
-          //    anywhere in here heals at the next batch (above)
-          BatchStore.fs(spark, storeDir).create(refitMarker(storeDir), true).close()
-          if (storeHasData(spark, storeDir))
-            reassignStore(spark, storeDir, newAssign)
-          // 3. recompute the triggering batch under the new quantizer
-          //    and reset the baseline to its post-refit distortion
-          cols.unpersist()
-          cols = indexColumns(batch, id, vec, b, newAssign, encode, oEncode).persist()
-          d = distortionOf(cols)
-          saveQuantizer(spark, storeDir, d.getOrElse(base), newCentroids)
-          BatchStore.fs(spark, storeDir).delete(refitMarker(storeDir), false)
-          centroids = newCentroids
-          assign = newAssign
-          baseline = d.orElse(baseline)
-          onRefit(batchId, newCentroids)
-        }
-        BatchStore.overwritePartitions(cols.withColumn("__batch", lit(batchId)), storeDir)
-        if (BatchStore.compactDue(spark, storeDir, compactEvery))
-          compactStore(spark, storeDir, upToBatch = batchId)
-        onBatch(batchId, d)
-      } finally { cols.unpersist(); () }
+      BatchStore.overwritePartitions(
+        indexColumns(batch, id, vec, b, assign, encode, oEncode)
+          .withColumn("__batch", lit(batchId)), storeDir)
+      if (BatchStore.compactDue(spark, storeDir, compactEvery))
+        compactStore(spark, storeDir, upToBatch = batchId)
     }
   }
 
@@ -360,7 +186,6 @@ object VectorIngest {
   def srpProbeFromStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                         probes: DataFrame, id: String, vec: String,
                         b: IndexBootstrap, simThreshold: Double): DataFrame = {
-    requireNoPendingRefit(spark, storeDir)
     val (dim, bits, bands, seed) =
       loadSrpParams(spark, storeDir).getOrElse((b.dim, b.bits, b.bands, b.seed))
     // two NARROW newest-version folds, one per consumer: the band join
@@ -401,18 +226,15 @@ object VectorIngest {
       .select(col("cid") +: cols.map(c => col(s"__r.$c").as(c)): _*)
 
   /** Read the stream-maintained store back as a searchable IVF index
-    * (same shape [[Vectors.ivfSearch]] takes from a batch build). A
-    * store whose quantizer was refit mid-stream routes with the
-    * PERSISTED centroids from its `_quantizer` sidecar — the ones its
-    * cells were (re)assigned under — not the stale bootstrap. Serves
-    * one newest row per cid ([[newestRows]]). */
+    * (same shape [[Vectors.ivfSearch]] takes from a batch build),
+    * routing with the bootstrap's frozen centroids — the ones every
+    * stored cell was assigned under. Serves one newest row per cid
+    * ([[newestRows]]). */
   def indexFromStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                      b: IndexBootstrap): Vectors.IvfIndexData = {
-    requireNoPendingRefit(spark, storeDir)
-    val centroids = loadQuantizer(spark, storeDir).map(_._2).getOrElse(b.centroids)
     val cells = newestRows(spark, storeDir, Seq("__cell", "__cv"))
     Vectors.IvfIndexData(cells,
-      Vectors.centroidRelation(spark, centroids), centroids)
+      Vectors.centroidRelation(spark, b.centroids), b.centroids)
   }
 
   /** Read the stream-maintained store back as a PQ index (the shape
@@ -421,7 +243,6 @@ object VectorIngest {
     * newest row per cid ([[newestRows]]). */
   def pqIndexFromStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                        b: IndexBootstrap): Vectors.PqIndexData = {
-    requireNoPendingRefit(spark, storeDir)
     val cb = b.pq.getOrElse(throw new IllegalArgumentException(
       "pqIndexFromStore needs an IndexBootstrap with PQ codebooks"))
     Vectors.PqIndexData(newestRows(spark, storeDir, Seq("__code", "__cv")), cb)
@@ -437,7 +258,6 @@ object VectorIngest {
     * scan-local pass amortized over a serving session. */
   def opqIndexFromStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                         b: IndexBootstrap): Vectors.PqIndexData = {
-    requireNoPendingRefit(spark, storeDir)
     val m = b.opq.getOrElse(throw new IllegalArgumentException(
       "opqIndexFromStore needs an IndexBootstrap with an OPQ model"))
     val rot = Vectors.opqRotateRaw(spark, m)

@@ -879,30 +879,109 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.isEmpty, hits.mkString("band joins or session-width reads outside Bands:\n", "\n", ""))
   }
 
+  /** `lines` with every plain string literal ("…", """…""") blanked,
+    * so words in messages are not read as code. Interpolated literals
+    * (s"…", f"…", raw"…") stay as written: their splices (`${f(x)}`)
+    * are code. Comment lines come back blank, a trailing `//` comment
+    * as written; triple-quoted literals may span lines. */
+  private def outsidePlainStrings(lines: List[String]): List[String] = {
+    trait Mode
+    case class Code(depth: Int) extends Mode // depth: open `{` inside a splice
+    case class Lit(interp: Boolean, triple: Boolean) extends Mode
+    var stack: List[Mode] = List(Code(0))
+    def ident(c: Char) = c.isLetterOrDigit || c == '_'
+    lines.map { l =>
+      val t = l.trim
+      if (stack.length == 1 && (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))) ""
+      else {
+        val out = new StringBuilder
+        var i = 0
+        while (i < l.length) {
+          val c = l(i)
+          stack.head match {
+            case Code(_) if l.startsWith("//", i) =>
+              out ++= l.substring(i); i = l.length
+            case Code(_) if c == '"' =>
+              val triple = l.startsWith("\"\"\"", i)
+              val interp = i > 0 && ident(l(i - 1))
+              stack = Lit(interp, triple) :: stack
+              out ++= (if (interp) l.substring(i, i + (if (triple) 3 else 1)) else " ")
+              i += (if (triple) 3 else 1)
+            case Code(_) if c == '\'' && i + 2 < l.length && l(i + 1) != '\\' && l(i + 2) == '\'' =>
+              out += ' '; i += 3 // char literal, e.g. '"'
+            case Code(_) if c == '\'' && i + 3 < l.length && l(i + 1) == '\\' =>
+              val close = l.indexOf('\'', i + 2)
+              out += ' '; i = if (close > 0) close + 1 else i + 1
+            case Code(d) if c == '{' && stack.length > 1 =>
+              stack = Code(d + 1) :: stack.tail; out += c; i += 1
+            case Code(d) if c == '}' && stack.length > 1 =>
+              stack = if (d == 0) stack.tail else Code(d - 1) :: stack.tail
+              out += c; i += 1
+            case Code(_) =>
+              out += c; i += 1
+            case Lit(interp, false) if c == '\\' =>
+              if (interp) out ++= l.substring(i, math.min(i + 2, l.length))
+              i += 2
+            case Lit(interp, triple) if c == '"' && (!triple || l.startsWith("\"\"\"", i)) =>
+              var end = i + 1
+              while (triple && end < l.length && l(end) == '"') end += 1
+              stack = stack.tail
+              out ++= (if (interp) l.substring(i, end) else " "); i = end
+            case Lit(true, _) if l.startsWith("${", i) =>
+              stack = Code(0) :: stack; out ++= "${"; i += 2
+            case Lit(interp, _) =>
+              if (interp) out += c
+              i += 1
+          }
+        }
+        // a single-line literal never outlives its line
+        stack = stack.dropWhile { case Lit(_, triple) => !triple; case _ => false }
+        out.toString
+      }
+    }
+  }
+
   test("every public operator in ops, streaming and io has a caller outside the tests") {
     // an operator no query key, workload or other operator calls is a
     // second code path that only its own tests run. The keep list
-    // stays on purpose: quantizerDistortion is the only way to compute
-    // a RefitPolicy baseline, srpParams/srpRecall are the LSH
-    // parameter math srpNearDups' scaladoc sends users to, and
-    // pruneAvroSchema is the strict single-generation contract
-    val keep = Set("quantizerDistortion", "srpParams", "srpRecall", "pruneAvroSchema")
-    val comment = (l: String) => {
-      val t = l.trim
-      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-    }
-    // word -> the (file, line) sites of every non-comment line using it
-    val uses = (scalaFiles("src/main") ++ scalaFiles("perfbench/src")).flatMap { f =>
-      linesOf(f).zipWithIndex.filterNot(x => comment(x._1)).flatMap { case (l, i) =>
+    // stays on purpose: srpParams/srpRecall are the LSH parameter math
+    // srpNearDups' scaladoc sends users to, and pruneAvroSchema is the
+    // strict single-generation contract
+    val keep = Set("srpParams", "srpRecall", "pruneAvroSchema")
+    val files = scalaFiles("src/main") ++ scalaFiles("perfbench/src")
+    val raw = files.map(f => f -> linesOf(f)).toMap
+    // word -> the (file, line) sites using it in code: plain string
+    // literals and comments are not uses (an error message naming an
+    // operator does not call it)
+    val uses = files.flatMap { f =>
+      outsidePlainStrings(raw(f)).zipWithIndex.flatMap { case (l, i) =>
         """\w+""".r.findAllIn(l).toSet.map((w: String) => w -> (f, i))
       }
     }.groupMap(_._1)(_._2)
+    // the lines of every `def name` body in `f`: from the def line to
+    // the next non-blank, non-comment line indented two spaces or less.
+    // A use there (an overload calling its twin, a recursion) is no
+    // caller
+    def bodies(f: java.nio.file.Path, name: String): List[Range] = {
+      val ls = raw(f)
+      val top = (l: String) => {
+        val t = l.trim
+        t.nonEmpty && !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
+          l.takeWhile(_ == ' ').length <= 2
+      }
+      val defLine = s"\\bdef $name\\b".r
+      ls.indices.filter(i => defLine.findFirstIn(ls(i)).isDefined).toList.map { i =>
+        val end = ls.indices.find(j => j > i && top(ls(j))).getOrElse(ls.length)
+        i until end
+      }
+    }
     val Def = """  def (\w+)\b.*""".r
     val uncalled = for {
       sub <- List("ops", "streaming", "io")
       f <- scalaFiles(s"src/main/scala/graft/$sub") if f.getParent.getFileName.toString == sub
       (Def(name), i) <- linesOf(f).zipWithIndex
-      if uses.getOrElse(name, Nil).forall(_ == ((f, i)))
+      if uses.getOrElse(name, Nil).forall { case (g, j) =>
+        g == f && bodies(f, name).exists(_.contains(j)) }
     } yield s"$name (${f.getFileName}:${i + 1})"
     assert(uncalled.map(_.takeWhile(_ != ' ')).toSet == keep,
       uncalled.mkString("public defs with no caller in src/main or perfbench/src:\n", "\n", ""))

@@ -383,13 +383,13 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       .select($"doc_id", graft.ops.Dedup.shingles($"text").as("__sh"))
       .filter(size($"__sh") > 0)
     val ex = graft.ops.Dedup.hashedShingles(sh, "doc_id", "__sh")
-    ex.groupBy($"__h").agg(count(lit(1)).as("__df")).withColumn("__gen", lit(0L))
+    ex.groupBy($"__h").agg(count(lit(1)).as("__df"))
       .write.mode("overwrite").parquet(s"$store/dford")
     val dford = spark.read.parquet(s"$store/dford")
     // sidecar proves the vocabulary small: the per-batch/per-serve
     // order join must broadcast the authority, skipping the
     // vocabulary shuffle every micro-batch otherwise pays
-    DedupIngest.writeOrderMeta(spark, store, 0L, 1000L)
+    DedupIngest.writeOrderMeta(spark, store, 1000L)
     val small = graft.ops.Dedup.orderedByDf(
       ex, DedupIngest.dfreqFor(spark, store, dford), "doc_id")
     assert(plan(small).contains("BroadcastHashJoin"),
@@ -397,7 +397,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // vocabulary above the bound: the GATE must not hint (the planner
     // may still broadcast from size stats at test scale, so the pin
     // targets the analyzed plan's hint, which is the gate's decision)
-    DedupIngest.writeOrderMeta(spark, store, 0L,
+    DedupIngest.writeOrderMeta(spark, store,
       DedupIngest.DfordBroadcastMaxRows + 1)
     assert(!DedupIngest.dfreqFor(spark, store, dford)
       .queryExecution.analyzed.toString.contains("ResolvedHint"),

@@ -247,88 +247,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(snap.toSeq == batch.toSeq)
   }
 
-  test("drift auto-refit: quantizer refits mid-stream, store reconciled, baseline resets") {
-    import spark.implicits._
-    import graft.ops.Vectors
-    import graft.streaming.VectorIngest
-    val dim = 8
-    def cluster(center: Array[Double], n: Int, base: Long, seed: Int) = {
-      val rnd = new scala.util.Random(700 + seed)
-      (0 until n).map { i =>
-        (base + i, Array.tabulate(dim)(d =>
-          (center(d) + rnd.nextGaussian() * 0.05).toFloat))
-      }
-    }
-    def axis(i: Int) = Array.tabulate(dim)(d => if (d == i) 1.0 else 0.0)
-    def between(i: Int, j: Int) = Array.tabulate(dim)(d =>
-      if (d == i || d == j) math.sqrt(0.5) else 0.0)
-    val b1 = cluster(axis(0), 30, 0L, 1)
-    val b2 = cluster(axis(1), 30, 1000L, 2)
-    val b3 = cluster(between(2, 3), 30, 2000L, 3) // drifted: triggers refit
-    val b4 = cluster(between(2, 3), 30, 3000L, 4) // post-refit: must NOT re-trigger
-    val fitDf = (b1 ++ b2).toDF("vec_id", "embedding")
-    val centroids = Vectors.fitQuantizer(fitDf, "embedding", nlist = 2)
-    val baseline = Vectors.quantizerDistortion(fitDf, "vec_id", "embedding", centroids).get
-    val boot = VectorIngest.IndexBootstrap(dim, centroids)
-    val store = "/tmp/graft_test/vec_refit_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    val refits = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Array[Double]])]
-    val distortions = scala.collection.mutable.SortedMap.empty[Long, Option[Double]]
-    val ms = MemoryStream[(Long, Array[Float])](spark)
-    val q = VectorIngest.maintainIndex(
-      ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", boot, store,
-      onBatch = (id, d) => distortions.synchronized { distortions(id) = d },
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
-      refit = Some(VectorIngest.RefitPolicy(baseline, factor = 2.0, nlist = 3)),
-      onRefit = (id, cs) => refits.synchronized { refits += ((id, cs)); () })
-    ms.addData(b1: _*); q.processAllAvailable()
-    ms.addData(b2: _*); q.processAllAvailable()
-    ms.addData(b3: _*); q.processAllAvailable()
-    ms.addData(b4: _*); q.processAllAvailable()
-    q.stop()
-    // exactly ONE refit, fired by the drifted batch; the next batch of
-    // the SAME drifted distribution rides under the reset baseline
-    assert(refits.map(_._1).toSeq == Seq(2L),
-      s"expected one refit at batch 2, got ${refits.map(_._1)}")
-    val newCentroids = refits.head._2
-    // the refit quantizer actually covers the drifted cluster: some
-    // centroid points at between(2,3)
-    val drift = between(2, 3)
-    def cos(a: Array[Double], b: Array[Double]) = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    assert(newCentroids.map(c => cos(c, drift)).max > 0.9,
-      "refit centroids must cover the drifted cluster")
-    // post-refit distortion is back under the refit bound (recovery)
-    val ds = distortions.values.flatten.toSeq
-    assert(ds.length == 4)
-    assert(Vectors.shouldRefit(ds(2), baseline) == false || refits.nonEmpty)
-    assert(!Vectors.shouldRefit(ds(3), ds(2)),
-      s"post-refit batch must not re-trigger: d4=${ds(3)} vs new baseline ${ds(2)}")
-    // reconciliation: EVERY stored row's cell is the new quantizer's
-    // assignment — including the rows written under the old quantizer
-    val expected = Vectors.cellColumns(
-      (b1 ++ b2 ++ b3 ++ b4).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", newCentroids)
-      .select($"cid", $"__cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val got = spark.read.parquet(store)
-      .select($"cid", $"__cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(got == expected,
-      "store cells must be fully reassigned under the refit quantizer")
-    // and the store searches with the PERSISTED refit quantizer: a
-    // drifted-cluster query routes straight to its members at nprobe=1
-    val idx = VectorIngest.indexFromStore(spark, store, boot)
-    assert(idx.centroidArr.map(c => cos(c, drift)).max > 0.9,
-      "indexFromStore must route with the refit quantizer, not the bootstrap")
-    val res = Vectors.ivfSearch(idx,
-      Seq((9999L, drift.map(_.toFloat))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", k = 5, nprobe = 1)
-      .collect().map(_.getLong(2)).toSet
-    assert(res.forall(id => id >= 2000L),
-      s"drifted-cluster query must hit drifted members post-refit: $res")
-  }
-
   test("store compaction bounds partition count and preserves the row set") {
     import spark.implicits._
     import graft.ops.Vectors
@@ -588,7 +506,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed.toSeq == batch.toSeq)
   }
 
-  test("stream-maintained vector index equals the batch build; drift flagged per batch") {
+  test("stream-maintained vector index equals the batch build") {
     import spark.implicits._
     import graft.ops.Vectors
     import graft.streaming.VectorIngest
@@ -609,15 +527,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val b3 = cluster(between(2, 3), 30, 2000L, 3) // drifted batch
     val fitDf = (b1 ++ b2).toDF("vec_id", "embedding")
     val centroids = Vectors.fitQuantizer(fitDf, "embedding", nlist = 2)
-    val baseline = Vectors.quantizerDistortion(fitDf, "vec_id", "embedding", centroids).get
     val boot = VectorIngest.IndexBootstrap(dim, centroids)
     val store = "/tmp/graft_test/vec_ingest_spec"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    val distortions = scala.collection.mutable.SortedMap.empty[Long, Option[Double]]
     val ms = MemoryStream[(Long, Array[Float])](spark)
     val q = VectorIngest.maintainIndex(
       ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", boot, store,
-      onBatch = (id, d) => distortions.synchronized { distortions(id) = d },
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
     ms.addData(b1: _*); q.processAllAvailable()
     ms.addData(b2: _*); q.processAllAvailable()
@@ -635,13 +550,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(streamCols.exceptAll(batchCols).isEmpty &&
       batchCols.exceptAll(streamCols).isEmpty,
       "stream-maintained index columns must be bit-identical to the batch build")
-    // the two in-distribution batches ride under the refit bound; the
-    // shifted one trips it
-    val ds = distortions.values.flatten.toSeq
-    assert(ds.length == 3, s"expected 3 non-empty batches, got $distortions")
-    assert(!Vectors.shouldRefit(ds(0), baseline), s"b1 d=${ds(0)} base=$baseline")
-    assert(!Vectors.shouldRefit(ds(1), baseline), s"b2 d=${ds(1)} base=$baseline")
-    assert(Vectors.shouldRefit(ds(2), baseline), s"b3 d=${ds(2)} base=$baseline")
     // and the mid-stream store is searchable as a regular IVF index
     val idx = VectorIngest.indexFromStore(spark, store, boot)
     val res = Vectors.ivfSearch(idx,
@@ -950,172 +858,44 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       s"crash-window serve must emit no duplicate rows: ${inWindow.length} rows")
     assert(inWindow.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap === batch,
       "serving inside the compaction crash window must not change pairs")
-  }
-
-  test("jaccard store order refresh: drifted bootstrap costs candidates, refresh recovers, results unchanged") {
-    import spark.implicits._
-    import graft.streaming.DedupIngest
-    // bootstrap batch is UNREPRESENTATIVE: its vocabulary never recurs,
-    // so the real corpus's shingles all freeze at df 0 and order by raw
-    // hash — the corpus-wide COMMON header shingles below then land in
-    // prefixes as often as the rare tails do, maximal spurious collisions
-    val bootstrapDocs = (0L to 1L).map(i =>
+    // an UNREPRESENTATIVE bootstrap: the first batch's vocabulary never
+    // recurs, so every later shingle orders at df 0 by raw hash and the
+    // header shingles all 30 later docs share land in prefixes as often
+    // as their unique tails do — the frozen order drifted as far as it
+    // can, which costs candidates, never pairs
+    val alienDocs = (0L to 1L).map(i =>
       (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"))
-    // main corpus: every doc = one common 6-word header (its shingles
-    // shared by ALL docs, df=30 in reality) + a unique 6-word tail
-    // (df=1); only the probe's verbatim original is a true match
     val header = "the common header always present here"
-    val mainDocs = (100L until 130L).map { i =>
+    val headerDocs = (100L until 130L).map { i =>
       (i, s"$header tail${i}a tail${i}b tail${i}c tail${i}d tail${i}e tail${i}f")
     }
-    val store = "/tmp/graft_test/jaccard_refresh_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    val ms = MemoryStream[(Long, String)](spark)
-    val q = DedupIngest.maintainJaccardStore(
-      ms.toDF().toDF("doc_id", "text"), "doc_id", "text", store,
+    val drifted = "/tmp/graft_test/jaccard_drifted_store_spec"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(drifted))
+    val msD = MemoryStream[(Long, String)](spark)
+    val qD = DedupIngest.maintainJaccardStore(
+      msD.toDF().toDF("doc_id", "text"), "doc_id", "text", drifted,
       trigger = Trigger.ProcessingTime(0))
-    ms.addData(bootstrapDocs: _*); q.processAllAvailable()
-    ms.addData(mainDocs: _*); q.processAllAvailable()
-    q.stop()
-    val probes = Seq((9000L, mainDocs.head._2)).toDF("doc_id", "text")
-    def serveAndCount(): (Map[(Long, Long), Double], Long) = {
-      val served = DedupIngest.jaccardProbeFromStore(spark, store, probes,
-        "doc_id", "text", jaccardThreshold = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      (served, graft.Metrics.snapshot.toMap.apply("jaccard_probe_prefix_candidates"))
+    msD.addData(alienDocs: _*); qD.processAllAvailable()
+    msD.addData(headerDocs: _*); qD.processAllAvailable()
+    qD.stop()
+    val driftProbes = Seq((9000L, headerDocs.head._2),
+      (9001L, s"$header tail100a tail100b tail100c other words"))
+    // brute force: exact Jaccard of every (probe, stored) shingle-set
+    // pair (the served score is rounded to 6 decimals)
+    def shSets(rows: Seq[(Long, String)]) = shOf(rows).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+    for (t <- Seq(0.5, 0.2)) {
+      val brute = (for {
+        (p, ps) <- shSets(driftProbes); (c, cs) <- shSets(alienDocs ++ headerDocs)
+        j = (ps & cs).size.toDouble / (ps | cs).size if j >= t
+      } yield (p, c) -> j).toMap
+      val servedD = pairs(DedupIngest.jaccardProbeFromStore(spark, drifted,
+        driftProbes.toDF("doc_id", "text"), "doc_id", "text", jaccardThreshold = t))
+      assert(servedD.keySet == brute.keySet &&
+        servedD.forall { case (k, j) => math.abs(j - brute(k)) <= 5e-7 },
+        s"drifted frozen order at threshold $t: served $servedD, brute force $brute")
+      assert(brute.contains((9000L, 100L)), s"the verbatim copy must match: $brute")
     }
-    val (beforeServed, beforeCand) = serveAndCount()
-    DedupIngest.refreshOrderAuthority(spark, store)
-    val (afterServed, afterCand) = serveAndCount()
-    assert(afterServed === beforeServed,
-      "order refresh is cost-only: the served relation must not change")
-    assert(beforeServed.contains((9000L, 100L)),
-      s"probe must find its verbatim original: $beforeServed")
-    assert(afterCand < beforeCand,
-      s"refreshed df order must prune prefix candidates: $beforeCand -> $afterCand")
-    // crash window: a refresh that died after the dford swap but
-    // before/mid the docs rewrite leaves generations disagreeing —
-    // serving must REFUSE loudly (silent recall loss is the one
-    // unreachable state), and rerunning the refresh must repair
-    import org.apache.spark.sql.functions.lit
-    val dfordNow = spark.read.parquet(s"$store/dford").localCheckpoint(true)
-    dfordNow.withColumn("__gen", lit(99L))
-      .write.mode("overwrite").parquet(s"$store/dford")
-    spark.catalog.refreshByPath(s"$store/dford")
-    val ex = intercept[IllegalArgumentException] {
-      DedupIngest.jaccardProbeFromStore(spark, store,
-        probes, "doc_id", "text").collect()
-    }
-    assert(ex.getMessage.contains("order-generation mismatch"), ex.getMessage)
-    DedupIngest.refreshOrderAuthority(spark, store)
-    assert(serveAndCount()._1 === beforeServed,
-      "rerunning the refresh must repair the interrupted state")
-  }
-
-  test("jaccard store refresh lock: whole-duration exclusion, drift-abort, stale-sidecar refusal") {
-    import spark.implicits._
-    import graft.streaming.DedupIngest
-    val docs = (0L until 20L).map(i =>
-      (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"))
-    val store = "/tmp/graft_test/jaccard_lock_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    val ms = MemoryStream[(Long, String)](spark)
-    val q = DedupIngest.maintainJaccardStore(
-      ms.toDF().toDF("doc_id", "text"), "doc_id", "text", store,
-      trigger = Trigger.ProcessingTime(0))
-    ms.addData(docs.take(10): _*); q.processAllAvailable()
-    ms.addData(docs.slice(10, 15): _*); q.processAllAvailable()
-    val probes = Seq((9000L, docs.head._2)).toDF("doc_id", "text")
-    def serve() = DedupIngest.jaccardProbeFromStore(spark, store, probes,
-      "doc_id", "text", jaccardThreshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(serve() == Set((9000L, 0L)), "sanity: probe finds its original")
-    // ---- 1. the lock excludes EVERY store user for the whole refresh
-    // duration (the round-11 advisory: _swap_pending alone only
-    // covered the swap window; a batch committing after the docs
-    // snapshot was silently deleted with the replaced docs dir)
-    val lock = new java.io.File(s"$store/_refresh_lock")
-    assert(lock.createNewFile(), "plant the refresh lock")
-    val e1 = intercept[IllegalArgumentException] { serve() }
-    assert(e1.getMessage.contains("_refresh_lock"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      DedupIngest.compactJaccardStore(spark, store, upToBatch = 99) }
-    assert(e2.getMessage.contains("_refresh_lock"), e2.getMessage)
-    // a maintenance batch mid-lock dies loudly: the stream checkpoint
-    // never records it, so nothing is lost — it replays after repair
-    ms.addData(docs.slice(15, 20): _*)
-    val e3 = intercept[Exception] { q.processAllAvailable() }
-    assert(e3.getMessage.contains("_refresh_lock"), e3.getMessage)
-    try q.stop() catch { case _: Throwable => () }
-    // ---- 2. rerunning the refresh repairs: lock-only = pre-commit
-    // death, recovery aborts it and the refresh completes normally
-    DedupIngest.refreshOrderAuthority(spark, store)
-    assert(!lock.exists, "refresh completion must release the lock")
-    assert(serve() == Set((9000L, 0L)),
-      "store serves after lock recovery; the dead batch 2 was never committed")
-    // ---- 3. a batch that slipped PAST the lock check (already
-    // executing when the lock appeared) is caught by the commit-point
-    // listing re-check: the refresh aborts loudly, store untouched
-    val slipped = new java.io.File(s"$store/docs/__batch=77")
-    val src = new java.io.File(s"$store/docs/__batch=0")
-    val e4 = intercept[IllegalStateException] {
-      DedupIngest.refreshOrderAuthority(spark, store, () => {
-        org.apache.commons.io.FileUtils.copyDirectory(src, slipped); () })
-    }
-    assert(e4.getMessage.contains("aborted") &&
-      e4.getMessage.contains("__batch=77"), e4.getMessage)
-    assert(!lock.exists, "drift-abort must release the lock")
-    assert(!new java.io.File(s"$store/docs__rewrite").exists,
-      "drift-abort must drop the rewrite dirs")
-    spark.catalog.refreshByPath(s"$store/docs")
-    assert(serve() == Set((9000L, 0L)),
-      "aborted refresh leaves the store fully consistent (slipped batch " +
-        "ordered under the current authority; duplicates self-heal)")
-    // with the stream stopped the rerun goes through and absorbs the
-    // slipped partition into the rewrite
-    DedupIngest.refreshOrderAuthority(spark, store)
-    assert(serve() == Set((9000L, 0L)))
-    // ---- 3b. a batch that slips AFTER the commit-point listing
-    // (round 12: the instants-wide window the listing-then-rename
-    // order left) is caught by the race-free re-listing of the
-    // immutable aside copy: docs rolls back, the refresh aborts
-    // loudly, nothing is lost
-    val slipped2 = new java.io.File(s"$store/docs/__batch=78")
-    val e4b = intercept[IllegalStateException] {
-      DedupIngest.refreshOrderAuthority(spark, store, () => (),
-        afterRecheck = () => {
-          org.apache.commons.io.FileUtils.copyDirectory(src, slipped2); () })
-    }
-    assert(e4b.getMessage.contains("aborted at the swap") &&
-      e4b.getMessage.contains("__batch=78"), e4b.getMessage)
-    assert(!lock.exists, "swap-abort must release the lock")
-    assert(slipped2.exists,
-      "the slipped batch survives the rollback — durable, never eaten")
-    spark.catalog.refreshByPath(s"$store/docs")
-    assert(serve() == Set((9000L, 0L)),
-      "rolled-back store is fully consistent")
-    DedupIngest.refreshOrderAuthority(spark, store)
-    assert(serve() == Set((9000L, 0L)))
-    // ---- 3c. mid-abort crash: lock present, docs renamed aside, no
-    // swap marker — the rerun's recovery rolls the aside copy back
-    // (without the marker no rewrite was ever committed, so the aside
-    // copy IS the store) and the refresh then completes normally
-    assert(lock.createNewFile(), "plant the refresh lock")
-    assert(new java.io.File(s"$store/docs")
-      .renameTo(new java.io.File(s"$store/docs__old")), "plant the aside state")
-    DedupIngest.refreshOrderAuthority(spark, store)
-    assert(new java.io.File(s"$store/docs").exists &&
-      !new java.io.File(s"$store/docs__old").exists,
-      "recovery must roll the aside copy back before refreshing")
-    assert(serve() == Set((9000L, 0L)), "store serves after mid-abort recovery")
-    // ---- 4. stale sidecar (planted, per the r11 verdict): the serve
-    // must refuse on the generation mismatch without scanning docs
-    DedupIngest.writeOrderMeta(spark, store, 98L, 5L)
-    val e5 = intercept[IllegalArgumentException] { serve() }
-    assert(e5.getMessage.contains("order-generation mismatch"), e5.getMessage)
-    // rerunning the refresh rewrites docs AND sidecar consistently
-    DedupIngest.refreshOrderAuthority(spark, store)
-    assert(serve() == Set((9000L, 0L)), "refresh repairs a corrupted sidecar")
   }
 
   test("stream-maintained term stats merge to exactly the batch aggregation across batches") {
@@ -1444,48 +1224,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         .filter(_ != null)).mkString(" | ")
     assert(rootMsg(e).contains("Refusing to") &&
       rootMsg(e).contains("re-freeze"), rootMsg(e))
-  }
-
-  test("interrupted IVF refit: readers refuse on the marker; the next batch heals and clears it") {
-    import spark.implicits._
-    import graft.streaming.VectorIngest
-    val store = "/tmp/graft_test/refit_marker_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    val dim = 4
-    val boot = VectorIngest.IndexBootstrap(dim,
-      Array(Array(1.0, 0, 0, 0), Array(0, 1.0, 0, 0)))
-    val ms = MemoryStream[(Long, Seq[Float])](spark)
-    val q = VectorIngest.maintainIndex(
-      ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", boot, store,
-      trigger = Trigger.ProcessingTime(0))
-    ms.addData((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)))
-    q.processAllAvailable()
-    q.stop()
-    // simulate a refit that died mid-reassignment: the marker survives
-    new java.io.File(s"$store/_refit_pending").createNewFile()
-    val err = intercept[IllegalArgumentException] {
-      VectorIngest.indexFromStore(spark, store, boot)
-    }
-    assert(err.getMessage.contains("_refit_pending"), err.getMessage)
-    val err2 = intercept[IllegalArgumentException] {
-      VectorIngest.srpProbeFromStore(spark, store,
-        Seq((50L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", boot, simThreshold = 0.9)
-    }
-    assert(err2.getMessage.contains("_refit_pending"), err2.getMessage)
-    // the maintenance stream's next batch reconciles and clears it —
-    // the RESTART shape after a crashed refit: same source, same
-    // checkpoint, a new query incarnation
-    val q2 = VectorIngest.maintainIndex(
-      ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", boot, store,
-      trigger = Trigger.ProcessingTime(0))
-    ms.addData((3L, Seq(0.9f, 0.1f, 0f, 0f)))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(!new java.io.File(s"$store/_refit_pending").exists(),
-      "the healing batch must clear the marker")
-    val idx = VectorIngest.indexFromStore(spark, store, boot)
-    assert(idx.cells.count() == 3L, "all rows serve after the heal")
   }
 
   test("store sidecars land at the store's real URI location (file:// path)") {
