@@ -73,36 +73,14 @@ object Dedup {
         x => x.isNotNull))
   }
 
-  /** SimHash: 64-bit locality-sensitive signature. Explode tokens
-    * (trim + LOWER + whitespace split — the same canonicalization
-    * every content-addressed op in the dedup family uses; round-15
-    * review: the seeded tier previously skipped the lowercase, so
-    * case-variant near-identical docs bucketed apart here while the
-    * portable tier found them), hash each (xxhash64, fixed seed),
-    * majority-vote each bit over the document, reassemble. One
-    * groupBy(doc) with 64 int sums — a partial-aggregated shuffle of
-    * 64 ints per doc, any scale. */
-  def simhash(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val tokens = df.select(id, explode(Text.wsTokens(lower(text))).as("__tok"))
-      .withColumn("__h", xxhash64(col("__tok")))
-    val bitSums = (0 until 64).map { b =>
-      sum(when(shiftright(col("__h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"__b$b")
-    }
-    val agged = tokens.groupBy(id).agg(bitSums.head, bitSums.tail: _*)
-    val sig = (0 until 64).map { b =>
-      when(col(s"__b$b") >= 0, lit(1L) * lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    agged.withColumn("simhash", sig).select(id, col("simhash"))
-  }
-
-  /** Engine-portable SimHash: a 60-bit signature from md5-derived
-    * per-token hashes instead of seeded xxhash64 — bit 0..59 of
+  /** Engine-portable SimHash: a 60-bit locality-sensitive signature
+    * (near token multisets → near signatures) from md5-derived
+    * per-token hashes, not seeded xxhash64 — bit 0..59 of
     * `conv(substr(md5(token),1,15),16,10)` majority-voted over the
     * token MULTISET (60 bits = 15 hex digits: positive in a signed
-    * long in engines whose hex cast is signed-64). Same
-    * locality-sensitivity as [[simhash]] (near multisets → near
-    * signatures), but every intermediate is plain md5 + integer
-    * arithmetic, so an independent SQL engine reproduces the exact
+    * long in engines whose hex cast is signed-64). Every intermediate
+    * is plain md5 + integer arithmetic, so an independent SQL engine
+    * reproduces the exact
     * signature — the portable form a cross-engine corpus handoff
     * verifies against. One partial+final groupBy(doc) of 60 int sums,
     * any scale. Tokens are trim+lower whitespace splits (pinned, since

@@ -2,7 +2,8 @@ package graft.ops
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (north-star ExtOp): media as opaque
@@ -20,12 +21,55 @@ import org.apache.spark.sql.functions._
   *  - formats with no in-JDK codec (MP3/Vorbis/H.264...) go through
   *    the clearly-marked deterministic stub ([[decodeStub]]); the
   *    plumbing around it — binary column handling, the typed metadata
-  *    schema, the partition-wise batch-decode shape (`mapPartitions`,
-  *    the Scala analog of a Pandas `mapInPandas` batch UDF: amortize
-  *    per-batch setup like codec/model init across a whole partition)
-  *    — is real and tested.
+  *    schema, the partition-wise batch-decode shape — is real and
+  *    tested.
+  *
+  * Every per-row media operator (`*Partitions`, [[sampleFrames]])
+  * reaches its decoder through ONE batch-decode shape, [[perMedia]].
   */
 object Multimodal {
+
+  /** The one batch-decode shape of the media operators: the
+    * `(doc_id, media)` columns as a typed Dataset, each row mapped to
+    * zero or more results inside `mapPartitions` — the Scala analog of
+    * a Pandas `mapInPandas` batch UDF, where a real codec or model
+    * amortizes per-partition setup (decoder/model init) across a whole
+    * partition. Null media cells reach `f` as null. */
+  private def perMedia[T: Encoder](df: DataFrame)
+                                  (f: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap(f.tupled))
+  }
+
+  /** Mean of unsigned 8-bit samples: exact Long sum over the count. */
+  private def meanU8(px: Array[Byte]): Double = {
+    var sum = 0L
+    var k = 0
+    while (k < px.length) { sum += px(k) & 0xFF; k += 1 }
+    sum.toDouble / px.length
+  }
+
+  /** Set bits of a P4 bitmap's packed rows; pad bits beyond `w` in
+    * each row's last byte are masked out, per the netpbm spec. */
+  private def pbmOnes(w: Int, h: Int, rows: Array[Byte]): Long = {
+    val rowBytes = (w + 7) / 8
+    var ones = 0L
+    var r = 0
+    while (r < h) {
+      var b = 0
+      while (b < rowBytes) {
+        var v = rows(r * rowBytes + b) & 0xFF
+        if (b == rowBytes - 1 && w % 8 != 0)
+          v &= 0xFF << (8 - w % 8) // mask row-pad bits
+        ones += Integer.bitCount(v)
+        b += 1
+      }
+      r += 1
+    }
+    ones
+  }
 
   /** Typed metadata a real decoder would emit. */
   case class MediaMeta(doc_id: Long, n_bytes: Long, width: Int,
@@ -68,13 +112,14 @@ object Multimodal {
 
   /** Encode a raw RGB buffer as a binary PPM (P6): ASCII header
     * `P6\n<w> <h>\n<maxval>\n` + w*h*3 raw samples. */
-  def ppmEncode(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
-    require(rgb.length == w * h * 3, s"need ${w * h * 3} samples, got ${rgb.length}")
-    val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + rgb.length)
-    System.arraycopy(header, 0, out, 0, header.length)
-    System.arraycopy(rgb, 0, out, header.length, rgb.length)
-    out
+  def ppmEncode(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] =
+    pnmEncode(s"P6\n$w $h\n255\n", w * h * 3, rgb)
+
+  /** The netpbm encoders' one layout: ASCII `header`, then exactly `n`
+    * raw sample bytes. */
+  private def pnmEncode(header: String, n: Int, samples: Array[Byte]): Array[Byte] = {
+    require(samples.length == n, s"need $n samples, got ${samples.length}")
+    header.getBytes("US-ASCII") ++ samples
   }
 
   /** Parsed P6 image: real geometry plus the raw sample buffer. */
@@ -92,19 +137,12 @@ object Multimodal {
     * that is not a complete 8-bit P6 — callers route those to the
     * codec-backed path (here: the stub). */
   def ppmDecode(bytes: Array[Byte]): Option[Ppm] =
-    ppmParseAt(bytes, 0).map(_._1)
+    pnmDecode(bytes).collect { case Pnm("P6", w, h, px) => Ppm(w, h, px) }
 
   /** REAL parser for any binary netpbm image (P4 bitmap / P5 graymap /
     * P6 pixmap) — the whole codec-free netpbm family, one header walk. */
   def pnmDecode(bytes: Array[Byte]): Option[Pnm] =
     pnmParseAt(bytes, 0).map(_._1)
-
-  /** Parse one P6 image starting at `offset` (P4/P5 payloads are not
-    * this API's format — None). */
-  private def ppmParseAt(bytes: Array[Byte], offset: Int): Option[(Ppm, Int)] =
-    pnmParseAt(bytes, offset).collect {
-      case (Pnm("P6", w, h, px), next) => (Ppm(w, h, px), next)
-    }
 
   /** Parse one binary netpbm image starting at `offset`; returns the
     * image and the offset just past its sample buffer — the
@@ -176,46 +214,22 @@ object Multimodal {
   }
 
   /** REAL frame demultiplexer for a concatenated-P6 stream (the
-    * codec-free stand-in for a video container): parse frames
-    * back-to-back until the stream ends; trailing bytes that do not
-    * start a valid frame end the walk (a real demuxer would surface
-    * the error — here partial streams just truncate). */
-  def ppmFrames(bytes: Array[Byte]): Vector[Ppm] = {
-    if (bytes == null) return Vector.empty
-    val out = Vector.newBuilder[Ppm]
-    var offset = 0
-    var going = true
-    while (going && offset < bytes.length) {
-      ppmParseAt(bytes, offset) match {
-        case Some((p, next)) => out += p; offset = next
-        case None => going = false
-      }
-    }
-    out.result()
-  }
+    * codec-free stand-in for a video container): the [[pnmFrames]]
+    * walk, ended by the first frame that is not P6; trailing bytes
+    * that do not start a valid frame end it too (a real demuxer would
+    * surface the error — here partial streams just truncate). */
+  def ppmFrames(bytes: Array[Byte]): Vector[Ppm] =
+    pnmFrames(bytes).takeWhile(_.format == "P6").map(p => Ppm(p.width, p.height, p.samples))
 
   /** Encode a raw grayscale buffer as a binary PGM (P5): ASCII header
     * + w*h raw samples. */
-  def pgmEncode(w: Int, h: Int, gray: Array[Byte]): Array[Byte] = {
-    require(gray.length == w * h, s"need ${w * h} samples, got ${gray.length}")
-    val header = s"P5\n$w $h\n255\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + gray.length)
-    System.arraycopy(header, 0, out, 0, header.length)
-    System.arraycopy(gray, 0, out, header.length, gray.length)
-    out
-  }
+  def pgmEncode(w: Int, h: Int, gray: Array[Byte]): Array[Byte] =
+    pnmEncode(s"P5\n$w $h\n255\n", w * h, gray)
 
   /** Encode row-packed bits as a binary PBM (P4): ASCII header +
     * ceil(w/8)*h packed bytes (MSB-first rows, already padded). */
-  def pbmEncode(w: Int, h: Int, packed: Array[Byte]): Array[Byte] = {
-    require(packed.length == ((w + 7) / 8) * h,
-      s"need ${((w + 7) / 8) * h} packed bytes, got ${packed.length}")
-    val header = s"P4\n$w $h\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + packed.length)
-    System.arraycopy(header, 0, out, 0, header.length)
-    System.arraycopy(packed, 0, out, header.length, packed.length)
-    out
-  }
+  def pbmEncode(w: Int, h: Int, packed: Array[Byte]): Array[Byte] =
+    pnmEncode(s"P4\n$w $h\n", ((w + 7) / 8) * h, packed)
 
   /** REAL frame demultiplexer for a concatenated netpbm stream whose
     * frames may MIX the binary formats (P4/P5/P6) — strictly more
@@ -247,20 +261,16 @@ object Multimodal {
     * walk instead of fixed-size byte chunks. */
   def ppmFramesPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PpmFrame] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        ppmFrames(bytes).iterator.zipWithIndex.map { case (p, idx) =>
-          var sum = 0L
-          var k = 0
-          while (k < p.pixels.length) { sum += p.pixels(k) & 0xFF; k += 1 }
-          PpmFrame(id, idx, p.width, p.height, sum.toDouble / p.pixels.length)
-        }
+    perMedia(df) { (id, bytes) =>
+      ppmFrames(bytes).iterator.zipWithIndex.map { case (p, idx) =>
+        PpmFrame(id, idx, p.width, p.height, meanU8(p.pixels))
       }
+    }
   }
 
-  /** Decoded-for-real P6 metadata: true parsed geometry and the mean
-    * raw sample value — evidence the pixel buffer was actually read,
-    * not inferred from the byte count. */
+  /** Decoded-for-real P6 or P5 metadata: true parsed geometry and the
+    * mean raw sample value — evidence the pixel buffer was actually
+    * read, not inferred from the byte count. */
   case class PpmMeta(doc_id: Long, width: Int, height: Int, n_bytes: Long,
                      mean_px: Double)
 
@@ -269,41 +279,23 @@ object Multimodal {
     * pipeline would route them to the codec decoder instead. */
   def decodePpmPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PpmMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          ppmDecode(bytes).map { p =>
-            var sum = 0L
-            var k = 0
-            while (k < p.pixels.length) { sum += p.pixels(k) & 0xFF; k += 1 }
-            PpmMeta(id, p.width, p.height, bytes.length.toLong,
-              sum.toDouble / p.pixels.length)
-          }
-        }
+    perMedia(df) { (id, bytes) =>
+      ppmDecode(bytes).map { p =>
+        PpmMeta(id, p.width, p.height, bytes.length.toLong, meanU8(p.pixels))
       }
+    }
   }
 
-  /** Decoded-for-real P5 metadata: parsed geometry + the mean gray
-    * sample read off the actual buffer. */
-  case class PgmMeta(doc_id: Long, width: Int, height: Int, n_bytes: Long,
-                     mean_px: Double)
-
-  /** Partition-wise REAL P5 (grayscale) decode; non-P5 payloads drop
+  /** Partition-wise REAL P5 (grayscale) decode: parsed geometry + the
+    * mean gray sample read off the actual buffer; non-P5 payloads drop
     * to the codec path. */
-  def decodePgmPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PgmMeta] = {
+  def decodePgmPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PpmMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          pnmDecode(bytes).collect { case p @ Pnm("P5", _, _, px) =>
-            var sum = 0L
-            var k = 0
-            while (k < px.length) { sum += px(k) & 0xFF; k += 1 }
-            PgmMeta(id, p.width, p.height, bytes.length.toLong,
-              sum.toDouble / px.length)
-          }
-        }
+    perMedia(df) { (id, bytes) =>
+      pnmDecode(bytes).collect { case Pnm("P5", w, h, px) =>
+        PpmMeta(id, w, h, bytes.length.toLong, meanU8(px))
       }
+    }
   }
 
   /** Decoded-for-real P4 metadata: parsed geometry + the SET-BIT count
@@ -317,33 +309,17 @@ object Multimodal {
     * popcount, per the netpbm spec. */
   def decodePbmPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PbmMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          pnmDecode(bytes).collect { case p @ Pnm("P4", w, h, rows) =>
-            val rowBytes = (w + 7) / 8
-            var ones = 0L
-            var r = 0
-            while (r < h) {
-              var b = 0
-              while (b < rowBytes) {
-                var v = rows(r * rowBytes + b) & 0xFF
-                if (b == rowBytes - 1 && w % 8 != 0)
-                  v &= 0xFF << (8 - w % 8) // mask row-pad bits
-                ones += Integer.bitCount(v)
-                b += 1
-              }
-              r += 1
-            }
-            PbmMeta(id, w, h, ones, ones.toDouble / (w.toLong * h))
-          }
-        }
+    perMedia(df) { (id, bytes) =>
+      pnmDecode(bytes).collect { case Pnm("P4", w, h, rows) =>
+        val ones = pbmOnes(w, h, rows)
+        PbmMeta(id, w, h, ones, ones.toDouble / (w.toLong * h))
       }
+    }
   }
 
-  /** One mixed-stream frame's real facts: its own format tag,
-    * geometry, and mean sample (P5/P6: mean byte; P4: mean BIT — the
-    * ink ratio). */
+  /** One demuxed frame's real facts: its own format tag, geometry,
+    * and mean sample (P5/P6 and GIF: mean byte or luma; P4: mean BIT —
+    * the ink ratio). */
   case class PnmFrame(doc_id: Long, frame_idx: Int, format: String,
                       width: Int, height: Int, mean_px: Double)
 
@@ -353,35 +329,15 @@ object Multimodal {
     * facts read from its own frame's buffer. */
   def pnmFramesPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PnmFrame] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        pnmFrames(bytes).iterator.zipWithIndex.map { case (p, idx) =>
-          val mean = p.format match {
-            case "P4" =>
-              val rowBytes = (p.width + 7) / 8
-              var ones = 0L
-              var r = 0
-              while (r < p.height) {
-                var b = 0
-                while (b < rowBytes) {
-                  var v = p.samples(r * rowBytes + b) & 0xFF
-                  if (b == rowBytes - 1 && p.width % 8 != 0)
-                    v &= 0xFF << (8 - p.width % 8)
-                  ones += Integer.bitCount(v)
-                  b += 1
-                }
-                r += 1
-              }
-              ones.toDouble / (p.width.toLong * p.height)
-            case _ =>
-              var sum = 0L
-              var k = 0
-              while (k < p.samples.length) { sum += p.samples(k) & 0xFF; k += 1 }
-              sum.toDouble / p.samples.length
-          }
-          PnmFrame(id, idx, p.format, p.width, p.height, mean)
+    perMedia(df) { (id, bytes) =>
+      pnmFrames(bytes).iterator.zipWithIndex.map { case (p, idx) =>
+        val mean = p.format match {
+          case "P4" => pbmOnes(p.width, p.height, p.samples).toDouble / (p.width.toLong * p.height)
+          case _    => meanU8(p.samples)
         }
+        PnmFrame(id, idx, p.format, p.width, p.height, mean)
       }
+    }
   }
 
   /** REAL nearest-neighbor resize of a P6 image: sample the source
@@ -415,15 +371,11 @@ object Multimodal {
   def resizePpmPartitions(df: DataFrame, targetW: Int, targetH: Int)
                          (implicit s: SparkSession): Dataset[ResizedMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          ppmDecode(bytes).map { p =>
-            val enc = ppmResize(p, targetW, targetH)
-            ResizedMeta(id, targetW, targetH, enc.length.toLong)
-          }
-        }
+    perMedia(df) { (id, bytes) =>
+      ppmDecode(bytes).map { p =>
+        ResizedMeta(id, targetW, targetH, ppmResize(p, targetW, targetH).length.toLong)
       }
+    }
   }
 
   // ---------------------------------------------------------------
@@ -437,6 +389,19 @@ object Multimodal {
     (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) |
       ((b(i + 2) & 0xFF) << 16) | ((b(i + 3) & 0xFF) << 24)
 
+  /** `n` little-endian signed 16-bit samples starting at `off`. */
+  private def pcm16(b: Array[Byte], off: Int, n: Int): Array[Short] = {
+    val out = new Array[Short](n)
+    var k = 0
+    while (k < n) { out(k) = le16(b, off + 2 * k).toShort; k += 1 }
+    out
+  }
+
+  /** The RIFF/WAVE container magic both audio tiers require. */
+  private def isRiffWave(b: Array[Byte]): Boolean =
+    b != null && b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
+      b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
+
   /** Parsed PCM16 WAV: format facts + the raw sample values. */
   final case class Wav(sampleRate: Int, channels: Int, samples: Array[Short])
 
@@ -444,22 +409,27 @@ object Multimodal {
     * RIFF/WAVE file. */
   def wavEncode(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
     require(channels >= 1 && samples.length % channels == 0)
-    val dataLen = samples.length * 2
-    val out = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1) // PCM
-      .putShort(channels.toShort)
-      .putInt(sampleRate)
-      .putInt(sampleRate * channels * 2) // byte rate
-      .putShort((channels * 2).toShort)  // block align
-      .putShort(16)                      // bits per sample
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    val out = riffWave(1, sampleRate, channels, 2, samples.length * 2) // PCM
     samples.foreach(out.putShort)
     out.array()
   }
+
+  /** A canonical 44-byte RIFF/WAVE header (one `fmt ` chunk, then the
+    * `data` chunk header) in a little-endian buffer with room for the
+    * `dataLen` sample bytes the caller puts next. */
+  private def riffWave(fmtCode: Int, sampleRate: Int, channels: Int,
+                       bytesPerSample: Int, dataLen: Int): java.nio.ByteBuffer =
+    java.nio.ByteBuffer.allocate(44 + dataLen).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(fmtCode.toShort)
+      .putShort(channels.toShort)
+      .putInt(sampleRate)
+      .putInt(sampleRate * channels * bytesPerSample) // byte rate
+      .putShort((channels * bytesPerSample).toShort)  // block align
+      .putShort((8 * bytesPerSample).toShort)         // bits per sample
+      .put("data".getBytes("US-ASCII")).putInt(dataLen)
 
   /** REAL RIFF/WAVE parser: walks the chunk list (word-aligned sizes
     * per the RIFF spec — odd chunks carry a pad byte), requires a PCM
@@ -467,10 +437,7 @@ object Multimodal {
     * samples. None for anything else — a compressed or 24-bit file
     * needs a real audio library and routes to the stub path. */
   def wavDecode(bytes: Array[Byte]): Option[Wav] = {
-    if (bytes == null || bytes.length < 44) return None
-    if (!(bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
-          bytes(8) == 'W' && bytes(9) == 'A' && bytes(10) == 'V' && bytes(11) == 'E'))
-      return None
+    if (!isRiffWave(bytes) || bytes.length < 44) return None
     // cursor and chunk sizes in LONG: RIFF sizes are unsigned 32-bit,
     // and a crafted size near Int.MaxValue overflows the Int bounds
     // check negative — the walk then indexes past the buffer and a
@@ -495,13 +462,7 @@ object Multimodal {
         case "data" =>
           if (!ok16Pcm) return None // fmt must precede data, and be PCM16
           if (size % 2 != 0) return None
-          val samples = new Array[Short]((size / 2).toInt)
-          var k = 0
-          while (k < samples.length) {
-            samples(k) = le16(bytes, off + 8 + 2 * k).toShort
-            k += 1
-          }
-          return Some(Wav(rate, channels, samples))
+          return Some(Wav(rate, channels, pcm16(bytes, off + 8, (size / 2).toInt)))
         case _ => () // skip unknown chunks (LIST, fact, ...)
       }
       i += 8 + size + (size % 2) // RIFF word alignment
@@ -509,43 +470,41 @@ object Multimodal {
     None
   }
 
-  /** Decoded-for-real WAV metadata: format facts plus the mean sample
-    * value read off the actual PCM buffer. */
+  /** Decoded-for-real audio metadata (PCM16 or mu-law): format facts
+    * plus the mean sample value read off the actual (expanded) PCM
+    * buffer. */
   case class WavMeta(doc_id: Long, sample_rate: Int, channels: Int,
                      n_samples: Long, n_bytes: Long, mean_sample: Double)
 
   /** Partition-wise REAL WAV decode (non-PCM16 payloads drop — they
     * belong to the codec path). */
-  def decodeWavPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[WavMeta] = {
+  def decodeWavPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[WavMeta] =
+    audioMeta(df)(wavDecode)
+
+  /** The audio decode tiers' shared row: `decode` each payload, then
+    * the signed-16 mean off its samples. A header-only recording (zero
+    * samples) drops with the undecodables — 0/0 would emit a NaN mean
+    * that poisons any downstream aggregate. */
+  private def audioMeta(df: DataFrame)(decode: Array[Byte] => Option[Wav])
+                       (implicit s: SparkSession): Dataset[WavMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          // a header-only recording (zero samples) drops with the
-          // undecodables — 0/0 would emit a NaN mean that poisons any
-          // downstream aggregate (round-15 review)
-          wavDecode(bytes).filter(_.samples.nonEmpty).map { w =>
-            var sum = 0L
-            var k = 0
-            while (k < w.samples.length) { sum += w.samples(k); k += 1 }
-            WavMeta(id, w.sampleRate, w.channels, w.samples.length.toLong,
-              bytes.length.toLong, sum.toDouble / w.samples.length)
-          }
-        }
+    perMedia(df) { (id, bytes) =>
+      decode(bytes).filter(_.samples.nonEmpty).map { w =>
+        var sum = 0L
+        var k = 0
+        while (k < w.samples.length) { sum += w.samples(k); k += 1 }
+        WavMeta(id, w.sampleRate, w.channels, w.samples.length.toLong,
+          bytes.length.toLong, sum.toDouble / w.samples.length)
       }
+    }
   }
 
-  /** Partition-wise batch decode: one decoder instance per partition,
-    * rows streamed through it — the shape that lets a real codec or
-    * model amortize initialization and batch its input at 100 TB.
-    * Input must have (doc_id: Long, media: binary). */
+  /** Partition-wise batch decode through the stub: one decoder per
+    * partition, rows streamed through it ([[perMedia]]). Input must
+    * have (doc_id: Long, media: binary). */
   def decodePartitions(df: DataFrame)(implicit s: SparkSession): Dataset[MediaMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition decoder init would go here
-        it.map { case (id, bytes) => decodeStub(id, bytes) }
-      }
+    perMedia(df)((id, bytes) => Iterator.single(decodeStub(id, bytes)))
   }
 
   /** Resized "image" metadata. A real implementation decodes, scales,
@@ -557,13 +516,9 @@ object Multimodal {
   def resizePartitions(df: DataFrame, targetW: Int, targetH: Int)
                       (implicit s: SparkSession): Dataset[ResizedMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition scaler init would go here
-        it.map { case (id, _) =>
-          ResizedMeta(id, targetW, targetH, targetW.toLong * targetH * 3)
-        }
-      }
+    perMedia(df) { (id, _) =>
+      Iterator.single(ResizedMeta(id, targetW, targetH, targetW.toLong * targetH * 3))
+    }
   }
 
   /** One sampled "frame" of a media payload: the 1→N generator shape
@@ -572,20 +527,19 @@ object Multimodal {
   case class Frame(doc_id: Long, frame_idx: Int, frame_len: Int, checksum: String)
 
   /** Frame sampling: split each payload into fixed-size chunks
-    * ("frames") and emit every `stride`-th one — a flatMap (Spark's
-    * typed Generator), so the fan-out streams without materializing
+    * ("frames") and emit every `stride`-th one — an iterator per row
+    * inside [[perMedia]], so the fan-out streams without materializing
     * per-document frame lists. */
   def sampleFrames(df: DataFrame, frameBytes: Int = 256, stride: Int = 1)
                   (implicit s: SparkSession): Dataset[Frame] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        val nFrames = (bytes.length + frameBytes - 1) / frameBytes
-        (0 until nFrames by stride).iterator.map { i =>
-          val chunk = bytes.slice(i * frameBytes, math.min((i + 1) * frameBytes, bytes.length))
-          Frame(id, i, chunk.length, md5hex(chunk))
-        }
+    perMedia(df) { (id, bytes) =>
+      val nFrames = (bytes.length + frameBytes - 1) / frameBytes
+      (0 until nFrames by stride).iterator.map { i =>
+        val chunk = bytes.slice(i * frameBytes, math.min((i + 1) * frameBytes, bytes.length))
+        Frame(id, i, chunk.length, md5hex(chunk))
       }
+    }
   }
 
   /** 64-bit AVERAGE HASH (aHash — the classic perceptual image hash)
@@ -767,73 +721,60 @@ object Multimodal {
     * neither the self-join's two sides nor the two rescore joins
     * re-decode the corpus. */
   private def hammingNearDups(df: DataFrame, id: String, media: String,
-                              hashU: org.apache.spark.sql.expressions.UserDefinedFunction,
+                              hashU: UserDefinedFunction,
                               maxHamming: Int, candMetric: String): DataFrame =
-    hammingNearDupsOnHashes(
-      df.select(col(id).as("__id"), hashU(col(media)).as("__ah"))
-        .filter(col("__ah").isNotNull)
-        .localCheckpoint(true),
-      maxHamming, candMetric)
+    hammingNearDupsOnHashes(hashedCorpus(df, id, media, hashU), maxHamming, candMetric)
 
-  /** [[hammingProbe]] with both sides as media columns: hash the
-    * corpus inline (one-shot form — repeated probes against the same
-    * corpus should hash it once and reuse, the index-build pattern). */
+  /** The `(__id, __ah)` hash relation of a media corpus: hashed
+    * scan-local, unhashable rows dropped, eager-checkpointed so no
+    * later join re-decodes the corpus. */
+  private def hashedCorpus(df: DataFrame, id: String, media: String,
+                           hashU: UserDefinedFunction): DataFrame =
+    df.select(col(id).as("__id"), hashU(col(media)).as("__ah"))
+      .filter(col("__ah").isNotNull)
+      .localCheckpoint(true)
+
+  /** [[hammingProbe]] for images: both sides hashed by [[aHash64]]
+    * inline (one-shot form — repeated probes against the same corpus
+    * should hash it once and reuse, the index-build pattern). Both
+    * sides MUST share the hash space: an aHash64 probe against
+    * audio-fingerprint hashes would join to nothing, silently (use
+    * [[audioProbe]] for audio). */
   def imageProbe(corpus: DataFrame, probes: DataFrame, id: String,
-                 media: String, maxHamming: Int = 3): DataFrame = {
-    val hashU = udf((b: Array[Byte]) => aHash64(b))
-    imageHammingProbe(
-      corpus.select(col(id).as("__id"), hashU(col(media)).as("__ah"))
-        .filter(col("__ah").isNotNull)
-        .localCheckpoint(true),
-      probes, id, media, maxHamming)
-  }
+                 media: String, maxHamming: Int = 3): DataFrame =
+    hammingProbe(corpus, probes, id, media, maxHamming, udf((b: Array[Byte]) => aHash64(b)))
 
   /** [[hammingProbe]] for audio: both sides fingerprinted by the
     * loudness-envelope hash ([[audioFingerprint64]]). */
   def audioProbe(corpus: DataFrame, probes: DataFrame, id: String,
-                 media: String, maxHamming: Int = 3): DataFrame = {
-    val hashU = udf((b: Array[Byte]) => audioFingerprint64(b))
-    hammingProbe(
-      corpus.select(col(id).as("__id"), hashU(col(media)).as("__ah"))
-        .filter(col("__ah").isNotNull)
-        .localCheckpoint(true),
-      probes, id, media, maxHamming, hashU)
-  }
+                 media: String, maxHamming: Int = 3): DataFrame =
+    hammingProbe(corpus, probes, id, media, maxHamming,
+      udf((b: Array[Byte]) => audioFingerprint64(b)))
 
   /** One-sided Hamming PROBE — the incremental-ingest shape of media
     * dedup: match a (small) batch of NEW items against the EXISTING
-    * corpus hash relation without re-pairing the corpus with itself.
-    * Probes hash scan-local, explode into the same pigeonhole bands,
-    * and join the corpus's banded relation one-way; the exact
-    * `bit_count` rescore keeps matches within the radius. The corpus
-    * side is pruned to the probe's band keys before its one band-key
-    * shuffle ([[Bands.probeJoin]]); output is
-    * (probe_id, dup_id, hamming), one row per within-radius corpus
-    * match. Named for its hash space: probes hash with [[aHash64]],
-    * so `corpusHashes.__ah` MUST be aHash64 values — probing an
-    * audio-fingerprint store here would join to nothing, silently
-    * (use [[audioProbe]] / the explicit-hash form for other spaces). */
-  def imageHammingProbe(corpusHashes: DataFrame, probes: DataFrame, id: String,
-                        media: String, maxHamming: Int = 3): DataFrame =
-    hammingProbe(corpusHashes, probes, id, media, maxHamming,
-      udf((b: Array[Byte]) => aHash64(b)))
-
-  /** The probe with a caller-supplied hash function — it must be the
-    * SAME function the corpus hashes were computed with (the
-    * signature-parameter lesson: mismatched hash spaces join to
-    * nothing, silently). */
-  private def hammingProbe(corpusHashes: DataFrame, probes: DataFrame, id: String,
+    * corpus without re-pairing the corpus with itself. Both sides hash
+    * scan-local with the SAME `hashU` (the signature-parameter lesson:
+    * mismatched hash spaces join to nothing, silently), explode into
+    * the same pigeonhole bands, and the probes join the corpus's
+    * banded relation one-way; the exact `bit_count` rescore keeps
+    * matches within the radius. The corpus side is pruned to the
+    * probe's band keys before its one band-key shuffle
+    * ([[Bands.probeJoin]]); output is (probe_id, dup_id, hamming), one
+    * row per within-radius corpus match. */
+  private def hammingProbe(corpus: DataFrame, probes: DataFrame, id: String,
                            media: String, maxHamming: Int,
-                           hashU: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame = {
+                           hashU: UserDefinedFunction): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming in [0, 32)")
+    val corpusHashes = hashedCorpus(corpus, id, media, hashU)
     val ph = probes.select(col(id).as("probe_id"), hashU(col(media)).as("__ph"))
       .filter(col("__ph").isNotNull)
       .localCheckpoint(true)
     // both hashes ride through the band join as payload, so the exact
     // rescore needs no join back to either side
-    val corpus = corpusHashes.select(col("__id").as("dup_id"), col("__ah"))
+    val dups = corpusHashes.select(col("__id").as("dup_id"), col("__ah"))
     Bands.probeJoin(hammingBanded(ph, "__ph", maxHamming),
-        hammingBanded(corpus, "__ah", maxHamming))
+        hammingBanded(dups, "__ah", maxHamming))
       .withColumn("hamming", bit_count(col("__ph").bitwiseXOR(col("__ah"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("probe_id"), col("dup_id"), col("hamming"))
@@ -1089,16 +1030,11 @@ object Multimodal {
     * them to the external-codec path (the stub's tier). */
   def decodeImagePartitions(df: DataFrame)(implicit s: SparkSession): Dataset[CodecImageMeta] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        imageIoNoCache // per-partition codec init
-        it.flatMap { case (id, bytes) =>
-          imageIoDecode(bytes).map { c =>
-            CodecImageMeta(id, c.format, c.width, c.height,
-              c.sampleSum.toDouble / c.nSamples)
-          }
-        }
+    perMedia(df) { (id, bytes) =>
+      imageIoDecode(bytes).map { c =>
+        CodecImageMeta(id, c.format, c.width, c.height, c.sampleSum.toDouble / c.nSamples)
       }
+    }
   }
 
   /** Codec-tier resize result: target geometry, the mean sample of
@@ -1118,40 +1054,36 @@ object Multimodal {
                            (implicit s: SparkSession): Dataset[CodecResizedMeta] = {
     require(targetW > 0 && targetH > 0)
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        imageIoNoCache
-        it.flatMap { case (id, bytes) =>
-          imageIoRead(bytes).map { img =>
-            val (sw, sh) = (img.getWidth, img.getHeight)
-            val out = new Array[Byte](targetW * targetH * 3)
-            var sum = 0L
-            var y = 0
-            while (y < targetH) {
-              val sy = (y.toLong * sh / targetH).toInt
-              var x = 0
-              while (x < targetW) {
-                val sx = (x.toLong * sw / targetW).toInt
-                val rgb = img.getRGB(sx, sy)
-                val (r, g, b) = ((rgb >> 16) & 0xFF, (rgb >> 8) & 0xFF, rgb & 0xFF)
-                val dst = (y * targetW + x) * 3
-                // TYPE_3BYTE_BGR raster layout for the re-encode
-                out(dst) = b.toByte
-                out(dst + 1) = g.toByte
-                out(dst + 2) = r.toByte
-                sum += r + g + b
-                x += 1
-              }
-              y += 1
-            }
-            val reDecoded = imageIoDecode(imageIoEncode("png", targetW, targetH, out))
-            CodecResizedMeta(id, targetW, targetH,
-              sum.toDouble / (targetW.toLong * targetH * 3),
-              reDecoded.exists(c => c.sampleSum == sum &&
-                c.width == targetW && c.height == targetH))
+    perMedia(df) { (id, bytes) =>
+      imageIoRead(bytes).map { img =>
+        val (sw, sh) = (img.getWidth, img.getHeight)
+        val out = new Array[Byte](targetW * targetH * 3)
+        var sum = 0L
+        var y = 0
+        while (y < targetH) {
+          val sy = (y.toLong * sh / targetH).toInt
+          var x = 0
+          while (x < targetW) {
+            val sx = (x.toLong * sw / targetW).toInt
+            val rgb = img.getRGB(sx, sy)
+            val (r, g, b) = ((rgb >> 16) & 0xFF, (rgb >> 8) & 0xFF, rgb & 0xFF)
+            val dst = (y * targetW + x) * 3
+            // TYPE_3BYTE_BGR raster layout for the re-encode
+            out(dst) = b.toByte
+            out(dst + 1) = g.toByte
+            out(dst + 2) = r.toByte
+            sum += r + g + b
+            x += 1
           }
+          y += 1
         }
+        val reDecoded = imageIoDecode(imageIoEncode("png", targetW, targetH, out))
+        CodecResizedMeta(id, targetW, targetH,
+          sum.toDouble / (targetW.toLong * targetH * 3),
+          reDecoded.exists(c => c.sampleSum == sum &&
+            c.width == targetW && c.height == targetH))
       }
+    }
   }
 
   /** Encode grayscale frames (each w*h bytes) as a REAL animated GIF:
@@ -1246,42 +1178,23 @@ object Multimodal {
       }
     }.getOrElse(Vector.empty)
 
-  /** One GIF frame's relational row (the [[PnmFrame]] shape, codec
-    * tier). */
-  case class GifFrameMeta(doc_id: Long, frame_idx: Int, format: String,
-                          width: Int, height: Int, mean_px: Double)
-
   /** Partition-wise REAL animated-GIF frame demux + decode — the
-    * compressed-container analog of [[pnmFramesPartitions]]. */
-  def gifFramesPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[GifFrameMeta] = {
+    * compressed-container analog of [[pnmFramesPartitions]], one
+    * [[PnmFrame]] row per frame. */
+  def gifFramesPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[PnmFrame] = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        gifFrames(bytes).iterator.zipWithIndex.map { case (f, idx) =>
-          GifFrameMeta(id, idx, "gif", f.width, f.height,
-            f.lumaSum.toDouble / f.nPx)
-        }
+    perMedia(df) { (id, bytes) =>
+      gifFrames(bytes).iterator.zipWithIndex.map { case (f, idx) =>
+        PnmFrame(id, idx, "gif", f.width, f.height, f.lumaSum.toDouble / f.nPx)
       }
+    }
   }
 
   /** Encode raw G.711 mu-law bytes in a canonical 44-byte-header
     * RIFF/WAVE container (format code 7, 8 bits/sample). */
   def ulawWavEncode(sampleRate: Int, channels: Int, ulaw: Array[Byte]): Array[Byte] = {
     require(channels >= 1 && ulaw.length % channels == 0)
-    val out = java.nio.ByteBuffer.allocate(44 + ulaw.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put("RIFF".getBytes("US-ASCII")).putInt(36 + ulaw.length)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(7) // WAVE_FORMAT_MULAW
-      .putShort(channels.toShort)
-      .putInt(sampleRate)
-      .putInt(sampleRate * channels) // byte rate: 1 byte/sample
-      .putShort(channels.toShort)    // block align
-      .putShort(8)                   // bits per sample
-      .put("data".getBytes("US-ASCII")).putInt(ulaw.length)
-    out.put(ulaw)
-    out.array()
+    riffWave(7, sampleRate, channels, 1, ulaw.length).put(ulaw).array() // WAVE_FORMAT_MULAW
   }
 
   /** REAL companded-audio decode: AudioSystem parses the WAV
@@ -1297,10 +1210,7 @@ object Multimodal {
     // container magic so junk/cross-media payloads in the hot
     // streaming fingerprint loops reject on a byte compare instead of
     // paying the AudioSystem provider probe per row
-    if (bytes == null || bytes.length < 12 ||
-        bytes(0) != 'R' || bytes(1) != 'I' || bytes(2) != 'F' || bytes(3) != 'F' ||
-        bytes(8) != 'W' || bytes(9) != 'A' || bytes(10) != 'V' || bytes(11) != 'E')
-      return None
+    if (!isRiffWave(bytes)) return None
     try {
       val in = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
       try {
@@ -1314,13 +1224,7 @@ object Multimodal {
           val raw =
             try pcm.readAllBytes()
             finally pcm.close()
-          val samples = new Array[Short](raw.length / 2)
-          var k = 0
-          while (k < samples.length) {
-            samples(k) = le16(raw, 2 * k).toShort
-            k += 1
-          }
-          Some(Wav(f.getSampleRate.toInt, f.getChannels, samples))
+          Some(Wav(f.getSampleRate.toInt, f.getChannels, pcm16(raw, 0, raw.length / 2)))
         }
       } finally in.close()
     } catch {
@@ -1330,29 +1234,11 @@ object Multimodal {
     }
   }
 
-  /** Decoded-for-real mu-law metadata: format facts plus the mean
-    * EXPANDED (linear PCM) sample off the codec chain's actual
-    * output buffer. */
-  case class UlawMeta(doc_id: Long, sample_rate: Int, channels: Int,
-                      n_samples: Long, n_bytes: Long, mean_sample: Double)
-
-  /** Partition-wise REAL mu-law decode (non-mu-law payloads drop to
-    * their own tiers). */
-  def decodeUlawPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[UlawMeta] = {
-    import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          ulawWavDecode(bytes).map { w =>
-            var sum = 0L
-            var k = 0
-            while (k < w.samples.length) { sum += w.samples(k); k += 1 }
-            UlawMeta(id, w.sampleRate, w.channels, w.samples.length.toLong,
-              bytes.length.toLong, sum.toDouble / w.samples.length)
-          }
-        }
-      }
-  }
+  /** Partition-wise REAL mu-law decode: the mean is over the EXPANDED
+    * (linear PCM) samples off the codec chain's actual output buffer;
+    * non-mu-law payloads drop to their own tiers. */
+  def decodeUlawPartitions(df: DataFrame)(implicit s: SparkSession): Dataset[WavMeta] =
+    audioMeta(df)(ulawWavDecode)
 
   /** Deterministic fake embedding: dim exact-binary-fraction values
     * derived from the payload size, so the full feature-extract
@@ -1363,13 +1249,9 @@ object Multimodal {
   def featureExtractPartitions(df: DataFrame, dim: Int = 8)
                               (implicit s: SparkSession): DataFrame = {
     import s.implicits._
-    df.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition model init would go here
-        it.map { case (id, bytes) =>
-          val f = Array.tabulate(dim)(j => ((bytes.length.toLong * (j + 1)) % 1024) / 1024.0)
-          (id, f)
-        }
-      }.toDF("doc_id", "feature")
+    perMedia(df) { (id, bytes) =>
+      val f = Array.tabulate(dim)(j => ((bytes.length.toLong * (j + 1)) % 1024) / 1024.0)
+      Iterator.single((id, f))
+    }.toDF("doc_id", "feature")
   }
 }

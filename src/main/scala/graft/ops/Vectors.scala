@@ -555,7 +555,8 @@ object Vectors {
   }
 
   /** Nearest-centroid assignment as a scan-local pass against the
-    * broadcast centroid array, returning (cell id, squared distance).
+    * broadcast centroid array, returning the cell id
+    * ([[nearestCentroid]] per row).
     * A JVM function (udf) rather than a composed per-centroid
     * expression — nlist dot expressions would bloat the codegen method
     * (the SrpBandKeys lesson), and this is a once-per-ingest pass, not
@@ -570,25 +571,10 @@ object Vectors {
   private[graft] def cellAssigner(spark: org.apache.spark.sql.SparkSession,
                                   centroidArr: Array[Array[Double]]): Column => Column = {
     val bc = spark.sparkContext.broadcast(centroidArr)
-    val assign = udf { (vs: Seq[Double]) =>
-      // unbox ONCE (optimization round 21): Seq[Double].apply boxes per
-      // access, and the assignment loop indexes nlist*d times per row —
-      // one primitive copy up front keeps the hot loop box-free
-      val v = vs.toArray
-      val cs = bc.value
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cs.length) {
-        val ce = cs(c)
-        var d = 0.0
-        var j = 0
-        while (j < ce.length) { val t = v(j) - ce(j); d += t * t; j += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      (best, bestD)
-    }
+    // unbox ONCE (optimization round 21): Seq[Double].apply boxes per
+    // access, and the assignment loop indexes nlist*d times per row —
+    // one primitive copy up front keeps the hot loop box-free
+    val assign = udf((vs: Seq[Double]) => nearestCentroid(vs.toArray, bc.value))
     v => assign(v)
   }
 
@@ -607,7 +593,7 @@ object Vectors {
     df.filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
       .select(col(id).as("cid"), normalized(col(vec)).as("__na"))
       .withColumn("__a", assign(col("__na")))
-      .select(col("cid"), col("__a._1").as("__cell"), col("__na").as("__cv"))
+      .select(col("cid"), col("__a").as("__cell"), col("__na").as("__cv"))
   }
 
   /** The nlist-row routing relation for a centroid array — broadcast
@@ -1206,8 +1192,9 @@ object Vectors {
                                   centroids: DataFrame,
                                   centroidArr: Array[Array[Double]])
 
-  /** Nearest centroid of a driver-side point — the sample-side twin of
-    * the distributed [[cellAssigner]]. */
+  /** Nearest centroid of a point by squared euclidean distance, the
+    * first minimum winning — shared by the driver-side sample fits and
+    * the distributed [[cellAssigner]], so their cells agree. */
   private def nearestCentroid(p: Array[Double],
                               cs: Array[Array[Double]]): Int = {
     var best = 0

@@ -80,7 +80,7 @@ object VectorIngest {
           .as("__sig"),
         Vectors.normalized(col(vec)).as("__na"))
       .withColumn("__a", assign(col("__na")))
-    val cols = Seq(col("cid"), col("__sig"), col("__a._1").as("__cell"),
+    val cols = Seq(col("cid"), col("__sig"), col("__a").as("__cell"),
       col("__na").as("__cv")) ++
       encode.map(enc => enc(col("__na")).as("__code")) ++
       oEncode.map(enc => enc(col("__na")).as("__ocode"))

@@ -862,6 +862,23 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.isEmpty, hits.mkString("store layout outside BatchStore:\n", "\n", ""))
   }
 
+  test("media columns reach their decoders through Multimodal.perMedia only") {
+    // the typed (doc_id, media) shell is one decision; a hand-copied
+    // shell beside it drifts from it
+    val hits = sourceHits("graft", """as\[\(Long, Array\[Byte\]\)\]""".r)
+    assert(hits.length == 1, hits.mkString("typed media shells:\n", "\n", ""))
+    val Hit = """ops/Multimodal\.scala:(\d+): .*""".r
+    val Def = """.*\bdef (\w+)\b.*""".r
+    val owner = hits.head match {
+      case Hit(n) =>
+        linesOf(new java.io.File(repoRoot, "src/main/scala/graft/ops/Multimodal.scala").toPath)
+          .take(n.toInt).reverse.collectFirst { case Def(name) => name }
+      case _ => None
+    }
+    assert(owner.contains("perMedia"),
+      s"typed media shell outside Multimodal.perMedia: ${hits.head}")
+  }
+
   test("band-collision joins live in Bands only, and no partition count reads the session width") {
     // the self-join, the pruned probe join and their sizing are one
     // decision; a copy in a family module drifts from it. Matches a

@@ -23,16 +23,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
   }
 
-  test("simhash: identical docs get identical signatures; near-dups are close in hamming") {
-    import spark.implicits._
-    val sig = Dedup.simhash(corpus(), $"doc_id", $"text")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-    assert(sig(0L) == sig(2L), "identical text, identical simhash")
-    assert(hamming(sig(0L), sig(1L)) < hamming(sig(0L), sig(4L)),
-      "near-dup closer than unrelated")
-  }
-
   test("jaccardPairsExact equals brute-force all-pairs at every threshold (prefix completeness)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -306,6 +306,11 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     val hostileFmt = wav.clone // oversize the fmt chunk instead
     hostileFmt(16) = -8; hostileFmt(17) = -1; hostileFmt(18) = -1; hostileFmt(19) = 127
     assert(Multimodal.wavDecode(hostileFmt).isEmpty)
+    // a header-only clip (zero samples) yields no row: 0/0 would be a NaN mean
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    val headerOnly = Multimodal.wavEncode(8000, 1, Array.empty[Short])
+    assert(Multimodal.decodeWavPartitions(Seq((1L, headerOnly)).toDF("doc_id", "media")).isEmpty)
   }
 
   test("ImageIO codec decode: PNG byte-lossless, JPEG bounded-lossy, junk and netpbm rejected") {
@@ -512,6 +517,11 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     val fp2 = Multimodal.audioFingerprint64(rampUlaw)
     assert(fp1.isDefined && fp1 == fp2, "mu-law clips must fingerprint, deterministically")
     assert(fp1.get == -1L, s"ascending mu-law envelope must set all 64 bits, got ${fp1.get}")
+    // a header-only clip (zero samples) yields no row: 0/0 would be a NaN mean
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    val headerOnly = Multimodal.ulawWavEncode(8000, 1, Array.empty[Byte])
+    assert(Multimodal.decodeUlawPartitions(Seq((1L, headerOnly)).toDF("doc_id", "media")).isEmpty)
   }
 
   test("CSV ingest -> overwrite sink -> prepData -> Q1, end to end") {
