@@ -1,11 +1,10 @@
 package graft.io
 
-import java.net.URI
 import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{LogicalType, LogicalTypes, Schema => ASchema}
+import org.apache.avro.{LogicalTypes, Schema => ASchema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
@@ -563,7 +562,7 @@ private[graft] object AvroConversions {
     * [[evolvedRecord]] so nested added-with-default / renamed-via-
     * alias fields resolve exactly like top-level ones. */
   private def pruneTypeSchema(writer: ASchema, dt: DataType,
-                              dataset: Option[ASchema] = None): ASchema =
+                              dataset: Option[ASchema]): ASchema =
     (writer.getType, dt) match {
       case (ASchema.Type.UNION, _)
           if writer.getTypes.asScala.count(_.getType != ASchema.Type.NULL) == 1 =>

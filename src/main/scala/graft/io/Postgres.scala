@@ -249,7 +249,7 @@ object PgWire {
     * `send`/`recv` functions the protocol docs point at: network-order
     * integers, IEEE-bits floats, PG-epoch date/timestamp offsets, raw
     * UTF-8 text, raw bytea, base-10000 numeric. */
-  def binaryToCatalyst(oid: Int, typmod: Int, dt: DataType): Array[Byte] => Any = {
+  def binaryToCatalyst(oid: Int, dt: DataType): Array[Byte] => Any = {
     def i16(b: Array[Byte], o: Int): Int =
       ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
     def i32(b: Array[Byte], o: Int): Int =
@@ -2015,7 +2015,7 @@ private[io] class PgPartitionReader(p: PgRangePartition, required: StructType,
       convs =
         if (required.isEmpty) Array.empty
         else result.cols.zip(required.fields).map { case (c, f) =>
-          PgWire.binaryToCatalyst(c.oid, c.typmod, f.dataType)
+          PgWire.binaryToCatalyst(c.oid, f.dataType)
         }
     } else result = client.query(sql)
   }

@@ -725,9 +725,9 @@ object Multimodal {
                               maxHamming: Int, candMetric: String): DataFrame =
     hammingNearDupsOnHashes(hashedCorpus(df, id, media, hashU), maxHamming, candMetric)
 
-  /** The `(__id, __ah)` hash relation of a media corpus: hashed
-    * scan-local, unhashable rows dropped, eager-checkpointed so no
-    * later join re-decodes the corpus. */
+  /** The `(__id, __ah)` hash relation of a media corpus or of a probe
+    * batch ([[hammingProbe]]): hashed scan-local, unhashable rows
+    * dropped, eager-checkpointed so no later join re-decodes the media. */
   private def hashedCorpus(df: DataFrame, id: String, media: String,
                            hashU: UserDefinedFunction): DataFrame =
     df.select(col(id).as("__id"), hashU(col(media)).as("__ah"))
@@ -767,9 +767,8 @@ object Multimodal {
                            hashU: UserDefinedFunction): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming in [0, 32)")
     val corpusHashes = hashedCorpus(corpus, id, media, hashU)
-    val ph = probes.select(col(id).as("probe_id"), hashU(col(media)).as("__ph"))
-      .filter(col("__ph").isNotNull)
-      .localCheckpoint(true)
+    val ph = hashedCorpus(probes, id, media, hashU)
+      .select(col("__id").as("probe_id"), col("__ah").as("__ph"))
     // both hashes ride through the band join as payload, so the exact
     // rescore needs no join back to either side
     val dups = corpusHashes.select(col("__id").as("dup_id"), col("__ah"))

@@ -138,8 +138,8 @@ object Vectors {
   }
 
   /** Dimensionality of the first non-null vector; None when the corpus
-    * is empty or every vector is null — callers return an empty result
-    * instead of throwing on `.head()`. */
+    * is empty or every vector is null — callers fold that to an empty
+    * result instead of throwing on `.head()`. */
   private def headDim(df: DataFrame, vec: String): Option[Int] =
     df.select(size(col(vec)).as("__d")).filter(col("__d").isNotNull)
       .take(1).headOption.map(_.getInt(0))
@@ -223,18 +223,19 @@ object Vectors {
   private[graft] def annCandidates(corpus: DataFrame, queries: DataFrame,
                                    id: String, vec: String, bits: Int,
                                    bands: Int, seed: Long): DataFrame = {
-    val dim = headDim(corpus, vec).getOrElse(
-      return corpus.select(col(id).as("qid"), col(id).as("cid")).where(lit(false)))
-    val keysCol = graft.functions.VectorExprs.srpBandKeys(
-      col(vec), srpPlanes(dim, bits, bands, seed), bits, bands)
-    def sigs(df: DataFrame, outId: String): DataFrame =
-      df.select(col(id).as(outId), posexplode(keysCol).as(Seq("__band", "__key")))
-    sigs(corpus, "cid").join(broadcast(sigs(queries, "qid")), Seq("__band", "__key"))
-      .filter(col("qid") =!= col("cid"))
-      // a pair colliding in several bands appears once per collision;
-      // id-keyed dedup before the (more expensive) exact rescore
-      .dropDuplicates("qid", "cid")
-      .select(col("qid"), col("cid"))
+    headDim(corpus, vec).fold(
+        corpus.select(col(id).as("qid"), col(id).as("cid")).where(lit(false))) { dim =>
+      val keysCol = graft.functions.VectorExprs.srpBandKeys(
+        col(vec), srpPlanes(dim, bits, bands, seed), bits, bands)
+      def sigs(df: DataFrame, outId: String): DataFrame =
+        df.select(col(id).as(outId), posexplode(keysCol).as(Seq("__band", "__key")))
+      sigs(corpus, "cid").join(broadcast(sigs(queries, "qid")), Seq("__band", "__key"))
+        .filter(col("qid") =!= col("cid"))
+        // a pair colliding in several bands appears once per collision;
+        // id-keyed dedup before the (more expensive) exact rescore
+        .dropDuplicates("qid", "cid")
+        .select(col("qid"), col("cid"))
+    }
   }
 
   /** Approximate NN via banded sign-random-projection LSH: bucket
@@ -313,16 +314,16 @@ object Vectors {
                   simThreshold: Double, bits: Int = 12, bands: Int = 8,
                   seed: Long = 42L): DataFrame = {
     require(bits >= 1 && bits <= 30, "bits must be in [1, 30]")
-    val dim = headDim(df, vec).getOrElse(
-      return df.select(col(id).as("id_a"), col(id).as("id_b"),
-        lit(0.0).as("cos_sim")).where(lit(false)))
-    // ONE native expression for all bands*bits sign projections — the
-    // composed per-plane form (96 dot exprs) generates a whole-stage
-    // method past HotSpot's compile limit and runs as interpreted
-    // bytecode (measured ~100x on this path)
-    val withSig = df.select(col(id), col(vec),
-      srpSignatureCol(col(vec), dim, bits, bands, seed).as("__sig"))
-    srpNearDupsOnSigs(withSig, id, "__sig", vec, simThreshold)
+    headDim(df, vec).fold(df.select(col(id).as("id_a"), col(id).as("id_b"),
+        lit(0.0).as("cos_sim")).where(lit(false))) { dim =>
+      // ONE native expression for all bands*bits sign projections — the
+      // composed per-plane form (96 dot exprs) generates a whole-stage
+      // method past HotSpot's compile limit and runs as interpreted
+      // bytecode (measured ~100x on this path)
+      val withSig = df.select(col(id), col(vec),
+        srpSignatureCol(col(vec), dim, bits, bands, seed).as("__sig"))
+      srpNearDupsOnSigs(withSig, id, "__sig", vec, simThreshold)
+    }
   }
 
   /** [[srpNearDups]] over PRE-COMPUTED signatures — the form that
@@ -368,12 +369,12 @@ object Vectors {
                simThreshold: Double, bits: Int = 12, bands: Int = 8,
                seed: Long = 42L): DataFrame = {
     require(bits >= 1 && bits <= 30, "bits must be in [1, 30]")
-    val dim = headDim(corpus, vec).getOrElse(
-      return corpus.select(col(id).as("probe_id"), col(id).as("dup_id"),
-        lit(0.0).as("cos_sim")).where(lit(false)))
-    def sigs(df: DataFrame) = df.select(col(id), col(vec),
-      srpSignatureCol(col(vec), dim, bits, bands, seed).as("__sig"))
-    srpProbeOnSigs(sigs(corpus), sigs(probes), id, "__sig", vec, simThreshold)
+    headDim(corpus, vec).fold(corpus.select(col(id).as("probe_id"), col(id).as("dup_id"),
+        lit(0.0).as("cos_sim")).where(lit(false))) { dim =>
+      def sigs(df: DataFrame) = df.select(col(id), col(vec),
+        srpSignatureCol(col(vec), dim, bits, bands, seed).as("__sig"))
+      srpProbeOnSigs(sigs(corpus), sigs(probes), id, "__sig", vec, simThreshold)
+    }
   }
 
   /** [[srpProbe]] over a PRE-COMPUTED corpus signature column — the
@@ -462,17 +463,7 @@ object Vectors {
       var i = 0
       while (i < n) {
         val p = points(i)
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < kk) {
-          val ce = centroids(c)
-          var d = 0.0
-          var j = 0
-          while (j < dim) { val t = p(j) - ce(j); d += t * t; j += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearestCentroid(p, centroids)
         val s = sums(best)
         var j = 0
         while (j < dim) { s(j) += p(j); j += 1 }
@@ -520,9 +511,7 @@ object Vectors {
   private[graft] def normalizedSample(corpus: DataFrame, vec: String,
                                sampleFraction: Double, seed: Long,
                                maxSamples: Int): Array[Array[Double]] = {
-    val cn = corpus
-      .filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
-      .select(normalized(col(vec)).as("__na"))
+    val cn = nonDegenerate(corpus, vec).select(normalized(col(vec)).as("__na"))
     val frac =
       if (sampleFraction < 1.0) sampleFraction
       else {
@@ -578,19 +567,24 @@ object Vectors {
     v => assign(v)
   }
 
+  /** `df` without its degenerate `vec` rows — the one gate every
+    * index build, fit sample and query side of the vector tier passes
+    * through. Null, zero and null-element vectors all drop here, before
+    * any driver unboxing, assignment or encode loop can NPE on them:
+    * a zero vector normalizes to an array of NULL ELEMENTS (a non-null
+    * array, so `IS NOT NULL` on the normalized column would let it
+    * through), while the norm is null for all three alike. */
+  private[graft] def nonDegenerate(df: DataFrame, vec: String): DataFrame =
+    df.filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
+
   /** The per-row index-column projection: (cid, __cell, __cv) for
-    * every non-degenerate vector — identical for a static corpus and a
-    * streaming micro-batch, which is what makes stream-maintained cells
-    * provably equal to a batch build.
-    *
-    * Zero vectors normalize to an array of NULL ELEMENTS (non-null
-    * array — `__na IS NOT NULL` alone would pass them into the driver
-    * unboxing / assignment loops as NPEs); gate on the norm instead,
-    * which is null for null, null-element, and zero vectors alike. */
+    * every non-degenerate vector ([[nonDegenerate]]) — identical for a
+    * static corpus and a streaming micro-batch, which is what makes
+    * stream-maintained cells provably equal to a batch build. */
   private[graft] def cellColumns(df: DataFrame, id: String, vec: String,
                                  centroidArr: Array[Array[Double]]): DataFrame = {
     val assign = cellAssigner(df.sparkSession, centroidArr)
-    df.filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
+    nonDegenerate(df, vec)
       .select(col(id).as("cid"), normalized(col(vec)).as("__na"))
       .withColumn("__a", assign(col("__na")))
       .select(col("cid"), col("__a").as("__cell"), col("__na").as("__cv"))
@@ -734,44 +728,51 @@ object Vectors {
   private[graft] def pqEncoder(spark: org.apache.spark.sql.SparkSession,
                                cb: PqCodebooks): Column => Column = {
     val bc = spark.sparkContext.broadcast(cb)
-    val enc = udf { (vs: Seq[Double]) =>
-      // unbox ONCE (optimization round 21): the encode loop indexes the
-      // vector m*ksub*dsub times per row, and Seq.apply boxes per access
-      val v = vs.toArray
-      val b = bc.value
-      val codes = new Array[Byte](b.m)
-      var s = 0
-      while (s < b.m) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < b.ksub) {
-          val base = (s * b.ksub + c) * b.dsub
-          var d = 0.0
-          var j = 0
-          while (j < b.dsub) {
-            val t = v(s * b.dsub + j) - b.flat(base + j); d += t * t; j += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        codes(s) = best.toByte
-        s += 1
-      }
-      codes
-    }
+    // unbox ONCE (optimization round 21): the encode loop indexes the
+    // vector m*ksub*dsub times per row, and Seq.apply boxes per access
+    val enc = udf((vs: Seq[Double]) => pqEncode(bc.value, vs.toArray))
     v => enc(v)
   }
 
+  /** Squared distance from `v`'s subvector `s` to codeword `c` of
+    * subspace `s` — one accumulation order for every PQ path. */
+  private def codewordDist(cb: PqCodebooks, s: Int, c: Int, v: Array[Double]): Double = {
+    val base = (s * cb.ksub + c) * cb.dsub
+    var d = 0.0
+    var j = 0
+    while (j < cb.dsub) { val t = v(s * cb.dsub + j) - cb.flat(base + j); d += t * t; j += 1 }
+    d
+  }
+
+  /** The codeword of subspace `s` nearest to `v`, the first minimum
+    * winning — the one quantizer search behind encode ([[pqEncode]]),
+    * residual encode ([[ivfPqIndex]]) and reconstruction
+    * ([[pqReconstructInto]]), so fit-time and scan-time codes agree. */
+  private def nearestCodeword(cb: PqCodebooks, s: Int, v: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < cb.ksub) {
+      val d = codewordDist(cb, s, c, v)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** `v`'s m-byte PQ code: its nearest codeword per subspace. */
+  private def pqEncode(cb: PqCodebooks, v: Array[Double]): Array[Byte] =
+    Array.tabulate(cb.m)(s => nearestCodeword(cb, s, v).toByte)
+
   /** The per-row PQ projection: (cid, __code, __cv) for every
-    * non-degenerate vector — norm-gated exactly like [[cellColumns]].
+    * non-degenerate vector ([[nonDegenerate]]), like [[cellColumns]].
     * __cv (the normalized vector) rides along for the exact rescore;
     * at production scale the code column is the compact one persisted
     * hot and the rescore joins back to the base table. */
   private[graft] def pqCodeColumns(df: DataFrame, id: String, vec: String,
                                    cb: PqCodebooks): DataFrame = {
     val enc = pqEncoder(df.sparkSession, cb)
-    df.filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
+    nonDegenerate(df, vec)
       .select(col(id).as("cid"), normalized(col(vec)).as("__cv"))
       .withColumn("__code", enc(col("__cv")))
       .select(col("cid"), col("__code"), col("__cv"))
@@ -841,18 +842,30 @@ object Vectors {
     * 100 TB pair it with IVF routing ([[ivfPqSearchResidual]]) so the
     * scan touches only probed cells. */
   def pqTopK(index: PqIndexData, queries: DataFrame, id: String,
-             vec: String, k: Int, rescoreK: Int = 0): DataFrame = {
+             vec: String, k: Int, rescoreK: Int = 0): DataFrame =
+    adcTopK(index.codes, index.cb, queries, id, vec, k, rescoreK) { qn =>
+      index.codes
+        .join(broadcast(qn.select(col("qid"), col("__lut"))), col("cid") =!= col("qid"))
+        .withColumn("__adc", graft.functions.VectorExprs.pqAdc(
+          col("__code"), col("__lut"), index.cb.ksub))
+    }
+
+  /** The search body every ADC tier shares: the queries are normalized
+    * ([[normalizedQueries]]) and given their lookup table, `score`
+    * joins those (qid, __qv, __lut) rows to the codes it reads and
+    * yields each candidate's `__adc` score as (qid, cid, __adc), the
+    * top `rescoreK` (default 4k) per query survive, and
+    * [[pqRescore]] ranks them exactly. */
+  private def adcTopK(codes: DataFrame, cb: PqCodebooks, queries: DataFrame,
+                      id: String, vec: String, k: Int, rescoreK: Int)(
+                       score: DataFrame => DataFrame): DataFrame = {
     val rk = if (rescoreK > 0) rescoreK else 4 * k
-    val lut = pqLutUdf(queries.sparkSession, index.cb)
+    val lut = pqLutUdf(queries.sparkSession, cb)
     val qn = normalizedQueries(queries, id, vec)
       .withColumn("__lut", lut(col("__qv")))
-    val scored = index.codes
-      .join(broadcast(qn.select(col("qid"), col("__lut"))), col("cid") =!= col("qid"))
-      .withColumn("__adc", graft.functions.VectorExprs.pqAdc(
-        col("__code"), col("__lut"), index.cb.ksub))
-    val cands = topKPerGroup(scored.select(col("qid"), col("cid"), col("__adc")),
+    val cands = topKPerGroup(score(qn).select(col("qid"), col("cid"), col("__adc")),
       "qid", "__adc", "cid", rk)
-    pqRescore(index.codes, qn, cands, k)
+    pqRescore(codes, qn, cands, k)
   }
 
   // ------------- optimized product quantization (OPQ) -------------
@@ -908,29 +921,17 @@ object Vectors {
   }
 
   /** Nearest-codeword reconstruction of `y` into `out`; returns the
-    * squared reconstruction error. The same strict nearest-first loop
-    * as [[pqEncoder]], kept driver/executor-shared so fit-time and
+    * squared reconstruction error. The same [[nearestCodeword]] search
+    * as [[pqEncode]], kept driver/executor-shared so fit-time and
     * scan-time errors agree exactly. */
   private def pqReconstructInto(y: Array[Double], b: PqCodebooks,
                                 out: Array[Double]): Double = {
     var err = 0.0
     var s = 0
     while (s < b.m) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < b.ksub) {
-        val base = (s * b.ksub + c) * b.dsub
-        var dd = 0.0
-        var j = 0
-        while (j < b.dsub) { val t = y(s * b.dsub + j) - b.flat(base + j); dd += t * t; j += 1 }
-        if (dd < bestD) { bestD = dd; best = c }
-        c += 1
-      }
-      val base = (s * b.ksub + best) * b.dsub
-      var j = 0
-      while (j < b.dsub) { out(s * b.dsub + j) = b.flat(base + j); j += 1 }
-      err += bestD
+      val best = nearestCodeword(b, s, y)
+      System.arraycopy(b.flat, (s * b.ksub + best) * b.dsub, out, s * b.dsub, b.dsub)
+      err += codewordDist(b, s, best, y)
       s += 1
     }
     err
@@ -1138,9 +1139,7 @@ object Vectors {
   def opqIndex(corpus: DataFrame, id: String, vec: String,
                model: OpqModel): PqIndexData = {
     val rot = opqRotator(corpus.sparkSession, model)
-    val rotated = corpus
-      .filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
-      .select(col(id), rot(col(vec)).as("__rvec"))
+    val rotated = nonDegenerate(corpus, vec).select(col(id), rot(col(vec)).as("__rvec"))
     PqIndexData(pqCodeColumns(rotated, id, "__rvec", model.cb)
       .localCheckpoint(true), model.cb)
   }
@@ -1154,9 +1153,7 @@ object Vectors {
   def opqTopK(index: PqIndexData, model: OpqModel, queries: DataFrame,
               id: String, vec: String, k: Int, rescoreK: Int = 0): DataFrame = {
     val rot = opqRotator(queries.sparkSession, model)
-    val rq = queries
-      .filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
-      .select(col(id), rot(col(vec)).as(vec))
+    val rq = nonDegenerate(queries, vec).select(col(id), rot(col(vec)).as(vec))
     pqTopK(index, rq, id, vec, k, rescoreK)
   }
 
@@ -1173,7 +1170,7 @@ object Vectors {
       rotateInto(v.toArray, mdl.rotation, mdl.dim, y)
       pqReconstructInto(y, mdl.cb, new Array[Double](mdl.dim))
     }
-    corpus.filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
+    nonDegenerate(corpus, vec)
       .select(errU(normalized(col(vec))).as("__e"))
       .agg(avg(col("__e")).as("__mse"))
       .take(1).headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
@@ -1231,35 +1228,12 @@ object Vectors {
     val bcC = spark.sparkContext.broadcast(centroidArr)
     val bcB = spark.sparkContext.broadcast(cb)
     val assignEncode = udf { (v: Seq[Double]) =>
-      val cs = bcC.value
-      val b = bcB.value
       val p = v.toArray
-      val cell = nearestCentroid(p, cs)
-      val ce = cs(cell)
-      val codes = new Array[Byte](b.m)
-      var s = 0
-      while (s < b.m) {
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < b.ksub) {
-          val base = (s * b.ksub + c) * b.dsub
-          var d = 0.0
-          var j = 0
-          while (j < b.dsub) {
-            val i = s * b.dsub + j
-            val t = (p(i) - ce(i)) - b.flat(base + j); d += t * t; j += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        codes(s) = best.toByte
-        s += 1
-      }
-      (cell, codes)
+      val cell = nearestCentroid(p, bcC.value)
+      val ce = bcC.value(cell)
+      (cell, pqEncode(bcB.value, Array.tabulate(p.length)(j => p(j) - ce(j))))
     }
-    val codes = corpus
-      .filter(nullif(l2norm(col(vec)), lit(0.0)).isNotNull)
+    val codes = nonDegenerate(corpus, vec)
       .select(col(id).as("cid"), normalized(col(vec)).as("__cv"))
       .withColumn("__a", assignEncode(col("__cv")))
       .select(col("cid"), col("__a._1").as("__cell"), col("__a._2").as("__code"),
@@ -1278,25 +1252,19 @@ object Vectors {
     * computed once — per corpus row it is still m byte-reads + m adds
     * + one scalar add. Exact rescore as everywhere in the family. */
   def pqTopKResidual(idx: IvfPqIndexData, queries: DataFrame, id: String,
-                     vec: String, k: Int, rescoreK: Int = 0): DataFrame = {
-    val rk = if (rescoreK > 0) rescoreK else 4 * k
-    val lut = pqLutUdf(queries.sparkSession, idx.cb)
-    val qn = normalizedQueries(queries, id, vec)
-      .withColumn("__lut", lut(col("__qv")))
-    val qc = qn.select(col("qid"), col("__qv"))
-      .crossJoin(broadcast(idx.centroids))
-      .withColumn("__qc", dot(col("__qv"), col("__centroid")))
-      .select(col("qid"), col("__cell"), col("__qc"))
-    val scored = idx.codes.select(col("cid"), col("__cell"), col("__code"))
-      .join(broadcast(qc), Seq("__cell"))
-      .join(broadcast(qn.select(col("qid"), col("__lut"))), Seq("qid"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("__adc", col("__qc") + graft.functions.VectorExprs.pqAdc(
-        col("__code"), col("__lut"), idx.cb.ksub))
-    val cands = topKPerGroup(scored.select(col("qid"), col("cid"), col("__adc")),
-      "qid", "__adc", "cid", rk)
-    pqRescore(idx.codes, qn, cands, k)
-  }
+                     vec: String, k: Int, rescoreK: Int = 0): DataFrame =
+    adcTopK(idx.codes, idx.cb, queries, id, vec, k, rescoreK) { qn =>
+      val qc = qn.select(col("qid"), col("__qv"))
+        .crossJoin(broadcast(idx.centroids))
+        .withColumn("__qc", dot(col("__qv"), col("__centroid")))
+        .select(col("qid"), col("__cell"), col("__qc"))
+      idx.codes.select(col("cid"), col("__cell"), col("__code"))
+        .join(broadcast(qc), Seq("__cell"))
+        .join(broadcast(qn.select(col("qid"), col("__lut"))), Seq("qid"))
+        .filter(col("qid") =!= col("cid"))
+        .withColumn("__adc", col("__qc") + graft.functions.VectorExprs.pqAdc(
+          col("__code"), col("__lut"), idx.cb.ksub))
+    }
 
   /** Search the residual index — IVF routing + PQ compressed-domain
     * scoring + exact rescore, the full 100 TB composition: the coarse
@@ -1310,23 +1278,16 @@ object Vectors {
     * No per-cell lookup tables. */
   def ivfPqSearchResidual(idx: IvfPqIndexData, queries: DataFrame,
                           id: String, vec: String, k: Int, nprobe: Int = 4,
-                          rescoreK: Int = 0): DataFrame = {
-    val rk = if (rescoreK > 0) rescoreK else 4 * k
-    val lut = pqLutUdf(queries.sparkSession, idx.cb)
-    val qn = normalizedQueries(queries, id, vec)
-      .withColumn("__lut", lut(col("__qv")))
-    val probes = probeCells(idx.centroids, qn.select(col("qid"), col("__qv")), nprobe)
-      .join(broadcast(idx.centroids), Seq("__cell"))
-      .withColumn("__qc", dot(col("__qv"), col("__centroid")))
-      .select(col("qid"), col("__cell"), col("__qc"))
-    val scored = probes
-      .join(broadcast(qn.select(col("qid"), col("__lut"))), Seq("qid"))
-      .join(idx.codes.select(col("cid"), col("__cell"), col("__code")), Seq("__cell"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("__adc", col("__qc") + graft.functions.VectorExprs.pqAdc(
-        col("__code"), col("__lut"), idx.cb.ksub))
-    val cands = topKPerGroup(scored.select(col("qid"), col("cid"), col("__adc")),
-      "qid", "__adc", "cid", rk)
-    pqRescore(idx.codes, qn, cands, k)
-  }
+                          rescoreK: Int = 0): DataFrame =
+    adcTopK(idx.codes, idx.cb, queries, id, vec, k, rescoreK) { qn =>
+      probeCells(idx.centroids, qn.select(col("qid"), col("__qv")), nprobe)
+        .join(broadcast(idx.centroids), Seq("__cell"))
+        .withColumn("__qc", dot(col("__qv"), col("__centroid")))
+        .select(col("qid"), col("__cell"), col("__qc"))
+        .join(broadcast(qn.select(col("qid"), col("__lut"))), Seq("qid"))
+        .join(idx.codes.select(col("cid"), col("__cell"), col("__code")), Seq("__cell"))
+        .filter(col("qid") =!= col("cid"))
+        .withColumn("__adc", col("__qc") + graft.functions.VectorExprs.pqAdc(
+          col("__code"), col("__lut"), idx.cb.ksub))
+    }
 }

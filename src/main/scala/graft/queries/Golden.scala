@@ -29,9 +29,6 @@ object Golden {
 
   private val D = Date.valueOf("1996-06-15")
 
-  private def openOrders(s: SparkSession, dir: String): DataFrame =
-    openOrdersOf(s, t(s, dir, "orders"))
-
   private def openOrdersOf(s: SparkSession, orders: DataFrame): DataFrame = {
     import s.implicits._
     val withIntervals = orders

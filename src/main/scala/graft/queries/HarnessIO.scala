@@ -548,12 +548,10 @@ object HarnessIO {
     * measures the join, not the write. Table names carry a dir hash so
     * different scale factors never alias. `Bench` prebuilds untimed
     * and reports the cost as its own metric. */
-  private val bucketedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+  private val bucketedCache = new SessionCache[(String, String)]
 
-  def bucketedTablesFor(s: SparkSession, dir: String): (String, String) = {
-    bucketedCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    bucketedCache.getOrElseUpdate((s, dir), {
+  def bucketedTablesFor(s: SparkSession, dir: String): (String, String) =
+    bucketedCache(s, dir) {
       import s.implicits._
       val h = java.lang.Integer.toHexString(dir.hashCode)
       val (ot, lt) = (s"graft_stage.orders_b_$h", s"graft_stage.lineitem_b_$h")
@@ -570,8 +568,7 @@ object HarnessIO {
         t(s, dir, "lineitem").select($"l_orderkey", $"l_extendedprice", $"l_discount"),
         lt, "l_orderkey", 8, Some("l_orderkey"))
       (ot, lt)
-    })
-  }
+    }
 
   /** Body of `join_bucketed` (named so PlanSpec can pin its shape):
     * revenue per order priority over bucketed orders ⋈ lineitem. The

@@ -66,38 +66,24 @@ object HarnessLLM {
     * own metric. Keyed by session too: the checkpointed cells are bound
     * to the session that built them, so a second session in the same
     * JVM must build its own. */
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Vectors.IvfIndexData]
+  private val ivfIndexCache = new SessionCache[Vectors.IvfIndexData]
 
-  /** Evict entries owned by stopped sessions before every cache access:
-    * a stopped session's checkpointed blocks are gone, and retaining
-    * the (session, DataFrame) pair would pin dead sessions in a
-    * long-lived JVM forever. */
-  private def pruneStopped[V](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V]): Unit =
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-
-  def ivfIndexFor(s: SparkSession, dir: String): Vectors.IvfIndexData = {
-    pruneStopped(ivfIndexCache)
+  def ivfIndexFor(s: SparkSession, dir: String): Vectors.IvfIndexData =
     // indexed over the ANN corpus (embeddings + planted copies) so the
     // sim_ann_ivf search output is the planted closed form
-    ivfIndexCache.getOrElseUpdate((s, dir),
+    ivfIndexCache(s, dir)(
       Vectors.ivfIndex(annCorpus(s, dir), "vec_id", "embedding", nlist = 16,
         sampleFraction = 0.5))
-  }
 
   /** Build-once PQ index per (session, corpus dir) — same lifecycle as
     * [[ivfIndexFor]]: the m-byte code column would be written with the
     * table at ingest; searches pay only the compressed-domain scan. */
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Vectors.PqIndexData]
+  private val pqIndexCache = new SessionCache[Vectors.PqIndexData]
 
-  def pqIndexFor(s: SparkSession, dir: String): Vectors.PqIndexData = {
-    pruneStopped(pqIndexCache)
-    pqIndexCache.getOrElseUpdate((s, dir),
+  def pqIndexFor(s: SparkSession, dir: String): Vectors.PqIndexData =
+    pqIndexCache(s, dir)(
       Vectors.pqIndex(annCorpus(s, dir), "vec_id", "embedding", m = 8, ksub = 64,
         sampleFraction = 0.5))
-  }
 
   /** Build-once residual IVF-PQ index (faiss-canonical: codes quantize
     * v − centroid(cell)) — the ONE code column both PQ search keys
@@ -105,15 +91,12 @@ object HarnessLLM {
     * decomposition, `sim_ann_ivfpq` probes it through the router.
     * [[pqIndexFor]] (vector-space codes) remains the streaming
     * bootstrap's codebook source. */
-  private val ivfPqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Vectors.IvfPqIndexData]
+  private val ivfPqIndexCache = new SessionCache[Vectors.IvfPqIndexData]
 
-  def ivfPqIndexFor(s: SparkSession, dir: String): Vectors.IvfPqIndexData = {
-    pruneStopped(ivfPqIndexCache)
-    ivfPqIndexCache.getOrElseUpdate((s, dir),
+  def ivfPqIndexFor(s: SparkSession, dir: String): Vectors.IvfPqIndexData =
+    ivfPqIndexCache(s, dir)(
       Vectors.ivfPqIndex(annCorpus(s, dir), "vec_id", "embedding",
         nlist = 16, m = 8, ksub = 64, sampleFraction = 0.5))
-  }
 
   /** Build-once OPQ fit per (session, corpus dir) — the rotation +
     * codebooks are ingest-time artifacts like the other index builds
@@ -121,17 +104,15 @@ object HarnessLLM {
     * and the rotated code column with the table); `Bench` prebuilds
     * untimed and reports `opq_fit_sec`. Holds (optimized, plain
     * baseline) so the comparison key never refits. */
-  private val opqModelsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Vectors.OpqModel, Vectors.OpqModel)]
+  private val opqModelsCache = new SessionCache[(Vectors.OpqModel, Vectors.OpqModel)]
 
   def opqModelsFor(s: SparkSession, dir: String): (Vectors.OpqModel, Vectors.OpqModel) = {
-    pruneStopped(opqModelsCache)
     // vec_id < 100000 mirrors the fit's maxSamples cap DETERMINISTICALLY
     // (normalizedSample's limit() is a partition-order prefix, not a
     // defined subset), so sim_pq_opq's measured corpus IS the fit
     // sample at any scale factor and the argmin never-worse guarantee
     // stays structural. No-op at the bench SFs (every vec_id < 100k).
-    opqModelsCache.getOrElseUpdate((s, dir),
+    opqModelsCache(s, dir)(
       Vectors.opqFitWithBaseline(
         t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
           .filter(col("vec_id") < 100000L),
@@ -141,15 +122,12 @@ object HarnessLLM {
   /** Build-once OPQ-rotated code relation over the ANN corpus (same
     * lifecycle as [[pqIndexFor]]) — the serving-path sibling of
     * [[opqModelsFor]]: rotated codes are an ingest-time column. */
-  private val opqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Vectors.PqIndexData]
+  private val opqIndexCache = new SessionCache[Vectors.PqIndexData]
 
-  def opqAnnIndexFor(s: SparkSession, dir: String): Vectors.PqIndexData = {
-    pruneStopped(opqIndexCache)
-    opqIndexCache.getOrElseUpdate((s, dir),
+  def opqAnnIndexFor(s: SparkSession, dir: String): Vectors.PqIndexData =
+    opqIndexCache(s, dir)(
       Vectors.opqIndex(annCorpus(s, dir), "vec_id", "embedding",
         opqModelsFor(s, dir)._1))
-  }
 
   /** Shingle-once per (session, corpus dir), shared by every
     * shingle-family key — `dedup_minhash` min-hashes it and both it
@@ -158,17 +136,14 @@ object HarnessLLM {
     * times. Eagerly checkpointed (the in-session analog of writing the
     * shingle column with the corpus at ingest); `Bench` prebuilds
     * untimed and reports the cost as its own metric. */
-  private val shingledDocsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val shingledDocsCache = new SessionCache[DataFrame]
 
-  def shingledDocsFor(s: SparkSession, dir: String): DataFrame = {
-    pruneStopped(shingledDocsCache)
-    shingledDocsCache.getOrElseUpdate((s, dir),
+  def shingledDocsFor(s: SparkSession, dir: String): DataFrame =
+    shingledDocsCache(s, dir)(
       t(s, dir, "documents")
         .select(col("doc_id"), Dedup.shingles(col("text")).as("__sh"))
         .filter(size(col("__sh")) > 0)
         .localCheckpoint(true))
-  }
 
   /** Deterministic P6 payload per document: 16 x (4 + doc_id%5)
     * pixels, sample bytes cycling the md5 digest of the text — so the
@@ -256,19 +231,16 @@ object HarnessLLM {
     * their OWN per-run in-key staging: their r20 phase-wall split
     * (`codec_encode_ms` per run) is load-bearing for the driver's
     * counter attribution and is not weakened here. */
-  private val codecMediaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val codecMediaCache = new SessionCache[DataFrame]
 
-  def codecMediaFor(s: SparkSession, dir: String, fmt: String): DataFrame = {
-    pruneStopped(codecMediaCache)
-    codecMediaCache.getOrElseUpdate((s, s"$dir#$fmt"), {
+  def codecMediaFor(s: SparkSession, dir: String, fmt: String): DataFrame =
+    codecMediaCache(s, s"$dir#$fmt") {
       val t0 = System.nanoTime()
       val df = codecImageMedia(s, dir, fmt).localCheckpoint(true)
       graft.Metrics.record("codec_media_build_ms",
         (System.nanoTime() - t0) / 1000000)
       df
-    })
-  }
+    }
 
   /** The codec-dedup corpus in LAZY form — the planted triplet
     * groups PNG-encoded per row (docs 0-299, group = doc_id/3).
@@ -300,12 +272,10 @@ object HarnessLLM {
     * let the key time the engine's container walk. Build cost lands
     * in the `gif_media_build_ms` bench counter (first run; the
     * median-of-3 then reads the decode-only cost). */
-  private val gifMediaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val gifMediaCache = new SessionCache[DataFrame]
 
-  def gifMediaFor(s: SparkSession, dir: String): DataFrame = {
-    pruneStopped(gifMediaCache)
-    gifMediaCache.getOrElseUpdate((s, dir), {
+  def gifMediaFor(s: SparkSession, dir: String): DataFrame =
+    gifMediaCache(s, dir) {
       val t0 = System.nanoTime()
       val mk = udf { (docId: Long, s2: String) =>
         val nFrames = 2 + (docId % 3).toInt
@@ -321,8 +291,7 @@ object HarnessLLM {
         .localCheckpoint(true)
       graft.Metrics.record("gif_media_build_ms", (System.nanoTime() - t0) / 1000000)
       df
-    })
-  }
+    }
 
   /** The planted-triplet raster: group g's 16x16x3 chained-md5 pixel
     * stream — THE shared pixel contract of every image dedup / probe /

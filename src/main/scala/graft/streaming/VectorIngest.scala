@@ -70,11 +70,11 @@ object VectorIngest {
   private def indexColumns(df: DataFrame, id: String, vec: String,
                            b: IndexBootstrap, assign: Column => Column,
                            encode: Option[Column => Column],
-                           oEncode: Option[Column => Column] = None): DataFrame = {
+                           oEncode: Option[Column => Column]): DataFrame = {
     // ONE projection — signature, normalization, assignment, and PQ
     // encoding all scan-local; a join-shaped formulation would put a
     // shuffle in every micro-batch for nothing
-    val base = df.filter(nullif(Vectors.l2norm(col(vec)), lit(0.0)).isNotNull)
+    val base = Vectors.nonDegenerate(df, vec)
       .select(col(id).as("cid"),
         Vectors.srpSignatureCol(col(vec), b.dim, b.bits, b.bands, b.seed)
           .as("__sig"),
@@ -115,12 +115,7 @@ object VectorIngest {
   def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
                    upToBatch: Long): Unit =
     BatchStore.fold(spark, storeDir, upToBatch) { read =>
-      val dataCols = read.columns.filter(_ != "__batch")
-      read
-        .groupBy(col("cid"))
-        .agg(max_by(struct((dataCols.filter(_ != "cid").map(col) :+ col("__batch")): _*),
-          col("__batch")).as("__r"))
-        .select(col("cid") +: dataCols.filter(_ != "cid").map(c => col(s"__r.$c")): _*)
+      newest(read, read.columns.toSeq.filter(c => c != "__batch" && c != "cid"))
     }
 
   /** Run the maintenance loop over a streaming frame: write index
@@ -197,8 +192,7 @@ object VectorIngest {
     val corpusVecs = newestRows(spark, storeDir, Seq("__cv"))
     // normalized like the store's __cv — same element type (double)
     // for the rescore's dot, same cosine pairs (scale-invariance)
-    val signed = probes
-      .filter(nullif(Vectors.l2norm(col(vec)), lit(0.0)).isNotNull)
+    val signed = Vectors.nonDegenerate(probes, vec)
       .select(col(id).as("cid"),
         Vectors.srpSignatureCol(col(vec), dim, bits, bands, seed).as("__sig"),
         Vectors.normalized(col(vec)).as("__cv"))
@@ -206,24 +200,28 @@ object VectorIngest {
       simThreshold)
   }
 
+  /** `cols` of the newest row per cid (max `__batch`) — the one version
+    * fold behind [[compactStore]]'s write-side keep-the-newest rule and
+    * [[newestRows]]' read side. One cid-keyed shuffle over only `cols`. */
+  private def newest(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.groupBy(col("cid"))
+      .agg(max_by(struct(cols.map(col): _*), col("__batch")).as("__r"))
+      .select(col("cid") +: cols.map(c => col(s"__r.$c").as(c)): _*)
+
   /** One newest row per cid — the read-side version fold EVERY store
     * consumer applies (probe and all three index servers): among a
-    * cid's rows, the max-`__batch` one wins, which is exactly
-    * [[compactStore]]'s keep-the-newest rule applied at read time. This
+    * cid's rows, the max-`__batch` one wins ([[newest]], exactly
+    * [[compactStore]]'s keep-the-newest rule applied at read time). This
     * is simultaneously (a) the compaction-crash-window guard (a stale
     * partition beside its relocated copy folds back to one row —
     * [[BatchStore.CompactedBatchId]] sorts below every real batch, so the
     * relocated copy wins) and (b) what makes a cid re-ingested with an
     * updated vector SERVE as its latest version while both versions
     * still sit in their batch partitions: an arbitrary-row dedup could
-    * return duplicate top-k rows or rank by a stale embedding. One
-    * cid-keyed shuffle over only the requested columns. */
+    * return duplicate top-k rows or rank by a stale embedding. */
   private def newestRows(spark: org.apache.spark.sql.SparkSession,
                          storeDir: String, cols: Seq[String]): DataFrame =
-    spark.read.parquet(storeDir)
-      .groupBy(col("cid"))
-      .agg(max_by(struct(cols.map(col): _*), col("__batch")).as("__r"))
-      .select(col("cid") +: cols.map(c => col(s"__r.$c").as(c)): _*)
+    newest(spark.read.parquet(storeDir), cols)
 
   /** Read the stream-maintained store back as a searchable IVF index
     * (same shape [[Vectors.ivfSearch]] takes from a batch build),

@@ -74,7 +74,6 @@ object DumpPlans {
     // equi-joins over the candidate pair set, no cartesian) in the
     // committed record, the same pin PlanSpec holds at test time.
     locally {
-      import org.apache.spark.sql.functions._
       import spark.implicits._
       val sh = graft.queries.HarnessLLM.shingledDocsFor(spark, sfDir)
       val cand = Seq((1L, 2L)).toDF("id_a", "id_b")

@@ -862,21 +862,32 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.isEmpty, hits.mkString("store layout outside BatchStore:\n", "\n", ""))
   }
 
+  /** `Object.def` owning each line under `src/main/scala` that matches
+    * `pattern` (the nearest `def` line at or above it), sorted. */
+  private def hitOwners(pattern: scala.util.matching.Regex): List[String] = {
+    val Def = """.*\bdef (\w+)\b.*""".r
+    scalaFiles("src/main/scala").flatMap { f =>
+      val ls = linesOf(f)
+      ls.indices.filter(i => pattern.findFirstIn(ls(i)).isDefined).map { i =>
+        val owner = ls.take(i + 1).reverse.collectFirst { case Def(name) => name }
+        s"${f.getFileName.toString.stripSuffix(".scala")}.${owner.getOrElse("?")}"
+      }
+    }.sorted
+  }
+
   test("media columns reach their decoders through Multimodal.perMedia only") {
     // the typed (doc_id, media) shell is one decision; a hand-copied
     // shell beside it drifts from it
-    val hits = sourceHits("graft", """as\[\(Long, Array\[Byte\]\)\]""".r)
-    assert(hits.length == 1, hits.mkString("typed media shells:\n", "\n", ""))
-    val Hit = """ops/Multimodal\.scala:(\d+): .*""".r
-    val Def = """.*\bdef (\w+)\b.*""".r
-    val owner = hits.head match {
-      case Hit(n) =>
-        linesOf(new java.io.File(repoRoot, "src/main/scala/graft/ops/Multimodal.scala").toPath)
-          .take(n.toInt).reverse.collectFirst { case Def(name) => name }
-      case _ => None
-    }
-    assert(owner.contains("perMedia"),
-      s"typed media shell outside Multimodal.perMedia: ${hits.head}")
+    assert(hitOwners("""as\[\(Long, Array\[Byte\]\)\]""".r) == List("Multimodal.perMedia"))
+  }
+
+  test("the vector tier searches nearest codewords and gates degenerate vectors in one helper each") {
+    // which centroid or codeword is nearest (first minimum winning) and
+    // which vectors are too degenerate to index are one decision each;
+    // a hand-copied search loop or norm gate beside its helper drifts
+    assert(hitOwners("""Double\.MaxValue""".r) ==
+      List("Vectors.nearestCentroid", "Vectors.nearestCodeword"))
+    assert(hitOwners("""nullif\((Vectors\.)?l2norm\(col\(""".r) == List("Vectors.nonDegenerate"))
   }
 
   test("band-collision joins live in Bands only, and no partition count reads the session width") {

@@ -501,6 +501,66 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
     assert(probed(Nil, crowd).isEmpty)
   }
 
+  test("PQ, residual IVF-PQ and OPQ quantizers equal a plain-Scala nearest search, first minimum winning") {
+    import spark.implicits._
+    import graft.ops.Vectors
+    // squared distance in the kernel's order, and the nearest index by
+    // minBy, which keeps the first of equal minima
+    def dist(a: Int => Double, b: Int => Double, n: Int): Double =
+      (0 until n).foldLeft(0.0) { (acc, j) => val t = a(j) - b(j); acc + t * t }
+    def subDists(cb: Vectors.PqCodebooks, v: Array[Double], s: Int): IndexedSeq[Double] =
+      (0 until cb.ksub).map(c => dist(j => v(s * cb.dsub + j),
+        j => cb.flat((s * cb.ksub + c) * cb.dsub + j), cb.dsub))
+    def code(cb: Vectors.PqCodebooks, v: Array[Double]): Seq[Byte] =
+      (0 until cb.m).map(s => subDists(cb, v, s).zipWithIndex.minBy(_._1)._2.toByte)
+    trials { rnd =>
+      val (m, dsub, ksub) = (4, 2, 6)
+      val d = m * dsub
+      // each subspace plants one codeword twice, so every vector whose
+      // nearest codeword is the planted one ties between two indices
+      val flat = Array.fill(m * ksub * dsub)(rnd.nextGaussian() * 0.4)
+      for (s <- 0 until m) {
+        val a = rnd.nextInt(ksub - 1)
+        val b = a + 1 + rnd.nextInt(ksub - 1 - a)
+        System.arraycopy(flat, (s * ksub + a) * dsub, flat, (s * ksub + b) * dsub, dsub)
+      }
+      val cb = Vectors.PqCodebooks(m, ksub, dsub, flat)
+      // repeated vectors make repeated coarse centroids likely; the zero
+      // and null vectors must drop before any search
+      val vecs = Seq.fill(30)(Seq.fill(d)(rnd.nextGaussian().toFloat))
+      val corpus = ((vecs ++ vecs.take(6)).map(Option(_)) ++
+        Seq(Some(Seq.fill(d)(0f)), None)).zipWithIndex
+        .map { case (v, i) => (i.toLong, v) }.toDF("id", "vec")
+
+      val coded = Vectors.pqCodeColumns(corpus, "id", "vec", cb).collect()
+        .map(r => (r.getAs[Array[Byte]]("__code").toSeq, r.getSeq[Double](2).toArray))
+      assert(coded.length == 36)
+      coded.foreach { case (c, v) => assert(c == code(cb, v)) }
+      val ties = coded.count { case (_, v) =>
+        (0 until m).exists { s => val ds = subDists(cb, v, s); ds.count(_ == ds.min) > 1 } }
+      assert(ties > 0, "no vector met a planted tie")
+
+      // ksub above the sample size cycles the fitted codebooks, so every
+      // residual code is chosen among repeated codewords
+      val idx = Vectors.ivfPqIndex(corpus, "id", "vec", nlist = 4, m = m, ksub = 64)
+      val cs = idx.centroidArr
+      idx.codes.select("__cell", "__code", "__cv").collect().foreach { r =>
+        val p = r.getSeq[Double](2).toArray
+        val cell = cs.indices.minBy(c => dist(p, cs(c), d))
+        assert(r.getInt(0) == cell)
+        assert(r.getAs[Array[Byte]](1).toSeq ==
+          code(idx.cb, Array.tabulate(d)(j => p(j) - cs(cell)(j))))
+      }
+
+      val identity = Array.tabulate(d * d)(ix => if (ix / d == ix % d) 1.0 else 0.0)
+      val expected = coded.map { case (_, v) =>
+        (0 until m).map(s => subDists(cb, v, s).min).sum }.sum / coded.length
+      val got = Vectors.opqDistortion(corpus, "vec", Vectors.OpqModel(d, identity, cb))
+      assert(got.exists(g => math.abs(g - expected) <= 1e-12 * math.max(1.0, expected)),
+        s"distortion $got, brute force $expected")
+    }
+  }
+
   test("portable dedup ops are layout-invariant: any repartitioning, same output") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -694,7 +754,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       val buf = new java.io.ByteArrayOutputStream()
       graft.io.PgWire.writeNumericBinary(bd, new java.io.DataOutputStream(buf))
       val payload = buf.toByteArray.drop(4) // decoder takes the DataRow value bytes
-      graft.io.PgWire.binaryToCatalyst(1700, -1, DecimalType(p, sc))(payload)
+      graft.io.PgWire.binaryToCatalyst(1700, DecimalType(p, sc))(payload)
         .asInstanceOf[Decimal].toJavaBigDecimal
     }
     // deterministic adversarial shapes first
@@ -727,19 +787,19 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
     def be64(v: Long) = be32((v >> 32).toInt) ++ be32(v.toInt)
     // PG 'infinity' date/timestamp sentinels have no Catalyst value
     intercept[IllegalArgumentException] {
-      graft.io.PgWire.binaryToCatalyst(1082, -1, DateType)(be32(Int.MaxValue))
+      graft.io.PgWire.binaryToCatalyst(1082, DateType)(be32(Int.MaxValue))
     }
     intercept[IllegalArgumentException] {
-      graft.io.PgWire.binaryToCatalyst(1114, -1, TimestampType)(be64(Long.MaxValue))
+      graft.io.PgWire.binaryToCatalyst(1114, TimestampType)(be64(Long.MaxValue))
     }
     // NaN numeric (sign word 0xC000) has no Spark decimal
     val nan = Array[Byte](0, 0, 0, 0, 0xC0.toByte, 0, 0, 0)
     intercept[IllegalArgumentException] {
-      graft.io.PgWire.binaryToCatalyst(1700, -1, DecimalType(10, 2))(nan)
+      graft.io.PgWire.binaryToCatalyst(1700, DecimalType(10, 2))(nan)
     }
     // unmapped OID/type pair is a loud refusal, not a silent null
     intercept[IllegalArgumentException] {
-      graft.io.PgWire.binaryToCatalyst(23, -1, DateType)
+      graft.io.PgWire.binaryToCatalyst(23, DateType)
     }
   }
 
