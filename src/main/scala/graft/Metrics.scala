@@ -66,9 +66,11 @@ object Metrics {
   /** Record (overwrite) a named scale counter, qualified by the active
     * caller scope if one is open — and still open process-wide (see
     * [[open]]: stale inherited scopes degrade to raw names). */
-  def record(name: String, value: Long): Unit =
+  def record(name: String, value: Long): Unit = {
     counters.put(scope.value.filter(open.containsKey)
       .map(_ + "." + name).getOrElse(name), value)
+    ()
+  }
 
   /** Accumulate into a named counter (same scoping rules as
     * [[record]]) — for per-task contributions that sum to a phase

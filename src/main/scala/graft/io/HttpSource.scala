@@ -209,7 +209,7 @@ private[io] class HttpCsvPartitionReader(p: HttpRangePartition, full: StructType
     }
     // Not the first split: discard the (possibly partial) first line —
     // it belongs to the previous split, which reads past its own end.
-    if (p.start > 0) readLineBytes()
+    if (p.start > 0) { readLineBytes(); () }
   }
 
   /** Reads one '\n'-terminated line (terminator consumed, not
@@ -366,6 +366,7 @@ private[graft] object HttpFilterEval {
         case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
         case d: java.time.LocalDate => d.toEpochDay.toInt
         case n: Number => n.intValue()
+        case _ => return None
       })
       case _ => return None
     }).asInstanceOf[Comparable[Any]])

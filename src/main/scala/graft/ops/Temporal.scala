@@ -27,13 +27,60 @@ object Temporal {
     * day — ref visualization.py:186-189, built-in generator instead of
     * the reference's row-wise Python apply. Explode fan-out =
     * interval length; at 100 TB keep intervals bounded (cap or bucket
-    * by month) before exploding. */
+    * by month) before exploding, or, when the days are only summed per
+    * key, use [[sumPerDay]], whose cost does not grow with length. */
   def explodeDays(df: DataFrame, out: String, start: Column, end: Column): DataFrame =
     // inverted intervals (end < start — one dirty row in a 100 TB
     // relation) yield ZERO days instead of killing the whole job:
     // sequence() throws on illegal boundaries
     df.filter(start <= end)
       .withColumn(out, explode(sequence(start, end, expr("interval 1 day"))))
+
+  /** Exact per-day sum of `value` over the intervals active that day —
+    * the same rows as
+    * `explodeDays(df, day, start, end).groupBy(col(day) +: keys.map(col))
+    *   .agg(Aggregates.sumExact(value).as(out))`
+    * (a day with only null values sums to null), computed by an
+    * interval sweep instead of a per-interval explode:
+    *  - every interval with `start <= end` contributes +value and +1 at
+    *    `start`, −value and −1 at `end + 1`;
+    *  - the deltas are summed per (keys, day), so what moves on is
+    *    bounded by keys × calendar days, not by the number of intervals
+    *    or their length (a 1900 sentinel start costs one delta, not
+    *    45 000 rows);
+    *  - running sums over each key's day order, and `lead` to the next
+    *    change day, give segments of constant sum; the days of every
+    *    segment with an active interval are emitted. The test is the
+    *    active count, not the sum: values that cancel or round to 0.00
+    *    still own their days, as in the explode.
+    * The deltas are moved with `repartition(1)`: the single partition
+    * satisfies the window's distribution and any later sort, and the
+    * delta aggregation above it stays parallel (a `coalesce(1)` would
+    * pull it into one task). Sums are decimal(28, 2)-exact and cast to
+    * double once, like [[Aggregates.sumExact]]. */
+  def sumPerDay(df: DataFrame, day: String, start: Column, end: Column,
+                keys: Seq[String], value: Column, out: String): DataFrame = {
+    val v = value.cast("decimal(28,2)")
+    // nn counts the non-null values, so a day with only nulls sums to null
+    def edge(d: Column, dv: Column, sign: Int) = struct(d.as("d"), dv.as("v"),
+      lit(sign).as("n"), when(v.isNotNull, sign).otherwise(0).as("nn"))
+    val deltas = df.filter(start <= end)
+      .select(keys.map(col) :+
+        explode(array(edge(start, v, 1), edge(date_add(end, 1), -v, -1))).as("__e"): _*)
+      .groupBy(keys.map(col) :+ col("__e.d").as("__d"): _*)
+      .agg(sum(col("__e.v")).as("__v"), sum(col("__e.n")).as("__n"), sum(col("__e.nn")).as("__nn"))
+      .repartition(1)
+    val byDay = Window.partitionBy(keys.map(col): _*).orderBy(col("__d"))
+    val upTo = byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    deltas.select(keys.map(col) ++ Seq(col("__d"),
+        lead(col("__d"), 1).over(byDay).as("__next"),
+        sum(col("__v")).over(upTo).as("__v"),
+        sum(col("__n")).over(upTo).as("__n"),
+        sum(col("__nn")).over(upTo).as("__nn")): _*)
+      .filter(col("__n") > 0)
+      .select(explode(sequence(col("__d"), date_sub(col("__next"), 1), expr("interval 1 day"))).as(day) +:
+        keys.map(col) :+ when(col("__nn") > 0, col("__v")).cast("double").as(out): _*)
+  }
 
   /** Whole-row argmax per group with a DETERMINISTIC tiebreaker —
     * ref visualization.py:103/:130 does

@@ -1170,10 +1170,12 @@ object Vectors {
       rotateInto(v.toArray, mdl.rotation, mdl.dim, y)
       pqReconstructInto(y, mdl.cb, new Array[Double](mdl.dim))
     }
-    nonDegenerate(corpus, vec)
+    // the eager take(1) is the broadcast's last reader
+    try nonDegenerate(corpus, vec)
       .select(errU(normalized(col(vec))).as("__e"))
       .agg(avg(col("__e")).as("__mse"))
       .take(1).headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    finally bc.destroy()
   }
 
   // ------------- residual-encoded IVF-PQ (faiss IVFPQ) -------------
@@ -1208,6 +1210,16 @@ object Vectors {
     best
   }
 
+  /** The cell of `p`'s nearest centroid and `p`'s residual from it —
+    * the one subtraction of the driver-side codebook fit and the
+    * distributed encoder, so both quantize the same residuals. */
+  private def residual(p: Array[Double],
+                       cs: Array[Array[Double]]): (Int, Array[Double]) = {
+    val cell = nearestCentroid(p, cs)
+    val ce = cs(cell)
+    (cell, Array.tabulate(p.length)(j => p(j) - ce(j)))
+  }
+
   /** Build the residual IVF-PQ index: coarse quantizer fit, residual
     * codebook fit (both on the same bounded driver sample), then ONE
     * scan-local pass computing (cell, residual code) per vector —
@@ -1219,19 +1231,13 @@ object Vectors {
                  maxSamples: Int = 100000, iters: Int = 10): IvfPqIndexData = {
     val sample = normalizedSample(corpus, vec, sampleFraction, seed, maxSamples)
     val centroidArr = lloydFit(sample, nlist, iters, seed)
-    val residuals = sample.map { p =>
-      val ce = centroidArr(nearestCentroid(p, centroidArr))
-      Array.tabulate(p.length)(j => p(j) - ce(j))
-    }
-    val cb = pqFitOnPoints(residuals, m, ksub, seed, iters)
+    val cb = pqFitOnPoints(sample.map(residual(_, centroidArr)._2), m, ksub, seed, iters)
     val spark = corpus.sparkSession
     val bcC = spark.sparkContext.broadcast(centroidArr)
     val bcB = spark.sparkContext.broadcast(cb)
     val assignEncode = udf { (v: Seq[Double]) =>
-      val p = v.toArray
-      val cell = nearestCentroid(p, bcC.value)
-      val ce = bcC.value(cell)
-      (cell, pqEncode(bcB.value, Array.tabulate(p.length)(j => p(j) - ce(j))))
+      val (cell, r) = residual(v.toArray, bcC.value)
+      (cell, pqEncode(bcB.value, r))
     }
     val codes = nonDegenerate(corpus, vec)
       .select(col(id).as("cid"), normalized(col(vec)).as("__cv"))

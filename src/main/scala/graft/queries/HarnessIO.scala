@@ -28,8 +28,9 @@ object HarnessIO {
     * accumulate orphaned databases under /tmp. */
   private lazy val derbyDir = {
     val d = s"$stage/derby_${ProcessHandle.current().pid()}"
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)); ()
+    }))
     d
   }
 
@@ -41,8 +42,9 @@ object HarnessIO {
     * without bound (70+ after the r15 cycles, VERDICT r15 #5). */
   private lazy val streamCkDir = {
     val d = s"$stage/stream_ck_${ProcessHandle.current().pid()}"
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)); ()
+    }))
     d
   }
 

@@ -32,13 +32,24 @@ object RefPipeline {
     * inclusive Duration in days. `zones` is dimension-sized → Catalyst
     * broadcasts it under the 100 TB fact-side join.
     *
-    * The join comes back persisted (MEMORY_AND_DISK) and materialized
-    * by one eager count — the reference's `st.session_state.df`
-    * (visualization.py:89-90, :223-224) — so Q1–Q4 scan the cache
-    * instead of re-reading, re-cleaning and re-joining their sources.
-    * The caller owns `unpersist()`. Calling this again on the same
-    * inputs drops the old cache entry first and rebuilds, so a call
-    * after the sources change (a re-scrape) sees the current rows. */
+    * Two relations are persisted (MEMORY_AND_DISK) — the reference's
+    * `st.session_state.df` (visualization.py:89-90, :223-224):
+    *  - the join, which is returned, so Q1–Q3 scan it instead of
+    *    re-reading, re-cleaning and re-joining their sources;
+    *  - Q4's whole result, `q4SurfacePerDay(joined)`: Q4 has no request
+    *    parameter, and a later `q4SurfacePerDay(prepped)` builds the
+    *    same logical plan, which Spark's CacheManager serves from this
+    *    summary, so a Q4 request is one scan of a one-partition cache.
+    * One eager count of the summary materializes both, since building
+    * the summary reads (and so fills) the join's cache.
+    *
+    * The caller owns the join's `unpersist()`. That call leaves the
+    * loaded summary in place (Spark keeps the loaded dependents of a
+    * non-cascading uncache); `q4SurfacePerDay(prepped).unpersist()`
+    * frees it, and so does the next call here on the same inputs. Such
+    * a call drops the old summary, then the old join, and rebuilds
+    * both, so a call after the sources change (a re-scrape) sees the
+    * current rows. */
   def prepData(zones: DataFrame, arretes: DataFrame): DataFrame = {
     val cleaned = Seq[DataFrame => DataFrame](
       Relational.fillNullSentinel(_, "debut_validite_arrete", DebutSentinel),
@@ -56,12 +67,18 @@ object RefPipeline {
     val joined = Relational.inclusiveDurationDays(
       zp.join(ap, Seq("id_zone"), "inner"),
       "Duration", "debut_validite_arrete", "fin_validite_arrete")
+    val summary = q4SurfacePerDay(joined)
+    // the summary goes first: dropping the join under a summary that is
+    // still cached would make Spark recompile that summary over it
+    summary.unpersist()
     joined.unpersist()
+    // the join is cached first, so the summary's plan reads that cache
     joined.persist()
+    summary.persist()
     val sc = joined.sparkSession.sparkContext
     val description = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("RefPipeline.prepData:cache")
-    try joined.count()
+    try summary.count()
     finally sc.setJobDescription(description)
     joined
   }
@@ -101,15 +118,15 @@ object RefPipeline {
       .select(col("id_zone"), col("nom_niveau"), col("numero_niveau"),
         col("debut_validite_arrete"), col("Duration"))
 
-  /** Q4 (visualization.py:184-193): surface-water zones only, each
-    * decree exploded into its validity days, total restricted surface
-    * per day × severity. */
-  def q4SurfacePerDay(prepped: DataFrame): DataFrame = {
-    val sup = Relational.filterEq(prepped, "type_zone", "SUP")
-    val byDay = Temporal.explodeDays(sup, "day",
-      col("debut_validite_arrete"), col("fin_validite_arrete"))
-    byDay.groupBy(col("day"), col("nom_niveau"), col("numero_niveau"))
-      .agg(Aggregates.sumExact(col("surface_zone")).as("surface_zone"))
+  /** Q4 (visualization.py:184-193): surface-water zones only, total
+    * restricted surface per validity day × severity — the reference's
+    * per-decree day explode, computed by [[Temporal.sumPerDay]]'s
+    * interval sweep. Its one-partition result needs no exchange for the
+    * final sort. Over a [[prepData]] result this plan is already cached
+    * (prepData builds it), and `unpersist()` on it frees that cache. */
+  def q4SurfacePerDay(prepped: DataFrame): DataFrame =
+    Temporal.sumPerDay(Relational.filterEq(prepped, "type_zone", "SUP"), "day",
+      col("debut_validite_arrete"), col("fin_validite_arrete"),
+      Seq("nom_niveau", "numero_niveau"), col("surface_zone"), "surface_zone")
       .orderBy(col("day"), col("numero_niveau"))
-  }
 }

@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.tools.DumpPlans /root/testdata/sf0.01 PLANS.md"` */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outPath) = args
+    val (sfDir, outPath) = args match {
+      case Array(sf, out) => (sf, out)
+      case _ => sys.error("usage: graft.tools.DumpPlans <sfDir> <outPath>")
+    }
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.sql.Date
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{Schemas, Sources}
@@ -589,12 +590,21 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def added = spark.sparkContext.getPersistentRDDs.keySet -- before
     val prepped = prep()
-    assert(added.size == 1, "one prepData must hold exactly one cached relation")
+    assert(added.size == 2, "one prepData must hold exactly the join and the Q4 summary")
     prep()
     prep()
-    assert(added.size == 1, "each call must drop the previous call's cache entry")
+    assert(added.size == 2, "each call must drop the previous call's cache entries")
     assert(prepped.count() == 1)
     prepped.unpersist()
+    // Spark keeps the loaded dependents of a non-cascading uncache, so
+    // exactly the summary remains, and the next prepData replaces it
+    assert(added.size == 1, "unpersisting the join must leave only the summary")
+    assert(prepped.storageLevel == StorageLevel.NONE)
+    assert(RefPipeline.q4SurfacePerDay(prepped).storageLevel != StorageLevel.NONE)
+    val again = prep()
+    assert(added.size == 2, "the next prepData must replace the summary left behind")
+    RefPipeline.q4SurfacePerDay(again).unpersist()
+    again.unpersist()
     assert(added.isEmpty)
   }
 }

@@ -3,10 +3,11 @@ package graft
 import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -149,6 +150,13 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       else assert(broadcasts.isEmpty, s"$name re-broadcasts:\n$p")
       val scan = ops.collectFirst { case s: InMemoryTableScanExec => s }
       assert(scan.isDefined, s"$name does not scan the cache:\n$p")
+      // Q4 is served whole by prepData's summary, the sweep's output
+      if (name == "q4") {
+        assert(ops.count(_.isInstanceOf[InMemoryTableScanExec]) == 1, s"$name:\n$p")
+        assert(!ops.exists(o => o.isInstanceOf[Exchange] || o.isInstanceOf[WindowExec] ||
+          o.isInstanceOf[GenerateExec]), s"$name recomputes:\n$p")
+        assert(nodes(scan.get.relation.cachedPlan).exists(_.isInstanceOf[WindowExec]), s"$name:\n$p")
+      }
       scan.get
     }
     val build = cacheScans.head.relation.cachedPlan
@@ -157,6 +165,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val zonesBroadcast = buildOps.filter(_.isInstanceOf[BroadcastExchangeExec])
       .flatMap(nodes).collect { case f: FileSourceScanExec => f.relation.location.rootPaths }
     assert(zonesBroadcast.flatten.map(_.getName) == Seq("zones"), build)
+    RefPipeline.q4SurfacePerDay(prepped).unpersist()
     prepped.unpersist()
   }
 

@@ -53,6 +53,42 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("sumPerDay's interval sweep equals explode + group-sum, as a multiset") {
+    import spark.implicits._
+    val sentinel = Date.valueOf(graft.queries.RefPipeline.DebutSentinel)
+    trials { rnd =>
+      def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+      val rows = List.fill(1 + rnd.nextInt(25)) {
+        val s = rnd.nextInt(60)
+        val start = rnd.nextInt(12) match {
+          case 0 => None
+          case 1 => Some(sentinel)
+          case _ => Some(toDate(s))
+        }
+        val end = rnd.nextInt(8) match {
+          case 0 => None
+          case 1 => Some(toDate(s))                      // single day
+          case 2 => Some(toDate(s - 1 - rnd.nextInt(10))) // inverted
+          case _ => Some(toDate(s + rnd.nextInt(20)))
+        }
+        // 0.001 and -0.004 round to 0.00 and must still own their days
+        val value = pick(None, Some(0.001), Some(-0.004), Some(1 + rnd.nextInt(5000) / 100.0))
+        (pick(None, Some("a"), Some("b")), pick(None, Some(1)), start, end, value)
+      }
+      val df = (rows ++ rows.filter(_ => rnd.nextInt(4) == 0)) // duplicate intervals
+        .toDF("k", "n", "d0", "d1", "v")
+      val keys = Seq("k", "n")
+      val exploded = Temporal.explodeDays(df, "day", $"d0", $"d1")
+        .groupBy(col("day") +: keys.map(col): _*)
+        .agg(Aggregates.sumExact($"v").as("s"))
+      val swept = Temporal.sumPerDay(df, "day", $"d0", $"d1", keys, $"v", "s")
+      def shape(d: org.apache.spark.sql.DataFrame) = d.schema.map(f => f.name -> f.dataType)
+      assert(shape(swept) == shape(exploded))
+      def rowsOf(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+      assert(rowsOf(swept) == rowsOf(exploded))
+    }
+  }
+
   test("argmaxPerGroup returns one row per group, and it is a group maximum") {
     import spark.implicits._
     trials { rnd =>

@@ -87,12 +87,17 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     def q1(prepped: DataFrame) =
       RefPipeline.q1NbDepPerAlert(prepped, lit(Date.valueOf("2023-08-12")))
         .collect().map(r => (r.getInt(0), r.getLong(2))).toSeq
+    // Q4's restricted days per severity (both zones are SUP)
+    def q4(prepped: DataFrame) =
+      RefPipeline.q4SurfacePerDay(prepped).collect().toSeq
+        .groupBy(_.getAs[Int]("numero_niveau")).map { case (l, rs) => l -> rs.size }
     val first = (1L, "2023-08-01", "2023-08-31", 2, "alerte", "actif")
     Postgres.overwriteTable(zones, conn, "graft_ref_zones")
     Postgres.overwriteTable(arretes(first), conn, "graft_ref_arretes")
     val before = prep()
     assert(before.count() === 1L)
     assert(q1(before) === Seq((2, 1L)))
+    assert(q4(before) === Map(2 -> 31))
     // the re-scrape adds one decree valid at the query date, in the other department
     Postgres.overwriteTable(
       arretes(first, (2L, "2023-08-10", "2023-08-20", 4, "crise", "actif")),
@@ -100,6 +105,7 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val after = prep()
     assert(after.count() === 2L, "a second prepData must rebuild from the current table")
     assert(q1(after) === Seq((4, 1L), (2, 1L)))
+    assert(q4(after) === Map(2 -> 31, 4 -> 11), "Q4's cached summary must rebuild too")
     // the reference's scraper writes from its own process, so Spark's
     // write-side cache refresh never sees it: only prepData's rebuild does
     val c = new PgWireClient(conn.host, conn.port, conn.user, conn.database)
@@ -109,6 +115,8 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val external = prep()
     assert(external.count() === 3L, "prepData must rebuild after an out-of-Spark write")
     assert(q1(external) === Seq((4, 1L), (2, 1L)))
+    assert(q4(external) === Map(2 -> 31, 4 -> 11, 3 -> 3))
+    RefPipeline.q4SurfacePerDay(external).unpersist()
     external.unpersist()
   }
 
