@@ -5,7 +5,6 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -129,22 +128,9 @@ case class MinHashMinima(child: Expression, numHashes: Int)
   override def nullSafeEval(input: Any): Any =
     MinHashKernel.minima(input.asInstanceOf[ArrayData], numHashes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the kernel returns null for EMPTY arrays, so the generated code
-    // must re-check nullness after the call (defineCodeGen assumes a
-    // non-null result for non-null input)
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.functions.MinHashKernel.minima(${childGen.value}, $numHashes);
-          ${ev.isNull} = (${ev.value} == null);
-        }"""
-    ev.copy(code = code)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.MinHashKernel.minima($c, $numHashes); ${ev.isNull} = ${ev.value} == null;")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

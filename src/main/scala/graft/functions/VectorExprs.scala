@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
@@ -15,34 +13,21 @@ import org.apache.spark.sql.types._
   * The higher-order-function formulation
   * (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`) is interpreted, not
   * codegen'd, and allocates a zipped intermediate array per row — per
-  * PAIR in a similarity self-join. These expressions generate a tight
-  * primitive loop over the two `ArrayData` (whole-stage codegen, zero
-  * allocation), with bit-identical results: the same left-to-right
-  * double accumulation order as the fold they replace.
+  * PAIR in a similarity self-join. Each expression here runs one
+  * primitive `while` loop of [[VectorKernel]] over the `ArrayData`:
+  * interpreted eval and whole-stage generated code call the same
+  * static kernel, so there is one implementation of every loop. Sums
+  * accumulate left to right in double, the order of the fold they
+  * replace, so results are bit-identical to it.
   *
   * Null semantics match the HOF versions: null input → null; mismatched
   * lengths → null (zip_with pads with null, which poisons the sum);
   * a null ELEMENT → null (the lambda product/square is null, which
-  * poisons the aggregate fold). The element check is emitted only when
+  * poisons the aggregate fold). Elements are checked for null only when
   * the static schema says `containsNull` — arrays declared null-free
-  * keep the branch-free tight loop.
+  * skip the check.
   */
 object VectorExprs {
-
-  private[graft] def elemOf(dt: DataType): DataType = dt match {
-    case ArrayType(et, _) => et
-    case _ => NullType
-  }
-
-  private[graft] def checkVec(name: String, dts: DataType*): TypeCheckResult = {
-    val ok = dts.forall {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    } && dts.map(elemOf).distinct.size == 1
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name requires two array<float> or two array<double> arguments, got ${dts.mkString(", ")}")
-  }
 
   def dot(a: Column, b: Column): Column =
     GraftColumnBridge.column(DotProduct(
@@ -88,83 +73,160 @@ object VectorExprs {
     GraftColumnBridge.column(L2Normalize(GraftColumnBridge.expression(vec)))
 }
 
-/** Sequential-order dot product of two equal-typed float/double
-  * arrays, accumulated in double. */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
+/** The vector expressions' loops, shared by interpreted eval and
+  * generated code (`graft.functions.VectorKernel.<f>(…)`), so every
+  * function is static and stateless. Double-valued kernels return a
+  * primitive and leave the null case to a separate predicate
+  * (`anyNull`, `dotDefined`, `adcDefined`): a boxed result would
+  * allocate per row under a JIT without escape analysis. Array-valued
+  * kernels return null for a null result. */
+object VectorKernel {
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
+  private def at(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorExprs.checkVec(prettyName, left.dataType, right.dataType)
-
-  private def isFloat = VectorExprs.elemOf(left.dataType) == FloatType
-
-  private def elemsNullable: Boolean = (left.dataType, right.dataType) match {
-    case (ArrayType(_, ln), ArrayType(_, rn)) => ln || rn
-    case _ => true
+  /** Whether `a` holds a null element; false without looking when the
+    * schema admits none (`elemsNullable` false). */
+  def anyNull(a: ArrayData, elemsNullable: Boolean): Boolean = {
+    val n = if (elemsNullable) a.numElements() else 0
+    var i = 0
+    while (i < n && !a.isNullAt(i)) i += 1
+    i < n
   }
 
-  override def eval(input: InternalRow): Any = {
-    val l = left.eval(input)
-    if (l == null) return null
-    val r = right.eval(input)
-    if (r == null) return null
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Whether [[dot]] is defined: equal lengths and no null element. */
+  def dotDefined(a: ArrayData, b: ArrayData, elemsNullable: Boolean): Boolean =
+    a.numElements() == b.numElements() && !anyNull(a, elemsNullable) &&
+      !anyNull(b, elemsNullable)
+
+  def dot(a: ArrayData, b: ArrayData, isFloat: Boolean): Double = {
     val n = a.numElements()
-    if (n != b.numElements()) return null
-    val checkNulls = elemsNullable
     var s = 0.0
     var i = 0
-    if (isFloat) while (i < n) {
-      if (checkNulls && (a.isNullAt(i) || b.isNullAt(i))) return null
-      s += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1
-    }
-    else while (i < n) {
-      if (checkNulls && (a.isNullAt(i) || b.isNullAt(i))) return null
-      s += a.getDouble(i) * b.getDouble(i); i += 1
-    }
+    while (i < n) { s += at(a, i, isFloat) * at(b, i, isFloat); i += 1 }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lg = left.genCode(ctx)
-    val rg = right.genCode(ctx)
-    val get = if (isFloat) "getFloat" else "getDouble"
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val s = ctx.freshName("s")
-    val anyNull = ctx.freshName("anyNull")
-    // only arrays whose schema admits null elements pay the per-element
-    // branch; null-free arrays keep the branch-free loop
-    val nullCheck =
-      if (elemsNullable)
-        s"if (${lg.value}.isNullAt($i) || ${rg.value}.isNullAt($i)) { $anyNull = true; break; }"
-      else ""
-    ev.copy(code =
-      code"""
-        ${lg.code}
-        ${rg.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${lg.isNull} && !${rg.isNull}) {
-          int $n = ${lg.value}.numElements();
-          if ($n == ${rg.value}.numElements()) {
-            double $s = 0.0;
-            boolean $anyNull = false;
-            for (int $i = 0; $i < $n; $i++) {
-              $nullCheck
-              $s += (double) ${lg.value}.$get($i) * (double) ${rg.value}.$get($i);
-            }
-            if (!$anyNull) {
-              ${ev.isNull} = false;
-              ${ev.value} = $s;
-            }
-          }
-        }""")
+  def norm(a: ArrayData, isFloat: Boolean): Double = {
+    val n = a.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { val v = at(a, i, isFloat); s += v * v; i += 1 }
+    math.sqrt(s)
   }
+
+  /** `a / norm(a)` as a double array; null for a null element or a
+    * zero norm. */
+  def normalize(a: ArrayData, isFloat: Boolean, elemsNullable: Boolean): ArrayData = {
+    val len = if (anyNull(a, elemsNullable)) 0.0 else norm(a, isFloat)
+    if (len == 0.0) null
+    else {
+      val n = a.numElements()
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < n) { out(i) = at(a, i, isFloat) / len; i += 1 }
+      UnsafeArrayData.fromPrimitiveArray(out)
+    }
+  }
+
+  /** Whether [[adc]] is defined: `lut` holds `codes.length * ksub`
+    * entries, and every code byte is below `ksub`. A code byte >= ksub
+    * (a corrupt or foreign code column when ksub < 256) would index
+    * another subspace's LUT region — or past the lut entirely, which
+    * UnsafeArrayData does NOT bounds check — so it poisons to null like
+    * the size mismatch. */
+  def adcDefined(codes: Array[Byte], lut: ArrayData, ksub: Int): Boolean =
+    lut.numElements() == codes.length * ksub && {
+      var i = 0
+      while (i < codes.length && (codes(i) & 0xFF) < ksub) i += 1
+      i == codes.length
+    }
+
+  def adc(codes: Array[Byte], lut: ArrayData, ksub: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < codes.length) { s += lut.getDouble(i * ksub + (codes(i) & 0xFF)); i += 1 }
+    s
+  }
+
+  /** Band keys of `v` against the row-major (bands*bits) x dim plane
+    * matrix; null for a null element or a dimension mismatch. */
+  def srpKeys(v: ArrayData, planes: Array[Double], bits: Int, bands: Int,
+              isFloat: Boolean, elemsNullable: Boolean): ArrayData = {
+    val n = v.numElements()
+    if (n * bands * bits != planes.length || anyNull(v, elemsNullable)) null
+    else {
+      val keys = new Array[Int](bands)
+      var p = 0
+      var b = 0
+      while (b < bands) {
+        var key = 0
+        var j = 0
+        while (j < bits) {
+          var s = 0.0
+          var d = 0
+          while (d < n) { s += planes(p + d) * at(v, d, isFloat); d += 1 }
+          p += n
+          if (s > 0) key |= (1 << j)
+          j += 1
+        }
+        keys(b) = key
+        b += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(keys)
+    }
+  }
+}
+
+/** What the float/double array expressions share: the input type
+  * check (float or double arrays of one element type), the element
+  * type and null-element flags the kernels take, and a nullable
+  * result. */
+private[functions] trait VectorInputs extends Expression {
+
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val dts = children.map(_.dataType)
+    val ok = dts.forall {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+      case _ => false
+    } && dts.collect { case ArrayType(et, _) => et }.distinct.size == 1
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<float> or array<double> arguments of one element type, " +
+        s"got ${dts.mkString(", ")}")
+  }
+
+  protected def isFloat: Boolean = children.head.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  protected def elemsNullable: Boolean = children.exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  })
+}
+
+/** Sequential-order dot product of two equal-typed float/double
+  * arrays, accumulated in double. */
+case class DotProduct(left: Expression, right: Expression)
+  extends BinaryExpression with VectorInputs {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_dot"
+
+  override def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    if (VectorKernel.dotDefined(a, b, elemsNullable)) VectorKernel.dot(a, b, isFloat) else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.VectorKernel.dotDefined($a, $b, $elemsNullable);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.VectorKernel.dot($a, $b, $isFloat);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -172,67 +234,20 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
 /** Sequential-order euclidean norm: sqrt of the in-order sum of
   * squares, accumulated in double. */
-case class L2Norm(child: Expression) extends UnaryExpression {
+case class L2Norm(child: Expression) extends UnaryExpression with VectorInputs {
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_l2norm"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorExprs.checkVec(prettyName, child.dataType, child.dataType)
-
-  private def isFloat = VectorExprs.elemOf(child.dataType) == FloatType
-
-  private def elemsNullable: Boolean = child.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  }
 
   override def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val checkNulls = elemsNullable
-    var s = 0.0
-    var i = 0
-    if (isFloat) while (i < n) {
-      if (checkNulls && a.isNullAt(i)) return null
-      val v = a.getFloat(i).toDouble; s += v * v; i += 1
-    }
-    else while (i < n) {
-      if (checkNulls && a.isNullAt(i)) return null
-      val v = a.getDouble(i); s += v * v; i += 1
-    }
-    math.sqrt(s)
+    if (VectorKernel.anyNull(a, elemsNullable)) null else VectorKernel.norm(a, isFloat)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      val anyNull = ctx.freshName("anyNull")
-      val nullCheck =
-        if (elemsNullable) s"if ($c.isNullAt($i)) { $anyNull = true; break; }"
-        else ""
-      s"""
-        int $n = $c.numElements();
-        double $s = 0.0;
-        boolean $anyNull = false;
-        for (int $i = 0; $i < $n; $i++) {
-          $nullCheck
-          double $v = (double) $c.$get($i);
-          $s += $v * $v;
-        }
-        if ($anyNull) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = java.lang.Math.sqrt($s);
-        }
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.isNull} = graft.functions.VectorKernel.anyNull($a, $elemsNullable);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.VectorKernel.norm($a, $isFloat);""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -248,10 +263,11 @@ case class L2Norm(child: Expression) extends UnaryExpression {
   * that makes a 100 TB corpus ADC-searchable at ~1/32 the bytes.
   *
   * Null semantics: null codes or null lut → null; a lut sized
-  * differently from codes.length*ksub (a codebook/codes mismatch) →
-  * null, poisoning the rank step rather than mis-scoring. lut is an
+  * differently from codes.length*ksub (a codebook/codes mismatch) or a
+  * code byte >= ksub → null ([[VectorKernel.adcDefined]]), poisoning
+  * the rank step rather than mis-scoring. lut is an
   * ArrayType(Double, containsNull=false) produced by the LUT builder,
-  * so no per-element null branch is emitted. */
+  * so no element is checked for null. */
 case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
   extends BinaryExpression {
 
@@ -270,45 +286,13 @@ case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
   override def nullSafeEval(codesAny: Any, lutAny: Any): Any = {
     val codes = codesAny.asInstanceOf[Array[Byte]]
     val lut = lutAny.asInstanceOf[ArrayData]
-    if (lut.numElements() != codes.length * ksub) return null
-    var s = 0.0
-    var i = 0
-    while (i < codes.length) {
-      val c = codes(i) & 0xFF
-      // a code byte >= ksub (corrupt/foreign code column when
-      // ksub < 256) would index another subspace's LUT region — or
-      // past the lut entirely, which UnsafeArrayData does NOT bounds
-      // check — so poison to null like the size-mismatch case
-      if (c >= ksub) return null
-      s += lut.getDouble(i * ksub + c)
-      i += 1
-    }
-    s
+    if (VectorKernel.adcDefined(codes, lut, ksub)) VectorKernel.adc(codes, lut, ksub) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (codes, lut) => {
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      s"""
-        int $m = $codes.length;
-        if ($lut.numElements() != $m * $ksub) {
-          ${ev.isNull} = true;
-        } else {
-          double $s = 0.0;
-          for (int $i = 0; $i < $m; $i++) {
-            int $c = $codes[$i] & 0xFF;
-            if ($c >= $ksub) { ${ev.isNull} = true; break; }
-            $s += $lut.getDouble($i * $ksub + $c);
-          }
-          if (!${ev.isNull}) {
-            ${ev.value} = $s;
-          }
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (codes, lut) =>
+      s"""${ev.isNull} = !graft.functions.VectorKernel.adcDefined($codes, $lut, $ksub);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.VectorKernel.adc($codes, $lut, $ksub);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -321,80 +305,18 @@ case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
   * static type matches the transform() formulation this replaces
   * (ArrayType(Double, containsNull = true)); produced arrays never
   * actually hold null elements. */
-case class L2Normalize(child: Expression) extends UnaryExpression {
+case class L2Normalize(child: Expression) extends UnaryExpression with VectorInputs {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_l2normalize"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorExprs.checkVec(prettyName, child.dataType, child.dataType)
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.normalize(input.asInstanceOf[ArrayData], isFloat, elemsNullable)
 
-  private def isFloat = VectorExprs.elemOf(child.dataType) == FloatType
-
-  private def elemsNullable: Boolean = child.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val checkNulls = elemsNullable
-    var s = 0.0
-    var i = 0
-    if (isFloat) while (i < n) {
-      if (checkNulls && a.isNullAt(i)) return null
-      val v = a.getFloat(i).toDouble; s += v * v; i += 1
-    }
-    else while (i < n) {
-      if (checkNulls && a.isNullAt(i)) return null
-      val v = a.getDouble(i); s += v * v; i += 1
-    }
-    val norm = math.sqrt(s)
-    if (norm == 0.0) return null
-    val out = new Array[Double](n)
-    i = 0
-    if (isFloat) while (i < n) { out(i) = a.getFloat(i).toDouble / norm; i += 1 }
-    else while (i < n) { out(i) = a.getDouble(i) / norm; i += 1 }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      val norm = ctx.freshName("norm")
-      val out = ctx.freshName("out")
-      val bad = ctx.freshName("bad")
-      val nullCheck =
-        if (elemsNullable) s"if ($c.isNullAt($i)) { $bad = true; break; }"
-        else ""
-      s"""
-        int $n = $c.numElements();
-        double $s = 0.0;
-        boolean $bad = false;
-        for (int $i = 0; $i < $n; $i++) {
-          $nullCheck
-          double $v = (double) $c.$get($i);
-          $s += $v * $v;
-        }
-        double $norm = java.lang.Math.sqrt($s);
-        if ($bad || $norm == 0.0) {
-          ${ev.isNull} = true;
-        } else {
-          double[] $out = new double[$n];
-          for (int $i = 0; $i < $n; $i++) {
-            $out[$i] = (double) $c.$get($i) / $norm;
-          }
-          ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-        }
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.VectorKernel.normalize($a, $isFloat, $elemsNullable);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -406,94 +328,20 @@ case class L2Normalize(child: Expression) extends UnaryExpression {
   * input, a null element, or a dim mismatch with the plane matrix →
   * null (poison semantics, matching [[DotProduct]]). */
 case class SrpBandKeys(child: Expression, planes: Array[Double], bits: Int,
-                       bands: Int) extends UnaryExpression {
+                       bands: Int) extends UnaryExpression with VectorInputs {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_srp_band_keys"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorExprs.checkVec(prettyName, child.dataType, child.dataType)
-
-  private def isFloat = VectorExprs.elemOf(child.dataType) == FloatType
-
-  private def elemsNullable: Boolean = child.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (n * bands * bits != planes.length) return null
-    if (elemsNullable) {
-      var i = 0
-      while (i < n) { if (v.isNullAt(i)) return null; i += 1 }
-    }
-    val keys = new Array[Int](bands)
-    var p = 0
-    var b = 0
-    while (b < bands) {
-      var key = 0
-      var j = 0
-      while (j < bits) {
-        var s = 0.0
-        var d = 0
-        if (isFloat) while (d < n) { s += planes(p + d) * v.getFloat(d); d += 1 }
-        else while (d < n) { s += planes(p + d) * v.getDouble(d); d += 1 }
-        p += n
-        if (s > 0) key |= (1 << j)
-        j += 1
-      }
-      keys(b) = key
-      b += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(keys)
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.srpKeys(input.asInstanceOf[ArrayData], planes, bits, bands, isFloat, elemsNullable)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (isFloat) "getFloat" else "getDouble"
     val planesRef = ctx.addReferenceObj("srpPlanes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val keys = ctx.freshName("keys")
-      val p = ctx.freshName("p")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val s = ctx.freshName("s")
-      val key = ctx.freshName("key")
-      val bad = ctx.freshName("bad")
-      val i = ctx.freshName("i")
-      val nullElemCheck =
-        if (elemsNullable)
-          s"for (int $i = 0; $i < $n && !$bad; $i++) { if ($c.isNullAt($i)) $bad = true; }"
-        else ""
-      s"""
-        int $n = $c.numElements();
-        boolean $bad = ($n * $bands * $bits != $planesRef.length);
-        $nullElemCheck
-        if ($bad) {
-          ${ev.isNull} = true;
-        } else {
-          int[] $keys = new int[$bands];
-          int $p = 0;
-          for (int $b = 0; $b < $bands; $b++) {
-            int $key = 0;
-            for (int $j = 0; $j < $bits; $j++) {
-              double $s = 0.0;
-              for (int $d = 0; $d < $n; $d++) {
-                $s += $planesRef[$p + $d] * (double) $c.$get($d);
-              }
-              $p += $n;
-              if ($s > 0) $key |= (1 << $j);
-            }
-            $keys[$b] = $key;
-          }
-          ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($keys);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""${ev.value} = graft.functions.VectorKernel.srpKeys(
+         |  $v, $planesRef, $bits, $bands, $isFloat, $elemsNullable);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -30,47 +30,14 @@ object Dedup {
     *
     * Implemented as a native codegen expression
     * (graft.functions.Shingles): the interpreted HOF pipeline
-    * ([[shinglesExpr]]) measured ~1.4 ms/doc (~10x the whole LSH
+    * measured ~1.4 ms/doc (~10x the whole LSH
     * join), a JVM `udf` beat that but still paid the Catalyst
     * converter round-trip per row outside whole-stage codegen; the
     * native expression calls its shingle kernel directly inside the
-    * generated projection. Semantics pinned equal to both prior forms
-    * by DedupSpec. */
+    * generated projection. Semantics pinned equal to both prior forms,
+    * which live in DedupSpec. */
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.TextExprs.shingles(text, n)
-
-  /** The prior `udf` formulation, kept only to pin [[shingles]]'
-    * semantics in DedupSpec. */
-  private[graft] def shinglesUdf(text: Column, n: Int = 3): Column = {
-    val f = udf { (s: String) =>
-      if (s == null) null
-      else {
-        // Locale.ROOT (round 16): default-locale lowercasing makes
-        // shingles host-dependent (Turkish dotless-i), breaking both
-        // the bit-exact cross-engine oracle and cross-executor
-        // determinism on mixed-locale clusters; must stay pinned
-        // equal to ShingleKernel's mapping
-        val toks = s.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+")
-        if (toks.length < n) Array.empty[String]
-        else toks.sliding(n).map(_.mkString(" ")).distinct.toArray
-      }
-    }
-    f(text)
-  }
-
-  /** Reference formulation via Catalyst higher-order functions —
-    * interpreted and slow; kept to pin [[shingles]]' exact semantics
-    * in DedupSpec. */
-  private[graft] def shinglesExpr(text: Column, n: Int = 3): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    // sliding n-gram join: transform over start indices
-    array_distinct(
-      filter(
-        transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-          i => when(i + n <= size(toks),
-            concat_ws(" ", slice(toks, i + 1, lit(n)))).otherwise(lit(null))),
-        x => x.isNotNull))
-  }
 
   /** Engine-portable SimHash: a 60-bit locality-sensitive signature
     * (near token multisets → near signatures) from md5-derived

@@ -108,7 +108,7 @@ object Text {
     * (graft.functions.BigramTally, the [[Dedup.shingles]] kernel
     * pattern) returning just the two counts — no gram array ever
     * leaves the scan; semantics pinned equal to the udf formulation
-    * ([[bigramTallyUdf]]) in DedupSpec. Docs with < 2 tokens have no
+    * in DedupSpec. Docs with < 2 tokens have no
     * bigrams and are excluded (matching SQL semantics, where the
     * bigram relation is empty for them). */
   def repetitionScore(df: DataFrame, id: Column, text: Column): DataFrame = {
@@ -128,19 +128,6 @@ object Text {
       .select(col("doc_id"),
         (col("mx").cast("double") / col("n_tok")).as("top_tok_share"),
         (lit(1.0) - col("n_bg_d").cast("double") / col("n_bg")).as("dup_bigram_frac"))
-  }
-
-  /** The prior `udf` bigram-tally formulation, kept only to pin the
-    * native expression's semantics in DedupSpec. */
-  private[graft] def bigramTallyUdf(tokens: Column): Column = {
-    val f = udf { (t: Seq[String]) =>
-      if (t == null || t.length < 2) (0, 0)
-      else {
-        val grams = t.sliding(2).map(_.mkString(" ")).toArray
-        (grams.length, grams.distinct.length)
-      }
-    }
-    f(tokens)
   }
 
   /** PII / boilerplate scrub: redact email addresses and URLs with

@@ -17,32 +17,21 @@ import org.apache.spark.sql.functions._
   *    Sub-linear; the 100 TB path. Recall vs [[cosineTopK]] is the
   *    quality gate (VectorsSpec).
   *
-  * Cosine math uses higher-order functions (zip_with/aggregate) over
-  * the raw arrays — no per-row JVM UDF boxing, no mllib Vector
-  * conversion on the hot path.
+  * Cosine math runs on the native vector expressions of
+  * [[graft.functions.VectorExprs]] over the raw arrays — no per-row JVM
+  * UDF boxing, no mllib Vector conversion on the hot path.
   */
 object Vectors {
 
   /** Sequential left-to-right double accumulation — deterministic.
     * Native codegen expression (graft.functions.DotProduct): a tight
     * primitive loop over ArrayData, bit-identical to the
-    * higher-order-function fold it replaces ([[dotHof]], kept for the
-    * equivalence test) but allocation-free and whole-stage-codegen'd —
-    * the difference is ~5x on the similarity self-join hot path. */
+    * higher-order-function fold it replaces (VectorsSpec pins the two
+    * equal) but allocation-free and whole-stage-codegen'd — the
+    * difference is ~5x on the similarity self-join hot path. */
   def dot(a: Column, b: Column): Column = graft.functions.VectorExprs.dot(a, b)
 
   def l2norm(a: Column): Column = graft.functions.VectorExprs.l2norm(a)
-
-  /** Reference implementations via higher-order functions — interpreted
-    * and allocating; used only to pin the native expressions' exact
-    * semantics in VectorsSpec. */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  private[graft] def l2normHof(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
 
   /** Null for zero vectors (nullif guard) instead of a NaN/ANSI error;
     * the rank step drops null cosines, so zero vectors simply never
@@ -62,17 +51,10 @@ object Vectors {
     * once, norm once, one divide pass; bit-identical values and null
     * semantics (zero vectors and null-element vectors normalize to a
     * NULL ARRAY, filtered by callers' isNotNull guards — the
-    * round-15 drop-degenerates contract; [[normalizedHof]] pins the
-    * equivalence in VectorsSpec). */
+    * round-15 drop-degenerates contract; VectorsSpec pins the
+    * equivalence). */
   private[graft] def normalized(vec: Column): Column =
     graft.functions.VectorExprs.normalize(vec)
-
-  /** The replaced HOF formulation, kept ONLY to pin [[normalized]]'s
-    * exact semantics in VectorsSpec (the dotHof/l2normHof pattern). */
-  private[graft] def normalizedHof(vec: Column): Column = {
-    val n = nullif(l2normHof(vec), lit(0.0))
-    when(n.isNotNull, transform(vec, x => x.cast("double") / n))
-  }
 
   /** Per-query top-k rank via the map-side-truncating [[TopKByValue]]
     * aggregator — the scale-correct replacement for

@@ -854,6 +854,14 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.isEmpty, hits.mkString("graft.* system property reads:\n", "\n", ""))
   }
 
+  test("generated code calls a kernel: no expression writes its loop as Java source") {
+    // an expression's loop is one static kernel that interpreted eval
+    // and generated code both call; a Java loop in a codegen string is
+    // a second copy that only one of the two paths runs
+    val hits = sourceHits("", "freshName|code\"\"\"|for \\(int ".r)
+    assert(hits.isEmpty, hits.mkString("hand-written generated code:\n", "\n", ""))
+  }
+
   test("the streaming stores' __batch layout lives in BatchStore only") {
     // the partition write and the reserved compacted-partition id are
     // one decision; a second copy in a tier module drifts from it
@@ -969,13 +977,10 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("every public operator in ops, streaming and io has a caller outside the tests") {
-    // an operator no query key, workload or other operator calls is a
-    // second code path that only its own tests run. The keep list
-    // stays on purpose: srpParams/srpRecall are the LSH parameter math
-    // srpNearDups' scaladoc sends users to, and pruneAvroSchema is the
-    // strict single-generation contract
-    val keep = Set("srpParams", "srpRecall", "pruneAvroSchema")
+  /** `name (file:line)` of every `ops`/`streaming`/`io` member def
+    * matching `defLine` (its group 1 the name) that has no caller in
+    * `src/main` or `perfbench/src`. */
+  private def uncalledDefs(defLine: scala.util.matching.Regex): List[String] = {
     val files = scalaFiles("src/main") ++ scalaFiles("perfbench/src")
     val raw = files.map(f => f -> linesOf(f)).toMap
     // word -> the (file, line) sites using it in code: plain string
@@ -997,21 +1002,39 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
         t.nonEmpty && !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
           l.takeWhile(_ == ' ').length <= 2
       }
-      val defLine = s"\\bdef $name\\b".r
-      ls.indices.filter(i => defLine.findFirstIn(ls(i)).isDefined).toList.map { i =>
+      val defName = s"\\bdef $name\\b".r
+      ls.indices.filter(i => defName.findFirstIn(ls(i)).isDefined).toList.map { i =>
         val end = ls.indices.find(j => j > i && top(ls(j))).getOrElse(ls.length)
         i until end
       }
     }
-    val Def = """  def (\w+)\b.*""".r
-    val uncalled = for {
+    for {
       sub <- List("ops", "streaming", "io")
       f <- scalaFiles(s"src/main/scala/graft/$sub") if f.getParent.getFileName.toString == sub
-      (Def(name), i) <- linesOf(f).zipWithIndex
+      (l, i) <- linesOf(f).zipWithIndex
+      name <- defLine.findFirstMatchIn(l).map(_.group(1)).toList
       if uses.getOrElse(name, Nil).forall { case (g, j) =>
         g == f && bodies(f, name).exists(_.contains(j)) }
     } yield s"$name (${f.getFileName}:${i + 1})"
+  }
+
+  test("every public operator in ops, streaming and io has a caller outside the tests") {
+    // an operator no query key, workload or other operator calls is a
+    // second code path that only its own tests run. The keep list
+    // stays on purpose: srpParams/srpRecall are the LSH parameter math
+    // srpNearDups' scaladoc sends users to, and pruneAvroSchema is the
+    // strict single-generation contract
+    val keep = Set("srpParams", "srpRecall", "pruneAvroSchema")
+    val uncalled = uncalledDefs("""^  def (\w+)\b""".r)
     assert(uncalled.map(_.takeWhile(_ != ' ')).toSet == keep,
       uncalled.mkString("public defs with no caller in src/main or perfbench/src:\n", "\n", ""))
+  }
+
+  test("every package-private operator in ops, streaming and io has a caller outside the tests") {
+    // a reference formulation that only a spec calls lives in that
+    // spec, not in src/main; no keep list
+    val uncalled = uncalledDefs("""^  private\[\w+\] def (\w+)\b""".r)
+    assert(uncalled.isEmpty,
+      uncalled.mkString("package-private defs with no caller in src/main or perfbench/src:\n", "\n", ""))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.not
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{not, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Text}
@@ -21,6 +21,52 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (3L, "completely different content about spark query engines at scale"),
       (4L, "unrelated words nothing shared with anything else whatsoever here"))
       .toDF("doc_id", "text")
+  }
+
+  /** The `udf` formulation of [[Dedup.shingles]] it replaced, kept to
+    * pin the native expression's semantics. */
+  private def shinglesUdf(text: Column, n: Int = 3): Column = {
+    val f = udf { (s: String) =>
+      if (s == null) null
+      else {
+        // Locale.ROOT (round 16): default-locale lowercasing makes
+        // shingles host-dependent (Turkish dotless-i), breaking both
+        // the bit-exact cross-engine oracle and cross-executor
+        // determinism on mixed-locale clusters; must stay pinned
+        // equal to ShingleKernel's mapping
+        val toks = s.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+")
+        if (toks.length < n) Array.empty[String]
+        else toks.sliding(n).map(_.mkString(" ")).distinct.toArray
+      }
+    }
+    f(text)
+  }
+
+  /** The same shingles via Catalyst higher-order functions —
+    * interpreted and slow; a second reference formulation. */
+  private def shinglesExpr(text: Column, n: Int = 3): Column = {
+    import org.apache.spark.sql.functions._
+    val toks = split(trim(lower(text)), "\\s+")
+    // sliding n-gram join: transform over start indices
+    array_distinct(
+      filter(
+        transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
+          i => when(i + n <= size(toks),
+            concat_ws(" ", slice(toks, i + 1, lit(n)))).otherwise(lit(null))),
+        x => x.isNotNull))
+  }
+
+  /** The `udf` bigram-tally formulation the native
+    * `TextExprs.bigramTally` replaced, kept to pin its semantics. */
+  private def bigramTallyUdf(tokens: Column): Column = {
+    val f = udf { (t: Seq[String]) =>
+      if (t == null || t.length < 2) (0, 0)
+      else {
+        val grams = t.sliding(2).map(_.mkString(" ")).toArray
+        (grams.length, grams.distinct.length)
+      }
+    }
+    f(tokens)
   }
 
   test("jaccardPairsExact equals brute-force all-pairs at every threshold (prefix completeness)") {
@@ -242,15 +288,15 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val docs = spark.read.parquet(sf("documents"))
     val cmp = docs.select(
       Dedup.shingles($"text").as("fast"),
-      Dedup.shinglesUdf($"text").as("udf"),
-      Dedup.shinglesExpr($"text").as("ref"))
+      shinglesUdf($"text").as("udf"),
+      shinglesExpr($"text").as("ref"))
     assert(cmp.filter(not($"fast" <=> $"udf") || not($"fast" <=> $"ref")).count() == 0)
     // and on degenerate inputs: under-n tokens, empty string, null
     val edge = Seq(Some("one two"), Some("a"), Some(""), Some("x y z w"), None)
       .toDF("text")
       .select(Dedup.shingles($"text").as("fast"),
-        Dedup.shinglesUdf($"text").as("udf"),
-        Dedup.shinglesExpr($"text").as("ref"))
+        shinglesUdf($"text").as("udf"),
+        shinglesExpr($"text").as("ref"))
     assert(edge.filter(not($"fast" <=> $"udf")).count() == 0)
     // HOF returns [] for null input's split-null case only when text is
     // non-null; compare fast vs ref on the non-null rows
@@ -361,7 +407,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val toks = Text.wsTokens(org.apache.spark.sql.functions.lower($"text"))
     val cmp = docs.select(
       graft.functions.TextExprs.bigramTally(toks).as("fast"),
-      Text.bigramTallyUdf(toks).as("udf"))
+      bigramTallyUdf(toks).as("udf"))
     assert(cmp.filter(
       not($"fast.n_bg" <=> $"udf._1") || not($"fast.n_bg_d" <=> $"udf._2"))
       .count() == 0)
@@ -369,7 +415,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val edge = Seq("one", "a a a a a", "x y", "", "  ").toDF("text")
       .select(Text.wsTokens(org.apache.spark.sql.functions.lower($"text")).as("t"))
       .select(graft.functions.TextExprs.bigramTally($"t").as("fast"),
-        Text.bigramTallyUdf($"t").as("udf"))
+        bigramTallyUdf($"t").as("udf"))
     assert(edge.filter(
       not($"fast.n_bg" <=> $"udf._1") || not($"fast.n_bg_d" <=> $"udf._2"))
       .count() == 0)
@@ -380,7 +426,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val nullElems = Seq(Seq("a", null, "a"), Seq(null, null), Seq("x", null))
       .toDF("t")
       .select(graft.functions.TextExprs.bigramTally($"t").as("fast"),
-        Text.bigramTallyUdf($"t").as("udf"))
+        bigramTallyUdf($"t").as("udf"))
     assert(nullElems.filter(
       not($"fast.n_bg" <=> $"udf._1") || not($"fast.n_bg_d" <=> $"udf._2"))
       .count() == 0)

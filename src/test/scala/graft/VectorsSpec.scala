@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Vectors
@@ -8,6 +9,27 @@ import graft.ops.Vectors
   * geometry, and ANN recall against the brute-force oracle on real
   * embeddings. */
 class VectorsSpec extends AnyFunSuite with SparkTestBase {
+
+  // The higher-order-function formulations the native vector
+  // expressions replaced — interpreted and allocating; the oracles that
+  // pin the expressions' exact semantics.
+  private def dotHof(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.functions.{aggregate, lit, zip_with}
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+  }
+
+  private def l2normHof(a: Column): Column = {
+    import org.apache.spark.sql.functions.{aggregate, lit, sqrt, transform}
+    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, v) => acc + v))
+  }
+
+  private def normalizedHof(vec: Column): Column = {
+    import org.apache.spark.sql.functions.{lit, nullif, transform, when}
+    val n = nullif(l2normHof(vec), lit(0.0))
+    when(n.isNotNull, transform(vec, x => x.cast("double") / n))
+  }
 
   test("cosineTopK ranks an obvious geometry correctly") {
     import spark.implicits._
@@ -150,9 +172,9 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     val emb = spark.read.parquet(sf("embeddings"))
     val cmp = emb.select(
       Vectors.dot($"embedding", $"embedding").as("dn"),
-      Vectors.dotHof($"embedding", $"embedding").as("dh"),
+      dotHof($"embedding", $"embedding").as("dh"),
       Vectors.l2norm($"embedding").as("nn"),
-      Vectors.l2normHof($"embedding").as("nh"))
+      l2normHof($"embedding").as("nh"))
     // bitwise equality — same IEEE accumulation order, not "close"
     val bad = cmp.filter($"dn" =!= $"dh" || $"nn" =!= $"nh").count()
     assert(bad == 0)
@@ -166,7 +188,7 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     val emb = spark.read.parquet(sf("embeddings"))
     val cmp = emb.select(
       Vectors.normalized($"embedding").as("nn"),
-      Vectors.normalizedHof($"embedding").as("nh"))
+      normalizedHof($"embedding").as("nh"))
     val bad = cmp.filter(!($"nn" <=> $"nh")).count()
     assert(bad == 0, "normalized() must equal the transform/lambda formulation bitwise")
     // degenerate shapes: null input, null element, zero vector -> null
@@ -182,7 +204,7 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
         Row(3L, Seq(0.0f, 0.0f))),
       schema)
     val got = rows.select($"id",
-      Vectors.normalized($"v").as("nn"), Vectors.normalizedHof($"v").as("nh"))
+      Vectors.normalized($"v").as("nn"), normalizedHof($"v").as("nh"))
       .orderBy($"id").collect()
     assert(got(0).getSeq[Double](1) == Seq(0.6, 0.8) &&
       got(0).getSeq[Double](1) == got(0).getSeq[Double](2))
@@ -242,8 +264,8 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
         Row(2L, Seq(1.0f, 2.0f), Seq(null, 4.0f))),
       schema)
     val got = rows.select($"id",
-      Vectors.dot($"a", $"b").as("dn"), Vectors.dotHof($"a", $"b").as("dh"),
-      Vectors.l2norm($"a").as("nn"), Vectors.l2normHof($"a").as("nh"))
+      Vectors.dot($"a", $"b").as("dn"), dotHof($"a", $"b").as("dh"),
+      Vectors.l2norm($"a").as("nn"), l2normHof($"a").as("nh"))
       .orderBy($"id").collect()
     // row 0: clean -> equal non-null values both ways
     assert(got(0).getDouble(1) == 11.0 && got(0).getDouble(2) == 11.0)
@@ -740,5 +762,129 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(got(0).getDouble(3) === lut(3) + lut(16 + 5))
     assert(got(1).isNullAt(3), "code byte == ksub must poison to null")
     assert(got(2).isNullAt(3), "code byte 255 with ksub=16 must poison to null")
+  }
+
+  test("generated code of every native vector and min-hash expression equals its interpreted eval bit for bit") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.sql.types._
+    import graft.functions.{MinHashExprs, VectorExprs}
+    // inputs go through parquet: a projection over a local relation is
+    // evaluated interpreted, so only a file scan runs the generated code
+    val rnd = new scala.util.Random(1729)
+    val dim = 8
+    def vec(nullable: Boolean, double: Boolean): Any = {
+      // boxed, so a float never widens to a double
+      def num(d: Double, f: Float): Any =
+        if (double) java.lang.Double.valueOf(d) else java.lang.Float.valueOf(f)
+      def x: Any = { val g = rnd.nextGaussian(); num(g, g.toFloat) }
+      rnd.nextInt(12) match {
+        case 0 => null                                      // null row
+        case 1 => Seq.fill(dim)(num(0.0, 0.0f))             // zero vector
+        case 2 if nullable => Seq.tabulate(dim)(i => if (i == 3) null else x)
+        case 3 => Seq.tabulate(dim)(i => if (i == 5) num(Double.NaN, Float.NaN) else x)
+        case 4 => Seq.fill(dim - 1)(x)                      // length / dimension mismatch
+        case 5 => Seq.empty
+        case 6 => Seq.tabulate(dim)(i => if (i == 0) num(Double.MaxValue, Float.MaxValue) else x)
+        case 7 => Seq.tabulate(dim)(i => if (i == 1) num(-0.0, -0.0f) else x)
+        case _ => Seq.fill(dim)(x)
+      }
+    }
+    val (m, ksub) = (4, 16)
+    val rows = (0 until 600).map { id =>
+      val code = rnd.nextInt(8) match {
+        case 0 => null
+        case 1 => Array.fill(m)(rnd.nextInt(ksub).toByte).updated(rnd.nextInt(m), ksub.toByte)
+        case 2 => Array.fill(m)(rnd.nextInt(ksub).toByte).updated(rnd.nextInt(m), 255.toByte)
+        case _ => Array.fill(m)(rnd.nextInt(ksub).toByte)
+      }
+      val lut = rnd.nextInt(8) match {
+        case 0 => null
+        case 1 => Seq.fill(m * ksub - 1)(rnd.nextGaussian())  // wrong size
+        case _ => Seq.fill(m * ksub)(rnd.nextGaussian())
+      }
+      val sh = rnd.nextInt(6) match {
+        case 0 => null
+        case 1 => Seq.empty
+        case 2 => Seq("a b c", null, "b c d")
+        case 3 => Seq(null, null)
+        case _ => Seq.fill(1 + rnd.nextInt(5))(s"w${rnd.nextInt(20)} w${rnd.nextInt(20)}")
+      }
+      Row(id.toLong, vec(nullable = true, double = false), vec(nullable = true, double = false),
+        vec(nullable = false, double = false), vec(nullable = true, double = true),
+        vec(nullable = true, double = true), vec(nullable = false, double = true), code, lut, sh)
+    }
+    def arr(name: String, et: DataType, containsNull: Boolean) =
+      StructField(name, ArrayType(et, containsNull))
+    val schema = StructType(Seq(StructField("id", LongType),
+      arr("fa", FloatType, true), arr("fb", FloatType, true), arr("fn", FloatType, false),
+      arr("da", DoubleType, true), arr("db", DoubleType, true), arr("dn", DoubleType, false),
+      StructField("code", BinaryType), arr("lut", DoubleType, false), arr("sh", StringType, true)))
+    val dir = "/tmp/graft_test/codegen_pin"
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).write.mode("overwrite").parquet(dir)
+
+    val planes = Array.fill(4 * 3)(Array.fill(dim)(rnd.nextGaussian()))
+    val vecCols = Seq("fa", "fn", "da", "dn")
+    val native: Seq[(String, Column)] =
+      Seq("dot_f" -> VectorExprs.dot(col("fa"), col("fb")),
+        "dot_fn" -> VectorExprs.dot(col("fn"), col("fa")),
+        "dot_d" -> VectorExprs.dot(col("da"), col("db")),
+        "dot_dn" -> VectorExprs.dot(col("dn"), col("dn"))) ++
+        vecCols.map(c => s"norm_$c" -> VectorExprs.l2norm(col(c))) ++
+        vecCols.map(c => s"unit_$c" -> VectorExprs.normalize(col(c))) ++
+        vecCols.map(c => s"srp_$c" -> VectorExprs.srpBandKeys(col(c), planes, 3, 4)) ++
+        Seq("adc" -> VectorExprs.pqAdc(col("code"), col("lut"), ksub),
+          "minhash" -> MinHashExprs.minhashMinima(col("sh"), 6))
+    val oracle: Seq[(String, Column)] =
+      Seq("dot_f" -> dotHof(col("fa"), col("fb")), "dot_fn" -> dotHof(col("fn"), col("fa")),
+        "dot_d" -> dotHof(col("da"), col("db")), "dot_dn" -> dotHof(col("dn"), col("dn"))) ++
+        vecCols.map(c => s"norm_$c" -> l2normHof(col(c))) ++
+        vecCols.map(c => s"unit_$c" -> normalizedHof(col(c)))
+    // raw IEEE bits, so NaN payloads and signed zeros count
+    def bits(v: Any): String = v match {
+      case null => "null"
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+      case s: scala.collection.Seq[_] => s.map(bits).mkString("[", ",", "]")
+      case other => other.toString
+    }
+    // a parquet scan reads every array as containsNull = true; the ADC
+    // lut is re-typed null-free by a udf, as the LUT builder's is
+    val nullFree = udf((l: Seq[Double]) => if (l == null) null else l.toArray)
+    def eval(s: SparkSession, cols: Seq[(String, Column)]) = {
+      val df = s.read.parquet(dir).withColumn("lut", nullFree(col("lut")))
+        .select(col("id") +: cols.map { case (n, c) => c.as(n) }: _*)
+      val rows = df.collect().toSeq.sortBy(_.getLong(0))
+      (df.queryExecution.executedPlan, cols.map(_._1).zipWithIndex.map { case (n, i) =>
+        n -> rows.map(r => r.getLong(0) -> bits(r.get(i + 1))) }.toMap)
+    }
+    def session(conf: (String, String)*) = {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    }
+    // generated: whole-stage codegen, with a failed compile raising
+    // instead of falling back to interpreted eval
+    val gen = session("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+    val interp = session("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val (genPlan, genOut) = eval(gen, native)
+    val (interpPlan, interpOut) = eval(interp, native)
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    assert(genPlan.collect { case w: WholeStageCodegenExec => w }.nonEmpty, genPlan.toString)
+    assert(interpPlan.collect { case w: WholeStageCodegenExec => w }.isEmpty, interpPlan.toString)
+    for ((name, _) <- native) {
+      val diff = genOut(name).zip(interpOut(name)).filter { case (g, i) => g != i }
+      assert(diff.isEmpty, s"$name: generated vs interpreted differ, first ${diff.take(3)}")
+      // every expression meets both a null and a defined result
+      val vs = genOut(name).map(_._2)
+      assert(vs.contains("null") && vs.exists(_ != "null"), s"$name: inputs miss a case")
+    }
+    // and both paths equal the higher-order-function oracles
+    val (_, oracleOut) = eval(interp, oracle)
+    for ((name, _) <- oracle) {
+      val diff = genOut(name).zip(oracleOut(name)).filter { case (g, o) => g != o }
+      assert(diff.isEmpty, s"$name: native vs HOF oracle differ, first ${diff.take(3)}")
+    }
   }
 }
