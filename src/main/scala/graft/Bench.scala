@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 object Bench {
 
   /** Locale-ROOT decimal formatting for every number that lands in the
@@ -553,19 +553,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // container is 32-way (local[32], 128 GiB) — shuffle.partitions
     // matches so every core gets exactly one shuffle partition
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val nCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.localSession(nCpus)
     val loadStart = loadAvg1m()
-    // graft_dot / graft_l2norm SQL functions callable in this session
-    // too, matching the spec-tested register path
-    GraftExtensions.register(spark)
     // In-round iteration hook: SPARK_GRAFT_BENCH_KEYS=k1,k2 times just
     // those keys. Read HERE, before the prebuilds, so a filtered
     // triage run skips index/bucketing builds its keys never touch
@@ -811,7 +801,6 @@ object Bench {
     // unadjudicable without an isolated rerun. steal_frac_keys says
     // directly whether the host was being robbed DURING that key.
     var keySteal = Map.empty[String, Double]
-    val nCpus = cpus.toInt
     val stealStart = stealJiffies()
     val suiteStartNanos = System.nanoTime()
     // SORTED key order (round 12): SparkEntry.queries is a hash map,

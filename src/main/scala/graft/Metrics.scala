@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Process-wide scale-variable registry: operators whose cost is
   * dominated by a DATA-DEPENDENT intermediate (candidate-pair volume
   * in the similarity self-joins, band-collision counts) record it
@@ -17,7 +20,14 @@ package graft
   * scope per key ([[withScope]]), and every counter recorded inside it
   * lands as `<key>.<counter>` — both callers' phase numbers coexist in
   * bench_full.json. Records outside any scope (the untimed pre-builds,
-  * Verify, specs) keep their raw names. */
+  * Verify, specs) keep their raw names.
+  *
+  * PHASES: an eager step is timed and named in one place, [[phase]].
+  * Its wall lands under its counter, and every Spark job it starts
+  * carries `<scope>/<counter>` as its job description, so a job
+  * listing reads back to the counter that timed it. [[counted]] is the
+  * one observed-count checkpoint: a row count read off the job that
+  * materializes the rows. */
 object Metrics {
   private val counters = scala.collection.concurrent.TrieMap.empty[String, Long]
 
@@ -67,10 +77,50 @@ object Metrics {
     * caller scope if one is open — and still open process-wide (see
     * [[open]]: stale inherited scopes degrade to raw names). */
   def record(name: String, value: Long): Unit = {
-    counters.put(scope.value.filter(open.containsKey)
-      .map(_ + "." + name).getOrElse(name), value)
+    counters.put(scoped(name), value)
     ()
   }
+
+  /** `name` under the open caller scope, if any, joined by `sep`. */
+  private def scoped(name: String, sep: String = "."): String =
+    scope.value.filter(open.containsKey).map(_ + sep + name).getOrElse(name)
+
+  /** Run `body` as the phase `counter`: the Spark jobs it starts (AQE's
+    * stage jobs included) carry the job description `<scope>/<counter>`,
+    * or the bare counter outside any open scope, and its wall in ms is
+    * [[record]]ed under `counter` when it returns normally (a throw
+    * records nothing). The previous description is restored on either
+    * exit, so phases nest. Streaming micro-batches set their own
+    * description and stay unnamed. */
+  def phase[T](counter: String)(body: => T): T = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val outer = sc.map(_.getLocalProperty("spark.job.description")).orNull
+    sc.foreach(_.setJobDescription(scoped(counter, "/")))
+    try {
+      val t0 = System.nanoTime()
+      val out = body
+      record(counter, (System.nanoTime() - t0) / 1000000L)
+      out
+    } finally sc.foreach(_.setJobDescription(outer))
+  }
+
+  /** `df` materialized by one eager local checkpoint, with its row count
+    * observed during that same job (no separate `count()`). */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val out = df.observe(obs, count(lit(1)).as("__rows")).localCheckpoint(true)
+    (out, observedCount(obs, "__rows"))
+  }
+
+  /** Blocking read of an observed row-count metric. A missing key reads
+    * 0: when AQE proves the observed subtree empty (an alien probe
+    * sharing no shingles), Catalyst's empty-relation propagation prunes
+    * the CollectMetrics node and the observation completes WITHOUT the
+    * metric — and pruning happens only under provable emptiness, so 0
+    * is the exact count, not a guess. */
+  private[graft] def observedCount(obs: Observation, name: String): Long =
+    obs.get.get(name).map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** Accumulate into a named counter (same scoping rules as
     * [[record]]) — for per-task contributions that sum to a phase
@@ -82,8 +132,7 @@ object Metrics {
     * bench (local[32] by design) sees them; a cluster job should not
     * rely on them. Driver-side records are unaffected. */
   def add(name: String, value: Long): Unit = {
-    val key = scope.value.filter(open.containsKey)
-      .map(_ + "." + name).getOrElse(name)
+    val key = scoped(name)
     var done = false
     while (!done) counters.get(key) match {
       case None => done = counters.putIfAbsent(key, value).isEmpty

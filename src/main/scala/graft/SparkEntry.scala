@@ -25,6 +25,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     HarnessCore.q1Agg(spark, "/root/testdata/sf0.001")
 
+  /** The local session Bench, Verify and the tools run in: `local[n]`
+    * with `n` shuffle partitions (one per core), no UI, UTC, and
+    * events.parquet's TIMESTAMP(NANOS) read as long ns (Spark has no ns
+    * type; the queries convert exactly), WARN logging and the graft SQL
+    * functions registered. */
+  def localSession(n: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(spark)
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     HarnessCore.queries ++ HarnessStream.queries ++ HarnessLLM.queries ++

@@ -130,13 +130,14 @@ object VectorKernel {
   }
 
   /** Whether [[adc]] is defined: `lut` holds `codes.length * ksub`
-    * entries, and every code byte is below `ksub`. A code byte >= ksub
-    * (a corrupt or foreign code column when ksub < 256) would index
-    * another subspace's LUT region — or past the lut entirely, which
-    * UnsafeArrayData does NOT bounds check — so it poisons to null like
-    * the size mismatch. */
-  def adcDefined(codes: Array[Byte], lut: ArrayData, ksub: Int): Boolean =
-    lut.numElements() == codes.length * ksub && {
+    * entries, none of them null, and every code byte is below `ksub`.
+    * A code byte >= ksub (a corrupt or foreign code column when
+    * ksub < 256) would index another subspace's LUT region — or past
+    * the lut entirely, which UnsafeArrayData does NOT bounds check — so
+    * it poisons to null like the size mismatch. */
+  def adcDefined(codes: Array[Byte], lut: ArrayData, ksub: Int,
+                 lutNullable: Boolean): Boolean =
+    lut.numElements() == codes.length * ksub && !anyNull(lut, lutNullable) && {
       var i = 0
       while (i < codes.length && (codes(i) & 0xFF) < ksub) i += 1
       i == codes.length
@@ -263,11 +264,12 @@ case class L2Norm(child: Expression) extends UnaryExpression with VectorInputs {
   * that makes a 100 TB corpus ADC-searchable at ~1/32 the bytes.
   *
   * Null semantics: null codes or null lut → null; a lut sized
-  * differently from codes.length*ksub (a codebook/codes mismatch) or a
-  * code byte >= ksub → null ([[VectorKernel.adcDefined]]), poisoning
-  * the rank step rather than mis-scoring. lut is an
-  * ArrayType(Double, containsNull=false) produced by the LUT builder,
-  * so no element is checked for null. */
+  * differently from codes.length*ksub (a codebook/codes mismatch), a
+  * null lut element or a code byte >= ksub → null
+  * ([[VectorKernel.adcDefined]]), poisoning the rank step rather than
+  * mis-scoring. Elements are checked for null only when the lut's type
+  * admits them: the LUT builder's arrays are null-free, a lut read back
+  * from a file source is typed `containsNull = true`. */
 case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
   extends BinaryExpression {
 
@@ -276,22 +278,28 @@ case class PqAdcScore(left: Expression, right: Expression, ksub: Int)
   override def prettyName: String = "graft_pq_adc"
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (BinaryType, ArrayType(DoubleType, false)) if ksub >= 1 && ksub <= 256 =>
+    case (BinaryType, ArrayType(DoubleType, _)) if ksub >= 1 && ksub <= 256 =>
       TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (binary codes, array<double> lut not null) and ksub in [1,256], " +
+      s"$prettyName requires (binary codes, array<double> lut) and ksub in [1,256], " +
         s"got (${left.dataType}, ${right.dataType}) ksub=$ksub")
+  }
+
+  private def lutNullable: Boolean = right.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
   }
 
   override def nullSafeEval(codesAny: Any, lutAny: Any): Any = {
     val codes = codesAny.asInstanceOf[Array[Byte]]
     val lut = lutAny.asInstanceOf[ArrayData]
-    if (VectorKernel.adcDefined(codes, lut, ksub)) VectorKernel.adc(codes, lut, ksub) else null
+    if (VectorKernel.adcDefined(codes, lut, ksub, lutNullable)) VectorKernel.adc(codes, lut, ksub)
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (codes, lut) =>
-      s"""${ev.isNull} = !graft.functions.VectorKernel.adcDefined($codes, $lut, $ksub);
+      s"""${ev.isNull} = !graft.functions.VectorKernel.adcDefined($codes, $lut, $ksub, $lutNullable);
          |if (!${ev.isNull}) ${ev.value} = graft.functions.VectorKernel.adc($codes, $lut, $ksub);""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =

@@ -56,7 +56,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * writer-scale decode rescaled to the reader's type; previously the
   * raw bytes leaked out as BinaryType). Column pruning recurses INTO nested records: Spark's nested
   * schema pruning hands the scan a struct containing only the touched
-  * subfields, and [[AvroConversions.pruneAvroSchema]] mirrors that
+  * subfields, and [[AvroConversions.evolvedReaderSchema]] mirrors that
   * subtree into the reader schema, so untouched sibling subfields of
   * a wide nested record are skipped at the decoder like dropped
   * top-level columns. Multi-branch non-null unions (round 14) read
@@ -407,7 +407,7 @@ private[graft] object AvroConversions {
     * full name as a REFERENCE to the first, silently giving one record
     * the other's shape.) Readers never depend on these names:
     * `toSparkSchema` ignores them, and resolution matches the reader
-    * schema built by [[pruneAvroSchema]], which preserves writer
+    * schema built by [[evolvedReaderSchema]], which preserves writer
     * names. */
   def toAvroSchema(schema: StructType, recordName: String = "graft_row"): ASchema =
     structToRecord(schema, recordName,
@@ -471,19 +471,16 @@ private[graft] object AvroConversions {
     * subfields, and the reader-schema subtree mirrors it — untouched
     * siblings inside a nested record are skipped by resolution like
     * dropped top-level columns (record names/namespaces are
-    * preserved, which is what resolution matches records by). */
-  def pruneAvroSchema(writer: ASchema, required: StructType): ASchema =
-    evolvedRecord(writer, None, required)
-
-  /** [[pruneAvroSchema]] widened for MIXED-GENERATION directories
-    * (round 15): resolves `required` against THIS file's writer
-    * schema, falling back to the elected dataset schema
+    * preserved, which is what resolution matches records by).
+    *
+    * MIXED-GENERATION directories (round 15): resolves `required`
+    * against THIS file's writer schema, falling back to the elected
+    * dataset schema
     * ([[Avro.datasetReaderSchema]]) for fields the writer generation
     * does not carry. Three shapes per required field, the Avro
     * schema-resolution rules exactly:
     *  - writer HAS the field by name: the pruned writer subtree (the
-    *    single-generation fast path — byte-identical behavior to
-    *    [[pruneAvroSchema]]);
+    *    single-generation fast path);
     *  - a dataset-schema ALIAS of the field names a writer field (the
     *    rename evolution): the reader field takes the required name
     *    plus that alias, over the pruned writer subtree — Avro's
@@ -508,8 +505,8 @@ private[graft] object AvroConversions {
     evolvedRecord(writer, Some(dataset), required)
 
   /** One record level of [[evolvedReaderSchema]] (dataset = None is
-    * the strict single-generation contract [[pruneAvroSchema]]:
-    * every required field must exist in the writer record). */
+    * the strict single-generation contract: every required field must
+    * exist in the writer record). */
   private def evolvedRecord(writer: ASchema, dataset: Option[ASchema],
                             required: StructType): ASchema = {
     val byName = writer.getFields.asScala.map(f => f.name() -> f).toMap
@@ -786,7 +783,7 @@ private[graft] object AvroConversions {
     case st: StructType =>
       // field positions resolved BY NAME, never positionally: on a
       // pruned reader record the order matches `st` anyway
-      // ([[pruneAvroSchema]]), but BELOW a multi-branch union the
+      // ([[evolvedReaderSchema]]), but BELOW a multi-branch union the
       // record is the UNPRUNED writer branch (pruning stops at the
       // union — see [[pruneTypeSchema]]) while `st` is Spark's pruned
       // subset, and a positional zip there silently pairs converters

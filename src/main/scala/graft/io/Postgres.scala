@@ -3,7 +3,7 @@ package graft.io
 import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+import java.time.{LocalDateTime, ZoneOffset}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -195,46 +195,6 @@ object PgWire {
     else Some("'" + formatTimestampMicros(micros) + "'")
   }
 
-  /** Text-format value -> Catalyst, per Spark type (UTC + ISO
-    * DateStyle pinned at session start). */
-  def textToCatalyst(dt: DataType): Array[Byte] => Any = dt match {
-    case StringType => bytes => UTF8String.fromBytes(bytes)
-    case IntegerType => bytes => new String(bytes, UTF_8).toInt
-    case LongType => bytes => new String(bytes, UTF_8).toLong
-    case FloatType => bytes => new String(bytes, UTF_8).toFloat
-    case DoubleType => bytes => new String(bytes, UTF_8).toDouble
-    case BooleanType => bytes => bytes.length == 1 && bytes(0) == 't'
-    // the write side maps ByteType/ShortType/TimestampNTZType onto
-    // smallint/timestamp, so an explicit user schema naming them must
-    // read back (round-15 review: the round-trip asymmetry made
-    // supportsExternalMetadata a trap for the sink's own schemas)
-    case ShortType => bytes => new String(bytes, UTF_8).toShort
-    case ByteType => bytes => new String(bytes, UTF_8).toByte
-    case DateType => bytes =>
-      LocalDate.parse(new String(bytes, UTF_8)).toEpochDay.toInt
-    case TimestampType | TimestampNTZType =>
-      bytes => parseTimestampMicros(new String(bytes, UTF_8))
-    case d: DecimalType => bytes =>
-      org.apache.spark.sql.types.Decimal(
-        new java.math.BigDecimal(new String(bytes, UTF_8)), d.precision, d.scale)
-    case BinaryType => bytes => {
-      // bytea text output is hex: \x<2 hex digits per byte>
-      val s = new String(bytes, UTF_8)
-      require(s.startsWith("\\x"),
-        s"graft_pg: unexpected bytea text encoding: ${s.take(8)}")
-      val out = new Array[Byte]((s.length - 2) / 2)
-      var i = 0
-      while (i < out.length) {
-        out(i) = ((Character.digit(s.charAt(2 + 2 * i), 16) << 4) |
-          Character.digit(s.charAt(3 + 2 * i), 16)).toByte
-        i += 1
-      }
-      out
-    }
-    case other => throw new IllegalArgumentException(
-      s"graft_pg: unsupported read type $other")
-  }
-
   /** PG epoch (2000-01-01) offsets from the Unix epoch: binary date is
     * int32 days and binary timestamp[tz] int64 micros, both from
     * 2000-01-01 UTC. */
@@ -340,35 +300,6 @@ object PgWire {
     }
   }
 
-  /** "yyyy-MM-dd HH:mm:ss[.ffffff]" (ISO, UTC session) -> epoch
-    * micros. Manual parse: the fraction is 0-6 digits and
-    * LocalDateTime.parse wants a 'T'. */
-  def parseTimestampMicros(raw: String): Long = {
-    // timestamptz text carries a zone suffix after the time part
-    // ("...12:34:56.5+00" under the UTC session); the instant is
-    // already UTC, so the suffix strips. Zone sign can only appear
-    // past index 10 (the date's own dashes sit at 4 and 7).
-    val zs = {
-      val plus = raw.indexOf('+', 11)
-      val minus = raw.indexOf('-', 11)
-      if (plus >= 0) plus else minus
-    }
-    val s = if (zs >= 0) {
-      require(raw.substring(zs) == "+00" || raw.substring(zs) == "+00:00",
-        s"graft_pg: non-UTC timestamptz text '$raw' — the session pins " +
-          "TimeZone=UTC, so any other offset means the pin was lost")
-      raw.substring(0, zs)
-    } else raw
-    val dot = s.indexOf('.')
-    val (base, frac) =
-      if (dot < 0) (s, 0L)
-      else (s.substring(0, dot),
-        (s.substring(dot + 1) + "000000").take(6).toLong)
-    val ldt = LocalDateTime.parse(base.replace(' ', 'T'))
-    Math.addExact(Math.multiplyExact(ldt.toEpochSecond(ZoneOffset.UTC), 1000000L),
-      frac)
-  }
-
   /** Epoch micros -> the ISO text Postgres parses back exactly.
     * LocalTime.toString prints the fraction whenever the nano is
     * nonzero (and PG accepts the seconds-dropped ":HH:MM" form), so
@@ -391,8 +322,9 @@ object PgWire {
     * stage COPY skips the per-cell text render AND the server's
     * per-cell input parse (nulls are the caller's int32 -1). The
     * representations are exactly the DataRow binary ones; the
-    * differential spec fuzz (write binary, read binary AND text)
-    * cross-validates them against the server's own recv/send pair. */
+    * differential spec fuzz (write binary, read binary, compare with
+    * the server's text rendering) cross-validates them against the
+    * server's own recv/send pair. */
   def binaryCellWriter(dt: DataType): (org.apache.spark.sql.catalyst.expressions.SpecializedGetters, Int, DataOutputStream) => Unit = dt match {
     case BooleanType => (r, i, o) =>
       { o.writeInt(1); o.writeByte(if (r.getBoolean(i)) 1 else 0) }
@@ -1416,8 +1348,7 @@ private[io] case class PgSourceOptions(host: String, port: Int, database: String
                                        user: String, password: Option[String],
                                        sslMode: String, sslRootCert: Option[String],
                                        table: String,
-                                       partition: Option[(String, Long, Long, Int)],
-                                       readFormat: String = "binary") {
+                                       partition: Option[(String, Long, Long, Int)]) {
   def newClient(socketTimeoutMs: Int = 600000): PgWireClient =
     new PgWireClient(host, port, user, database, password,
       socketTimeoutMs = socketTimeoutMs, sslMode = sslMode,
@@ -1443,12 +1374,7 @@ private[io] object PgSourceOptions {
         .getOrElse("disable"),
       sslRootCert = Option(options.get("sslrootcert")).filter(_.nonEmpty),
       table = req("dbtable"),
-      partition = part,
-      readFormat = Option(options.get("readformat")).getOrElse("binary") match {
-        case f @ ("binary" | "text") => f
-        case other => throw new IllegalArgumentException(
-          s"graft_pg: readformat must be binary|text, got '$other'")
-      })
+      partition = part)
   }
 }
 
@@ -1982,21 +1908,16 @@ private[io] case class PgReaderFactory(required: StructType, opts: PgSourceOptio
 
 /** Executor-side reader: one wire connection streaming one slice.
   * Projection happens server-side (the SELECT list is the pruned
-  * schema), so the wire carries only the touched columns. Default
-  * result format is BINARY over the extended-query cycle (decode
-  * instead of text re-parse — the per-row floor of the text path);
-  * `readformat=text` keeps the simple-query text cycle reachable for
-  * comparison. Each slice accumulates its wall into a
-  * `pg_read_<format>_ms` counter so a bench run splits the two read
-  * paths' cost directly. */
+  * schema), so the wire carries only the touched columns. The result
+  * format is BINARY over the extended-query cycle (decode instead of
+  * text re-parse — the per-row floor of a text read). Each slice
+  * accumulates its wall into the `pg_read_binary_ms` counter. */
 private[io] class PgPartitionReader(p: PgRangePartition, required: StructType,
                                     opts: PgSourceOptions)
     extends PartitionReader[InternalRow] {
 
-  private val binary = opts.readFormat == "binary"
-  private var convs: Array[Array[Byte] => Any] =
-    if (binary) null // built from the RowDescription's OIDs at open()
-    else required.fields.map(f => PgWire.textToCatalyst(f.dataType))
+  // built from the RowDescription's OIDs at open()
+  private var convs: Array[Array[Byte] => Any] = _
   private var client: PgWireClient = _
   private var result: PgWireClient#PgResult = _
   private var row: Array[Array[Byte]] = _
@@ -2008,16 +1929,14 @@ private[io] class PgPartitionReader(p: PgRangePartition, required: StructType,
       if (required.isEmpty) "1" // COUNT(*)-style scans read no columns
       else required.fields.map(f => PgWire.quoteIdent(f.name)).mkString(", ")
     val sql = s"SELECT $cols FROM ${PgWire.quoteIdent(opts.table)}${p.whereSql}"
-    if (binary) {
-      result = client.queryBinary(sql)
-      // decode by the wire's OID, checked against the scan's Spark
-      // type — except the zero-column probe row, which is never read
-      convs =
-        if (required.isEmpty) Array.empty
-        else result.cols.zip(required.fields).map { case (c, f) =>
-          PgWire.binaryToCatalyst(c.oid, f.dataType)
-        }
-    } else result = client.query(sql)
+    result = client.queryBinary(sql)
+    // decode by the wire's OID, checked against the scan's Spark
+    // type — except the zero-column probe row, which is never read
+    convs =
+      if (required.isEmpty) Array.empty
+      else result.cols.zip(required.fields).map { case (c, f) =>
+        PgWire.binaryToCatalyst(c.oid, f.dataType)
+      }
   }
 
   override def next(): Boolean = {
@@ -2038,7 +1957,6 @@ private[io] class PgPartitionReader(p: PgRangePartition, required: StructType,
 
   override def close(): Unit = {
     if (client != null) client.close()
-    graft.Metrics.add(s"pg_read_${opts.readFormat}_ms",
-      (System.nanoTime() - t0) / 1000000L)
+    graft.Metrics.add("pg_read_binary_ms", (System.nanoTime() - t0) / 1000000L)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The banded-collision join every LSH-style dedup family makes its
@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * ([[Multimodal]]). A BANDED relation is `(id, __band, __key)` plus
   * optional payload columns; two rows collide iff they agree on
   * `(__band, __key)`. Each family keeps only what is its own: how it
-  * bands, which counter it records, and its exact rescore.
+  * bands, which counter it records, and its exact rescore. Families
+  * materialize their pairs with [[graft.Metrics.counted]], which reads
+  * the candidate volume off the same job.
   *
   * Only ids (and a probe's payload) travel through the band exchange,
   * and a pair colliding in several bands appears once per collision,
@@ -49,15 +51,5 @@ private[graft] object Bands {
     probe.join(corpus.join(Dedup.maybeBroadcast(pKeys), keys, "left_semi"), keys)
       .drop(keys: _*)
       .distinct()
-  }
-
-  /** `pairs` materialized by one eager local checkpoint, with its row
-    * count observed during that same job (no separate `count()`): the
-    * candidate volume each family records as its scale counter and
-    * sizes its rescore by. */
-  def counted(pairs: DataFrame): (DataFrame, Long) = {
-    val obs = Observation()
-    val out = pairs.observe(obs, count(lit(1)).as("__cand")).localCheckpoint(true)
-    (out, Dedup.observedCount(obs, "__cand"))
   }
 }

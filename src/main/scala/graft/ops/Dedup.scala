@@ -143,7 +143,7 @@ object Dedup {
     // sibling).
     val banded = portableBandSignatures(sh, id, shCol, numHashes, bands)
       .persist()
-    val (cand, candRows) = Bands.counted(Bands.selfJoin(banded, id))
+    val (cand, candRows) = graft.Metrics.counted(Bands.selfJoin(banded, id))
     graft.Metrics.record("minhash_band_candidates", candRows)
     banded.unpersist(blocking = false)
     rescoreJaccard(cand, sh, id, shCol, jaccardThreshold, candRows)
@@ -237,12 +237,9 @@ object Dedup {
     // slow-host adjudications had ~2.5s of unattributed wall to argue
     // about. Split reported: docord+estimate / candidates / gate /
     // rescore.
-    val d0 = System.nanoTime()
-    val shufflePartitions = collisionPartitions(
-      prefixPostings(docOrd, id, threshold),
-      CollisionTargetPerPartition)
-    graft.Metrics.record("jaccard_docord_build_ms",
-      (System.nanoTime() - d0) / 1000000L)
+    val shufflePartitions = graft.Metrics.phase("jaccard_docord_build_ms")(
+      collisionPartitions(prefixPostings(docOrd, id, threshold),
+        CollisionTargetPerPartition))
     val probes = prefixPostings(docOrd, id, threshold)
       .repartition(shufflePartitions, col("__h"))
       .persist()
@@ -316,55 +313,16 @@ object Dedup {
     val (rescorable, gatedRows) = hashOverlapGate(cand, docOrd, docOrd, id,
       threshold, shufflePartitions, "jaccard_rescore_pairs")
     graft.Metrics.record("jaccard_prefix_candidates",
-      observedCount(obsCand, "__cand"))
+      graft.Metrics.observedCount(obsCand, "__cand"))
     // the gate's eager checkpoint was the last consumer of both caches
     probes.unpersist(blocking = false)
     docOrd.unpersist(blocking = false)
-    timedStringRescore(
-      rescoreJaccard(rescorable, sh, id, shCol, threshold, gatedRows),
-      "jaccard_string_rescore_ms")
-  }
-
-  /** Eagerly materialize the final STRING rescore under its own phase
-    * timer (round 18, VERDICT r17 #1): the docord-build and fused
-    * candidates+gate jobs already report `_ms` phase walls, but the
-    * string rescore ran lazily inside the CALLER's first action, so
-    * ~a third of the key's quiet wall sat in no phase counter — on the
-    * real r17 driver run `dedup_ngram_jaccard` flagged 12.36x with
-    * bit-identical volume counters yet `counter_attributed:false`,
-    * because the two reported timers could not corroborate a stretch
-    * that mostly landed in the untimed tail. With this third timer the
-    * phase walls cover the large majority (~79-95% observed) of the
-    * key's quiet wall — the share moves with the untimed
-    * candidate/gate fraction between runs: the committed round-18
-    * baseline read 1075+2090+148 of 3861 ms = 85.8%, the round-19
-    * final one reads 842+2219+133 of 3376 ms = 94.6%, and the floor
-    * so far is a superseded round-19 quiet run at 79.2% (git history,
-    * commit "Re-baseline on the final round-19 tree"; the earlier
-    * drifting single figures — 95.2%, 86% — were each real readings
-    * of their own runs, SURVEY §8) — and the contention-vs-regression
-    * adjudication is mechanical.
-    *
-    * Eagerness is safe at scale: the output is the true near-dup pair
-    * set — a SUBSET of the gate's already-localCheckpointed candidate
-    * relation — so this introduces no storage ceiling the gate did not
-    * already have; downstream semantics are unchanged (checkpoint
-    * preserves rows/schema). One extra scheduled job per call, against
-    * a rescore phase measured in seconds (the r13 job-overhead concern
-    * applied to ~0.1 s jobs). Deliberate in the LIBRARY, not the bench
-    * harness (round-18 review weighed the alternative): both tiers
-    * were already eager at construction — the collision estimate and
-    * the gate's checkpoint run jobs before the caller's first action —
-    * so this does not change the API's laziness class, and putting the
-    * timer here means every caller (harness, streaming stores, a
-    * library consumer) reports the phase, not just bench keys. The
-    * plan-audit evidence the checkpoint hides is re-pinned lazily
-    * (PlanSpec) and re-dumped (DumpPlans). */
-  private def timedStringRescore(scored: DataFrame, counter: String): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = scored.localCheckpoint(eager = true)
-    graft.Metrics.record(counter, (System.nanoTime() - t0) / 1000000L)
-    out
+    // eager under its own phase, so the string rescore's wall is not an
+    // untimed tail inside the caller's first action; the output is a
+    // subset of the gate's checkpointed pairs, so this adds no storage
+    graft.Metrics.phase("jaccard_string_rescore_ms")(
+      rescoreJaccard(rescorable, sh, id, shCol, threshold, gatedRows)
+        .localCheckpoint(true))
   }
 
   /** Shared exact-Jaccard rescore: join candidate (id_a, id_b) pairs
@@ -418,12 +376,10 @@ object Dedup {
     val (rescorable, gatedRows) = probePairsOnOrdered(pOrd, cOrd, id, threshold)
     cOrd.unpersist(blocking = false)
     pOrd.unpersist(blocking = false)
-    // same timed-eager final phase as the self-join tier (round 18) —
-    // the probe key has the identical untimed-tail shape
-    timedStringRescore(
+    // same eager final phase as the self-join tier
+    graft.Metrics.phase("jaccard_probe_string_rescore_ms")(
       rescoreJaccardTwoSided(rescorable, probeSh, corpusSh, id, shCol, threshold,
-        gatedRows),
-      "jaccard_probe_string_rescore_ms")
+        gatedRows).localCheckpoint(true))
   }
 
   /** Partition count for a prefix-collision self-join, derived from
@@ -533,8 +489,7 @@ object Dedup {
     // driver guard flags with bit-identical volume counters). The
     // counter VALUE is unchanged: the observation counts the same
     // post-filter rows the count() did.
-    val g0 = System.nanoTime()
-    val obsGate = org.apache.spark.sql.Observation()
+    //
     // explicit-count repartition AFTER the attach joins, BEFORE the
     // intersect (optimization round 21): the old pre-join placement
     // pinned only the candidate shuffle — each equi-join then inserted
@@ -547,7 +502,7 @@ object Dedup {
     // the computed projection above it cannot be pushed below (the
     // repartition keys are plain columns), so the intersect now runs at
     // the volume-derived `parts` regardless of join strategy.
-    val gated = cand
+    val survivors = cand
       .join(aOrd.select(col(id).as("id_a"), col("__ha").as("__hha")), "id_a")
       .join(bOrd.select(col(id).as("id_b"), col("__ha").as("__hhb")), "id_b")
       .repartition(parts, col("id_a"), col("id_b"))
@@ -555,28 +510,14 @@ object Dedup {
       .filter(col("__ih") / (size(col("__hha")) + size(col("__hhb")) - col("__ih")) >=
         lit(threshold))
       .select(col("id_a"), col("id_b"))
-      .observe(obsGate, count(lit(1)).as("__gated"))
-      .localCheckpoint(true)
+    val (gated, gatedRows) =
+      graft.Metrics.phase(counter + "_ms")(graft.Metrics.counted(survivors))
     // the observed survivor count doubles as the string-rescore's
     // pair-volume sizing input (round 22) — already in hand from the
     // checkpoint's own job, no extra count() scheduled
-    val gatedRows = observedCount(obsGate, "__gated")
     graft.Metrics.record(counter, gatedRows)
-    graft.Metrics.record(counter + "_ms", (System.nanoTime() - g0) / 1000000L)
     (gated, gatedRows)
   }
-
-  /** Blocking read of an observed row-count metric (round 14 — the
-    * fused-gate counters ride [[org.apache.spark.sql.Observation]]).
-    * Missing key defaults to 0: when AQE proves the observed subtree
-    * empty (an alien probe sharing no shingles), Catalyst's
-    * empty-relation propagation prunes the CollectMetrics node and the
-    * observation completes WITHOUT the metric — and pruning happens
-    * only under provable emptiness, so 0 is the exact count, not a
-    * guess. */
-  private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
-                                   name: String): Long =
-    obs.get.get(name).map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** (id, 64-bit shingle hash) exploded relation — the candidate
     * algebra's working representation (see
@@ -687,46 +628,42 @@ object Dedup {
                                          id: String,
                                          threshold: Double): (DataFrame, Long) = {
     require(threshold > 0.0 && threshold <= 1.0)
-    val c0 = System.nanoTime()
     // THREE scheduled jobs end-to-end (round 14, VERDICT r13 #1 — the
     // r13 shape ran six, and the key's wall at bench scale was almost
     // pure job-scheduling overhead, the anatomy behind three
-    // consecutive driver guard flags over bit-identical volumes):
-    //
-    //  job 1 — ONE probe-side postings-count relation whose ROW COUNT
-    //    is the probe prefix vocabulary size (distinct __h), so the
-    //    broadcast-feasibility gate that used to be its own
-    //    pVocab.count() job reads off the same tiny aggregate the
-    //    estimate needs anyway. Probe-side only: scans nothing
-    //    corpus-sized.
-    val pCounts = probePrefixCounts(pOrd, id, threshold).persist()
-    val vocabRows = pCounts.count()
-    // probe-vocabulary-pruned corpus postings, persisted — the ONE
-    // corpus-postings pass (round 12), feeding estimate + candidates.
-    // Pruning keeps the estimate Σ_h pc(h)·cc(h) IDENTICAL (hashes
-    // outside the probe vocabulary contribute zero to the product).
-    val cPruned = prunedCorpusPostings(cOrd, pCounts, vocabRows, id, threshold)
-      .persist()
-    //  job 2 — the collision estimate, whose action materializes the
-    //    cPruned cache; its probe side is the CACHED pCounts
-    //    (vocab-sized, broadcast under the same gate) instead of a
-    //    re-derived postings aggregate.
-    val shufflePartitions = {
-      val row = cPruned.groupBy(col("__h")).agg(count(lit(1)).as("__cc"))
-        .join(hintedIfSmall(pCounts, vocabRows), "__h")
-        .agg(sum(col("__pc").cast("double") * col("__cc")).as("__v"))
-        .head()
-      val est = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      clampPartitions(est, CollisionTargetPerPartition)
-    }
-    pCounts.unpersist(blocking = false)
-    // sizing-phase timer: jobs 1+2. The candidate join's wall, which
+    // consecutive bench guard flags over bit-identical volumes).
+    // The sizing phase is jobs 1+2. The candidate join's wall, which
     // this counter covered through r13, moved into the FUSED gate job
     // below and lands in jaccard_probe_rescore_pairs_ms (SURVEY §9
     // documents the r14 phase remap); the VOLUME counters' values are
     // unchanged.
-    graft.Metrics.record("jaccard_probe_prefix_candidates_ms",
-      (System.nanoTime() - c0) / 1000000L)
+    val (cPruned, shufflePartitions) = graft.Metrics.phase("jaccard_probe_prefix_candidates_ms") {
+      //  job 1 — ONE probe-side postings-count relation whose ROW COUNT
+      //    is the probe prefix vocabulary size (distinct __h), so the
+      //    broadcast-feasibility gate that used to be its own
+      //    pVocab.count() job reads off the same tiny aggregate the
+      //    estimate needs anyway. Probe-side only: scans nothing
+      //    corpus-sized.
+      val pCounts = probePrefixCounts(pOrd, id, threshold).persist()
+      val vocabRows = pCounts.count()
+      // probe-vocabulary-pruned corpus postings, persisted — the ONE
+      // corpus-postings pass (round 12), feeding estimate + candidates.
+      // Pruning keeps the estimate Σ_h pc(h)·cc(h) IDENTICAL (hashes
+      // outside the probe vocabulary contribute zero to the product).
+      val pruned = prunedCorpusPostings(cOrd, pCounts, vocabRows, id, threshold)
+        .persist()
+      //  job 2 — the collision estimate, whose action materializes the
+      //    pruned cache; its probe side is the CACHED pCounts
+      //    (vocab-sized, broadcast under the same gate) instead of a
+      //    re-derived postings aggregate.
+      val row = pruned.groupBy(col("__h")).agg(count(lit(1)).as("__cc"))
+        .join(hintedIfSmall(pCounts, vocabRows), "__h")
+        .agg(sum(col("__pc").cast("double") * col("__cc")).as("__v"))
+        .head()
+      val est = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+      pCounts.unpersist(blocking = false)
+      (pruned, clampPartitions(est, CollisionTargetPerPartition))
+    }
     //  job 3 — candidates + hash-overlap gate FUSED into the gate's
     //    single eager checkpoint; the candidate volume is an observed
     //    metric collected during that job (same post-distinct rows the
@@ -739,7 +676,7 @@ object Dedup {
     val gated = hashOverlapGate(cand, pOrd, cOrd, id, threshold, shufflePartitions,
       "jaccard_probe_rescore_pairs")
     graft.Metrics.record("jaccard_probe_prefix_candidates",
-      observedCount(obsCand, "__cand"))
+      graft.Metrics.observedCount(obsCand, "__cand"))
     cPruned.unpersist(blocking = false)
     gated
   }
@@ -764,7 +701,7 @@ object Dedup {
       .persist()
     val pb = portableBandSignatures(probeSh, id, shCol, numHashes, bands)
       .persist()
-    val (cand, candRows) = Bands.counted(Bands.probeJoin(
+    val (cand, candRows) = graft.Metrics.counted(Bands.probeJoin(
       pb.withColumnRenamed(id, "id_a"), cb.withColumnRenamed(id, "id_b")))
     graft.Metrics.record("minhash_probe_candidates", candRows)
     cb.unpersist(blocking = false)

@@ -802,7 +802,7 @@ object Multimodal {
   private[graft] def hammingNearDupsOnHashes(hashed: DataFrame, maxHamming: Int,
                                              candMetric: String): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming in [0, 32)")
-    val (cand, candRows) = Bands.counted(
+    val (cand, candRows) = graft.Metrics.counted(
       Bands.selfJoin(hammingBanded(hashed, "__ah", maxHamming), "__id"))
     graft.Metrics.record(candMetric, candRows)
     cand

@@ -325,7 +325,7 @@ object Vectors {
     val sigRel = withSig.select(col(id), col(sig).as("__sig"), col(vec).as("__v"))
       .persist()
     try {
-      val (cands, candRows) = Bands.counted(Bands.selfJoin(
+      val (cands, candRows) = graft.Metrics.counted(Bands.selfJoin(
         sigRel.select(col(id), posexplode(col("__sig")).as(Seq("__band", "__key"))), id))
       graft.Metrics.record("srp_neardup_candidates", candRows)
       cands
@@ -403,7 +403,7 @@ object Vectors {
       .localCheckpoint(true)
     val cBands = corpusSigs
       .select(col(id).as("dup_id"), posexplode(col(sig)).as(Seq("__band", "__key")))
-    val (cands, candRows) = Bands.counted(Bands.probeJoin(pBands, cBands))
+    val (cands, candRows) = graft.Metrics.counted(Bands.probeJoin(pBands, cBands))
     graft.Metrics.record("srp_probe_candidates", candRows)
     cands
       .join(probesWithSig.select(col(id).as("probe_id"), col(vec).as("__va")), Seq("probe_id"))

@@ -235,11 +235,8 @@ object HarnessLLM {
 
   def codecMediaFor(s: SparkSession, dir: String, fmt: String): DataFrame =
     codecMediaCache(s, s"$dir#$fmt") {
-      val t0 = System.nanoTime()
-      val df = codecImageMedia(s, dir, fmt).localCheckpoint(true)
-      graft.Metrics.record("codec_media_build_ms",
-        (System.nanoTime() - t0) / 1000000)
-      df
+      graft.Metrics.phase("codec_media_build_ms")(
+        codecImageMedia(s, dir, fmt).localCheckpoint(true))
     }
 
   /** The codec-dedup corpus in LAZY form — the planted triplet
@@ -276,7 +273,6 @@ object HarnessLLM {
 
   def gifMediaFor(s: SparkSession, dir: String): DataFrame =
     gifMediaCache(s, dir) {
-      val t0 = System.nanoTime()
       val mk = udf { (docId: Long, s2: String) =>
         val nFrames = 2 + (docId % 3).toInt
         val frames = (0 until nFrames).map { f =>
@@ -286,11 +282,9 @@ object HarnessLLM {
         }
         Multimodal.gifEncode(16, 6, frames)
       }
-      val df = t(s, dir, "documents")
+      graft.Metrics.phase("gif_media_build_ms")(t(s, dir, "documents")
         .select(col("doc_id"), mk(col("doc_id"), col("text")).as("media"))
-        .localCheckpoint(true)
-      graft.Metrics.record("gif_media_build_ms", (System.nanoTime() - t0) / 1000000)
-      df
+        .localCheckpoint(true))
     }
 
   /** The planted-triplet raster: group g's 16x16x3 chained-md5 pixel
@@ -731,10 +725,9 @@ object HarnessLLM {
       // serve; recording the ingest wall and batch count makes the
       // split readable off the bench artifact (serve = key - ingest),
       // so an r10-style blowup self-triages to a phase
-      val ing0 = System.nanoTime()
-      graft.streaming.TextIngest.maintainInvertedIndex(stream, "doc_id", "text", store)
-        .awaitTermination()
-      graft.Metrics.record("bm25_serve_ingest_ms", (System.nanoTime() - ing0) / 1000000L)
+      graft.Metrics.phase("bm25_serve_ingest_ms")(
+        graft.streaming.TextIngest.maintainInvertedIndex(stream, "doc_id", "text", store)
+          .awaitTermination())
       graft.Metrics.record("bm25_serve_store_batches",
         graft.streaming.BatchStore.batchPartitionDirs(s, s"$store/postings").length.toLong)
       val queries = Seq(
@@ -766,11 +759,9 @@ object HarnessLLM {
       // this key's cost is micro-batch store build + the band-join
       // serve — the split lands in bench_full.json so a slow run can
       // be read as ingest vs serve without a rerun
-      val ing0 = System.nanoTime()
-      graft.streaming.DedupIngest.maintainMinhash(stream, "doc_id", "text", store)
-        .awaitTermination()
-      graft.Metrics.record("minhash_serve_ingest_ms",
-        (System.nanoTime() - ing0) / 1000000L)
+      graft.Metrics.phase("minhash_serve_ingest_ms")(
+        graft.streaming.DedupIngest.maintainMinhash(stream, "doc_id", "text", store)
+          .awaitTermination())
       graft.streaming.DedupIngest.nearDupsFromStore(s, store)
         .orderBy($"id_a", $"id_b")
     }),
@@ -798,11 +789,9 @@ object HarnessLLM {
       // phase attribution for the bench's most expensive key: how much
       // is micro-batch store build vs the probe serve (the
       // bm25_serve_ingest_ms discipline)
-      val ing0 = System.nanoTime()
-      graft.streaming.DedupIngest.maintainJaccardStore(stream, "doc_id", "text", store)
-        .awaitTermination()
-      graft.Metrics.record("jaccard_serve_ingest_ms",
-        (System.nanoTime() - ing0) / 1000000L)
+      graft.Metrics.phase("jaccard_serve_ingest_ms")(
+        graft.streaming.DedupIngest.maintainJaccardStore(stream, "doc_id", "text", store)
+          .awaitTermination())
       val probes = docs.filter($"doc_id" < 10)
         .select(($"doc_id" + 100000L).as("doc_id"), $"text")
       graft.streaming.DedupIngest.jaccardProbeFromStore(s, store, probes,
@@ -1114,13 +1103,11 @@ object HarnessLLM {
       // vs DEFLATE-decode + aHash + banded join. The lazy corpus
       // definition is shared with DumpPlans (codecDedupCorpus), which
       // keeps the un-checkpointed chain in the committed plan audit.
-      val t0 = System.nanoTime()
-      val imgs = codecDedupCorpus(s, dir).localCheckpoint(true)
-      graft.Metrics.record("codec_encode_ms", (System.nanoTime() - t0) / 1000000)
-      val t1 = System.nanoTime()
-      val pairs = Multimodal.imageNearDups(imgs, "doc_id", "media", maxHamming = 3)
-        .localCheckpoint(true)
-      graft.Metrics.record("codec_dedup_ms", (System.nanoTime() - t1) / 1000000)
+      val imgs = graft.Metrics.phase("codec_encode_ms")(
+        codecDedupCorpus(s, dir).localCheckpoint(true))
+      val pairs = graft.Metrics.phase("codec_dedup_ms")(
+        Multimodal.imageNearDups(imgs, "doc_id", "media", maxHamming = 3)
+          .localCheckpoint(true))
       pairs.orderBy($"id_a", $"id_b")
     }),
     "stream_image_ingest" -> ((s, dir) => {
@@ -1433,13 +1420,10 @@ object HarnessLLM {
       // the seeded-deterministic volume counter the bit-identical
       // clause needs (a count over the already-materialized result —
       // no extra computation).
-      val t0 = System.nanoTime()
-      val staged = codecImageMedia(s, dir, "png").localCheckpoint(true)
-      graft.Metrics.record("codec_encode_ms", (System.nanoTime() - t0) / 1000000)
-      val t1 = System.nanoTime()
-      val out = Multimodal.resizeImagePartitions(staged, 8, 8).toDF()
-        .localCheckpoint(true)
-      graft.Metrics.record("codec_resize_ms", (System.nanoTime() - t1) / 1000000)
+      val staged = graft.Metrics.phase("codec_encode_ms")(
+        codecImageMedia(s, dir, "png").localCheckpoint(true))
+      val out = graft.Metrics.phase("codec_resize_ms")(
+        Multimodal.resizeImagePartitions(staged, 8, 8).toDF().localCheckpoint(true))
       graft.Metrics.record("codec_resize_rows", out.count())
       out.orderBy($"doc_id")
     }),

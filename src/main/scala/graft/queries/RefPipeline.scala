@@ -41,7 +41,8 @@ object RefPipeline {
     *    same logical plan, which Spark's CacheManager serves from this
     *    summary, so a Q4 request is one scan of a one-partition cache.
     * One eager count of the summary materializes both, since building
-    * the summary reads (and so fills) the join's cache.
+    * the summary reads (and so fills) the join's cache; it runs as the
+    * phase `prepdata_cache_ms`.
     *
     * The caller owns the join's `unpersist()`. That call leaves the
     * loaded summary in place (Spark keeps the loaded dependents of a
@@ -75,11 +76,7 @@ object RefPipeline {
     // the join is cached first, so the summary's plan reads that cache
     joined.persist()
     summary.persist()
-    val sc = joined.sparkSession.sparkContext
-    val description = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("RefPipeline.prepData:cache")
-    try summary.count()
-    finally sc.setJobDescription(description)
+    graft.Metrics.phase("prepdata_cache_ms")(summary.count())
     joined
   }
 

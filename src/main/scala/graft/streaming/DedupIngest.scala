@@ -293,7 +293,7 @@ object DedupIngest {
     val docs = spark.read.parquet(s"$storeDir/docs")
       .select(col("doc_id"), col("__sh"))
     // the candidate count is the rescore's pair-volume sizing input
-    val (cand, candRows) = Bands.counted(Bands.selfJoin(banded, "doc_id"))
+    val (cand, candRows) = graft.Metrics.counted(Bands.selfJoin(banded, "doc_id"))
     banded.unpersist(blocking = false)
     Dedup.rescoreJaccard(cand, docs, "doc_id", "__sh", jaccardThreshold, candRows)
       .dropDuplicates("id_a", "id_b")

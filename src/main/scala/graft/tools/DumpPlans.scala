@@ -14,12 +14,7 @@ object DumpPlans {
       case Array(sf, out) => (sf, out)
       case _ => sys.error("usage: graft.tools.DumpPlans <sfDir> <outPath>")
     }
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val headline = Seq(
       "q1_agg", "q1_pipeline", "q2_pipeline", "q4_pipeline",

@@ -1,12 +1,12 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job cost anatomy of one bench key (optimization round 21):
   * installs a listener that records every Spark job's wall, task count
   * and description while the key runs under the EXACT bench action
-  * (`fn(spark, sfDir).count()`), then prints the breakdown — the
+  * (`fn(spark, sfDir).count()` in the key's `Metrics` scope, so a
+  * phase's jobs read `<key>/<counter>`), then prints the breakdown — the
   * local-mode stand-in for the Spark UI's Jobs page (spark.ui is off in
   * the bench contract). Run:
   * `sbt "runMain graft.tools.ProfileKey <key>[,<key>...] [runs]"`
@@ -16,16 +16,7 @@ object ProfileKey {
     val keys = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val runs = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     final case class StageRec(name: String, tasks: Int, runMs: Long,
                               cpuMs: Long, shufR: Long, shufW: Long,
@@ -82,7 +73,7 @@ object ProfileKey {
         spark.sparkContext.addSparkListener(listener)
         System.gc()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        graft.Metrics.withScope(key)(fn(spark, sfDir).count())
         val wall = (System.nanoTime() - t0) / 1e9
         // let the listener bus drain before reading the buffers
         Thread.sleep(300)

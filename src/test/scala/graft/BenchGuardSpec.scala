@@ -607,7 +607,7 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
 
   test("observed bench counters read EXACTLY under empty-relation pruning (round 15, VERDICT r14 #7)") {
     // the fused gates' volume counters ride Dataset.observe; the
-    // documented assumption (Dedup.observedCount) is that a missing
+    // documented assumption (Metrics.observedCount) is that a missing
     // metric means Catalyst/AQE pruned the CollectMetrics node under
     // PROVABLE emptiness — so defaulting to 0 is the exact count, not
     // a guess. Plant both shapes so a Spark upgrade that changes the
@@ -625,7 +625,7 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     a.join(empty, "id")
       .observe(obsEmpty, count(lit(1)).as("__n"))
       .localCheckpoint(true)
-    assert(graft.ops.Dedup.observedCount(obsEmpty, "__n") == 0L,
+    assert(Metrics.observedCount(obsEmpty, "__n") == 0L,
       "a pruned/empty observed subtree must read exactly 0")
     // statically-pruned shape (Catalyst's PropagateEmptyRelation, no
     // AQE needed): the optimizer removes the subtree at plan time
@@ -633,14 +633,14 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     a.filter(lit(false))
       .observe(obsStatic, count(lit(1)).as("__n"))
       .localCheckpoint(true)
-    assert(graft.ops.Dedup.observedCount(obsStatic, "__n") == 0L)
+    assert(Metrics.observedCount(obsStatic, "__n") == 0L)
     // non-empty control: the observed count must be EXACT, proving the
     // default-0 path never fires outside genuine emptiness
     val obsFull = org.apache.spark.sql.Observation()
     a.join(a.filter($"id" < 100L), "id")
       .observe(obsFull, count(lit(1)).as("__n"))
       .localCheckpoint(true)
-    assert(graft.ops.Dedup.observedCount(obsFull, "__n") == 100L,
+    assert(Metrics.observedCount(obsFull, "__n") == 100L,
       "a non-empty observed subtree must never default to 0")
   }
 
@@ -701,6 +701,73 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     assert(m.get("late").contains(9L) && !m.contains("stale_key.late"),
       s"an outlived inherited scope must degrade to the raw name: $m")
     Metrics.clear()
+  }
+
+  test("Metrics.phase names its jobs <scope>/<counter>, restores the outer description and records only on a normal exit") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val Desc = "spark.job.description"
+    // (description, tags) of every job this case starts, tagged so
+    // other suites' jobs never count
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (String.valueOf(e.properties.getProperty("spark.job.tags")).contains("phase_spec"))
+          seen.add(String.valueOf(e.properties.getProperty(Desc)))
+    }
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "true")
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // a shuffled join: AQE submits each shuffle stage as its own job
+    def join(): Long = s2.range(2000).repartition(4).join(s2.range(1000).repartition(3), "id").count()
+    def described(d: String) = seen.asScala.count(_ == d)
+    Metrics.clear()
+    sc.addSparkListener(listener)
+    sc.addJobTag("phase_spec")
+    try {
+      sc.setJobDescription("outer")
+      assert(join() == 1000L)
+      val got = Metrics.withScope("phase_spec") {
+        Metrics.phase("spec_phase_ms") {
+          Metrics.phase("spec_inner_ms")(s2.range(10).count())
+          // a nested phase restores its outer phase's description
+          assert(sc.getLocalProperty(Desc) == "phase_spec/spec_phase_ms")
+          join()
+        }
+      }
+      assert(got == 1000L)
+      assert(sc.getLocalProperty(Desc) == "outer", "a normal exit restores the prior description")
+      intercept[IllegalStateException] {
+        Metrics.withScope("phase_spec") {
+          Metrics.phase("spec_throw_ms") { s2.range(5).count(); throw new IllegalStateException("boom") }
+        }
+      }
+      assert(sc.getLocalProperty(Desc) == "outer", "a throw restores the prior description")
+      // outside any scope the description is the bare counter
+      Metrics.phase("spec_bare_ms")(s2.range(3).count())
+      // the listener bus delivers in order: once this job is seen, so
+      // are all before it
+      sc.setJobDescription("phase_spec_end")
+      s2.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (described("phase_spec_end") == 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      // every job of the phased join (AQE's stage jobs included) carries
+      // the phase name: as many as the same join started outside it
+      assert(described("outer") >= 2, seen)
+      assert(described("phase_spec/spec_phase_ms") == described("outer"), seen)
+      assert(described("phase_spec/spec_inner_ms") >= 1, seen)
+      assert(described("phase_spec/spec_throw_ms") >= 1, seen)
+      assert(described("spec_bare_ms") >= 1, seen)
+      val m = Metrics.snapshot.toMap
+      assert(Set("phase_spec.spec_phase_ms", "phase_spec.spec_inner_ms", "spec_bare_ms")
+        .subsetOf(m.keySet), m)
+      assert(!m.keySet.exists(_.contains("spec_throw_ms")), s"a throw records no counter: $m")
+    } finally {
+      sc.removeJobTag("phase_spec")
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+      Metrics.clear()
+    }
   }
 
   test("embedded Derby creates a database even under a Locale.ROOT JVM default (round 16, VERDICT r15 #1)") {
@@ -860,6 +927,36 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     // a second copy that only one of the two paths runs
     val hits = sourceHits("", "freshName|code\"\"\"|for \\(int ".r)
     assert(hits.isEmpty, hits.mkString("hand-written generated code:\n", "\n", ""))
+  }
+
+  test("phases are timed and named only through Metrics.phase") {
+    // which jobs a phase names and which wall it records is one
+    // decision; a description written, or a wall timed into a counter,
+    // beside Metrics.phase is a second copy of it. A hand-timed record
+    // may span lines, so its whole argument list is scanned
+    val describe = sourceHits("graft",
+      """setJobDescription|setLocalProperty\(\s*"spark\.job\.description"""".r,
+      keep = _ != "Metrics.scala")
+    // the argument list of the call whose `(` ends at `from`
+    def argsAt(text: String, from: Int): String = {
+      var depth = 1
+      var end = from
+      while (depth > 0 && end < text.length) {
+        if (text(end) == '(') depth += 1 else if (text(end) == ')') depth -= 1
+        end += 1
+      }
+      text.substring(from, end)
+    }
+    val handTimed = for {
+      sub <- List("ops", "queries", "streaming")
+      f <- scalaFiles(s"src/main/scala/graft/$sub")
+      text = linesOf(f).mkString("\n")
+      m <- """Metrics\.(record|add)\(""".r.findAllMatchIn(text).toList
+      if argsAt(text, m.end).contains("nanoTime")
+    } yield s"${f.getFileName}:${text.take(m.start).count(_ == '\n') + 1}: " +
+      m.matched + argsAt(text, m.end)
+    assert(describe.isEmpty && handTimed.isEmpty,
+      (describe ++ handTimed).mkString("phase timing or naming outside Metrics.phase:\n", "\n", ""))
   }
 
   test("the streaming stores' __batch layout lives in BatchStore only") {
@@ -1022,9 +1119,8 @@ class BenchGuardSpec extends AnyFunSuite with SparkTestBase {
     // an operator no query key, workload or other operator calls is a
     // second code path that only its own tests run. The keep list
     // stays on purpose: srpParams/srpRecall are the LSH parameter math
-    // srpNearDups' scaladoc sends users to, and pruneAvroSchema is the
-    // strict single-generation contract
-    val keep = Set("srpParams", "srpRecall", "pruneAvroSchema")
+    // srpNearDups' scaladoc sends users to
+    val keep = Set("srpParams", "srpRecall")
     val uncalled = uncalledDefs("""^  def (\w+)\b""".r)
     assert(uncalled.map(_.takeWhile(_ != ' ')).toSet == keep,
       uncalled.mkString("public defs with no caller in src/main or perfbench/src:\n", "\n", ""))

@@ -912,22 +912,21 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       // format; it stays so every trial's seeded values are unchanged
       rnd.nextBoolean()
       graft.io.Postgres.overwriteTable(df, conn, "graft_fuzz")
-      def canonRows(d: org.apache.spark.sql.DataFrame) = d.collect()
-        .map(r => r.toSeq.map(canon).mkString("|")).sorted.toSeq
-      val want = canonRows(df)
+      def canonRows(rows: Seq[Row]) =
+        rows.map(r => r.toSeq.map(canon).mkString("|")).sorted
+      val want = canonRows(df.collect().toSeq)
       // DIFFERENTIAL across result formats (round 15): the binary
       // extended-query decode (network-order ints, PG-epoch offsets,
-      // hand-rolled base-10000 numeric) and the text parse must both
-      // reproduce the source exactly — the same seeded adversarial
-      // values cover the binary COPY on the way in and BOTH decoders on
-      // the way out, so a binary-decode bug diverges from text here
-      // instead of surviving as a plausible-looking value
-      for (fmt <- Seq("binary", "text")) {
-        val back = spark.read.format("graft_pg")
-          .option("port", conn.port.toString).option("dbtable", "graft_fuzz")
-          .option("readformat", fmt).load()
-        assert(canonRows(back) === want, s"row drift ($fmt) for $schema")
-      }
+      // hand-rolled base-10000 numeric) and the server's text rendering
+      // must both reproduce the source exactly — the same seeded
+      // adversarial values cover the binary COPY on the way in and BOTH
+      // decoders on the way out, so a binary-decode bug diverges from
+      // text here instead of surviving as a plausible-looking value
+      val back = spark.read.format("graft_pg")
+        .option("port", conn.port.toString).option("dbtable", "graft_fuzz").load()
+      for ((fmt, rows) <- Seq("binary" -> back.collect().toSeq,
+          "text" -> graft.io.PgWireSpec.textRows(conn, "graft_fuzz", back.schema)))
+        assert(canonRows(rows) === want, s"row drift ($fmt) for $schema")
     }
   }
 }

@@ -764,6 +764,55 @@ class VectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(got(2).isNullAt(3), "code byte 255 with ksub=16 must poison to null")
   }
 
+  test("PQ ADC scores a lookup table read back from parquet like the in-memory one; a null element gives null") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val ksub = 16
+    val rnd = new scala.util.Random(11)
+    val rows = (1L to 6L).map(id =>
+      (id, Array.fill(2)(rnd.nextInt(ksub).toByte), Array.fill(2 * ksub)(rnd.nextGaussian())))
+    // the LUT builder's type: array<double> without null elements
+    val mem = rows.toDF("id", "code", "lut")
+    assert(mem.schema("lut").dataType == ArrayType(DoubleType, containsNull = false))
+    def scores(df: org.apache.spark.sql.DataFrame) = {
+      val out = df.select(col("id"),
+        graft.functions.VectorExprs.pqAdc(col("code"), col("lut"), ksub).as("adc"))
+      (out.queryExecution.executedPlan, out.collect().map(r =>
+        r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap)
+    }
+    val want = scores(mem)._2
+    assert(want.values.forall(_.isDefined))
+    // a file source reads every array back as containsNull = true; one
+    // more row holds a null element
+    val holed: Array[Any] = Array.tabulate[Any](2 * ksub)(i => if (i == 5) null else i.toDouble)
+    val dir = "/tmp/graft_test/adc_lut_parquet"
+    spark.createDataFrame(java.util.Arrays.asList(
+      rows.map { case (id, c, l) => Row(id, c, l.toSeq) } :+ Row(7L, Array[Byte](1, 2), holed.toSeq): _*),
+      StructType(Seq(StructField("id", LongType), StructField("code", BinaryType),
+        StructField("lut", ArrayType(DoubleType, containsNull = true)))))
+      .write.mode("overwrite").parquet(dir)
+    def session(conf: (String, String)*) = {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    }
+    val gen = session("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+    val interp = session("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val (genPlan, genOut) = scores(gen.read.parquet(dir))
+    val (interpPlan, interpOut) = scores(interp.read.parquet(dir))
+    assert(gen.read.parquet(dir).schema("lut").dataType == ArrayType(DoubleType, containsNull = true))
+    assert(genPlan.collect { case w: WholeStageCodegenExec => w }.nonEmpty, genPlan.toString)
+    assert(interpPlan.collect { case w: WholeStageCodegenExec => w }.isEmpty, interpPlan.toString)
+    assert(genOut == interpOut, "generated vs interpreted differ")
+    assert(genOut - 7L == want, "a lut read back from parquet must score like the in-memory one")
+    assert(genOut(7L).isEmpty, "a null lut element must give null")
+  }
+
   test("generated code of every native vector and min-hash expression equals its interpreted eval bit for bit") {
     import org.apache.spark.sql.{Row, SparkSession}
     import org.apache.spark.sql.functions.{col, udf}

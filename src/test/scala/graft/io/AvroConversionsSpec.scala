@@ -51,7 +51,7 @@ class AvroConversionsSpec extends AnyFunSuite {
     val required = StructType(Seq(
       StructField("k", LongType, nullable = false),
       StructField("v", IntegerType, nullable = true)))
-    val pruned = AvroConversions.pruneAvroSchema(writer, required)
+    val pruned = AvroConversions.evolvedReaderSchema(writer, writer, required)
     val v = pruned.getField("v")
     assert(v.schema().getTypes.asScala.map(_.getType).toList ==
       List(ASchema.Type.INT, ASchema.Type.NULL),
@@ -90,7 +90,7 @@ class AvroConversionsSpec extends AnyFunSuite {
     val required = StructType(Seq(
       StructField("u", StructType(Seq(
         StructField("member1", StringType, nullable = true))), nullable = true)))
-    val pruned = AvroConversions.pruneAvroSchema(writer, required)
+    val pruned = AvroConversions.evolvedReaderSchema(writer, writer, required)
     assert(pruned.getField("u").schema().getTypes.asScala.map(_.getType).toList ==
       List(ASchema.Type.NULL, ASchema.Type.INT, ASchema.Type.STRING),
       "multi-branch unions must keep every branch through pruning")

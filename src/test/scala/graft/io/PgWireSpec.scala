@@ -1,10 +1,15 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.{Date, Timestamp}
+import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -14,7 +19,8 @@ import graft.queries.RefPipeline
   * `postgres` server (the container ships the binaries; the engine
   * manages initdb/start under /tmp) — not a protocol mock — so these
   * pins cover the actual byte-level contract: startup + trust auth,
-  * binary COPY FROM STDIN, text-format decode per OID, range
+  * binary COPY FROM STDIN, binary decode per OID (checked against the
+  * server's text rendering, [[PgWireSpec.textRows]]), range
   * partitioning losslessness, pushdown, and server-error surfacing. */
 class PgWireSpec extends AnyFunSuite with SparkTestBase {
 
@@ -47,16 +53,17 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
     val want = df.collect().map(r => r.toSeq.toList).toSet
-    // binary COPY in; BOTH result formats out — the text decode must
-    // parse the metacharacters back exactly as the binary one does
+    // binary COPY in; the binary read AND the server's text rendering
+    // out — the text decode must parse the metacharacters back exactly
+    // as the binary one does
     Postgres.overwriteTable(df, conn, "graft_types")
-    for (rfmt <- Seq("binary", "text")) {
-      val back = spark.read.format("graft_pg")
-        .option("port", conn.port.toString).option("dbtable", "graft_types")
-        .option("readformat", rfmt).load()
-      assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      val got = back.collect().map(r => r.toSeq.toList).toSet
+    val back = spark.read.format("graft_pg")
+      .option("port", conn.port.toString).option("dbtable", "graft_types").load()
+    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
+      schema.fields.map(f => (f.name, f.dataType)).toSeq)
+    for ((rfmt, rows) <- Seq("binary" -> back.collect().toSeq,
+        "text" -> PgWireSpec.textRows(conn, "graft_types", back.schema))) {
+      val got = rows.map(r => r.toSeq.toList).toSet
       assert(got === want, s"read=$rfmt got $got")
     }
   }
@@ -765,21 +772,20 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
         "(-1, -1, '', 'NaN', false, '1969-12-31', '1970-01-01 00:00:00', " +
         " 3.5, -8, -10000.0001, 123456789.5, '\\x', '1970-01-01 00:00:00+00')")
     } finally c.close()
-    def read(fmt: String) = spark.read.format("graft_pg")
-      .option("port", conn.port.toString).option("dbtable", "graft_bin")
-      .option("readformat", fmt).load()
+    def read() = spark.read.format("graft_pg")
+      .option("port", conn.port.toString).option("dbtable", "graft_bin").load()
     // byte arrays render by identity — normalize to value form first
-    def render(rows: Array[Row]): Seq[String] = rows.map(_.toSeq.map {
+    def render(rows: Seq[Row]): Seq[String] = rows.map(_.toSeq.map {
       case b: Array[Byte] => b.toSeq.toString
       case x => String.valueOf(x)
-    }.mkString("|")).sorted.toSeq
-    val bin = render(read("binary").collect())
-    val txt = render(read("text").collect())
+    }.mkString("|")).sorted
+    val bin = render(read().collect().toSeq)
+    val txt = render(PgWireSpec.textRows(conn, "graft_bin", read().schema))
     // Row ordering is not guaranteed — compare as sorted multisets
     assert(bin === txt,
       s"binary and text cycles must decode identical values:\nbin=$bin\ntxt=$txt")
     // spot-check exact values through the binary path
-    val r = read("binary").filter(col("a") === 42).collect()(0)
+    val r = read().filter(col("a") === 42).collect()(0)
     assert(r.getLong(1) === 9007199254740993L) // past double precision
     assert(r.getString(2) === "txt \t tab \\ back")
     assert(r.getDate(5).toString === "2026-08-14")
@@ -790,7 +796,7 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     assert(r.getAs[Array[Byte]](11).toSeq ===
       Seq(0x00, 0xff, 0x7f, 0x80).map(_.toByte).toSeq)
     assert(r.getTimestamp(12) === Timestamp.valueOf("1999-12-31 23:59:59.999999"))
-    val neg = read("binary").filter(col("a") === -1).collect()(0)
+    val neg = read().filter(col("a") === -1).collect()(0)
     assert(neg.getDecimal(9).toPlainString === "-10000.0001")
     assert(neg.getDouble(3).isNaN)
     assert(neg.getAs[Array[Byte]](11).length === 0)
@@ -812,10 +818,11 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val widened = StructType(Seq(
       StructField("a", LongType), StructField("b", DoubleType),
       StructField("c", DoubleType), StructField("d", DecimalType(20, 2))))
-    for (fmt <- Seq("binary", "text")) {
-      val r = spark.read.format("graft_pg").schema(widened)
-        .option("port", conn.port.toString).option("dbtable", "graft_widen_bin")
-        .option("readformat", fmt).load().collect()(0)
+    val bin = spark.read.format("graft_pg").schema(widened)
+      .option("port", conn.port.toString).option("dbtable", "graft_widen_bin")
+      .load().collect()(0)
+    for ((fmt, r) <- Seq("binary" -> bin,
+        "text" -> PgWireSpec.textRows(conn, "graft_widen_bin", widened).head)) {
       assert(r.getLong(0) === 42L, fmt)
       assert(r.getDouble(1) === -7.0, fmt)
       assert(r.getDouble(2) === 1.5, fmt)
@@ -1218,10 +1225,11 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     val schema = StructType(Seq(
       StructField("a", ShortType), StructField("b", ByteType),
       StructField("c", TimestampNTZType)))
-    for (fmt <- Seq("binary", "text")) {
-      val r = spark.read.format("graft_pg").schema(schema)
-        .option("port", conn.port.toString).option("dbtable", "graft_writetypes")
-        .option("readformat", fmt).load().collect()(0)
+    val bin = spark.read.format("graft_pg").schema(schema)
+      .option("port", conn.port.toString).option("dbtable", "graft_writetypes")
+      .load().collect()(0)
+    for ((fmt, r) <- Seq("binary" -> bin,
+        "text" -> PgWireSpec.textRows(conn, "graft_writetypes", schema).head)) {
       assert(r.getShort(0) === 300.toShort, fmt)
       assert(r.getByte(1) === 7.toByte, fmt)
       assert(r.getAs[java.time.LocalDateTime](2) ===
@@ -1242,8 +1250,93 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     for (micros <- Seq(0L, 1L, 999999L, 1000000L, 1755172496123456L,
         -1L, -999999L, 86400000000L)) {
       val txt = PgWire.formatTimestampMicros(micros)
-      assert(PgWire.parseTimestampMicros(txt) === micros,
+      assert(PgWireSpec.parseTimestampMicros(txt) === micros,
         s"$micros -> '$txt' must parse back exactly")
     }
+  }
+}
+
+/** The server's TEXT rendering of a table, decoded per Spark type: the
+  * reference graft_pg's binary read is checked against. Postgres
+  * renders every value as text over the simple-query cycle
+  * (`PgWireClient.query`, session pinned to UTC and ISO DateStyle), so a
+  * binary decode bug diverges from it instead of surviving as a
+  * plausible-looking value. */
+object PgWireSpec {
+
+  /** Every row of `table`, its columns read as `schema` names them. */
+  def textRows(conn: Postgres.PgConn, table: String, schema: StructType): Seq[Row] = {
+    val c = new PgWireClient(conn.host, conn.port, conn.user, conn.database)
+    try {
+      val convs = schema.fields.map(f => textToCatalyst(f.dataType))
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      val cols = schema.fields.map(f => PgWire.quoteIdent(f.name)).mkString(", ")
+      val res = c.query(s"SELECT $cols FROM ${PgWire.quoteIdent(table)}")
+      Iterator.continually(res.nextRow()).takeWhile(_ != null).map { raw =>
+        toRow(new GenericInternalRow(raw.indices.map(i =>
+          if (raw(i) == null) null else convs(i)(raw(i))).toArray)).asInstanceOf[Row]
+      }.toList
+    } finally c.close()
+  }
+
+  /** Text-format value -> Catalyst, per Spark type. */
+  def textToCatalyst(dt: DataType): Array[Byte] => Any = dt match {
+    case StringType => bytes => UTF8String.fromBytes(bytes)
+    case IntegerType => bytes => new String(bytes, UTF_8).toInt
+    case LongType => bytes => new String(bytes, UTF_8).toLong
+    case FloatType => bytes => new String(bytes, UTF_8).toFloat
+    case DoubleType => bytes => new String(bytes, UTF_8).toDouble
+    case BooleanType => bytes => bytes.length == 1 && bytes(0) == 't'
+    // the write side maps ByteType/ShortType/TimestampNTZType onto
+    // smallint/timestamp, so an explicit user schema names them
+    case ShortType => bytes => new String(bytes, UTF_8).toShort
+    case ByteType => bytes => new String(bytes, UTF_8).toByte
+    case DateType => bytes =>
+      LocalDate.parse(new String(bytes, UTF_8)).toEpochDay.toInt
+    case TimestampType | TimestampNTZType =>
+      bytes => parseTimestampMicros(new String(bytes, UTF_8))
+    case d: DecimalType => bytes =>
+      org.apache.spark.sql.types.Decimal(
+        new java.math.BigDecimal(new String(bytes, UTF_8)), d.precision, d.scale)
+    case BinaryType => bytes => {
+      // bytea text output is hex: \x<2 hex digits per byte>
+      val s = new String(bytes, UTF_8)
+      require(s.startsWith("\\x"), s"unexpected bytea text encoding: ${s.take(8)}")
+      val out = new Array[Byte]((s.length - 2) / 2)
+      var i = 0
+      while (i < out.length) {
+        out(i) = ((Character.digit(s.charAt(2 + 2 * i), 16) << 4) |
+          Character.digit(s.charAt(3 + 2 * i), 16)).toByte
+        i += 1
+      }
+      out
+    }
+    case other => throw new IllegalArgumentException(s"unsupported read type $other")
+  }
+
+  /** "yyyy-MM-dd HH:mm:ss[.ffffff]" (ISO, UTC session) -> epoch
+    * micros. Manual parse: the fraction is 0-6 digits and
+    * LocalDateTime.parse wants a 'T'. */
+  def parseTimestampMicros(raw: String): Long = {
+    // timestamptz text carries a zone suffix after the time part
+    // ("...12:34:56.5+00" under the UTC session); the instant is
+    // already UTC, so the suffix strips. Zone sign can only appear
+    // past index 10 (the date's own dashes sit at 4 and 7).
+    val zs = {
+      val plus = raw.indexOf('+', 11)
+      val minus = raw.indexOf('-', 11)
+      if (plus >= 0) plus else minus
+    }
+    val s = if (zs >= 0) {
+      require(raw.substring(zs) == "+00" || raw.substring(zs) == "+00:00",
+        s"non-UTC timestamptz text '$raw': the session pins TimeZone=UTC")
+      raw.substring(0, zs)
+    } else raw
+    val dot = s.indexOf('.')
+    val (base, frac) =
+      if (dot < 0) (s, 0L)
+      else (s.substring(0, dot), (s.substring(dot + 1) + "000000").take(6).toLong)
+    val ldt = LocalDateTime.parse(base.replace(' ', 'T'))
+    Math.addExact(Math.multiplyExact(ldt.toEpochSecond(ZoneOffset.UTC), 1000000L), frac)
   }
 }
