@@ -102,6 +102,45 @@ class GoldenSpec extends AnyFunSuite with SparkTestBase {
     assert(top.length == 1)
   }
 
+  test("Q1/Q2 ties: the lower id_zone's label wins a same-level tie, and a null level loses to any level") {
+    import spark.implicits._
+    val zones = Seq(
+      (11L, "Zone Tie A", "07", "Ardèche", 10.0, "SUP"),
+      (12L, "Zone Tie B", "07", "Ardèche", 20.0, "SUP"),
+      (13L, "Zone Null A", "2A", "Corse-du-Sud", 30.0, "SUP"),
+      (14L, "Zone Null B", "2A", "Corse-du-Sud", 40.0, "SUP"),
+      (15L, "Zone Null Only", "971", "Guadeloupe", 50.0, "SUP"),
+    ).toDF("id_zone", "nom_zone", "code_departement", "nom_departement",
+      "surface_zone", "type_zone")
+    val arretes = Seq[(Long, String, String, Option[Int], String, String)](
+      // one level, two labels: zone 11 wins on id_zone although zone
+      // 12's label sorts first
+      (12L, "2023-08-01", "2023-08-31", Some(3), "alerte", "actif"),
+      (11L, "2023-08-05", "2023-08-20", Some(3), "alerte renforcée", "actif"),
+      // the null level on the lower zone loses to vigilance
+      (13L, "2023-08-01", "2023-08-31", None, "inconnu", "actif"),
+      (14L, "2023-08-10", "2023-08-15", Some(1), "vigilance", "actif"),
+      // only a null level: the department still has its decree
+      (15L, "2023-08-01", "2023-08-31", None, "inconnu", "actif"),
+    ).toDF("id_zone", "debut_validite_arrete", "fin_validite_arrete",
+      "numero_niveau", "nom_niveau", "statut_arrete")
+    val tied = RefPipeline.prepData(zones, arretes)
+    try {
+      def q1(day: String) = RefPipeline.q1NbDepPerAlert(tied, lit(Date.valueOf(day))).collect()
+        .map(r => (Option(r.get(0)), r.getString(1), r.getLong(2))).toSeq
+      def q2(day: String) = RefPipeline.q2MaxAlertPerDept(tied, lit(Date.valueOf(day)), departements)
+        .select("code", "numero_niveau", "nom_niveau").collect()
+        .map(r => r.getString(0) -> (r.getInt(1), r.getString(2))).toMap
+      assert(q1("2023-08-12") == Seq((Some(3), "alerte renforcée", 1L), (Some(1), "vigilance", 1L),
+        (None, "inconnu", 1L)))
+      assert(q2("2023-08-12") == Map("07" -> (3, "alerte renforcée"), "2A" -> (1, "vigilance"),
+        "971" -> (0, "inconnu"), "01" -> (0, null), "75" -> (0, null)))
+      // outside zone 11's and zone 14's decrees, the other decree of each department wins
+      assert(q1("2023-08-25") == Seq((Some(3), "alerte", 1L), (None, "inconnu", 2L)))
+      assert(q2("2023-08-25")("07") == (3, "alerte"))
+    } finally RefPipeline.release(tied)
+  }
+
   test("Q3: per-zone duration bars") {
     val res = RefPipeline.q3ZoneDurations(prepped, "Zone Ardèche Nord")
       .orderBy("numero_niveau").collect()

@@ -590,21 +590,21 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def added = spark.sparkContext.getPersistentRDDs.keySet -- before
     val prepped = prep()
-    assert(added.size == 2, "one prepData must hold exactly the join and the Q4 summary")
+    assert(added.size == 3, "one prepData must hold exactly the join, the Q4 summary and the severity timeline")
     prep()
     prep()
-    assert(added.size == 2, "each call must drop the previous call's cache entries")
+    assert(added.size == 3, "each call must drop the previous call's cache entries")
     assert(prepped.count() == 1)
     prepped.unpersist()
     // Spark keeps the loaded dependents of a non-cascading uncache, so
-    // exactly the summary remains, and the next prepData replaces it
-    assert(added.size == 1, "unpersisting the join must leave only the summary")
+    // exactly the summary and the timeline remain, and the next
+    // prepData replaces them
+    assert(added.size == 2, "unpersisting the join must leave only the summary and the timeline")
     assert(prepped.storageLevel == StorageLevel.NONE)
     assert(RefPipeline.q4SurfacePerDay(prepped).storageLevel != StorageLevel.NONE)
     val again = prep()
-    assert(added.size == 2, "the next prepData must replace the summary left behind")
-    RefPipeline.q4SurfacePerDay(again).unpersist()
-    again.unpersist()
+    assert(added.size == 3, "the next prepData must replace the frames left behind")
+    RefPipeline.release(again)
     assert(added.isEmpty)
   }
 }

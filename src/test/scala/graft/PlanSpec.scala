@@ -4,9 +4,10 @@ import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -143,30 +144,54 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       val ops = nodes(p)
       assert(!ops.exists(_.isInstanceOf[FileSourceScanExec]), s"$name re-reads its sources:\n$p")
       val broadcasts = ops.filter(_.isInstanceOf[BroadcastExchangeExec])
-      // Q2's left join onto departements broadcasts its own argmax side,
-      // which it computes from the cache; no query broadcasts anything else
-      if (name == "q2")
-        assert(broadcasts.forall(nodes(_).exists(_.isInstanceOf[InMemoryTableScanExec])), s"$name:\n$p")
+      // Q2's left join onto departements broadcasts the timeline's rows
+      // at d, the join's only exchange; no query broadcasts anything else
+      if (name == "q2") {
+        assert(broadcasts.size == 1 && nodes(broadcasts.head).exists(_.isInstanceOf[InMemoryTableScanExec]), s"$name:\n$p")
+        assert(ops.count(_.isInstanceOf[Exchange]) == 1, s"$name:\n$p")
+      }
       else assert(broadcasts.isEmpty, s"$name re-broadcasts:\n$p")
       val scan = ops.collectFirst { case s: InMemoryTableScanExec => s }
       assert(scan.isDefined, s"$name does not scan the cache:\n$p")
-      // Q4 is served whole by prepData's summary, the sweep's output
-      if (name == "q4") {
+      // Q1 filters the severity timeline, Q4 is served whole by the
+      // summary: one scan of a one-partition cache, nothing recomputed
+      if (name == "q1" || name == "q4") {
         assert(ops.count(_.isInstanceOf[InMemoryTableScanExec]) == 1, s"$name:\n$p")
         assert(!ops.exists(o => o.isInstanceOf[Exchange] || o.isInstanceOf[WindowExec] ||
           o.isInstanceOf[GenerateExec]), s"$name recomputes:\n$p")
-        assert(nodes(scan.get.relation.cachedPlan).exists(_.isInstanceOf[WindowExec]), s"$name:\n$p")
       }
-      scan.get
+      if (name == "q4")
+        assert(nodes(scan.get.relation.cachedPlan).exists(_.isInstanceOf[WindowExec]), s"$name:\n$p")
+      name -> scan.get
+    }.toMap
+    // the timeline and Q2's broadcast side are the same cache, built
+    // through exactly one exchange: into the single partition
+    val timeline = cacheScans("q1").relation
+    assert(cacheScans("q2").relation.cacheBuilder eq timeline.cacheBuilder)
+    val timelineExchanges = nodes(timeline.cachedPlan).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+      case e: Exchange => e
     }
-    val build = cacheScans.head.relation.cachedPlan
+    assert(timelineExchanges == Seq(SinglePartition), timeline.cachedPlan)
+    assert(!nodes(timeline.cachedPlan).exists(_.isInstanceOf[WindowExec]), timeline.cachedPlan)
+    // Q4 is the recorded summary itself, so its plan is built once
+    assert(RefPipeline.q4SurfacePerDay(prepped) eq RefPipeline.q4SurfacePerDay(prepped))
+    // a relation prepData did not return derives the same timeline plan,
+    // which the cache serves
+    val derived = RefPipeline.q1NbDepPerAlert(prepped.toDF(), d)
+    assert(derived.collect().toSeq == RefPipeline.q1NbDepPerAlert(prepped, d).collect().toSeq)
+    val derivedOps = nodes(derived.queryExecution.executedPlan)
+    val derivedScans = derivedOps.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+    assert(derivedScans.size == 1 && (derivedScans.head eq timeline.cacheBuilder) &&
+      !derivedOps.exists(_.isInstanceOf[Exchange]),
+      derived.queryExecution.executedPlan)
+    val build = cacheScans("q3").relation.cachedPlan
     val buildOps = nodes(build)
     assert(buildOps.count(_.isInstanceOf[FileSourceScanExec]) == 2, build)
     val zonesBroadcast = buildOps.filter(_.isInstanceOf[BroadcastExchangeExec])
       .flatMap(nodes).collect { case f: FileSourceScanExec => f.relation.location.rootPaths }
     assert(zonesBroadcast.flatten.map(_.getName) == Seq("zones"), build)
-    RefPipeline.q4SurfacePerDay(prepped).unpersist()
-    prepped.unpersist()
+    RefPipeline.release(prepped)
   }
 
   test("annTopK plans equi-joins only — no cartesian or nested-loop candidate generation") {

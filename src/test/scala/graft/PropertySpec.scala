@@ -4,10 +4,13 @@ import java.sql.Date
 
 import scala.util.Random
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Aggregates, Dedup, Relational, Temporal}
+import graft.queries.RefPipeline
 
 /** Property-based invariants (SURVEY.md §5.2.3): the algebraic facts
   * each operator must preserve regardless of data, checked over seeded
@@ -86,6 +89,76 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       assert(shape(swept) == shape(exploded))
       def rowsOf(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
       assert(rowsOf(swept) == rowsOf(exploded))
+    }
+  }
+
+  test("Q1 and Q2 from the severity timeline equal the window argmax over the decrees valid at d") {
+    import spark.implicits._
+    val (debutSentinel, finSentinel) = (Date.valueOf(RefPipeline.DebutSentinel), Date.valueOf(RefPipeline.FinSentinel))
+    val schema = StructType(Seq(StructField("id_zone", LongType), StructField("code_departement", StringType),
+      StructField("debut_validite_arrete", DateType), StructField("fin_validite_arrete", DateType),
+      StructField("numero_niveau", IntegerType), StructField("nom_niveau", StringType)))
+    val departements = Seq("07", "2A", "971", "01").map(c => (c, s"Département $c", "{}"))
+      .toDF("code", "nom", "geometry")
+    // zones 1 and 2 share a department, so their severities tie across
+    // zones; zone 5 has no department
+    val deptOf = Map(1L -> "07", 2L -> "07", 3L -> "2A", 4L -> "2A", 5L -> null, 6L -> "971")
+    // the reference: the decrees valid at d, one window argmax per department
+    def windowTop(prepped: DataFrame, d: Column) = Temporal.argmaxPerGroup(
+      Temporal.pointInInterval(prepped, d, "debut_validite_arrete", "fin_validite_arrete"),
+      Seq(col("code_departement")),
+      Seq(col("numero_niveau").desc, col("id_zone").asc, col("nom_niveau").asc))
+    def refQ1(prepped: DataFrame, d: Column) =
+      Aggregates.countByKey(windowTop(prepped, d), Seq(col("numero_niveau"), col("nom_niveau")), "nb_departements")
+        .orderBy(col("numero_niveau").desc)
+    def refQ2(prepped: DataFrame, d: Column) = {
+      val top = windowTop(prepped, d).select(col("code_departement"), col("numero_niveau"), col("nom_niveau"))
+      Relational.fillNullZero(departements.join(top, departements("code") === top("code_departement"), "left"),
+        Seq("numero_niveau")).drop("code_departement")
+    }
+    (1 to 4).foreach { seed =>
+      val rnd = new Random(seed)
+      def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+      val decrees = Vector.fill(30) {
+        val zone = 1L + rnd.nextInt(6)
+        val s = rnd.nextInt(60)
+        val debut = rnd.nextInt(14) match {
+          case 0 => null
+          case 1 => debutSentinel
+          case _ => toDate(s)
+        }
+        val fin = rnd.nextInt(10) match {
+          case 0 => null
+          case 1 => finSentinel
+          case 2 => toDate(s)                      // single day
+          case 3 => toDate(s - 1 - rnd.nextInt(5)) // inverted
+          case _ => toDate(s + rnd.nextInt(15))
+        }
+        Row(zone, deptOf(zone), debut, fin, pick[Any](null, 1, 2, 3), pick("vigilance", "alerte", "crise", null))
+      }
+      // one zone and level under two labels: over the same days, and
+      // back to back in a department of their own
+      val twin = decrees.find(r => r.get(2) != null && r.get(3) != null).get
+      val s = rnd.nextInt(60)
+      val relabelled = Row(7L, "01", toDate(s + 5), toDate(s + 9), 2, "crise")
+      val rows = decrees ++ Seq(Row(twin(0), twin(1), twin(2), twin(3), twin(4), "alerte renforcée"),
+        Row(7L, "01", toDate(s), toDate(s + 4), 2, "alerte"), relabelled)
+      val prepped = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      assert(prepped.rdd.getNumPartitions == 3)
+      val valid = rows.filter(r => r.get(2) != null && r.get(3) != null)
+      def someValid = valid(rnd.nextInt(valid.length))
+      val days = Seq(relabelled.getDate(2), someValid.getDate(2), someValid.getDate(2),
+        Date.valueOf(someValid.getDate(3).toLocalDate.plusDays(1)),
+        Date.valueOf(someValid.getDate(3).toLocalDate.plusDays(1)),
+        debutSentinel, finSentinel, toDate(rnd.nextInt(75)))
+      (days.map(lit) :+ lit(null).cast("date")).foreach { d =>
+        val (q1, want1) = (RefPipeline.q1NbDepPerAlert(prepped, d).collect().toSeq, refQ1(prepped, d).collect().toSeq)
+        assert(q1.map(_.toString).sorted == want1.map(_.toString).sorted, s"Q1 at $d, seed $seed")
+        assert(q1.map(r => Option(r.get(0))) == want1.map(r => Option(r.get(0))), s"Q1's order at $d, seed $seed")
+        def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+        assert(sorted(RefPipeline.q2MaxAlertPerDept(prepped, d, departements)) == sorted(refQ2(prepped, d)),
+          s"Q2 at $d, seed $seed")
+      }
     }
   }
 

@@ -123,8 +123,7 @@ class PgWireSpec extends AnyFunSuite with SparkTestBase {
     assert(external.count() === 3L, "prepData must rebuild after an out-of-Spark write")
     assert(q1(external) === Seq((4, 1L), (2, 1L)))
     assert(q4(external) === Map(2 -> 31, 4 -> 11, 3 -> 3))
-    RefPipeline.q4SurfacePerDay(external).unpersist()
-    external.unpersist()
+    RefPipeline.release(external)
   }
 
   test("staged commit publishes atomically: empty partitions stage fine, no stage tables survive") {
